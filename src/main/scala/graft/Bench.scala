@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line with per-query
   * seconds over SPARK_GRAFT_SF_DIR.
@@ -13,15 +12,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // same extension the production session factory injects — the
-      // bench measures the engine as it actually ships
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    GraftSession.tune(spark)
+    // the production session settings — the bench measures the
+    // engine as it actually ships
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // absorb one-time session bring-up: JVM/class init for the scan,
     // join, aggregate, and window operators (and the parquet reader)

@@ -16,39 +16,85 @@ import org.apache.spark.sql.SparkSession
   *    AQE coalesce down.
   *  - UTC session timezone so date/timestamp semantics are stable
   *    across driver and oracle.
+  *  - a kernel cache that holds graft's whole working set, so each
+  *    generated kernel compiles once per session
+  *    ([[CodegenCacheEntries]]).
   */
 object GraftSession {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession
+  /** Capacity of Spark's JVM-wide cache of compiled whole-stage and
+    * expression kernels (`spark.sql.codegen.cache.maxEntries`,
+    * default 100). Spark sizes the cache once, when the first kernel
+    * of the JVM compiles, from the session conf of that moment — so it
+    * is a launch-time setting: [[tune]] cannot change it on a running
+    * session, and a cluster must pass it at submit time (see
+    * [[clusterConf]]) so every executor JVM gets it too.
+    *
+    * Sized from the measured working set (`graft.KernelProbe`, sf0.1
+    * on 4 cores): one pass compiles 100 distinct kernels for the
+    * `SalesPipelineDag` medallion run, 127 for the six near-dup queries
+    * and 1,964 for the whole 154-query registry. At the default 100
+    * entries the LRU evicts kernels before their next use, so every
+    * warm pass recompiles 24–25 (medallion) and 88 (near-dup) classes
+    * — and each recompiled class restarts in the JVM interpreter.
+    * 4096 holds the registry twice over. Emptying the cache frees
+    * 33–37 KB per kernel (heap plus metaspace), so even a full
+    * cache is about 150 MB, paid only by a JVM that runs that many
+    * distinct plans. */
+  val CodegenCacheEntries: Int = 4096
+
+  // graft's SQL defaults — runtime confs, so [[tune]] re-applies the
+  // same set to a session built elsewhere
+  private val sqlDefaults: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    // the loaders round-robin-spread unsplittable single-row-group
+    // inputs; the pre-repartition binary row sort only exists for
+    // retry determinism, and every verified query is
+    // partition-independent by contract (exact decimal/integer
+    // math), so skip the sort
+    "spark.sql.execution.sortBeforeRepartition" -> "false",
+    // older testdata generations carry TIMESTAMP(NANOS) in
+    // events.parquet, which Spark rejects; read those as epoch-nanos
+    // long — Tables.normalizeEventTs converts either generation to a
+    // session-zone timestamp. No-op on TIMESTAMP_MICROS data.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // the engine leans on object aggregates (collect_set baskets,
+    // sketch TypedImperativeAggregates); the default 128-group
+    // in-memory threshold makes ObjectHashAggregate fall back to a
+    // sort-based pass on any real group count. 64k groups × small
+    // buffers is well inside executor memory at our partition sizing.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
+    // keep the codegen stage id out of generated class names: the id
+    // is part of the kernel's source, and AQE numbers a query's stages
+    // in the order they are re-planned, which concurrent jobs change
+    // from run to run — so the same kernel misses the cache under a
+    // new name (see CodegenCacheEntries)
+    "spark.sql.codegen.useIdInClassName" -> "false"
+  )
+
+  /** The one place a graft session's settings are chosen: `local[cores]`
+    * with the engine's own extension, shuffle partitions = cores, the
+    * launch-time settings (kernel cache, no UI) and the SQL defaults.
+    * Every main that builds a session starts here; callers add only an
+    * app name. */
+  def builder(cores: Int): SparkSession.Builder =
+    SparkSession
       .builder()
       .master(s"local[$cores]")
-      .appName("graft")
       // the engine runs WITH its own extension (SQL function surface +
       // the ExpandFreeDistinct optimizer rule) — the correctness gate
       // and every spec therefore continuously prove the injected
       // rule's non-interference with the whole query surface
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the loaders round-robin-spread unsplittable single-row-group
-      // inputs; the pre-repartition binary row sort only exists for
-      // retry determinism, and every verified query is
-      // partition-independent by contract (exact decimal/integer
-      // math), so skip the sort
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-      // older testdata generations carry TIMESTAMP(NANOS) in
-      // events.parquet, which Spark rejects; read those as epoch-nanos
-      // long — Tables.normalizeEventTs converts either generation to a
-      // session-zone timestamp. No-op on TIMESTAMP_MICROS data.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see tune(): object aggregates shouldn't sort-fall-back at
-      // 128 groups
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config(sqlDefaults)
+
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+    val spark = builder(cores).appName("graft").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -75,24 +121,17 @@ object GraftSession {
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
     "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
-    "spark.sql.session.timeZone" -> "UTC"
+    "spark.sql.session.timeZone" -> "UTC",
+    // launch-time only: pass it at submit so the driver and every
+    // executor JVM size their kernel cache from it (see
+    // CodegenCacheEntries); setting it on a running session is an error
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString
   )
 
-  /** Apply graft defaults to an externally-built session (used by the
-    * driver's Verify/Bench mains which own the builder). */
+  /** Apply graft's SQL defaults to a session built outside
+    * [[builder]]. The launch-time settings cannot be applied here. */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.sortBeforeRepartition", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the engine leans on object aggregates (collect_set baskets,
-    // sketch TypedImperativeAggregates); the default 128-group
-    // in-memory threshold makes ObjectHashAggregate fall back to a
-    // sort-based pass on any real group count. 64k groups × small
-    // buffers is well inside executor memory at our partition sizing.
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+    sqlDefaults.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 }

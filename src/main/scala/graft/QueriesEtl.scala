@@ -256,7 +256,8 @@ object QueriesEtl {
     // dedupLatest pre-pass kept) — one less exchange+aggregate over
     // the orders side (guide §2.4; AsOfJoinSpec pins the equivalence)
     val right = Tables.orders(s, dir)
-      .select("o_custkey", "o_orderdate", "o_orderkey", "o_totalprice")
+      .select(col("o_custkey"), col("o_orderdate"),
+        AsOfJoin.notNull(col("o_orderkey")).as("o_orderkey"), col("o_totalprice"))
     AsOfJoin(left, right,
       leftKey = "user_id", rightKey = "o_custkey",
       leftTime = "ts_s", rightTime = "o_orderdate",

@@ -641,7 +641,8 @@ object QueriesScale {
       .select(col("event_id"), col("user_id"), date_trunc("second", col("ts")).as("ts_s"))
     // dedupLatest fused into the carry's tie-break, as in #43
     val right = Tables.orders(s, dir)
-      .select("o_custkey", "o_orderdate", "o_orderkey", "o_totalprice")
+      .select(col("o_custkey"), col("o_orderdate"),
+        AsOfJoin.notNull(col("o_orderkey")).as("o_orderkey"), col("o_totalprice"))
     AsOfJoin(left, right,
       leftKey = "user_id", rightKey = "o_custkey",
       leftTime = "ts_s", rightTime = "o_orderdate",

@@ -34,7 +34,15 @@ import org.apache.spark.sql.expressions.Window
   *    the right side (§2.4: two operations keyed the same way share
   *    one exchange). Tie-break columns must be non-null right payload
   *    columns for the equivalence to be exact (AsOfJoinSpec pins it
-  *    against the dedup-then-join form on a duplicate-timed frame).
+  *    against the dedup-then-join form on a duplicate-timed frame):
+  *    a null sorts first in the ascending tie-break order and can
+  *    diverge from dedupLatest's max, so a nullable tie-break column
+  *    is rejected — wrap a column that is non-null by contract in
+  *    [[notNull]].
+  *
+  * The output's left key/time columns keep the left side's types:
+  * the union widens `__k`/`__t` when the right key or time type is
+  * wider, and the output casts them back.
   */
 object AsOfJoin {
   /** @param left       left (probe) frame
@@ -49,7 +57,7 @@ object AsOfJoin {
     *                   leftTime, the default) or "forward" (earliest
     *                   right with rightTime >= leftTime); ties match
     *                   in both directions
-    * @param rightTieBreak  names of non-null `rightCols` whose
+    * @param rightTieBreak  names of non-nullable `rightCols` whose
     *                   GREATEST tuple wins among right rows sharing
     *                   (key, rightTime) — the fused
     *                   latest-per-(key, time) dedup. Empty keeps the
@@ -69,6 +77,9 @@ object AsOfJoin {
     require(direction == "backward" || direction == "forward", s"unsupported direction $direction")
     require(rightTieBreak.forall(rightCols.contains),
       s"rightTieBreak ${rightTieBreak.mkString(",")} must be carried rightCols")
+    require(rightTieBreak.forall(c => !right.schema(c).nullable),
+      s"rightTieBreak ${rightTieBreak.filter(c => right.schema(c).nullable).mkString(",")} " +
+        "nullable: wrap a column that is non-null by contract in AsOfJoin.notNull")
     val leftCols = left.columns.toSeq
     // left key/time travel once as __k/__t; only the OTHER left
     // columns are appended to the union row (narrower exchange+sort)
@@ -117,11 +128,17 @@ object AsOfJoin {
     val leftRows = carried.where(col("__side") === 1)
     val filtered = if (joinType == "inner") leftRows.where(col("__r").isNotNull) else leftRows
     val leftOut = leftCols.map {
-      case c if c == leftKey  => col("__k").as(c)
-      case c if c == leftTime => col("__t").as(c)
+      case c if c == leftKey  => col("__k").cast(left.schema(c).dataType).as(c)
+      case c if c == leftTime => col("__t").cast(left.schema(c).dataType).as(c)
       case c                  => col(c)
     }
     filtered
       .select(leftOut ++ rightCols.map(c => col("__r").getField(c).as(c)): _*)
   }
+
+  /** `c` as a non-nullable column that fails the query on a null row —
+    * how a caller hands a column that is non-null by contract (a
+    * primary key read from parquet, whose schema is always nullable)
+    * to `rightTieBreak`. */
+  def notNull(c: Column): Column = org.apache.spark.sql.GraftColumns.assertNotNull(c)
 }

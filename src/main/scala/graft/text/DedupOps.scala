@@ -235,7 +235,7 @@ object DedupOps {
       docs: DataFrame, id: String, text: Column,
       n: Int, maxDf: Int, minJaccardPct: Int
   ): DataFrame = {
-    val (withCounts, kept) = sharedGramCounts(docs, id, text, n, maxDf)
+    val (withCounts, shares) = sharedGramCounts(docs, id, text, n, maxDf, Some(minJaccardPct))
     val union = col("grams1") + col("grams2") - col("shared_grams")
     val pairs = withCounts
       .withColumn("union_grams", union)
@@ -251,7 +251,7 @@ object DedupOps {
     // the pair set is orders of magnitude smaller than the postings:
     // materialize it and release the postings storage (leaked caches
     // tax every later query in the session)
-    graft.Caching.reap(observeCount(pairs, "cand_ngram"))(kept)
+    graft.Caching.reap(observeCount(pairs, "cand_ngram"))(shares: _*)
   }
 
   /** Exact n-gram CONTAINMENT pairs: shared / min(|A|, |B|) — the
@@ -266,7 +266,7 @@ object DedupOps {
       docs: DataFrame, id: String, text: Column,
       n: Int, maxDf: Int, minContainPct: Int
   ): DataFrame = {
-    val (withCounts, kept) = sharedGramCounts(docs, id, text, n, maxDf)
+    val (withCounts, shares) = sharedGramCounts(docs, id, text, n, maxDf, None)
     val minc = least(col("grams1"), col("grams2"))
     val pairs = withCounts
       .where(col("shared_grams") * 100 >= minc * minContainPct)
@@ -278,46 +278,70 @@ object DedupOps {
           minc * 2L
         ).as("containment_pct")
       )
-    graft.Caching.reap(observeCount(pairs, "cand_containment"))(kept)
+    graft.Caching.reap(observeCount(pairs, "cand_containment"))(shares: _*)
   }
 
-  /** Shared core of the exact pair generators: df-gated postings
-    * (persisted — consumed by the doc counts and both join sides),
-    * per-doc gram counts, and shared-gram counts per candidate pair.
-    * Returns (pair frame with grams1/grams2/shared_grams, postings
-    * handle) — callers apply their similarity filter and MUST release
-    * the postings via [[graft.Caching.reap]]. */
+  /** Shared core of the exact pair generators: one tokenize pass into
+    * per-doc gram sets (shared — read by the df pass and the
+    * postings), df-gated postings that carry their doc's gated gram
+    * count (shared — both sides of the pair join), and shared-gram
+    * counts per candidate pair. `minJaccardPct` applies Jaccard's
+    * exact length bound inside the join: shared ≤ min(|A|, |B|), so
+    * J ≥ t needs 100·min(|A|, |B|) ≥ t·max(|A|, |B|); containment has
+    * no such bound and passes None. Returns (pair frame with
+    * grams1/grams2/shared_grams, shares) — callers apply their
+    * similarity filter and MUST release the shares via
+    * [[graft.Caching.reap]].
+    *
+    * Measured and not built: a df-ordered PPJoin prefix filter with
+    * array verification kept the same pairs and cut the join rows
+    * from 1.27M to 0.83M (J ≥ 20) and 0.33M (J ≥ 50) on the sf0.1
+    * corpus, but ran 6.1, 4.2 and 2.4 s at J ≥ 1, 20 and 50 on 4 cores,
+    * against about 1 s for the postings join. */
   private def sharedGramCounts(
-      docs: DataFrame, id: String, text: Column, n: Int, maxDf: Int
-  ): (DataFrame, DataFrame) = {
-    // postings carry the 64-bit gram hash, not the string: cheaper to
+      docs: DataFrame, id: String, text: Column, n: Int, maxDf: Int,
+      minJaccardPct: Option[Int]
+  ): (DataFrame, Seq[DataFrame]) = {
+    // both shares persist rather than [[graft.Caching.share]]: the
+    // columnar cache keeps the doc-key partitioning the keyed document
+    // spread gives them, so the count window and the pair aggregate
+    // (keyed by doc1) need no exchange. A localCheckpoint loses it once
+    // AQE coalesces, which measured 17 MB of pair-aggregate shuffle
+    // against 2 MB at sf0.1.
+    def share(df: DataFrame) = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // gram sets carry 64-bit gram hashes, not strings: cheaper to
     // build, and the self-join shuffles and compares longs
-    val grams = wordGramHashes(docs, id, text, n)
+    val sets = share(wordGramHashSets(docs, id, text, n))
 
     // document-frequency cutoff: drop grams too common to be
     // informative. The df side is tiny (distinct grams × count) —
     // broadcast it so the postings stream never shuffles for the gate.
-    val df = grams.groupBy("gram").agg(count(lit(1)).as("__df"))
-    // the filtered postings are consumed three times (doc counts +
-    // both sides of the pair join); persist them once instead of
-    // re-deriving the gram explode per consumer — this is the
-    // materialize-the-postings step of a distributed inverted index
-    val kept = grams.join(broadcast(df.where(col("__df") <= maxDf)), "gram")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Its map side reads the materialized sets in their own
+    // partitions, never re-tokenizing.
+    val df = sets.select(explode(col("__grams")).as("gram"))
+      .groupBy("gram").agg(count(lit(1)).as("__df"))
+    // each doc's gated gram count rides its postings: a window over
+    // the doc key, which the keyed document spread already
+    // partitions by — no per-doc aggregate, no count joins
+    val kept = share(
+      sets.select(col(id), explode(col("__grams")).as("gram"))
+        .join(broadcast(df.where(col("__df") <= maxDf)), "gram")
+        .select(col(id), col("gram"),
+          count(lit(1)).over(Window.partitionBy(col(id))).as("n_grams")))
 
-    val counts = kept.groupBy(col(id)).agg(count(lit(1)).as("n_grams"))
-
-    val a = kept.select(col(id).as("doc1"), col("gram"))
-    val b = kept.select(col(id).as("doc2"), col("gram"))
-    val shared = a.join(b, "gram")
-      .where(col("doc1") < col("doc2"))
-      .groupBy("doc1", "doc2")
+    val a = kept.select(col(id).as("doc1"), col("gram"), col("n_grams").as("grams1"))
+    val b = kept.select(col(id).as("doc2"), col("gram"), col("n_grams").as("grams2"))
+    // both predicates reference both sides, so they plan as the join's
+    // condition and prune before the pair aggregate
+    val ordered = col("doc1") < col("doc2")
+    val cond = minJaccardPct.fold(ordered) { t =>
+      ordered && least(col("grams1"), col("grams2")) * 100L >=
+        greatest(col("grams1"), col("grams2")) * t.toLong
+    }
+    val withCounts = a.join(b, "gram").where(cond)
+      .groupBy("doc1", "doc2", "grams1", "grams2")
       .agg(count(lit(1)).as("shared_grams"))
-
-    val withCounts = shared
-      .join(counts.select(col(id).as("doc1"), col("n_grams").as("grams1")), "doc1")
-      .join(counts.select(col(id).as("doc2"), col("n_grams").as("grams2")), "doc2")
-    (withCounts, kept)
+    (withCounts, Seq(kept, sets))
   }
 
   /** MinHash signatures: k min-hashes per doc via seeded xxhash64

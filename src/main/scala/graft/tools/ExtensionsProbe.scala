@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end validation of the PRODUCTION extension path: build a
   * session with `withExtensions(new GraftExtensions)` (a fresh JVM —
   * run via `sbt "runMain graft.tools.ExtensionsProbe"`), then prove
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
   * which the in-suite specs can only assert by direct application. */
 object ExtensionsProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-extensions-probe")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(4).appName("graft-extensions-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

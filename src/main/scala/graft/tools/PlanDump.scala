@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for every registered query (or an
   * `only=` subset) to one file per query under an output directory —
   * the plan evidence for the optimization rounds (guide §1.1/§7.2).
@@ -19,13 +17,7 @@ object PlanDump {
     val only = rest.find(_.startsWith("only=")).map(_.stripPrefix("only=").split(",").toSet)
     val suffix = rest.find(_.startsWith("suffix=")).map(_.stripPrefix("suffix=")).getOrElse("plan")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
+    val spark = graft.GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(outDir)
     val named = graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Per-query execution profile over the whole registry (guide §1):
@@ -23,13 +22,7 @@ object ProfileQueries {
       .getOrElse("/root/testdata/sf0.1")
     val only = args.find(_.startsWith("only=")).map(_.stripPrefix("only=").split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
+    val spark = graft.GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new AtomicInteger(0)

@@ -86,6 +86,38 @@ class AsOfJoinSpec extends SparkSpec {
     assert(back == Set((1L, 100L, "tie"), (1L, 250L, "between"), (1L, 999L, "after-all")))
   }
 
+  test("a nullable rightTieBreak column is rejected; notNull admits it and fails on a null row") {
+    val nullable = Seq((1L, 200L, Option(7L)), (1L, 200L, Option.empty[Long])).toDF("rk", "rt", "rid")
+    val probes = Seq((1L, 250L, "p250")).toDF("lk", "lt", "tag")
+    val e = intercept[IllegalArgumentException] {
+      AsOfJoin(probes, nullable, "lk", "rk", "lt", "rt", Seq("rid"), rightTieBreak = Seq("rid"))
+    }
+    assert(e.getMessage.contains("rid"))
+    val guarded = nullable.withColumn("rid", AsOfJoin.notNull($"rid"))
+    assert(!guarded.schema("rid").nullable)
+    val run = intercept[Exception] {
+      AsOfJoin(probes, guarded, "lk", "rk", "lt", "rt", Seq("rid"), rightTieBreak = Seq("rid"))
+        .collect()
+    }
+    assert(Iterator.iterate[Throwable](run)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("NOT_NULL_ASSERT_VIOLATION")), run.toString)
+    val clean = Seq((1L, 200L, 7L)).toDF("rk", "rt", "rid").withColumn("rid", AsOfJoin.notNull($"rid"))
+    assert(AsOfJoin(probes, clean, "lk", "rk", "lt", "rt", Seq("rid"), rightTieBreak = Seq("rid"))
+      .select("rid").as[Long].collect().toSeq == Seq(7L))
+  }
+
+  test("left key/time keep the left types when the right side's are wider") {
+    // int key and int time on the left, bigint on the right: the union
+    // widens __k/__t to bigint, the output must not
+    val l = Seq((1, 150, "p150"), (1, 250, "p250")).toDF("lk", "lt", "tag")
+    val r = Seq((1L, 100L, "r100"), (1L, 200L, "r200")).toDF("rk", "rt", "rv")
+    val out = AsOfJoin(l, r, "lk", "rk", "lt", "rt", Seq("rv"))
+    assert(out.schema("lk").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(out.schema("lt").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(out.select("lk", "lt", "rv").as[(Int, Int, String)].collect().toSet ==
+      Set((1, 150, "r100"), (1, 250, "r200")))
+  }
+
   test("plan shuffles once on the key (window, no join node)") {
     val plan = AsOfJoin(left, right, "lk", "rk", "lt", "rt", Seq("rv"))
       .queryExecution.executedPlan.toString
