@@ -72,18 +72,6 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-    // session hygiene between timed windows: drop any cached frames
-    // and checkpoint RDDs the query left behind, then drain pending
-    // GC debt, so neither block-manager accumulation nor a deferred
-    // collection bills one query's garbage to a later query's wall
-    // time. BLOCKING: the removal work itself must land here, between
-    // the timers, not race into the next query's window
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
     // fixed name order: per-round BENCH numbers stay comparable and
     // cold-cache costs land on the same queries every run
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
@@ -148,7 +136,7 @@ object Bench {
     val results = named.zipWithIndex.map { case ((name, fn), qi) =>
       currentQuery.set(name)
       // min of `runs` full executions (data is re-read and recomputed
-      // each time — hygiene() drops all storage between them; only JIT
+      // each time — clearCache drops all storage between them; only JIT
       // and codegen caches stay warm). A single cold run is hostage to
       // whichever GC pause or transient host load lands in its window:
       // round-3's driver artifact billed a 40 s stall to a 1.4 s query.
@@ -161,7 +149,7 @@ object Bench {
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
         val dt = (System.nanoTime() - t0) / 1e9
-        hygiene()
+        GraftSession.clearCache(spark)
         if (ok) dt else -1.0
       }.min // a crash in any run reports -1 — never read as a fast run
       // drain the listener bus BEFORE the next query takes over the

@@ -19,34 +19,21 @@ import org.apache.spark.sql.execution.LogicalRDD
   * result rows only.
   */
 object Caching {
-  /** Share a multi-consumer intermediate: materialize it ONCE so the
-    * consumers never re-execute the subtree. Two interchangeable
-    * mechanisms, switched by `spark.graft.share.mode`:
+  /** Share a multi-consumer intermediate: materialize it ONCE, as an
+    * eager `localCheckpoint`, so the consumers never re-execute the
+    * subtree. Rows land in the block manager as plain serialized row
+    * blocks (MEMORY_AND_DISK): one serialization pass to build, and
+    * consumers deserialize rows directly. Against the columnar cache
+    * it measured 10–25% faster end to end on every postings/grain
+    * query at sf0.1, same rows (OPTIMIZATION_r17.md §2).
     *
-    *  - `checkpoint` (default): eager `localCheckpoint` — rows land in
-    *    the block manager as plain serialized row blocks
-    *    (MEMORY_AND_DISK). Build cost is one serialization pass;
-    *    consumers deserialize rows directly.
-    *  - `persist`: lazy columnar cache (`InMemoryRelation`). Build
-    *    additionally pays per-column encoding + compression; reads pay
-    *    decode. Kept as the fallback because it preserves lineage
-    *    (an executor loss recomputes instead of failing the job).
-    *
-    * Measured on the sf0.1 bench (OPTIMIZATION_r17.md §2): the
-    * checkpoint mode is 10–25% faster end-to-end on every
-    * postings/grain-persist query, same result rows. At cluster scale
-    * both levels spill to disk and hold exactly one copy of the rows;
-    * the lineage-truncation trade (guide §5: fine when the
-    * intermediate is not the job's sole fault-tolerance point) is the
-    * same one [[reap]] already makes for results. */
-  def share(df: DataFrame): DataFrame = {
-    val mode =
-      try df.sparkSession.conf.get("spark.graft.share.mode", "checkpoint")
-      catch { case _: Throwable => "checkpoint" }
-    if (mode == "persist")
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df.localCheckpoint(eager = true)
-  }
+    * The checkpoint truncates lineage: blocks lost before a consumer
+    * runs fail that consumer ("checkpoint block not found") instead
+    * of recomputing — fine while the share is not the job's sole
+    * fault-tolerance point, the same trade [[reap]] makes for
+    * results. A share's own executed plan is visible to a
+    * `QueryExecutionListener` as the `localCheckpoint` action. */
+  def share(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
   /** Materialize `result` eagerly and release every `temps` frame's
     * block-manager storage. The returned frame scans the checkpointed
@@ -61,13 +48,13 @@ object Caching {
     out
   }
 
-  /** Release a [[share]]d frame's storage regardless of mode:
-    * `unpersist` covers the persist-mode columnar cache (and plain
-    * `.persist` frames), [[release]] covers the checkpoint-mode
-    * LogicalRDD blocks, for which `Dataset.unpersist` is a no-op
-    * (localCheckpoint RDDs never enter the cacheManager). Callers that
-    * hold a share past a [[reap]] — or never reap at all — must route
-    * their cleanup here, not through a bare `.unpersist`. */
+  /** Release a [[share]]d frame's storage: [[release]] drops the
+    * checkpoint's LogicalRDD blocks, for which `Dataset.unpersist` is
+    * a no-op (localCheckpoint RDDs never enter the cacheManager);
+    * `unpersist` covers frames `.persist`ed directly (the DedupOps
+    * postings shares). Callers that hold a share past a [[reap]] — or
+    * never reap at all — must route their cleanup here, not through a
+    * bare `.unpersist`. */
   def unshare(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
     release(df)

@@ -69,8 +69,10 @@ object GraftFunctions {
 
 /** Session extension: `spark.sql.extensions=graft.GraftExtensions`.
   * Injects the function table plus the Expand-free multi-distinct
-  * optimizer rule ([[graft.plans.ExpandFreeDistinct]]; disable with
-  * `spark.graft.expandFreeDistinct.enabled=false`). */
+  * optimizer rule ([[graft.plans.ExpandFreeDistinct]]). The rule's
+  * cost gate alone decides which aggregates it rewrites; its one
+  * switch, `spark.graft.expandFreeDistinct.enabled=false`, turns it
+  * off. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, i, b) =>

@@ -128,6 +128,17 @@ object GraftSession {
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString
   )
 
+  /** Drop every cached frame and checkpoint RDD the session holds,
+    * then drain pending GC debt — the between-runs step of every
+    * timing main, so neither block-manager accumulation nor a deferred
+    * collection bills one query's garbage to the next. BLOCKING: the
+    * removal lands here, not inside the next query's timed window. */
+  def clearCache(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
+
   /** Apply graft's SQL defaults to a session built outside
     * [[builder]]. The launch-time settings cannot be applied here. */
   def tune(spark: SparkSession): SparkSession = {

@@ -20,10 +20,6 @@ object QueriesAnalytics {
   private def revenue =
     sum(Money.dec(col("l_extendedprice")) * (lit(1) - Money.dec(col("l_discount")))).cast("double")
 
-  /** Conf key flipping [[kpiSummary]] to its cached-projection
-    * formulation (default off — see the trade-off note there). */
-  val KpiCachedProjectionKey = "spark.graft.kpi.cachedProjection"
-
   /** #14 KPI card totals (dashboard.py:128-140).
     *
     * The three distinct counts run as separate single-column
@@ -38,16 +34,11 @@ object QueriesAnalytics {
     * plus one column-pruned scan per distinct), betting that shuffle
     * dominates — true on warm/columnar storage where each extra pass
     * reads ONE dictionary-encoded integer column (~2% of the table
-    * bytes), which is why it wins here and is the default. On a
-    * cluster that is scan-bound on cold object storage, flip
-    * [[KpiCachedProjectionKey]]: ONE narrow 3-key-column projection is
-    * cached, the three distincts run over the cached frame, and the
-    * fact is scanned twice total (base agg + projection) instead of
-    * four times. Both paths are result-identical (spec-asserted); the
-    * sf0.1 measurement lives in BENCH_NOTES "KPI cached-projection".
-    * The 1-row result is eagerly materialized on the cached path so
-    * the cache can be dropped before returning — a leaked cache would
-    * tax every later query in the session.
+    * bytes). A variant that cached one narrow 3-key projection and ran
+    * the distincts over it (two fact scans) lost at sf0.1 and sf1 and
+    * read 0.959× in the r18 interleaved A/B — too small a lever for a
+    * second path, so it was removed (BENCH_NOTES "KPI
+    * cached-projection").
     *
     * Pure-SQL users get the default rewrite automatically: the
     * injected optimizer rule [[graft.plans.ExpandFreeDistinct]]
@@ -70,26 +61,15 @@ object QueriesAnalytics {
         Money.scaledSum(col("l_extendedprice"), 2).as("__sp"))
     // count(col), not count(1): a NULL key must not count as a
     // distinct value (countDistinct / DuckDB count(DISTINCT) exclude it)
-    def finish(nDistinct: (String, String) => DataFrame): DataFrame =
-      base
-        .crossJoin(nDistinct("l_orderkey", "total_orders"))
-        .crossJoin(nDistinct("l_partkey", "distinct_parts"))
-        .crossJoin(nDistinct("l_suppkey", "distinct_suppliers"))
-        .withColumn("avg_line_price", Money.avgFromScaled(col("__sp"), col("total_line_items"), 2))
-        .select(col("total_revenue"), col("total_orders"), col("total_line_items"),
-          col("distinct_parts"), col("distinct_suppliers"), col("avg_line_price"))
-    if (s.conf.get(KpiCachedProjectionKey, "false").toBoolean) {
-      val keys = li.select("l_orderkey", "l_partkey", "l_suppkey")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val out = finish((c, as) => keys.select(c).distinct().agg(count(col(c)).as(as)))
-        // 1 row by construction: collect it so the cache can drop NOW,
-        // and hand back a driver-local frame (no lingering persisted
-        // RDD — a localCheckpoint would itself pin one)
-        s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
-      } finally keys.unpersist(blocking = false)
-    } else
-      finish((c, as) => liRaw.select(c).distinct().agg(count(col(c)).as(as)))
+    def nDistinct(c: String, as: String): DataFrame =
+      liRaw.select(c).distinct().agg(count(col(c)).as(as))
+    base
+      .crossJoin(nDistinct("l_orderkey", "total_orders"))
+      .crossJoin(nDistinct("l_partkey", "distinct_parts"))
+      .crossJoin(nDistinct("l_suppkey", "distinct_suppliers"))
+      .withColumn("avg_line_price", Money.avgFromScaled(col("__sp"), col("total_line_items"), 2))
+      .select(col("total_revenue"), col("total_orders"), col("total_line_items"),
+        col("distinct_parts"), col("distinct_suppliers"), col("avg_line_price"))
   }
 
   /** #15 top-10 products by revenue (dashboard.py:190-199). */

@@ -246,9 +246,10 @@ object QueriesEtl {
     * deterministic with unique right timestamps per key. */
   def asofJoin(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AsOfJoin
-    // unspread both sides: the carry window's key exchange re-partitions
-    // every row anyway, so the loader spreads are pure extra exchanges
-    // (A/B 0.53x with the fused dedup below)
+    // unspread events: the carry window's key exchange re-partitions
+    // every row anyway, so the loader spread is a pure extra exchange
+    // (A/B 0.53x with the fused dedup below). The orders side still
+    // reads the spread loader; it has not been A/B'd unspread.
     val left = Tables.eventsUnspread(s, dir)
       .select(col("event_id"), col("user_id"), date_trunc("second", col("ts")).as("ts_s"))
     // latest-order-per-(custkey, date) dedup is FUSED into the carry

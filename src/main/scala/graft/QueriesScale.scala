@@ -635,8 +635,9 @@ object QueriesScale {
     * native forward ASOF (`<=`). */
   def asofForward(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AsOfJoin
-    // unspread: the carry window's key exchange re-partitions every
-    // row anyway — same shape/evidence as #43 (probe 0.53x)
+    // unspread events only: the carry window's key exchange
+    // re-partitions every row anyway — same shape/evidence as #43
+    // (probe 0.53x); the orders side keeps the spread loader, as in #43
     val left = Tables.eventsUnspread(s, dir)
       .select(col("event_id"), col("user_id"), date_trunc("second", col("ts")).as("ts_s"))
     // dedupLatest fused into the carry's tie-break, as in #43

@@ -30,10 +30,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same between-query cache hygiene as Bench: a leaked cache from
+      // same between-query storage drop as Bench: a leaked cache from
       // one query must not distort (or OOM) a later one
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      GraftSession.clearCache(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -19,8 +19,10 @@ import org.apache.spark.sql.internal.SQLConf
   * shape instead runs each distinct as its own column-pruned
   * pre-aggregate (shuffle volume = that column's key set) and
   * recombines the 1-row results with cross joins. The bet is
-  * shuffle-bound clusters (see the kpiSummary scaladoc for when it
-  * flips); disable with `spark.graft.expandFreeDistinct.enabled=false`.
+  * shuffle-bound clusters, and a cost gate (below) keeps it to
+  * children cheap enough to run once per distinct. Disable with
+  * `spark.graft.expandFreeDistinct.enabled=false`: the rule-off plan
+  * is the reference the rewrite's specs compare against.
   *
   * Grouped aggregates rewrite too: each distinct becomes a
   * (groups :+ col) pre-aggregate re-counted per group, and the parts
@@ -47,15 +49,9 @@ import org.apache.spark.sql.internal.SQLConf
   */
 object ExpandFreeDistinct extends Rule[LogicalPlan] {
   val ConfKey = "spark.graft.expandFreeDistinct.enabled"
-  /** Manual override: rewrite every eligible aggregate, bypassing the
-    * child-shape cost gate (for callers who KNOW re-execution is cheap,
-    * e.g. the child is a cached view). */
-  val ForceKey = "spark.graft.expandFreeDistinct.force"
 
   private def enabled: Boolean =
     SQLConf.get.getConfString(ConfKey, "true").toBoolean
-  private def forced: Boolean =
-    SQLConf.get.getConfString(ForceKey, "false").toBoolean
 
   // Cost gate: the rewrite re-executes the child once per distinct
   // column (plus the base part). That trade is measured-good when the
@@ -65,7 +61,7 @@ object ExpandFreeDistinct extends Rule[LogicalPlan] {
   // join, UDF-heavy projection): the copies then repeat work the Expand
   // would have done once. Auto-fire only on relation/filter/project
   // chains whose expressions are codegen-cheap (no user-defined
-  // functions); anything else keeps Spark's Expand unless `force` is on.
+  // functions); anything else keeps Spark's Expand.
   private def cheapExpr(e: Expression): Boolean =
     !e.exists { case _: UserDefinedExpression => true; case _ => false }
 
@@ -132,7 +128,7 @@ object ExpandFreeDistinct extends Rule[LogicalPlan] {
     // distinct-aggregated, which is the Expand trigger.
     val spansColumns = distincts.map(_._2.exprId).distinct.size >= 2
     if (!spansColumns || !othersClean || !childDeterministic || !distinctKeysDisjoint ||
-        !(forced || childCheap(child))) agg
+        !childCheap(child)) agg
     else {
       // the BASE part carries the ORIGINAL grouping attr ids (plus the
       // non-distinct aggregates); grouping outputs already in `others`

@@ -165,19 +165,6 @@ object DedupOps {
       .orderBy("source")
   }
 
-  /** Word n-grams (distinct per doc) of `text`, as (id, gram). */
-  def wordGrams(docs: DataFrame, id: String, text: Column, n: Int): DataFrame = {
-    val toks = TextOps.tokens(text)
-    // guard: sequence(0, k) is DESCENDING for k<0, so short docs need
-    // an explicit empty array rather than a negative upper bound
-    val grams = when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))
-      ))
-    docs.select(col(id), explode(array_distinct(grams)).as("gram"))
-  }
-
   /** Word n-grams as 64-bit hashes, distinct per doc: hash each token
     * once, then hash `n` consecutive token hashes together
     * (`xxhash64` is variadic and order-sensitive) — no per-gram
@@ -191,8 +178,7 @@ object DedupOps {
     // `size(__grams) > 0` predicate then pushes below the exchange
     // with the whole tokenize+hash chain alias-inlined — measured 10×
     // on every postings consumer at sf0.1
-    docs
-      .select(col(id), transform(TextOps.tokens(text), t => xxhash64(t)).as("__th"))
+    tokenHashes(docs, id, text)
       .select(col(id), explode(array_distinct(gramArray(col("__th"), n))).as("gram"))
 
   /** Same distinct gram-hash set, kept as ONE array row per doc
@@ -202,8 +188,7 @@ object DedupOps {
     * shuffle. Row width is bounded by doc length; for pathological
     * multi-million-gram docs prefer the exploded postings form. */
   def wordGramHashSets(docs: DataFrame, id: String, text: Column, n: Int): DataFrame =
-    docs
-      .select(col(id), transform(TextOps.tokens(text), t => xxhash64(t)).as("__th"))
+    tokenHashes(docs, id, text)
       .select(col(id), array_distinct(gramArray(col("__th"), n)).as("__grams"))
 
   /** Positional (multiset) word n-gram hashes: one row per gram
@@ -211,9 +196,13 @@ object DedupOps {
     * accounting needs (how much of each doc is covered by repeated
     * spans), vs the distinct-set view similarity dedup needs. */
   def wordGramHashesAll(docs: DataFrame, id: String, text: Column, n: Int): DataFrame =
-    docs
-      .select(col(id), transform(TextOps.tokens(text), t => xxhash64(t)).as("__th"))
+    tokenHashes(docs, id, text)
       .select(col(id), explode(gramArray(col("__th"), n)).as("gram"))
+
+  /** The one tokenize→hash step behind every gram builder: (id,
+    * `__th`), the doc's token hashes as a materialized column. */
+  private def tokenHashes(docs: DataFrame, id: String, text: Column): DataFrame =
+    docs.select(col(id), transform(TextOps.tokens(text), t => xxhash64(t)).as("__th"))
 
   /** n-gram hash array over a token-hash array `th` — `th` MUST be a
     * materialized column (not an inline transform): referencing a

@@ -33,10 +33,7 @@ object PlanDump {
         println(s"[plandump] $name ok (${txt.length} chars)")
       } catch { case e: Throwable =>
         println(s"[plandump] $name FAILED: ${e.getMessage}")
-      } finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      }
+      } finally graft.GraftSession.clearCache(spark)
     }
     spark.stop()
   }

@@ -52,11 +52,6 @@ object ProfileQueries {
     })
     def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0)
       shufRead.set(0); shufWrite.set(0); input.set(0); taskTime.set(0); gcTime.set(0) }
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
 
     spark.range(1000).selectExpr("sum(id)").collect()
     val named = graft.SparkEntry.queries.toSeq.sortBy(_._1)
@@ -67,13 +62,13 @@ object ProfileQueries {
       try {
         // warm-up run = bench run 1; measured run = bench run 2 (the min)
         fn(spark, dir).write.format("noop").mode("overwrite").save()
-        hygiene()
+        graft.GraftSession.clearCache(spark)
         org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
         reset()
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        hygiene()
+        graft.GraftSession.clearCache(spark)
         org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
         val line = f"$name\t$dt%.3f\t${jobs.get}\t${stages.get}\t${tasks.get}\t${shufRead.get / 1e6}%.2f\t${shufWrite.get / 1e6}%.2f\t${input.get / 1e6}%.2f\t${taskTime.get / 1e3}%.2f\t${gcTime.get / 1e3}%.2f"
         println(line); sb.append(line).append("\n")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** The cache-scoping utility must actually free storage — a pattern
@@ -38,50 +39,50 @@ class CachingSpec extends SparkSpec {
     Caching.release(out)
   }
 
-  test("share: both modes return the same rows and reap frees either") {
+  test("share: a checkpoint handle with the input's rows, and reap frees it") {
     val base = Seq(1, 2, 3, 4, 5).toDF("x").withColumn("y", $"x" * 2)
     val expect = base.collect().map(_.toSeq).toSet
-    Seq("persist", "checkpoint").foreach { mode =>
-      withShareMode(mode) {
-        val before = persistentRddIds
-        val shared = Caching.share(base)
-        assert(shared.collect().map(_.toSeq).toSet == expect, s"mode=$mode rows differ")
-        // reap must free the share regardless of mechanism
-        val out = Caching.reap(shared.groupBy().sum("y"))(shared)
-        // Dataset.storageLevel consults the cacheManager, so only the
-        // persist branch is observable through it (a checkpoint-mode
-        // share reports NONE even before reap); the checkpoint branch
-        // is covered by the persistentRddCount assertion below.
-        if (mode == "persist")
-          assert(!shared.storageLevel.useMemory, s"mode=$mode: persisted share survived reap")
-        assert(out.collect().head.getLong(0) == 30L)
-        Caching.release(out)
-        assertNoNewPersistentRdds(before,
-          s"mode=$mode: reap+release must leave no new persistent RDDs")
-      }
-    }
+    val before = persistentRddIds
+    val shared = Caching.share(base)
+    assert(shared.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+      "a share is its checkpoint's LogicalRDD, built eagerly")
+    assert((persistentRddIds -- before).size == 1, "the share must hold its blocks")
+    assert(shared.collect().map(_.toSeq).toSet == expect)
+    val out = Caching.reap(shared.groupBy().sum("y"))(shared)
+    assert(out.collect().head.getLong(0) == 30L)
+    Caching.release(out)
+    assertNoNewPersistentRdds(before, "reap+release must leave no new persistent RDDs")
   }
 
-  test("unshare frees a share in either mode; release on a DERIVED frame is a no-op") {
-    val base = Seq(1, 2, 3, 4).toDF("x")
-    Seq("persist", "checkpoint").foreach { mode =>
-      withShareMode(mode) {
-        val before = persistentRddIds
-        val shared = Caching.share(base)
-        shared.count()
-        // a frame DERIVED from the share must not be able to drop the
-        // share's blocks (localCheckpoint cannot recompute them — the
-        // old plan-wide release was a "checkpoint block not found" trap)
-        val derived = shared.where($"x" > 1)
-        Caching.release(derived)
-        assert(derived.count() == 3, s"mode=$mode: derived read after release(derived)")
-        assert(shared.collect().length == 4,
-          s"mode=$mode: share must survive release of a derived frame")
-        // the owning handle releases it in one move, whatever the mode
-        Caching.unshare(shared)
-        assertNoNewPersistentRdds(before, s"mode=$mode: unshare must free the share")
-      }
+  test("unshare frees a share; release on a DERIVED frame is a no-op") {
+    val before = persistentRddIds
+    val shared = Caching.share(Seq(1, 2, 3, 4).toDF("x"))
+    // a frame DERIVED from the share must not be able to drop the
+    // share's blocks (localCheckpoint cannot recompute them — the old
+    // plan-wide release was a "checkpoint block not found" trap)
+    val derived = shared.where($"x" > 1)
+    Caching.release(derived)
+    assert(derived.count() == 3, "derived read after release(derived)")
+    assert(shared.collect().length == 4, "share must survive release of a derived frame")
+    // the owning handle releases it in one move
+    Caching.unshare(shared)
+    assertNoNewPersistentRdds(before, "unshare must free the share")
+  }
+
+  test("share safety: a consumer of a dropped share throws, never returns rows") {
+    val shared = Caching.share(Seq(1, 2, 3).toDF("x"))
+    val consumer = shared.where($"x" > 1).select(($"x" * 10).as("y"))
+    // the blocks vanish before the consumer runs (an executor loss, or
+    // an early release): a checkpoint has no lineage to recompute
+    // them from, so the only correct outcome is a failed job. Blocking
+    // drop, so the consumer cannot race the removal and still read them.
+    shared.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = true)
+      case other => fail(s"share is not a checkpoint handle: $other")
     }
+    val err = intercept[org.apache.spark.SparkException](consumer.collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")), err)
   }
 
   test("edge: empty inputs through the new operators") {

@@ -66,19 +66,21 @@ class CorpusFunnelSpec extends SparkSpec {
     } finally temps.foreach(_.unpersist(blocking = false))
   }
 
-  test("storage: exactly ONE persisted frame carries the text column") { withShareMode("persist") {
-      // verdict r12 #3: the funnel used to persist the corpus text twice
-      // (flags AND staged, both MEMORY_AND_DISK) — at 100 TB that is two
-      // full-corpus materializations. The contract now: one persisted
-      // frame with text (the flags pass), everything else narrow.
-      val (df, temps) = QueriesText.corpusFunnelRaw(corpus.toDF("doc_id", "lang", "text"))
-      try {
-        df.collect()
-        assert(temps.nonEmpty && temps.forall(_.storageLevel.useMemory))
-        val withText = temps.filter(_.columns.contains("text"))
-        assert(withText.size == 1,
-          s"persisted temps carrying text: ${temps.map(_.columns.mkString("(", ",", ")")).mkString(" ")}")
-      } finally temps.foreach(_.unpersist(blocking = false))
-  }
+  test("storage: exactly ONE persisted frame carries the text column") {
+    // verdict r12 #3: the funnel used to persist the corpus text twice
+    // (flags AND staged) — at 100 TB that is two full-corpus
+    // materializations. The contract now: one shared frame with text
+    // (the flags pass), everything else narrow. Every temp is a
+    // share; each share's captured plan carries its columns.
+    val ((df, temps), shares) =
+      sharePlans(QueriesText.corpusFunnelRaw(corpus.toDF("doc_id", "lang", "text")))
+    try {
+      df.collect()
+      assert(temps.nonEmpty && shares.size == temps.size,
+        s"${temps.size} temps, ${shares.size} shares built")
+      val cols = shares.map(_.output.map(_.name))
+      assert(cols.count(_.contains("text")) == 1,
+        s"shares carrying text: ${cols.map(_.mkString("(", ",", ")")).mkString(" ")}")
+    } finally temps.foreach(Caching.unshare)
   }
 }

@@ -76,32 +76,32 @@ class IvfSpec extends SparkSpec {
     index.release()
   }
 
-  test("map-only NearestCentroid assignment == join-based max_by assignment") { withShareMode("persist") {
-      val emb = Tables.embeddings(spark, sf)
-      val index = Ivf.build(emb, "vec_id", "embedding", k = 8, iters = 2)
-      // reference formulation: score every (vector, centroid) pair,
-      // keep the max-cosine centroid (ties -> smallest cid)
-      graft.functions.VectorFunctions.register(spark)
-      val joined = emb.crossJoin(broadcast(index.centroids))
-        .withColumn("__c", call_function("cosine_sim", $"embedding", $"centroid"))
-        .groupBy($"vec_id")
-        .agg(max_by($"cid", struct($"__c", (-$"cid").as("__nc"))).as("cid"),
-          max($"__c").as("__c"))
-      val fast = index.lists.select($"vec_id", $"cid", $"__c")
-      assert(fast.exceptAll(joined).isEmpty && joined.exceptAll(fast).isEmpty)
-      // and the assignment itself must be a projection: it adds ZERO
-      // exchanges over the bare corpus scan (the loader's gated
-      // single-row-group spread is the only one in either plan)
-      def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
-        // a materialized AQE plan prints "== Final Plan ==" AND
-        // "== Initial Plan ==" — count the final section only
-        val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-        "Exchange".r.findAllIn(plan).length
-      }
-      assert(exchanges(index.lists) == exchanges(emb),
-        index.lists.queryExecution.executedPlan.toString.linesIterator.take(12).mkString("\n"))
-      index.release()
-  }
+  test("map-only NearestCentroid assignment == join-based max_by assignment") {
+    val emb = Tables.embeddings(spark, sf)
+    val (index, shares) = sharePlans(Ivf.build(emb, "vec_id", "embedding", k = 8, iters = 2))
+    // reference formulation: score every (vector, centroid) pair,
+    // keep the max-cosine centroid (ties -> smallest cid)
+    graft.functions.VectorFunctions.register(spark)
+    val joined = emb.crossJoin(broadcast(index.centroids))
+      .withColumn("__c", call_function("cosine_sim", $"embedding", $"centroid"))
+      .groupBy($"vec_id")
+      .agg(max_by($"cid", struct($"__c", (-$"cid").as("__nc"))).as("cid"),
+        max($"__c").as("__c"))
+    val fast = index.lists.select($"vec_id", $"cid", $"__c")
+    assert(fast.exceptAll(joined).isEmpty && joined.exceptAll(fast).isEmpty)
+    // and the assignment itself must be a projection: the lists
+    // share's own plan adds ZERO exchanges over the bare corpus scan
+    // (the loader's gated single-row-group spread is the only one in
+    // either plan)
+    def exchanges(plan: String): Int =
+      // a materialized AQE plan prints "== Final Plan ==" AND
+      // "== Initial Plan ==" — count the final section only
+      "Exchange".r.findAllIn(plan.split("== Initial Plan ==")(0)).length
+    assert(shares.size == 1, shares.mkString("\n---\n"))
+    val listsPlan = shares.head.toString
+    assert(listsPlan.contains("nearest_centroid") && listsPlan.contains("Scan parquet"), listsPlan)
+    assert(exchanges(listsPlan) == exchanges(emb.queryExecution.executedPlan.toString), listsPlan)
+    index.release()
   }
 
   test("saved index round-trips: probe on the loaded artifact equals brute force") {

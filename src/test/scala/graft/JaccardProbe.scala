@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.text.{DedupOps, TextOps}
+import graft.text.DedupOps
 
 object JaccardProbe {
   def t[A](name: String)(f: => A): A = {
@@ -12,8 +12,7 @@ object JaccardProbe {
     val dir = "/root/testdata/sf0.1"
     val spark = GraftSession.local(8)
     val docs = Tables.documents(spark, dir)
-    val grams = DedupOps.wordGrams(docs, "doc_id", col("text"), 3)
-      .select(col("doc_id"), xxhash64(col("gram")).as("gram"))
+    val grams = DedupOps.wordGramHashes(docs, "doc_id", col("text"), 3)
     t("grams")(grams.count())
     val df = grams.groupBy("gram").agg(count(lit(1)).as("__df"))
     t("df")(df.count())

@@ -116,17 +116,20 @@ class PlanSpec extends SparkSpec {
     assert(joins >= 2, s"expected the part-join shape, got $joins joins:\n$p")
   }
 
-  test("copurchase: basket assembly only — no fact self-join") { withShareMode("persist") {
-      // pair expansion is a map-side array transform over collected
-      // baskets; a SortMergeJoin/ShuffledHashJoin would mean the
-      // lineitem self-join (3 fact shuffles) crept back in. Assert the
-      // un-reaped pipeline — the query's checkpoint hides the plan.
-      val (out, baskets) = QueriesScale.copurchaseRaw(spark, sf)
-      val p = out.queryExecution.executedPlan.toString
-      baskets.unpersist()
-      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
-      assert(p.contains("collect_set"), p)
-  }
+  test("copurchase: basket assembly only — no fact self-join") {
+    // pair expansion is a map-side array transform over collected
+    // baskets; a join in the basket share would mean the lineitem
+    // self-join (3 fact shuffles) crept back in. The baskets are a
+    // share, so its own captured plan carries the assembly; the
+    // consumer's only joins are the two support broadcasts.
+    val ((out, baskets), shares) = sharePlans(QueriesScale.copurchaseRaw(spark, sf))
+    val p = try out.queryExecution.executedPlan.toString finally Caching.unshare(baskets)
+    assert(shares.size == 1, shares.mkString("\n---\n"))
+    val basketPlan = shares.head.toString
+    assert(basketPlan.contains("collect_set") && basketPlan.contains("Scan parquet"), basketPlan)
+    assert(!basketPlan.contains("Join"), basketPlan)
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
+    assert("BroadcastHashJoin".r.findAllIn(p).length == 2, p)
   }
 
   test("gram postings: the gram chain runs once, never as a pushed filter") {
@@ -262,14 +265,21 @@ class PlanSpec extends SparkSpec {
     assert("BroadcastNestedLoopJoin".r.findAllIn(p).length <= 1, p)
   }
 
-  test("revenue gini: prefix-sum rank, never a sort-merge or global-sort rank") { withShareMode("persist") {
-      val (out, ranked, x) = QueriesScale.revenueGiniRaw(Tables.orders(spark, sf))
-      val p = try out.queryExecution.executedPlan.toString
-      finally { ranked.unpersist(blocking = false); x.unpersist(blocking = false) }
-      assert(!p.contains("SortMergeJoin"),
-        "the offsets join must broadcast (totals are bucket-grain)")
-      assert(p.contains("BroadcastHashJoin"), p)
-  }
+  test("revenue gini: prefix-sum rank, never a sort-merge or global-sort rank") {
+    // the rank is a share: its own captured plan carries the prefix
+    // sum, whose offsets join must broadcast (totals are bucket-grain)
+    val ((out, ranked, x), shares) =
+      sharePlans(QueriesScale.revenueGiniRaw(Tables.orders(spark, sf)))
+    val p = try out.queryExecution.executedPlan.toString
+    finally { Caching.unshare(ranked); Caching.unshare(x) }
+    assert(shares.size == 2, shares.mkString("\n---\n"))
+    val rankPlan = shares(1).toString
+    assert(rankPlan.contains("BroadcastHashJoin") && rankPlan.contains("Window"), rankPlan)
+    (p +: shares.map(_.toString)).foreach { plan =>
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"), plan)
+      // a global-sort (orderBy) rank would plan a range exchange
+      assert(!plan.contains("rangepartitioning"), plan)
+    }
   }
 
   test("lexical diversity is map-only: zero exchanges, text-pruned scan") {

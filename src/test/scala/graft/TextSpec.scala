@@ -34,12 +34,6 @@ class TextSpec extends SparkSpec {
     assert(df.as[String].collect().toSeq == Seq("de", "fr", "zh", "unknown"))
   }
 
-  test("wordGrams emits distinct n-grams and handles short docs") {
-    val df = Seq((1L, "a b c d"), (2L, "x y")).toDF("id", "text")
-    val grams = DedupOps.wordGrams(df, "id", $"text", 3).as[(Long, String)].collect().toSet
-    assert(grams == Set((1L, "a b c"), (1L, "b c d")))
-  }
-
   test("ngram jaccard finds the duplicated document pair") {
     val df = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
@@ -57,7 +51,7 @@ class TextSpec extends SparkSpec {
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (3L, "one two three four five six seven eight nine ten")
     ).toDF("doc_id", "text")
-    val grams = DedupOps.wordGrams(df, "doc_id", $"text", 3)
+    val grams = DedupOps.wordGramHashes(df, "doc_id", $"text", 3)
     val sigs = DedupOps.minhashSignatures(grams, "doc_id", 32)
     val pairs = DedupOps.minhashLshPairs(sigs, "doc_id", 32, 8, 0.9)
       .select("doc1", "doc2").as[(Long, Long)].collect().toSeq

@@ -7,19 +7,18 @@ val aVal = sys.env("AB_A"); val bVal = sys.env("AB_B")
 val qs = sys.env("AB_QUERIES").split(",")
 val reps = sys.env.getOrElse("AB_REPS", "3").toInt
 def noop(df: org.apache.spark.sql.DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-def hyg(): Unit = { spark.catalog.clearCache(); spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true)); System.gc() }
 spark.range(1000).selectExpr("sum(id)").collect()
 var totA = 0.0; var totB = 0.0
 qs.foreach { q =>
   val fn = graft.Queries.all(q)
   // warm both variants once
-  Seq(aVal, bVal).foreach { v => spark.conf.set(confKey, v); noop(fn(spark, dir)); hyg() }
+  Seq(aVal, bVal).foreach { v => spark.conf.set(confKey, v); noop(fn(spark, dir)); graft.GraftSession.clearCache(spark) }
   val times = scala.collection.mutable.Map("A" -> List.empty[Double], "B" -> List.empty[Double])
   (1 to reps).foreach { _ =>
     Seq(("A", aVal), ("B", bVal)).foreach { case (tag, v) =>
       spark.conf.set(confKey, v)
       val t0 = System.nanoTime(); noop(fn(spark, dir)); val dt = (System.nanoTime()-t0)/1e9
-      hyg()
+      graft.GraftSession.clearCache(spark)
       times(tag) = dt :: times(tag)
     }
   }
