@@ -68,16 +68,22 @@ object GraftFunctions {
 }
 
 /** Session extension: `spark.sql.extensions=graft.GraftExtensions`.
-  * Injects the function table plus the Expand-free multi-distinct
-  * optimizer rule ([[graft.plans.ExpandFreeDistinct]]). The rule's
-  * cost gate alone decides which aggregates it rewrites; its one
-  * switch, `spark.graft.expandFreeDistinct.enabled=false`, turns it
-  * off. */
+  * Injects the function table plus two optimizer rules, neither with
+  * a switch of its own:
+  *  - [[graft.plans.FactSpread]] decides, from the plan, whether an
+  *    unsplittable file scan gets a round-robin spread;
+  *  - [[graft.plans.ExpandFreeDistinct]] rewrites multi-distinct
+  *    aggregates its cost gate admits.
+  * To plan without one (a reference plan in a spec), name it in
+  * Spark's own `spark.sql.optimizer.excludedRules`. FactSpread runs
+  * first in the batch, so a spread child fails ExpandFreeDistinct's
+  * cheap-child gate: a child that heavy is not run once per distinct. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, i, b) =>
       ext.injectFunction((FunctionIdentifier(name), i, b))
     }
+    ext.injectOptimizerRule(graft.plans.FactSpread(_))
     ext.injectOptimizerRule(_ => graft.plans.ExpandFreeDistinct)
   }
 }

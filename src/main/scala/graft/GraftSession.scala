@@ -49,11 +49,11 @@ object GraftSession {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
-    // the loaders round-robin-spread unsplittable single-row-group
-    // inputs; the pre-repartition binary row sort only exists for
-    // retry determinism, and every verified query is
-    // partition-independent by contract (exact decimal/integer
-    // math), so skip the sort
+    // the FactSpread rule round-robin-spreads unsplittable
+    // single-row-group scans under heavy map work; the pre-repartition
+    // binary row sort only exists for retry determinism, and every
+    // verified query is partition-independent by contract (exact
+    // decimal/integer math), so skip the sort
     "spark.sql.execution.sortBeforeRepartition" -> "false",
     // older testdata generations carry TIMESTAMP(NANOS) in
     // events.parquet, which Spark rejects; read those as epoch-nanos
@@ -84,9 +84,10 @@ object GraftSession {
       .builder()
       .master(s"local[$cores]")
       // the engine runs WITH its own extension (SQL function surface +
-      // the ExpandFreeDistinct optimizer rule) — the correctness gate
-      // and every spec therefore continuously prove the injected
-      // rule's non-interference with the whole query surface
+      // the FactSpread and ExpandFreeDistinct optimizer rules) — the
+      // correctness gate and every spec therefore continuously prove
+      // the injected rules' non-interference with the whole query
+      // surface
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)

@@ -46,15 +46,6 @@ object QueriesAnalytics {
     * multi-distinct. */
   def kpiSummary(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
-    // the distinct probes read a RAW pruned scan: their map side is a
-    // hash-dedup of ONE integer column that reduces 600k rows to the
-    // key set before any exchange, so the loader's parallelism spread
-    // would be a pure extra full-row exchange per probe (guide §2.4 —
-    // measured 0.84 s spread vs 0.32 s raw per probe at sf0.1; on a
-    // splittable layout the spread is an identity anyway). The base
-    // agg keeps the spread: its per-row decimal work is what the
-    // spread parallelizes (measured 0.36 vs 0.51 s).
-    val liRaw = Tables.table(s, dir, "lineitem")
     val base = li.agg(
         revenue.as("total_revenue"),
         count(lit(1)).as("total_line_items"),
@@ -62,7 +53,7 @@ object QueriesAnalytics {
     // count(col), not count(1): a NULL key must not count as a
     // distinct value (countDistinct / DuckDB count(DISTINCT) exclude it)
     def nDistinct(c: String, as: String): DataFrame =
-      liRaw.select(c).distinct().agg(count(col(c)).as(as))
+      li.select(c).distinct().agg(count(col(c)).as(as))
     base
       .crossJoin(nDistinct("l_orderkey", "total_orders"))
       .crossJoin(nDistinct("l_partkey", "distinct_parts"))
@@ -107,8 +98,7 @@ object QueriesAnalytics {
 
   /** #18 monthly revenue trend (dashboard.py's monthly sales trend). */
   def monthlyTrend(s: SparkSession, dir: String): DataFrame =
-    // unspread: reduce-first to the month grain (A/B 0.69x)
-    Tables.ordersUnspread(s, dir)
+    Tables.orders(s, dir)
       .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
       .agg(
         Money.sumExact(col("o_totalprice")).as("revenue"),
@@ -119,8 +109,7 @@ object QueriesAnalytics {
 
   /** #19 top-10 customers by spend (dashboard.py:215-239). */
   def topCustomers(s: SparkSession, dir: String): DataFrame = {
-    // unspread: reduce-first to the customer grain (A/B 0.59x)
-    val m = Tables.ordersUnspread(s, dir)
+    val m = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(Money.sumExact(col("o_totalprice")).as("total_spent"), count(lit(1)).as("total_orders"))
     m.join(broadcast(Tables.customer(s, dir)), col("o_custkey") === col("c_custkey"))
@@ -132,9 +121,7 @@ object QueriesAnalytics {
   /** #20 tumbling-window event aggregation (batch twin of
     * `graft.streaming.EventStream`). */
   def eventsWindowed(s: SparkSession, dir: String): DataFrame =
-    // unspread: reduce-first to the hour x type grain (A/B 0.55x,
-    // OPTIMIZATION_r18.md §2)
-    Tables.eventsUnspread(s, dir)
+    Tables.events(s, dir)
       .groupBy(
         date_trunc("hour", col("ts")).as("window_start"),
         col("event_type")
@@ -152,9 +139,7 @@ object QueriesAnalytics {
     * partitioning. */
   def sessionize(s: SparkSession, dir: String): DataFrame = {
     val order = Window.partitionBy("user_id").orderBy(col("ts_s"), col("event_id"))
-    // unspread: the user-keyed window exchange re-partitions every row
-    // anyway (A/B 0.58x)
-    val ev = Tables.eventsUnspread(s, dir)
+    val ev = Tables.events(s, dir)
       .select(
         col("user_id"), col("event_id"),
         date_trunc("second", col("ts")).as("ts_s"), col("value")
@@ -189,8 +174,7 @@ object QueriesAnalytics {
     * partitioning. */
   def runningTotal(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-    // unspread: keyed window exchange re-partitions every row (A/B 0.43x)
-    Tables.ordersUnspread(s, dir).select(
+    Tables.orders(s, dir).select(
       col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
       row_number().over(w).as("order_seq"),
       sum(Money.dec(col("o_totalprice")))
@@ -215,9 +199,7 @@ object QueriesAnalytics {
     * no float interpolation — the value is a real data point, so it's
     * engine-portable by construction. */
   def medianOrderValue(s: SparkSession, dir: String): DataFrame = {
-    // unspread: broadcast probe straight into the rank-selection
-    // bucket collapse (A/B 0.53x)
-    val o = Tables.ordersUnspread(s, dir)
+    val o = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir).select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
     graft.operators.Quantiles.selectAtRanks(
@@ -230,8 +212,7 @@ object QueriesAnalytics {
   /** #45 revenue histogram: 10k-unit price buckets via exact integer
     * division on cents. */
   def revenueHistogram(s: SparkSession, dir: String): DataFrame =
-    // unspread: reduce-first to ~100 bucket cells (A/B 0.72x)
-    Tables.lineitemUnspread(s, dir)
+    Tables.lineitem(s, dir)
       .select(call_function("div",
         (Money.dec(col("l_extendedprice")) * 100).cast("long"), lit(1000000L)).as("bucket_10k"))
       .groupBy("bucket_10k")
@@ -252,7 +233,7 @@ object QueriesAnalytics {
     * The heavy work (fact → day totals) is one map-side-combined
     * aggregation. */
   def dailyTrend(s: SparkSession, dir: String): DataFrame =
-    dailyTrendOn(Tables.ordersUnspread(s, dir)) // reduce-first to the day grain (A/B 0.52x)
+    dailyTrendOn(Tables.orders(s, dir))
 
   private[graft] def dailyTrendOn(orders: DataFrame): DataFrame = {
     val daily = orders
@@ -287,7 +268,7 @@ object QueriesAnalytics {
     * shuffle sessionize needs — no global sort), then ≤ 7 bucket
     * cells; the permille window runs on the bucket grain. */
   def eventGaps(s: SparkSession, dir: String): DataFrame =
-    eventGapsOn(Tables.eventsUnspread(s, dir)) // keyed-window-first (A/B 0.46x)
+    eventGapsOn(Tables.events(s, dir))
 
   private[graft] def eventGapsOn(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts_s"), col("event_id"))
@@ -374,7 +355,7 @@ object QueriesAnalytics {
     * high-cardinality states (page URLs) the matrix itself is the
     * scale object — cap to top-K states first (#55's sketch). */
   def eventTransitions(s: SparkSession, dir: String): DataFrame =
-    eventTransitionsOn(Tables.eventsUnspread(s, dir)) // keyed-window-first (A/B 0.43x)
+    eventTransitionsOn(Tables.events(s, dir))
 
   private[graft] def eventTransitionsOn(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts_s"), col("event_id"))
@@ -447,14 +428,11 @@ object QueriesAnalytics {
     * columns grouped by a plain attribute over a scan/project chain is
     * exactly the rule's auto-fire shape. PlanSpec asserts the executed
     * plan carries no Expand and recombines per-column parts with joins.
-    *
-    * Scans `orders.parquet` directly rather than through
-    * [[Tables.orders]]: the low-SF `spread` repartition would sit in
-    * the aggregate child and (correctly) trip the rule's cost gate —
-    * at real scale the scan has full parallelism and spread is an
-    * identity, so the direct read IS the 100 TB shape. */
+    * The aggregate child is date math over a bare scan, so
+    * [[graft.plans.FactSpread]] leaves it unspread and the rewrite's
+    * cheap-child gate admits it. */
   def yearlyDistincts(s: SparkSession, dir: String): DataFrame = {
-    Tables.table(s, dir, "orders").createOrReplaceTempView("graft_orders_yd")
+    Tables.orders(s, dir).createOrReplaceTempView("graft_orders_yd")
     s.sql(
       """SELECT order_year,
         |       count(DISTINCT o_custkey)       AS n_customers,
@@ -493,8 +471,7 @@ object QueriesAnalytics {
     * the plan-shape spec asserts on the result BEFORE the checkpoint
     * truncates its lineage. */
   private[graft] def rfmSegmentsRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // unspread: reduce-first to the customer grain (A/B 0.72x)
-    val o = Tables.ordersUnspread(s, dir)
+    val o = Tables.orders(s, dir)
     // the corpus as-of date is the global max order date — a pruned
     // 1-column scan (parquet stats short-circuit it), computed once,
     // broadcast once; deriving it from the customer grain would pin
@@ -565,7 +542,7 @@ object QueriesAnalytics {
     * permille on exact cent sums: no float division to disagree
     * across engines or partitionings. */
   def weekdaySeasonality(s: SparkSession, dir: String): DataFrame =
-    weekdaySeasonalityOn(Tables.ordersUnspread(s, dir)) // reduce-first to 7 cells (A/B 0.71x)
+    weekdaySeasonalityOn(Tables.orders(s, dir))
 
   private[graft] def weekdaySeasonalityOn(orders: DataFrame): DataFrame = {
     val d = orders
@@ -604,16 +581,11 @@ object QueriesAnalytics {
     * supplier grain. Name/nation dims broadcast. Rates are exact
     * integer permille (`div` on long sums). */
   def supplierScorecard(s: SparkSession, dir: String): DataFrame =
-    // the main pass keeps the spread loaders (decimal-heavy partial
-    // agg wants the parallel map); only the parts-distinct probe
-    // inside reads raw (see supplierScorecardOn)
     supplierScorecardOn(Tables.lineitem(s, dir), Tables.orders(s, dir),
-      Tables.supplier(s, dir), Tables.nation(s, dir),
-      partsSide = Some(Tables.lineitemUnspread(s, dir)))
+      Tables.supplier(s, dir), Tables.nation(s, dir))
 
   private[graft] def supplierScorecardOn(lineitem: DataFrame, orders: DataFrame,
-      supplier: DataFrame, nation: DataFrame,
-      partsSide: Option[DataFrame] = None): DataFrame = {
+      supplier: DataFrame, nation: DataFrame): DataFrame = {
     val li = lineitem.select(col("l_orderkey"), col("l_suppkey"),
       col("l_extendedprice"), col("l_discount"), col("l_returnflag"), col("l_shipdate"))
     val o = orders.select(col("o_orderkey"), col("o_orderdate"))
@@ -624,10 +596,7 @@ object QueriesAnalytics {
         revenue.as("revenue"),
         sum(when(col("l_returnflag") === "R", lit(1L)).otherwise(lit(0L))).as("__nret"),
         sum(datediff(col("l_shipdate"), col("o_orderdate")).cast("long")).as("__days"))
-    // the distinct probe reduces map-side to the (supp, part) key set —
-    // an unspread scan skips a full-row exchange (same evidence as
-    // q_kpi_summary's probes, OPTIMIZATION_r18.md §2)
-    val parts = partsSide.getOrElse(lineitem)
+    val parts = lineitem
       .select(col("l_suppkey"), col("l_partkey")).distinct()
       .groupBy(col("l_suppkey")).agg(count(lit(1)).as("distinct_parts"))
     a.join(parts, "l_suppkey")
@@ -656,7 +625,7 @@ object QueriesAnalytics {
     * Catalyst plans the groupBy with no second exchange. All stats
     * are integer-exact (day gaps, long sums, `div`). */
   def interpurchase(s: SparkSession, dir: String): DataFrame =
-    interpurchaseOn(Tables.ordersUnspread(s, dir)) // keyed-window-first (A/B 0.47x)
+    interpurchaseOn(Tables.orders(s, dir))
 
   private[graft] def interpurchaseOn(orders: DataFrame): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -690,9 +659,7 @@ object QueriesAnalytics {
     * (calendar-grain semi-join, broadcast — the day dimension is
     * bounded by the calendar, not the data). */
   def rollingUsers(s: SparkSession, dir: String): DataFrame =
-    // unspread: the user-day distinct collapses map-side (A/B 0.33x
-    // together with the shared grain below)
-    rollingUsersOn(Tables.eventsUnspread(s, dir))
+    rollingUsersOn(Tables.events(s, dir))
 
   private[graft] def rollingUsersOn(events: DataFrame): DataFrame = {
     val (out, ud) = rollingUsersRaw(events, shareGrain = true)
@@ -735,9 +702,7 @@ object QueriesAnalytics {
     * interval bounds are post-join filters — no nested loop); in
     * streaming form the same interval is what bounds the join state. */
   def attribution(s: SparkSession, dir: String): DataFrame = {
-    // unspread: both sides collapse into the user-keyed join exchange
-    // (A/B 0.65x)
-    val ev = Tables.eventsUnspread(s, dir)
+    val ev = Tables.events(s, dir)
     val clicks = ev.where(col("event_type") === "click")
       .select("user_id", "event_id", "ts")
     val purchases = ev.where(col("event_type") === "purchase")

@@ -95,10 +95,7 @@ object QueriesEtl {
 
   /** #7 latest-record-wins dedup per user (map-side max_by). */
   def dedupLatest(s: SparkSession, dir: String): DataFrame = {
-    // unspread: the max_by collapse to the user grain happens map-side
-    // before the only exchange (guide §2.4; A/B 0.40x — see
-    // OPTIMIZATION_r18.md §2)
-    val ev = Tables.eventsUnspread(s, dir)
+    val ev = Tables.events(s, dir)
       .select(
         col("user_id"),
         col("event_id"),
@@ -176,8 +173,7 @@ object QueriesEtl {
 
   /** #10 per-customer behavioral metrics. */
   def customerMetrics(s: SparkSession, dir: String): DataFrame = {
-    // unspread: reduce-first to the customer grain (A/B 0.55x)
-    val m = Gold.entityMetrics(Tables.ordersUnspread(s, dir), "o_custkey", col("o_totalprice"), col("o_orderdate"))
+    val m = Gold.entityMetrics(Tables.orders(s, dir), "o_custkey", col("o_totalprice"), col("o_orderdate"))
     m.join(broadcast(Tables.customer(s, dir)), m("o_custkey") === col("c_custkey"))
       .select(
         col("c_custkey"), col("c_name"), col("c_mktsegment"),
@@ -188,8 +184,7 @@ object QueriesEtl {
 
   /** #11 customer × month revenue mart. */
   def customerMonthlyMart(s: SparkSession, dir: String): DataFrame = {
-    // unspread: reduce-first to the customer x month grain (A/B 0.69x)
-    val m = Gold.monthlyMart(Tables.ordersUnspread(s, dir), "o_custkey", col("o_orderdate"), col("o_totalprice"))
+    val m = Gold.monthlyMart(Tables.orders(s, dir), "o_custkey", col("o_orderdate"), col("o_totalprice"))
     m.join(broadcast(Tables.customer(s, dir)), m("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("sales_month"), col("total_sales"), col("n_orders"))
   }
@@ -212,9 +207,7 @@ object QueriesEtl {
     * expectation folds into a single scan via [[DataQuality]]). */
   def dqSummary(s: SparkSession, dir: String): DataFrame = {
     import DataQuality._
-    // unspread: one conditional-agg pass collapsing to a single row
-    // (A/B 0.47x)
-    run(Tables.ordersUnspread(s, dir), Seq(
+    run(Tables.orders(s, dir), Seq(
       NotNull("o_custkey"),
       Unique("o_orderkey"),
       Between("o_totalprice", 0.0, 1000000.0),
@@ -246,11 +239,7 @@ object QueriesEtl {
     * deterministic with unique right timestamps per key. */
   def asofJoin(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AsOfJoin
-    // unspread events: the carry window's key exchange re-partitions
-    // every row anyway, so the loader spread is a pure extra exchange
-    // (A/B 0.53x with the fused dedup below). The orders side still
-    // reads the spread loader; it has not been A/B'd unspread.
-    val left = Tables.eventsUnspread(s, dir)
+    val left = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), date_trunc("second", col("ts")).as("ts_s"))
     // latest-order-per-(custkey, date) dedup is FUSED into the carry
     // window's tie-break (max o_orderkey wins, exactly what the old
@@ -285,7 +274,7 @@ object QueriesEtl {
     * aggregation to ≤9 digit cells; the total re-derives from those
     * cells with a 9-row window, so no second scan. */
   def benford(s: SparkSession, dir: String): DataFrame =
-    benfordOn(Tables.ordersUnspread(s, dir)) // reduce-first to <=9 cells (A/B 0.69x)
+    benfordOn(Tables.orders(s, dir))
 
   private[graft] def benfordOn(orders: DataFrame): DataFrame = {
     // round(log10(1 + 1/d) * 1000) for d = 1..9
@@ -360,9 +349,7 @@ object QueriesEtl {
     * `delete` can't occur with an append-only fact (the branch is
     * exercised structurally by the full-outer shape). */
   def snapshotDiff(s: SparkSession, dir: String): DataFrame = {
-    // unspread: both snapshots collapse to the customer grain map-side
-    // (A/B 0.59x)
-    val o = Tables.ordersUnspread(s, dir)
+    val o = Tables.orders(s, dir)
     snapshotDiffOn(
       o.where(to_date(col("o_orderdate")) < lit("1997-01-01").cast("date")), o)
   }
@@ -418,19 +405,17 @@ object QueriesEtl {
     // probes ride the same pass as broadcasts). Identical counts to
     // the per-edge audit as long as parent keys are unique (they are
     // PKs; a dup-keyed parent inflates child counts in EITHER form).
-    // unspread facts: every edge is a broadcast-probe straight into a
-    // one-row conditional aggregate (A/B 0.66x)
     val liEdges = multiEdgeAudit(
-      Tables.lineitemUnspread(s, dir), "lineitem",
-      Seq(("l_orderkey", Tables.ordersUnspread(s, dir), "o_orderkey", "orders"),
+      Tables.lineitem(s, dir), "lineitem",
+      Seq(("l_orderkey", Tables.orders(s, dir), "o_orderkey", "orders"),
         ("l_partkey", t("part"), "p_partkey", "part"),
         ("l_suppkey", t("supplier"), "s_suppkey", "supplier")))
     val edges = Seq(
-      (Tables.ordersUnspread(s, dir), "o_custkey", t("customer"), "c_custkey", "orders.o_custkey->customer.c_custkey"),
+      (Tables.orders(s, dir), "o_custkey", t("customer"), "c_custkey", "orders.o_custkey->customer.c_custkey"),
       (t("customer"), "c_nationkey", t("nation"), "n_nationkey", "customer.c_nationkey->nation.n_nationkey"),
       (t("supplier"), "s_nationkey", t("nation"), "n_nationkey", "supplier.s_nationkey->nation.n_nationkey"),
       (t("nation"), "n_regionkey", t("region"), "r_regionkey", "nation.n_regionkey->region.r_regionkey"),
-      (Tables.eventsUnspread(s, dir), "user_id", t("customer"), "c_custkey", "events.user_id->customer.c_custkey"))
+      (Tables.events(s, dir), "user_id", t("customer"), "c_custkey", "events.user_id->customer.c_custkey"))
     (liEdges +: edges.map { case (c, fk, p, pk, label) => edgeAudit(c, fk, p, pk, label) })
       .reduce(_.unionAll(_))
       .orderBy("edge")

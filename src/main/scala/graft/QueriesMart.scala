@@ -55,9 +55,7 @@ object QueriesMart {
     * driver), never a global sort. Revenue ties break on orderkey so
     * the 10-row set is deterministic in any engine. */
   def shippingPriority(s: SparkSession, dir: String): DataFrame =
-    // unspread facts: the orderkey join exchange re-partitions every
-    // row anyway (A/B 0.59x, OPTIMIZATION_r18.md §2)
-    shippingPriorityOn(Tables.lineitemUnspread(s, dir), Tables.ordersUnspread(s, dir),
+    shippingPriorityOn(Tables.lineitem(s, dir), Tables.orders(s, dir),
       Tables.customer(s, dir), "BUILDING", "1998-06-01")
 
   private[graft] def shippingPriorityOn(lineitem: DataFrame, orders: DataFrame,
@@ -124,9 +122,7 @@ object QueriesMart {
     * nations before the fact ever joins. Output is ≤ |nations in
     * region| cells. */
   def localSupplierVolume(s: SparkSession, dir: String): DataFrame =
-    // unspread facts: broadcast-pruned sides meet at the orderkey join
-    // exchange (A/B 0.61x)
-    localSupplierVolumeOn(Tables.lineitemUnspread(s, dir), Tables.ordersUnspread(s, dir),
+    localSupplierVolumeOn(Tables.lineitem(s, dir), Tables.orders(s, dir),
       Tables.customer(s, dir), Tables.supplier(s, dir),
       Tables.nation(s, dir), Tables.region(s, dir), "ASIA", 1997)
 
@@ -224,7 +220,7 @@ object QueriesMart {
     * ratio-formed (both sides positive) so integer-division
     * semantics never meet a negative operand. */
   def wowGrowth(s: SparkSession, dir: String): DataFrame =
-    wowGrowthOn(Tables.ordersUnspread(s, dir)) // reduce-first to the week grain (A/B 0.60x)
+    wowGrowthOn(Tables.orders(s, dir))
 
   private[graft] def wowGrowthOn(orders: DataFrame): DataFrame = {
     val byWeek = orders
@@ -251,7 +247,7 @@ object QueriesMart {
     * Scale shape: map-only projection to two small ints, map-side-
     * combined agg into ≤168 cells, total recombined broadcast. */
   def hourlyHeatmap(s: SparkSession, dir: String): DataFrame =
-    hourlyHeatmapOn(Tables.eventsUnspread(s, dir)) // reduce-first to 168 cells (A/B 0.30x)
+    hourlyHeatmapOn(Tables.events(s, dir))
 
   private[graft] def hourlyHeatmapOn(events: DataFrame): DataFrame = {
     val d = events
@@ -331,7 +327,7 @@ object QueriesMart {
     * exactly as the calendar-grain windows of #88 argue). The grain
     * persists for the median pass and the gate; reaped on return. */
   def anomalyDays(s: SparkSession, dir: String): DataFrame =
-    anomalyDaysOn(Tables.ordersUnspread(s, dir)) // reduce-first to the day grain (A/B 0.61x)
+    anomalyDaysOn(Tables.orders(s, dir))
 
   private[graft] def anomalyDaysOn(orders: DataFrame): DataFrame = {
     def lowerMedian(df: DataFrame, value: Column, out: String): DataFrame = {
@@ -369,7 +365,7 @@ object QueriesMart {
     * the share denominator is a window over the histogram grain
     * (bounded by max basket size), not a second scan. */
   def orderLinesProfile(s: SparkSession, dir: String): DataFrame =
-    orderLinesProfileOn(Tables.lineitemUnspread(s, dir)) // reduce-first to the order grain (A/B 0.52x)
+    orderLinesProfileOn(Tables.lineitem(s, dir))
 
   private[graft] def orderLinesProfileOn(lineitem: DataFrame): DataFrame = {
     val sz = lineitem.groupBy(col("l_orderkey")).agg(count(lit(1)).as("n_lines"))
@@ -393,7 +389,7 @@ object QueriesMart {
     * then a ≤ years×3×4-cell matrix; the cohort denominator and the
     * final-year trim are windows over that bounded grain. */
   def customerMigration(s: SparkSession, dir: String): DataFrame =
-    customerMigrationOn(Tables.ordersUnspread(s, dir)) // reduce-first to the customer grain (A/B 0.56x)
+    customerMigrationOn(Tables.orders(s, dir))
 
   private[graft] def customerMigrationOn(orders: DataFrame): DataFrame = {
     val band = (n: Column) =>
@@ -432,9 +428,7 @@ object QueriesMart {
     * Three map-side-combined 1-row aggregates unioned; the lag is a
     * window over the 3-row frame. */
   def dqFreshness(s: SparkSession, dir: String): DataFrame =
-    // unspread: each side collapses to a 1-row max-date aggregate
-    // (A/B 0.60x)
-    dqFreshnessOn(Tables.ordersUnspread(s, dir), Tables.lineitemUnspread(s, dir), Tables.eventsUnspread(s, dir))
+    dqFreshnessOn(Tables.orders(s, dir), Tables.lineitem(s, dir), Tables.events(s, dir))
 
   private[graft] def dqFreshnessOn(orders: DataFrame, lineitem: DataFrame,
       events: DataFrame): DataFrame = {
@@ -579,9 +573,7 @@ object QueriesMart {
     * day, and the backlog is a cumulative window ABOVE that
     * aggregate — bounded by calendar size, never data size. */
   def openOrders(s: SparkSession, dir: String): DataFrame =
-    // unspread: both facts collapse to calendar/order grains map-side
-    // (A/B 0.51x)
-    openOrdersOn(Tables.ordersUnspread(s, dir), Tables.lineitemUnspread(s, dir))
+    openOrdersOn(Tables.orders(s, dir), Tables.lineitem(s, dir))
 
   private[graft] def openOrdersOn(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val placed = orders
@@ -658,7 +650,7 @@ object QueriesMart {
     * and the user-grain moment aggregation (same sharing as #113);
     * the head is a distributed TakeOrdered. */
   def botRegularity(s: SparkSession, dir: String): DataFrame =
-    botRegularityOn(Tables.eventsUnspread(s, dir)) // keyed-window-first (A/B 0.40x)
+    botRegularityOn(Tables.events(s, dir))
 
   private[graft] def botRegularityOn(events: DataFrame): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)

@@ -28,9 +28,7 @@ object QueriesScale {
         col("session_start"), col("session_end"),
         col("session_start").cast("long").as("__s"),
         col("session_end").cast("long").as("__e"))
-    // unspread: the user-keyed join exchange re-partitions every row
-    // (A/B 0.76x, OPTIMIZATION_r18.md §2)
-    val points = Tables.eventsUnspread(s, dir)
+    val points = Tables.events(s, dir)
       .select(
         col("user_id"), col("event_id"),
         date_trunc("second", col("ts")).as("ts_s"))
@@ -81,8 +79,7 @@ object QueriesScale {
   def windowSuite(s: SparkSession, dir: String): DataFrame = {
     val byDate = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
     val byPrice = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    // unspread: keyed window exchange re-partitions every row (A/B 0.43x)
-    Tables.ordersUnspread(s, dir).select(
+    Tables.orders(s, dir).select(
       col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
       lag(col("o_totalprice"), 1).over(byDate).as("prev_price"),
       lead(col("o_totalprice"), 1).over(byDate).as("next_price"),
@@ -99,9 +96,7 @@ object QueriesScale {
     * value is a real data point (rank ceil(p·n/100) under
     * (price, orderkey) order), identical to the window formulation. */
   def quartiles(s: SparkSession, dir: String): DataFrame = {
-    // unspread: broadcast probe into the rank-selection bucket collapse
-    // (A/B 0.49x)
-    val o = Tables.ordersUnspread(s, dir)
+    val o = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir).select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
     graft.operators.Quantiles.selectAtRanks(
@@ -395,10 +390,7 @@ object QueriesScale {
       when(pmod(col("c_custkey"), lit(10)) === 0, lit("MOVED")).otherwise(col("c_mktsegment")))
     val scd = Scd2.merge(existing, incoming, Seq("c_custkey"),
       Seq("c_name", "c_mktsegment", "c_acctbal"), lit("1995-06-01").cast("date"))
-    // unspread: the fact side is a trivial 3-column projection probing
-    // a broadcast-sized SCD dim — the spread would be a full-row
-    // exchange bought for a cheap map (A/B 0.83x)
-    Tables.ordersUnspread(s, dir).select("o_orderkey", "o_orderdate", "o_custkey")
+    Tables.orders(s, dir).select("o_orderkey", "o_orderdate", "o_custkey")
       .join(scd,
         col("o_custkey") === col("c_custkey") &&
           col("o_orderdate") >= col("valid_from") &&
@@ -415,9 +407,7 @@ object QueriesScale {
     * aggregates stream doubles and are order-dependent — unusable
     * under the determinism contract). */
   def revenueStats(s: SparkSession, dir: String): DataFrame = {
-    // unspread: broadcast dims then reduce to the nation x month grain
-    // (A/B 0.66x)
-    val monthly = Tables.ordersUnspread(s, dir)
+    val monthly = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir).select("c_custkey", "c_nationkey")),
         col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, dir).select("n_nationkey", "n_name")),
@@ -481,9 +471,7 @@ object QueriesScale {
     * verification reference; approx_count_distinct ships one HLL
     * sketch per partition and is the production column. */
   def hllDistinct(s: SparkSession, dir: String): DataFrame =
-    // unspread: reduce-first (per-type sketch + two-level distinct)
-    // (A/B 0.58x)
-    Tables.eventsUnspread(s, dir)
+    Tables.events(s, dir)
       .groupBy("event_type")
       .agg(
         approx_count_distinct(col("user_id"), 0.02).as("__approx"),
@@ -506,8 +494,7 @@ object QueriesScale {
     * the sketch exists to avoid — gate it in production); `sketch_ok`
     * asserts the ±5% envelope per scope, including the merged one. */
   def hllUnion(s: SparkSession, dir: String): DataFrame = {
-    // unspread: per-type sketch aggregation reduces map-side (A/B 0.39x)
-    val ev = Tables.eventsUnspread(s, dir).select(col("event_type"), col("user_id"))
+    val ev = Tables.events(s, dir).select(col("event_type"), col("user_id"))
     val perType = ev.groupBy("event_type")
       .agg(
         hll_sketch_agg(col("user_id")).as("__sk"),
@@ -635,10 +622,7 @@ object QueriesScale {
     * native forward ASOF (`<=`). */
   def asofForward(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AsOfJoin
-    // unspread events only: the carry window's key exchange
-    // re-partitions every row anyway — same shape/evidence as #43
-    // (probe 0.53x); the orders side keeps the spread loader, as in #43
-    val left = Tables.eventsUnspread(s, dir)
+    val left = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), date_trunc("second", col("ts")).as("ts_s"))
     // dedupLatest fused into the carry's tie-break, as in #43
     val right = Tables.orders(s, dir)
@@ -686,9 +670,7 @@ object QueriesScale {
   def antiJoin(s: SparkSession, dir: String): DataFrame =
     Tables.customer(s, dir)
       .select("c_custkey", "c_name", "c_mktsegment")
-      // unspread: the anti-join's keyed exchange re-partitions the probe
-      // side anyway (A/B 0.78x)
-      .join(Tables.ordersUnspread(s, dir).select(col("o_custkey").as("c_custkey")), Seq("c_custkey"), "left_anti")
+      .join(Tables.orders(s, dir).select(col("o_custkey").as("c_custkey")), Seq("c_custkey"), "left_anti")
 
   /** #59 document chunking: split each doc into 256-token windows
     * with stride 192 (64-token overlap) — context-window prep for
@@ -742,9 +724,7 @@ object QueriesScale {
     * shuffle — no self-joins, no row explosion; `conversion_step`
     * counts how deep the user got. */
   def eventFunnel(s: SparkSession, dir: String): DataFrame = {
-    // unspread: three min-aggregations collapse to the user grain over
-    // one keyed exchange (A/B 0.40x)
-    val ev = Tables.eventsUnspread(s, dir)
+    val ev = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), date_trunc("second", col("ts")).as("ts_s"))
     // step 1: first view per user
     val v = ev.groupBy("user_id")
@@ -780,9 +760,7 @@ object QueriesScale {
     * by months-since-cohort in which they ordered again — the classic
     * retention triangle, two aggregations sharing the custkey shuffle. */
   def retentionCohort(s: SparkSession, dir: String): DataFrame = {
-    // unspread: both consumers collapse on the custkey exchange
-    // (A/B 0.58x)
-    val o = Tables.ordersUnspread(s, dir)
+    val o = Tables.orders(s, dir)
       .select(col("o_custkey"), date_trunc("month", col("o_orderdate")).as("m"))
     val cohort = o.groupBy("o_custkey").agg(min(col("m")).as("cohort_month"))
     o.join(cohort, "o_custkey")
@@ -811,9 +789,7 @@ object QueriesScale {
     * Space-Saving = top-k, Bloom = membership, GK = quantiles. */
   def approxQuantiles(s: SparkSession, dir: String): DataFrame = {
     val acc = 1000 // GK bound: rank error <= n/acc
-    // unspread: broadcast probe into the persisted 3-column projection
-    // (A/B 0.49x)
-    val o = Tables.ordersUnspread(s, dir)
+    val o = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir).select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment"), col("o_totalprice"), col("o_orderkey"))
@@ -868,7 +844,7 @@ object QueriesScale {
     * decile gate) and is reaped before return; the fact is scanned
     * once. */
   def revenueGini(s: SparkSession, dir: String): DataFrame =
-    revenueGiniOn(Tables.ordersUnspread(s, dir)) // reduce-first to the customer grain (A/B 0.52x)
+    revenueGiniOn(Tables.orders(s, dir))
 
   private[graft] def revenueGiniOn(orders: DataFrame): DataFrame = {
     val (out, ranked, x) = revenueGiniRaw(orders)
@@ -923,7 +899,7 @@ object QueriesScale {
     * carries ≤ #keys cells), then a ≤ 20-row magnitude histogram; the
     * permille window runs on that grain. */
   def keySkew(s: SparkSession, dir: String): DataFrame =
-    keySkewOn(Tables.lineitemUnspread(s, dir), "l_partkey") // reduce-first to the key grain (A/B 0.43x)
+    keySkewOn(Tables.lineitem(s, dir), "l_partkey")
 
   private[graft] def keySkewOn(df: DataFrame, key: String): DataFrame = {
     val perKey = df.groupBy(key).agg(count(lit(1)).as("__c"))

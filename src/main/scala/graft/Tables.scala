@@ -9,6 +9,16 @@ import org.apache.spark.sql.functions._
   * Catalyst prunes columns and pushes filters into the scan, which is
   * the property that matters at 100 TB (a 2-column projection must
   * read 2 columns).
+  *
+  * The testdata ships one unsplittable row group per table, so a bare
+  * fact scan runs in ONE task. Whether that scan gets a round-robin
+  * spread is decided per plan by the [[graft.plans.FactSpread]]
+  * optimizer rule (injected by [[GraftExtensions]]), not here: it
+  * spreads only when the map work above the scan is heavy per row,
+  * never a dimension-sized input and never a splittable layout. The
+  * one exception is
+  * [[documents]] / [[embeddings]], which keep a KEYED spread (see
+  * [[spreadKeyed]]).
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -19,77 +29,18 @@ object Tables {
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")
   def supplier(s: SparkSession, d: String): DataFrame  = table(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame      = table(s, d, "part")
-  /** Fact tables get the same single-row-group spread treatment as
-    * [[documents]] (see below): the testdata ships one unsplittable
-    * row group per table, so without an explicit repartition every
-    * scan+filter+partial-agg pipeline runs in ONE task. Spread is
-    * ROUND-ROBIN, not keyed: a keyed repartition would force the key
-    * column into every scan's ReadSchema and break column pruning
-    * (asserted in PlanSpec).
-    *
-    * GATED on actual scan parallelism: on a splittable layout (many
-    * files / row groups — any real cluster table) the scan already
-    * yields ≥ cores partitions and the repartition would be a pure
-    * full-fact shuffle per query, so it is skipped (spec-asserted in
-    * BucketingSpec). */
-  /** Scan partition count, memoized per (path, session): `df.rdd`
-    * forces full physical planning + file listing, and the answer is
-    * constant for a given path — paying it once per session instead
-    * of several times per query keeps the gate off the driver's
-    * critical path. */
-  private val scanParts = new scala.collection.concurrent.TrieMap[(String, String, String), Int]
-  private def scanPartitions(s: SparkSession, df: DataFrame, path: String): Int = {
-    // maxPartitionBytes is part of the key: it decides file splitting,
-    // and a count computed under a mutated conf (tests do this) must
-    // not poison later lookups under the default conf
-    val split = s.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-    scanParts.getOrElseUpdate((s.sparkContext.applicationId, path, split), df.rdd.getNumPartitions)
-  }
+  def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")
+  def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
 
-  /** Probe-only kill switch for the parallelism gate
-    * (`spark.graft.spread.enabled=false` skips every spread): exists
-    * so the per-query A/B instrument can measure each query with and
-    * without the spread in one session. Engine default is true —
-    * queries that want an unspread scan opt in per subtree (see the
-    * raw-scan call sites), they don't flip this globally. */
-  private def spreadEnabled(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.spread.enabled", "true").toBoolean
-
-  private[graft] def spread(s: SparkSession, df: DataFrame, path: String): DataFrame = {
+  /** Doc-key spread for tables consumed by per-key compute (documents,
+    * embeddings), on [[graft.plans.FactSpread]]'s scan-partition gate:
+    * an identity once the scan yields `spark.sql.shuffle.partitions`
+    * partitions. */
+  private def spreadKeyed(s: SparkSession, df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val target = s.conf.get("spark.sql.shuffle.partitions").toInt
-    if (!spreadEnabled(s) || scanPartitions(s, df, path) >= target) df
-    else df.repartition(target)
+    if (graft.plans.FactSpread.scanPartitions(df) >= target) df else df.repartition(key)
   }
 
-  /** Keyed variant for tables consumed by per-key compute (documents,
-    * embeddings): same parallelism gate, hash-spread on the key. */
-  private[graft] def spreadKeyed(s: SparkSession, df: DataFrame, key: org.apache.spark.sql.Column, path: String): DataFrame = {
-    val target = s.conf.get("spark.sql.shuffle.partitions").toInt
-    if (!spreadEnabled(s) || scanPartitions(s, df, path) >= target) df
-    else df.repartition(key)
-  }
-  def orders(s: SparkSession, d: String): DataFrame    = spread(s, table(s, d, "orders"), s"$d/orders")
-  def lineitem(s: SparkSession, d: String): DataFrame  = spread(s, table(s, d, "lineitem"), s"$d/lineitem")
-
-  /** UNSPREAD fact loaders — for subtrees whose FIRST operator
-    * reduces the fact map-side (a narrow distinct, a partial
-    * aggregation to a bounded grain, or a keyed exchange that
-    * re-partitions every row anyway) and whose per-row map work is
-    * trivial (column picks, date math). For that shape the spread is
-    * a pure extra full-row exchange: the map side collapses the rows
-    * before (or inside) the first real exchange, so parallelizing the
-    * map buys nothing the exchange doesn't already pay for. Measured
-    * per query with the interleaved A/B (OPTIMIZATION_r18.md §2):
-    * 0.30–0.78× on 40+ reduce-first queries, while per-row-HEAVY maps
-    * (tokenize, gram hashing, regex rules) keep the spread loaders —
-    * there the spread is exactly what parallelizes the map at any SF.
-    * On splittable layouts (any real cluster table) the spread gate is
-    * an identity, so both loaders are THE SAME 100 TB plan; this
-    * choice only exists on unsplittable single-row-group inputs. */
-  def ordersUnspread(s: SparkSession, d: String): DataFrame   = table(s, d, "orders")
-  def lineitemUnspread(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
-  def eventsUnspread(s: SparkSession, d: String): DataFrame   =
-    normalizeEventTs(table(s, d, "events"))
   /** `ts` normalization across testdata generations: older generators
     * wrote TIMESTAMP(NANOS) — which Spark's reader rejects, so
     * [[GraftSession]] sets `nanosAsLong` and the column arrives as an
@@ -126,8 +77,7 @@ object Tables {
       case _ => df
     }
 
-  def events(s: SparkSession, d: String): DataFrame =
-    spread(s, normalizeEventTs(table(s, d, "events")), s"$d/events")
+  def events(s: SparkSession, d: String): DataFrame = normalizeEventTs(table(s, d, "events"))
 
   /** Raw events scan, `ts` in its STORED type (epoch-nanos long or
     * TIMESTAMP_NTZ depending on testdata generation). Watermark
@@ -177,7 +127,7 @@ object Tables {
     * spread once, then compute. Filters/pruning still push through
     * the repartition into the scan. */
   def documents(s: SparkSession, d: String): DataFrame =
-    spreadKeyed(s, table(s, d, "documents"), col("doc_id"), s"$d/documents")
+    spreadKeyed(s, table(s, d, "documents"), col("doc_id"))
   def embeddings(s: SparkSession, d: String): DataFrame =
-    spreadKeyed(s, table(s, d, "embeddings"), col("vec_id"), s"$d/embeddings")
+    spreadKeyed(s, table(s, d, "embeddings"), col("vec_id"))
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 
 /** Optimizer rule: rewrite a GLOBAL aggregate containing two or more
   * `count(DISTINCT col)`s into a cross join of single-distinct
@@ -20,9 +19,9 @@ import org.apache.spark.sql.internal.SQLConf
   * pre-aggregate (shuffle volume = that column's key set) and
   * recombines the 1-row results with cross joins. The bet is
   * shuffle-bound clusters, and a cost gate (below) keeps it to
-  * children cheap enough to run once per distinct. Disable with
-  * `spark.graft.expandFreeDistinct.enabled=false`: the rule-off plan
-  * is the reference the rewrite's specs compare against.
+  * children cheap enough to run once per distinct. The rule-off plan
+  * the rewrite's specs compare against comes from Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.ExpandFreeDistinct`.
   *
   * Grouped aggregates rewrite too: each distinct becomes a
   * (groups :+ col) pre-aggregate re-counted per group, and the parts
@@ -48,11 +47,6 @@ import org.apache.spark.sql.internal.SQLConf
   * fixed-point-safe: its outputs contain no multi-distinct aggregate.
   */
 object ExpandFreeDistinct extends Rule[LogicalPlan] {
-  val ConfKey = "spark.graft.expandFreeDistinct.enabled"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(ConfKey, "true").toBoolean
-
   // Cost gate: the rewrite re-executes the child once per distinct
   // column (plus the base part). That trade is measured-good when the
   // child is a pruned scan chain — each re-execution scans only its own
@@ -80,8 +74,7 @@ object ExpandFreeDistinct extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+    plan.transformUp {
       case agg @ Aggregate(groupings, aggExprs, child, _)
           if groupings.forall(_.isInstanceOf[Attribute]) =>
         rewriteOrKeep(agg, groupings.map(_.asInstanceOf[Attribute]), aggExprs, child)

@@ -333,27 +333,12 @@ object DedupOps {
     (withCounts, Seq(kept, sets))
   }
 
-  /** MinHash signatures: k min-hashes per doc via seeded xxhash64
-    * over distinct grams. Returns (id, sig: array<long> of length k).
-    * The per-(doc,seed) min is a partial aggregation — the shuffle
-    * carries k rows per doc per map task, independent of doc size. */
-  def minhashSignatures(grams: DataFrame, id: String, k: Int): DataFrame = {
-    graft.functions.VectorAggFunctions.register(grams.sparkSession)
-    // all k seeded hashes in one array per gram row, reduced by the
-    // element-wise vec_min aggregate: no k-fold explode, one shuffle
-    // of long[k] buffers
-    grams
-      .withColumn("vec", transform(sequence(lit(0), lit(k - 1)), s => xxhash64(s, col("gram"))))
-      .groupBy(col(id))
-      .agg(call_function("vec_min", col("vec")).as("sig"))
-  }
-
   /** MinHash signatures straight from the document text via the
     * native [[graft.functions.MinHashSig]] expression: one narrow
     * map, no gram explode, no aggregation shuffle. Bit-identical to
-    * [[minhashSignatures]]∘[[wordGramHashes]]; docs with fewer than
-    * `n` tokens are dropped (no grams → no signature), matching the
-    * explode path. */
+    * k seeded xxhash64 minima over [[wordGramHashes]] (TextSpec keeps
+    * that relational formulation as the reference); docs with fewer
+    * than `n` tokens are dropped (no grams → no signature). */
   def minhashSignaturesNative(docs: DataFrame, id: String, text: Column, n: Int, k: Int): DataFrame = {
     graft.functions.MinHashSig.register(docs.sparkSession)
     docs

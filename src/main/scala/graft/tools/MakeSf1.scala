@@ -36,8 +36,8 @@ import graft.GraftSession
   *    EXACTLY while cross-copy cosines decorrelate — same reasoning
   *    as the text suffix, for the ANN family.
   *
-  * Fact tables are written as 32 files so the scan parallelizes
-  * without [[graft.Tables]]'s single-row-group spread; dimensions
+  * Fact tables are written as 32 files so the scan parallelizes by
+  * itself and [[graft.plans.FactSpread]] never spreads it; dimensions
   * stay single-file.
   */
 object MakeSf1 {

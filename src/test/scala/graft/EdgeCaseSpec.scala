@@ -179,7 +179,6 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("yearly distincts: NULL years and empty tables, with the rewrite on and off") {
-    import graft.plans.ExpandFreeDistinct
     // a tiny orders table with a NULL o_orderdate (-> NULL year group)
     // and a year (1997) carried by a single row
     val dir = java.nio.file.Files.createTempDirectory("graft_yd").toString
@@ -196,13 +195,9 @@ class EdgeCaseSpec extends SparkSpec {
       QueriesAnalytics.yearlyDistincts(spark, dir)
         .as[(Option[Int], Long, Long, Long, Long)].collect().toSeq
 
-    val saved = spark.conf.getOption(ExpandFreeDistinct.ConfKey)
-    val withRule = try { spark.conf.set(ExpandFreeDistinct.ConfKey, "true"); run() }
-    finally saved.fold(spark.conf.unset(ExpandFreeDistinct.ConfKey))(
-      spark.conf.set(ExpandFreeDistinct.ConfKey, _))
-    val withoutRule = try { spark.conf.set(ExpandFreeDistinct.ConfKey, "false"); run() }
-    finally saved.fold(spark.conf.unset(ExpandFreeDistinct.ConfKey))(
-      spark.conf.set(ExpandFreeDistinct.ConfKey, _))
+    def ruleOff[A](f: => A): A = SparkSpec.withoutRules(spark, SparkSpec.ExpandFreeDistinctRule)(f)
+    val withRule = run()
+    val withoutRule = ruleOff(run())
 
     assert(withRule == withoutRule,
       s"rewrite must be result-identical:\n on=$withRule\n off=$withoutRule")
@@ -221,13 +216,8 @@ class EdgeCaseSpec extends SparkSpec {
     Seq.empty[(Long, java.sql.Date, String, String)]
       .toDF("o_custkey", "o_orderdate", "o_orderpriority", "o_orderstatus")
       .write.mode("overwrite").parquet(s"$emptyDir/orders.parquet")
-    Seq("true", "false").foreach { v =>
-      try {
-        spark.conf.set(ExpandFreeDistinct.ConfKey, v)
-        assert(QueriesAnalytics.yearlyDistincts(spark, emptyDir).count() == 0)
-      } finally saved.fold(spark.conf.unset(ExpandFreeDistinct.ConfKey))(
-        spark.conf.set(ExpandFreeDistinct.ConfKey, _))
-    }
+    assert(QueriesAnalytics.yearlyDistincts(spark, emptyDir).count() == 0)
+    assert(ruleOff(QueriesAnalytics.yearlyDistincts(spark, emptyDir).count()) == 0)
   }
 
   test("streaming dedup gate skips docs too short to sign") {

@@ -2,7 +2,6 @@ package graft
 
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.plans.ExpandFreeDistinct
 
 /** Property test: on arbitrary small datasets (with NULLs in both
   * group keys and distinct columns) and arbitrary eligible aggregate
@@ -51,10 +50,9 @@ class ExpandFreeDistinctPropertySpec extends SparkSpec {
         val sql = s"SELECT ${sel.mkString(", ")} FROM efdp_$i" +
           (if (grouped) " GROUP BY g" else "")
         // baseline: Spark's own planning (rule disabled)
-        spark.conf.set(ExpandFreeDistinct.ConfKey, "false")
-        val expect =
-          try spark.sql(sql).collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")).toList
-          finally spark.conf.unset(ExpandFreeDistinct.ConfKey)
+        val expect = SparkSpec.withoutRules(spark, SparkSpec.ExpandFreeDistinctRule) {
+          spark.sql(sql).collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")).toList
+        }
         // active: through the session's injected rule
         val out = spark.sql(sql)
         assert(!out.queryExecution.executedPlan.toString.contains("Expand"),

@@ -22,12 +22,10 @@ class ExpandFreeDistinctSpec extends SparkSpec {
     * enabled, returning (baselinePlan, activePlan, baselineRows,
     * activeRows). */
   private def compare(sql: String) = {
-    spark.conf.set(ExpandFreeDistinct.ConfKey, "false")
-    val (bPlan, bRows) =
-      try {
-        val df = spark.sql(sql)
-        (df.queryExecution.executedPlan.toString, df.collect().map(_.toSeq).toSet)
-      } finally spark.conf.unset(ExpandFreeDistinct.ConfKey)
+    val (bPlan, bRows) = SparkSpec.withoutRules(spark, SparkSpec.ExpandFreeDistinctRule) {
+      val df = spark.sql(sql)
+      (df.queryExecution.executedPlan.toString, df.collect().map(_.toSeq).toSet)
+    }
     val df = spark.sql(sql)
     (bPlan, df.queryExecution.executedPlan.toString, bRows, df.collect().map(_.toSeq).toSet)
   }
@@ -159,12 +157,12 @@ class ExpandFreeDistinctSpec extends SparkSpec {
 
   test("conf gate disables the rule") {
     view
-    val analyzed = spark.sql(
+    def plan() = spark.sql(
       "SELECT count(DISTINCT k1) AS d1, count(DISTINCT k2) AS d2 FROM efd_t")
-      .queryExecution.analyzed
-    spark.conf.set(ExpandFreeDistinct.ConfKey, "false")
-    try assert(ExpandFreeDistinct(analyzed) == analyzed)
-    finally spark.conf.unset(ExpandFreeDistinct.ConfKey)
-    assert(ExpandFreeDistinct(analyzed) != analyzed, "re-enabled rule must fire again")
+      .queryExecution.executedPlan.toString
+    val off = SparkSpec.withoutRules(spark, SparkSpec.ExpandFreeDistinctRule)(plan())
+    assert(off.contains("Expand"), s"excluding the rule must restore Spark's Expand\n$off")
+    val on = plan()
+    assert(!on.contains("Expand"), s"re-enabled rule must fire again\n$on")
   }
 }

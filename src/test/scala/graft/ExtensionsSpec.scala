@@ -5,12 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** The extension-installed SQL surface: a session built with
   * `spark.sql.extensions=graft.GraftExtensions` can use every graft
   * function from pure SQL — no Scala-side register calls. */
-class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
+class ExtensionsSpec extends SparkSpec {
   // the shared session is built `withExtensions(new GraftExtensions)`
   // (GraftSession.local), so every injected function already resolves;
   // install() exercises the SAME table's live-session registration
   // route on top (idempotent by construction).
-  private lazy val spark: SparkSession = {
+  override lazy val spark: SparkSession = {
     val s = SparkSpec.session
     GraftFunctions.install(s)
     s
@@ -50,5 +50,24 @@ class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(out.getAs[collection.Seq[Long]]("m") == collection.Seq(1L, 10L))
     val top = out.getSeq[org.apache.spark.sql.Row](2)
     assert(top.head.getString(0) == "x" && top.head.getLong(1) == 2L)
+  }
+
+  test("pure SQL over a single-row-group fact gets its DataFrame twin's spread decision") {
+    import org.apache.spark.sql.functions._
+    def rr(df: org.apache.spark.sql.DataFrame): Int = SparkSpec.withTinyInputsSpread(spark) {
+      "RoundRobinPartitioning".r.findAllIn(df.queryExecution.executedPlan.toString).length
+    }
+    val li = s"parquet.`$sf/lineitem.parquet`"
+    // decimal-heavy partial aggregate: one spread
+    val heavySql = spark.sql("SELECT sum(CAST(l_extendedprice AS DECIMAL(12,2)) * " +
+      s"(1 - CAST(l_discount AS DECIMAL(12,2)))) AS rev FROM $li")
+    val heavyDf = Tables.lineitem(spark, sf)
+      .agg(sum(graft.functions.Money.dec(col("l_extendedprice")) *
+        (lit(1) - graft.functions.Money.dec(col("l_discount")))).as("rev"))
+    assert(rr(heavySql) == 1 && rr(heavyDf) == 1, heavySql.queryExecution.executedPlan)
+    // reduce-first over date math: none
+    val lightSql = spark.sql(s"SELECT year(l_shipdate) AS y, count(*) AS n FROM $li GROUP BY 1")
+    val lightDf = Tables.lineitem(spark, sf).groupBy(year(col("l_shipdate")).as("y")).agg(count(lit(1)).as("n"))
+    assert(rr(lightSql) == 0 && rr(lightDf) == 0, lightSql.queryExecution.executedPlan)
   }
 }

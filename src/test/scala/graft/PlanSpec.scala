@@ -80,17 +80,18 @@ class PlanSpec extends SparkSpec {
   test("simhash/minhash signature stages are map-only (zero exchanges)") {
     // the pairs queries checkpoint their result (cache scoping), so
     // assert the property on the signature frames themselves: one
-    // narrow projection from the scan, not the aggregate formulation
+    // narrow projection from the scan, not the aggregate formulation.
+    // Planned without FactSpread, which would spread the single-row-
+    // group scan under this heavy map: the builders themselves add none
     import org.apache.spark.sql.functions.col
     val docs = Tables.table(spark, sf, "documents")
-    val sh = graft.text.DedupOps.simhash(docs, "doc_id", col("text"))
-      .queryExecution.executedPlan.toString
+    def planOf(df: org.apache.spark.sql.DataFrame): String =
+      SparkSpec.withoutRules(spark, SparkSpec.FactSpreadRule)(df.queryExecution.executedPlan.toString)
+    val sh = planOf(graft.text.DedupOps.simhash(docs, "doc_id", col("text")))
     assert(!sh.contains("Exchange") && sh.contains("simhash64"), sh)
-    val mh = graft.text.DedupOps.minhashSignaturesNative(docs, "doc_id", col("text"), 3, 32)
-      .queryExecution.executedPlan.toString
+    val mh = planOf(graft.text.DedupOps.minhashSignaturesNative(docs, "doc_id", col("text"), 3, 32))
     assert(!mh.contains("Exchange") && mh.contains("minhash_sig"), mh)
-    val sh128 = graft.text.DedupOps.simhashGrams128(docs, "doc_id", col("text"), 3)
-      .queryExecution.executedPlan.toString
+    val sh128 = planOf(graft.text.DedupOps.simhashGrams128(docs, "doc_id", col("text"), 3))
     assert(!sh128.contains("Exchange") && sh128.contains("simhash128"), sh128)
   }
 
@@ -167,8 +168,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("fact spread keeps pruning: round-robin repartition adds no ReadSchema columns") {
-    val s = scanLine("q_pricing_summary")
+    // decimal-heavy partial aggregate: FactSpread spreads the scan
+    val p = SparkSpec.withTinyInputsSpread(spark)(plan("q_pricing_summary"))
+    assert("RoundRobinPartitioning".r.findAllIn(p).length == 1, p)
+    val s = p.linesIterator.filter(_.contains("Scan parquet")).mkString("\n")
     assert(!s.contains("l_orderkey"), "spread must not widen the scan")
+    assert(s.contains("LessThanOrEqual(l_shipdate"), "filters still push below the spread")
   }
 
   test("vocab coverage: head selection is a distributed TakeOrdered, not a global sort") {
@@ -361,7 +366,7 @@ class PlanSpec extends SparkSpec {
     // the lineage below the explode) — assert on the unshared raw
     // pipeline, like rfm
     val (raw, _) = QueriesAnalytics.rollingUsersRaw(
-      Tables.eventsUnspread(spark, sf), shareGrain = false)
+      Tables.events(spark, sf), shareGrain = false)
     val p = raw.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p)
     // the 7x explode must sit ABOVE the user-day distinct aggregate

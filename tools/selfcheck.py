@@ -5,11 +5,18 @@ Mimics the driver's t2 gate: for each query, run the oracle SQL in
 DuckDB over the sf parquet tables, sort columns by name, sort rows,
 and compare values (floats to 1e-9 relative after rounding parity).
 Usage: selfcheck.py <sfdir> <verify_outdir> [--skip q1,q2,...] [--only q1,q2,...]
+       selfcheck.py --hash <verify_outdir>
 (--skip: exclude oracles that are themselves super-linear in DuckDB —
  e.g. exact all-pairs SQL at sf1 — and report them as SKIPPED so a
  partial run is self-describing, never silently complete;
  --only: check just the named queries — the complement of a
- SPARK_GRAFT_ONLY subset Verify run — reported as a PARTIAL check)
+ SPARK_GRAFT_ONLY subset Verify run — reported as a PARTIAL check;
+ --hash: print `query<TAB>rows<TAB>sha256` of every Verify output,
+ normalized as the check normalizes it (columns and rows sorted), so
+ two runs — e.g. at different core counts — compare with `diff`)
+
+Every query's row count is printed. An empty output fails the check
+unless the query and SF are in EMPTY_OK with the reason it is empty.
 """
 import sys, json, glob
 import duckdb
@@ -18,6 +25,16 @@ import pandas as pd
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 import datetime
+import hashlib
+import os
+
+# (query -> (SFs where an empty result is expected, or None for every
+# SF; why)). An oracle pass on an empty output checks nothing, so each
+# entry states why the data makes the result empty.
+EMPTY_OK = {
+    "q_asof_forward": (None, "every event postdates the last order, so no order has a next event"),
+    "q_anti_join": ({"sf0.001", "sf0.01"}, "every customer has at least one order at these SFs"),
+}
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -34,8 +51,26 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
 
+def empty_ok(name, sf):
+    sfs = EMPTY_OK.get(name, (set(), ""))[0]
+    return sfs is None or sf in sfs
+
+
+def read_output(outdir, name):
+    return pd.concat([pd.read_parquet(p) for p in sorted(glob.glob(f"{outdir}/{name}/*.parquet"))],
+                     ignore_index=True)
+
+
+def hashes(outdir):
+    """Order-independent digest of every query output under outdir."""
+    for name in sorted(json.load(open(f"{outdir}/oracle_sql.json"))):
+        g = norm(read_output(outdir, name))
+        h = hashlib.sha256(g.to_csv(index=False, float_format="%.17g").encode()).hexdigest()
+        print(f"{name}\t{len(g)}\t{h}")
+
+
 def main(sfdir, outdir, skip=(), only=None):
-    import os
+    sf = os.path.basename(os.path.normpath(sfdir))
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
@@ -56,8 +91,7 @@ def main(sfdir, outdir, skip=(), only=None):
             continue
         try:
             exp = con.execute(sql).df()
-            got = pd.concat([pd.read_parquet(p) for p in sorted(glob.glob(f"{outdir}/{name}/*.parquet"))],
-                            ignore_index=True)
+            got = read_output(outdir, name)
             e, g = norm(exp), norm(got)
             if list(e.columns) != list(g.columns):
                 fails.append((name, f"cols differ: oracle={list(e.columns)} spark={list(g.columns)}"))
@@ -97,8 +131,11 @@ def main(sfdir, outdir, skip=(), only=None):
                 fails.append((name, f"value mismatch in col {bad}"))
                 i = (e[bad].astype(str) != g[bad].astype(str)).idxmax() if True else 0
                 print(f"  {name}: first diff at row {i}: oracle={e[bad][i]!r} spark={g[bad][i]!r}")
+            elif len(g) == 0 and not empty_ok(name, sf):
+                fails.append((name, f"empty result at {sf} (not in EMPTY_OK)"))
             else:
-                print(f"OK   {name} ({len(e)} rows)")
+                note = f" — empty as expected: {EMPTY_OK[name][1]}" if len(g) == 0 else ""
+                print(f"OK   {name} ({len(e)} rows){note}")
         except Exception as ex:
             fails.append((name, f"error: {ex}"))
     print()
@@ -109,6 +146,9 @@ def main(sfdir, outdir, skip=(), only=None):
     print((f"ALL PASS (skipped {len(skip)})" if skip else "ALL PASS") + suffix)
 
 if __name__ == "__main__":
+    if sys.argv[1] == "--hash":
+        hashes(sys.argv[2])
+        sys.exit(0)
     _skip = ()
     _only = None
     if "--skip" in sys.argv:
