@@ -2192,20 +2192,19 @@ object Oracles {
         |FROM stamped""".stripMargin,
     "q_asof_forward" ->
       """WITH r AS (
-        |  SELECT o_custkey, o_orderdate, o_orderkey, o_totalprice FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY o_custkey, o_orderdate
-        |      ORDER BY o_orderkey DESC) AS rn FROM orders) t
+        |  SELECT user_id, ts_s, event_id, event_type FROM (
+        |    SELECT user_id, event_id, event_type,
+        |      CAST(date_trunc('second', ts) AS TIMESTAMP) AS ts_s,
+        |      row_number() OVER (PARTITION BY user_id, CAST(date_trunc('second', ts) AS TIMESTAMP)
+        |        ORDER BY event_id DESC) AS rn FROM events) t
         |  WHERE rn = 1
-        |), l AS (
-        |  SELECT event_id, user_id, CAST(date_trunc('second', ts) AS TIMESTAMP) AS ts_s
-        |  FROM events
         |)
-        |SELECT l.event_id, l.user_id, l.ts_s,
-        |  r.o_orderkey AS next_order_key,
-        |  r.o_orderdate AS next_order_date,
-        |  r.o_totalprice AS next_order_price
-        |FROM l ASOF JOIN r
-        |  ON l.user_id = r.o_custkey AND l.ts_s <= r.o_orderdate""".stripMargin,
+        |SELECT o.o_orderkey, o.o_custkey, o.o_orderdate,
+        |  r.event_id AS next_event_id,
+        |  r.ts_s AS next_event_ts,
+        |  r.event_type AS next_event_type
+        |FROM orders o ASOF JOIN r
+        |  ON o.o_custkey = r.user_id AND o.o_orderdate <= r.ts_s""".stripMargin,
     "q_upsert" ->
       """WITH base AS (
         |  SELECT c_custkey, c_name, c_mktsegment, c_acctbal FROM customer

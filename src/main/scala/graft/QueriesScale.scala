@@ -616,29 +616,31 @@ object QueriesScale {
     Caching.reap(out)(head)
   }
 
-  /** #56 forward as-of join: for every event, the customer's FIRST
-    * order at-or-after the event (same union+window carry as #43,
-    * scanned in reverse time order) — verified against DuckDB's
-    * native forward ASOF (`<=`). */
+  /** #56 forward as-of join: for every order, the same customer's
+    * FIRST event at-or-after the order date (same union+window carry
+    * as #43, scanned in reverse time order). Events sharing a
+    * (customer, second) resolve to the greatest `event_id` — the
+    * carry's fused tie-break, which the oracle mirrors with a
+    * latest-per-(user, second) dedup before DuckDB's native forward
+    * ASOF (`<=`). */
   def asofForward(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AsOfJoin
-    val left = Tables.events(s, dir)
-      .select(col("event_id"), col("user_id"), date_trunc("second", col("ts")).as("ts_s"))
-    // dedupLatest fused into the carry's tie-break, as in #43
-    val right = Tables.orders(s, dir)
-      .select(col("o_custkey"), col("o_orderdate"),
-        AsOfJoin.notNull(col("o_orderkey")).as("o_orderkey"), col("o_totalprice"))
+    val left = Tables.orders(s, dir)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
+    val right = Tables.events(s, dir)
+      .select(col("user_id"), date_trunc("second", col("ts")).as("ts_s"),
+        AsOfJoin.notNull(col("event_id")).as("event_id"), col("event_type"))
     AsOfJoin(left, right,
-      leftKey = "user_id", rightKey = "o_custkey",
-      leftTime = "ts_s", rightTime = "o_orderdate",
-      rightCols = Seq("o_orderkey", "o_orderdate", "o_totalprice"),
+      leftKey = "o_custkey", rightKey = "user_id",
+      leftTime = "o_orderdate", rightTime = "ts_s",
+      rightCols = Seq("event_id", "ts_s", "event_type"),
       joinType = "inner", direction = "forward",
-      rightTieBreak = Seq("o_orderkey"))
+      rightTieBreak = Seq("event_id"))
       .select(
-        col("event_id"), col("user_id"), col("ts_s"),
-        col("o_orderkey").as("next_order_key"),
-        col("o_orderdate").as("next_order_date"),
-        col("o_totalprice").as("next_order_price"))
+        col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+        col("event_id").as("next_event_id"),
+        col("ts_s").as("next_event_ts"),
+        col("event_type").as("next_event_type"))
   }
 
   /** #57 MERGE upsert/delete (`operators.Upsert`): apply a

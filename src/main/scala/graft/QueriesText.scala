@@ -22,70 +22,29 @@ object QueriesText {
       Tables.documents(s, dir), "doc_id", col("text"),
       n = 3, maxDf = 100, minJaccardPct = 1)
 
-  /** #23 MinHash+LSH near-dup detection, end to end: native
-    * signatures (k=48) → 24 bands × 2 rows candidate join → est_sim
-    * gate → EXACT n-gram Jaccard verification at >= 50% on the
-    * candidates only. The output is defined by the exact threshold —
-    * engine-portable, hash-free — with MinHash as the candidate
-    * accelerator; the DuckDB oracle recomputes the exact pair set,
-    * so a recall regression fails CORRECTNESS.
+  /** #23 and #24 near-dup detection, end to end, through the one
+    * pipeline [[DedupOps.nearDupPairs]]: native MinHash signatures
+    * (k=48) → 24 bands × 2 rows candidate join → est_sim gate → EXACT
+    * n-gram Jaccard verification at >= 50% on the candidates only.
+    * The output is defined by the exact threshold — engine-portable,
+    * hash-free — with MinHash as the candidate accelerator; the
+    * DuckDB oracle recomputes the exact pair set, so a recall
+    * regression fails CORRECTNESS.
     *
     * Banding completeness is PROBABILISTIC (inherent to MinHash):
     * with r=2, b=24, P(miss) = (1−J²)^24 ≈ 1e-3 at exactly J=0.50 and
     * 2e-11 at J=0.80. It carries the verified contract here because
     * the corpus has a measured 66-point margin around the threshold
-    * (every true pair has J ≥ 0.80, every non-pair ≤ 0.14 — see
-    * tools.RecallProbe); a corpus with borderline-J pairs needs more
-    * bands or a higher threshold. SimHash (#24) is the family member
-    * with a deterministic completeness guarantee. */
-  def dedupMinhash(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val sigs = DedupOps.minhashSignaturesNative(docs, "doc_id", col("text"), n = 3, k = 48)
-    val cands = DedupOps.minhashLshPairs(sigs, "doc_id", k = 48, bands = 24, minEst = 0.25)
-    DedupOps.verifyPairsExact(cands, docs, "doc_id", col("text"), n = 3, minJaccardPct = 50)
-      .orderBy("doc1", "doc2")
-      .transform(DedupOps.observeCount(_, "verified_pairs"))
-  }
-
-  /** #24 SimHash near-dup detection, end to end, ADAPTIVELY ROUTED
-    * (see [[DedupOps.nearDupPairsAdaptive]]): under the pre-gate
-    * candidate budget the pipeline is 128-bit GRAM-level signatures
-    * ([[DedupOps.simhashGrams128]] — token-level SimHash collapses on
-    * templated corpora) → 16 bands × 8 bits × 2 independently-permuted
-    * band tables → hamming gate at the loose 31 cap on the first run
-    * per corpus key (which CERTIFIES the corpus-wide true-pair margin
-    * as a byproduct), tightened to the certified margin on repeats →
-    * EXACT n-gram Jaccard verification at >= 50% on the remainder; past
-    * the budget (~33k docs — where fixed-width SimHash banding's
-    * n²·bands/2^(width+1) chance-collision floor starts to bind,
-    * measured 729M pre-gate rows at 150k docs) the same exact decision
-    * routes through floor-free MinHash banding. Same contract as #23
-    * either way: the exact threshold defines the output, the sketch
-    * only accelerates, the oracle checks the decision — both routes
-    * emit the SAME pairs.
+    * (every true pair has J ≥ 0.80, every non-pair ≤ 0.14); a corpus
+    * with borderline-J pairs needs more bands or a higher threshold.
     *
-    * History: the 64-bit/4-bit-band predecessor had an n²/32 candidate
-    * floor (round 9's weak flag, 7.1× time per 10× docs); 8-bit keys
-    * cut the constant 16× (round 10) but the floor itself is inherent
-    * to fixed-width banding — the routing is what removes it from the
-    * operator's scale curve (round 11). Recall per band table is
-    * pigeonhole-guaranteed to d128 < 16 and probe-measured complete to
-    * the corpus max of 22 (tools/Simhash128Probe); the second table
-    * multiplies the miss odds of the chance-recall window [16, cap]. */
-  def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    // budgetKey = the corpus FILE's content fingerprint (path + file
-    // listing digest — a count-preserving in-place mutation changes
-    // the key, so a certificate is only ever replayed against the
-    // exact snapshot it was measured on); budgetStore persists the
-    // certificate across driver JVMs, so only the FIRST run ever (not
-    // the first run per JVM) pays the loose-cap certification pass
-    DedupOps.nearDupPairsAdaptive(docs, "doc_id", col("text"), n = 3, minJaccardPct = 50,
-      budgetKey = Some(DedupOps.snapshotKey(s"$dir/documents.parquet")),
-      budgetStore = Some(DedupOps.defaultBudgetStore))
+    * The `q_dedup_simhash` key stays for the bench and oracle contract
+    * and runs this pipeline: its SimHash sketch lost to MinHash on
+    * every board where it ran (BENCH_NOTES, round 12). */
+  def dedupNearDup(s: SparkSession, dir: String): DataFrame =
+    DedupOps.nearDupPairs(Tables.documents(s, dir), "doc_id", col("text"), n = 3, minJaccardPct = 50)
       .orderBy("doc1", "doc2")
       .transform(DedupOps.observeCount(_, "verified_pairs"))
-  }
 
   /** #141 paragraph-grain exact dedup profile (C4/CCNet-style): docs
     * split to 20-token paragraph blocks, corpus-wide first-occurrence
@@ -783,15 +742,6 @@ object QueriesText {
     val (out, temps) = corpusFunnelRaw(docs)
     Caching.reap(out)(temps: _*)
   }
-
-  /** Version tag of the funnel gate RULES ([[funnelFlags]]'s r0-r3
-    * logic). Any certificate whose validity depends on the gated
-    * survivor set — e.g. the DAG's hamming-budget memo key — must fold
-    * this in: the corpus fingerprint alone can't see a rule change,
-    * and a stale (tighter) budget certified on the OLD survivor set
-    * would silently drop true pairs. BUMP THIS whenever the r0/r1/r2
-    * gate logic (or the r3 exact-dup keeper rule) changes. */
-  private[graft] val funnelRulesVersion: String = "fg1"
 
   /** Un-reaped [[corpusFunnelOn]] pipeline (result, persisted temps) —
     * the plan-shape spec asserts on the result BEFORE the checkpoint
@@ -1658,8 +1608,8 @@ object QueriesText {
     "q_paragraph_dedup" -> (paragraphDedup _),
     "q_paragraph_strip" -> (paragraphStrip _),
     "q_ngram_jaccard" -> (ngramJaccard _),
-    "q_dedup_minhash" -> (dedupMinhash _),
-    "q_dedup_simhash" -> (dedupSimhash _),
+    "q_dedup_minhash" -> (dedupNearDup _),
+    "q_dedup_simhash" -> (dedupNearDup _),
     "q_lang_id" -> (langId _),
     "q_text_quality" -> (textQuality _),
     "q_token_count" -> (tokenCount _),

@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, IntegerLiteral, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native 64-bit SimHash over a token array: `simhash64(tokens)`.
@@ -37,199 +37,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Native 128-bit SimHash over a token array:
-  * `simhash128(tokens) -> array<bigint>[h0, h1]`.
-  *
-  * Same map-only argument as [[SimHash64]]; the width exists for the
-  * BANDING, not the semantics. Bucket selectivity of b-band LSH over a
-  * w-bit fingerprint is n²·b·2^(-w/b): at 64 bits, 16 bands leave
-  * 4-bit keys whose chance collisions are expected-quadratic in corpus
-  * size (the round-9 measured 7.1× time per 10× data), while 128 bits
-  * keep 16 bands at 8-bit width — 16× fewer chance collisions per band
-  * — with the pigeonhole completeness bound (dist < bands) unchanged.
-  *
-  * h0 hashes tokens with seed 42 (bit-identical to [[SimHash64]], so
-  * the two fingerprints stay comparable across probes); h1 re-hashes
-  * the same tokens with an independent seed in the same loop — one
-  * pass over the array, no second tokenization.
-  */
-case class SimHash128(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "simhash128"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"simhash128 expects array<string>, got ${t.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    SimHash128.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash128.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SimHash128 {
-  /** Independent second seed (64-bit golden ratio, a standard
-    * decorrelation constant — nothing shares it with seed 42). */
-  private val Seed1 = 0x9E3779B97F4A7C15L
-
-  /** Static entry point shared by eval and codegen. */
-  def compute(tokens: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val counts = new Array[Int](128)
-    val n = tokens.numElements()
-    var i = 0
-    while (i < n) {
-      if (!tokens.isNullAt(i)) {
-        val t = tokens.getUTF8String(i)
-        val ha = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes, 42L)
-        val hb = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes, Seed1)
-        var j = 0
-        while (j < 64) {
-          if (((ha >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
-          if (((hb >>> j) & 1L) == 1L) counts(64 + j) += 1 else counts(64 + j) -= 1
-          j += 1
-        }
-      }
-      i += 1
-    }
-    var h0 = 0L
-    var h1 = 0L
-    var j = 0
-    while (j < 64) {
-      if (counts(j) > 0) h0 |= (1L << j)
-      if (counts(64 + j) > 0) h1 |= (1L << j)
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(Array(h0, h1))
-  }
-
-  /** Register `simhash128(tokens)` for SQL/`expr` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash128", exprs => SimHash128(exprs.head), "built-in")
-}
-
-/** LSH band keys for a 128-bit SimHash fingerprint, over one or more
-  * independently bit-PERMUTED band tables:
-  * `simhash_bandkeys(h0, h1, bands, tables) -> array<bigint>` of
-  * `bands * tables` keys (table-major: positions `[t*bands, t*bands +
-  * bands)` hold table `t`'s keys).
-  *
-  * Why multiple tables: a single b-band table over a w-bit fingerprint
-  * pigeonhole-guarantees a band hit only for hamming < b; pairs in the
-  * window [b, maxDist] are found by CHANCE band collisions alone, so
-  * banding recall — not the hamming gate — is the real correctness
-  * surface on a corpus with a deep distance tail. A second table draws
-  * its bands from an independently permuted bit order, so a pair
-  * missed by table 0 must ALSO differ in every band of table 1: miss
-  * odds multiply, the per-table pigeonhole bound is unchanged, and the
-  * pre-gate candidate volume merely doubles (the adaptive router
-  * handles corpus sizes where that matters).
-  *
-  * Table 0 is the IDENTITY permutation — bit-compatible with the
-  * contiguous-slice banding this expression replaces. Tables >= 1 use
-  * a deterministic Fisher–Yates shuffle of bit positions seeded by the
-  * table index (SplitMix64 — fixed across JVMs/sessions, so band keys
-  * are stable join keys everywhere, including cross-corpus probes).
-  */
-case class SimHashBandKeys(left: Expression, right: Expression, bands: Int, tables: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "simhash_bandkeys"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (LongType, LongType) if bands >= 4 && 128 % bands == 0 && 128 / bands <= 63 &&
-        tables >= 1 && tables <= 8 => TypeCheckResult.TypeCheckSuccess
-    case (LongType, LongType) => TypeCheckResult.TypeCheckFailure(
-      s"simhash_bandkeys needs bands >= 4 dividing 128 (band width 128/bands <= 63) and 1<=tables<=8, got bands=$bands tables=$tables")
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"simhash_bandkeys expects (bigint, bigint), got (${l.simpleString}, ${r.simpleString})")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SimHashBandKeys.compute(a.asInstanceOf[Long], b.asInstanceOf[Long], bands, tables)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SimHashBandKeys.compute($a, $b, $bands, $tables)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object SimHashBandKeys {
-  /** Per-table bit-position permutations (cached — a few hundred
-    * bytes). Table 0 = identity (bit-compatible with contiguous
-    * slices); table t>=1 = Fisher–Yates seeded by t via SplitMix64,
-    * deterministic across JVMs. */
-  private val permCache = new java.util.concurrent.ConcurrentHashMap[Int, Array[Int]]()
-  private[graft] def perm(table: Int): Array[Int] =
-    permCache.computeIfAbsent(table, t => {
-      val p = Array.tabulate(128)(identity)
-      if (t > 0) {
-        var state = 0x9E3779B97F4A7C15L * t
-        def next(): Long = {
-          state += 0x9E3779B97F4A7C15L
-          var z = state
-          z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-          z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-          z ^ (z >>> 31)
-        }
-        var i = 127
-        while (i > 0) {
-          val j = java.lang.Long.remainderUnsigned(next(), i + 1L).toInt
-          val tmp = p(i); p(i) = p(j); p(j) = tmp
-          i -= 1
-        }
-      }
-      p
-    })
-
-  /** Static entry point shared by eval and codegen. */
-  def compute(h0: Long, h1: Long, bands: Int, tables: Int): GenericArrayData = {
-    val w = 128 / bands
-    val out = new Array[Long](bands * tables)
-    var t = 0
-    var idx = 0
-    while (t < tables) {
-      val p = perm(t)
-      var b = 0
-      while (b < bands) {
-        var key = 0L
-        var j = 0
-        while (j < w) {
-          val pos = p(b * w + j)
-          val bit = if (pos < 64) (h0 >>> pos) & 1L else (h1 >>> (pos - 64)) & 1L
-          key |= bit << j
-          j += 1
-        }
-        out(idx) = key
-        idx += 1
-        b += 1
-      }
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Register `simhash_bandkeys(h0, h1, bands, tables)` (bands/tables
-    * int literals). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_bandkeys",
-      exprs => (exprs(2), exprs(3)) match {
-        case (IntegerLiteral(bands), IntegerLiteral(tables)) =>
-          SimHashBandKeys(exprs(0), exprs(1), bands, tables)
-        case other => throw new IllegalArgumentException(
-          s"simhash_bandkeys bands/tables must be int literals, got $other")
-      },
-      "built-in")
 }
 
 object SimHash64 {

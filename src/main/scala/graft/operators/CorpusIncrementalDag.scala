@@ -33,12 +33,12 @@ import graft.text.{BloomDedup, DedupOps}
   * the state the full rebuild's min-rules would consult, and the
   * incremental layers equal [[CorpusPipelineDag]]'s full rebuild on
   * the union (CorpusIncrementalDagSpec pins it layer by layer).
-  * SKETCH IDENTITY backs that equality (ADVICE r14): this path's
-  * candidates come from MinHash banding (k=48, bands=24 — the only
-  * sketch with a standing cross-probe), and [[CorpusPipelineDag]]
-  * pins the SAME generator (`sketchRoute = "minhash"`), so the two
-  * DAGs can only differ where exact verification differs — never
-  * through independent sketch-recall channels. ONE documented
+  * SKETCH IDENTITY backs that equality: this path's candidates come
+  * from MinHash banding (k=48, bands=24), the one near-dup candidate
+  * generator, which [[CorpusPipelineDag]] runs too
+  * ([[graft.text.DedupOps.nearDupPairs]]), so the two DAGs can only
+  * differ where exact verification differs — never through
+  * independent sketch-recall channels. ONE documented
   * exception remains: a new batch can BRIDGE two standing
   * near-dup components (doc C near-dup of standing keepers A and B;
   * a full rebuild would merge the component and drop B). An

@@ -24,9 +24,9 @@ import graft.text.DedupOps
   *     quality → exact-dup keeper flag) at doc grain, ONE flags pass
   *     (shared derivation [[QueriesText.funnelFlags]] — bit-identical
   *     to the #144 profile and the streaming twin by construction);
-  *   - `neardup_pairs`: the #24 adaptive router (SimHash vs floor-free
-  *     MinHash banding by the measured pre-gate bound) over the exact
-  *     survivors, with the persisted certified-budget store;
+  *   - `neardup_pairs`: the #23/#24 near-dup pipeline
+  *     ([[DedupOps.nearDupPairs]]: MinHash banding, exact Jaccard
+  *     verification) over the exact survivors;
   *   - `neardup_resolve`: #38's adaptive connected components → keep
   *     set (min-id keeper per group);
   *   - `paragraph_strip`: #142's C4-style block strip of the keepers
@@ -51,7 +51,7 @@ import graft.text.DedupOps
   * converges to the uninterrupted run on plain rerun.
   *
   * Scale shape: the corpus-grain work is the flags projection, the
-  * router's banding, the strip's hash-cell aggregate, the selection's
+  * near-dup banding, the strip's hash-cell aggregate, the selection's
   * bucket scan and the materialization's prefix scan — every one a
   * registry row whose plan is already swept by
   * ScaleUpSpec/GlobalWindowSpec; the DAG adds only doc-grain keyed
@@ -110,19 +110,11 @@ object CorpusPipelineDag {
   /** Build the job graph. `cleanSuite` is the quality gate's
     * expectation set (tests drive the failure path through it).
     *
-    * `sketchRoute` (default "minhash") pins the near-dup candidate
-    * generator. The DAG pins MinHash rather than inheriting the #24
-    * adaptive router (ADVICE r14): [[CorpusIncrementalDag]]'s standing
-    * signature index is MinHash by necessity (SimHash has no standing
-    * cross-probe), and the two DAGs' layer-by-layer equality contract
-    * must be SKETCH-IDENTICAL — two sketches have independent
-    * probabilistic recall, so equality across different generators
-    * would hold only until one sketch misses a true pair the other
-    * finds. At 100 TB the adaptive router cuts over to MinHash anyway
-    * (~33k docs at the defaults); the pin only changes small-corpus
-    * runs, where the banding cost difference is immaterial. Pass
-    * "adaptive" to restore routing (standalone full rebuilds that
-    * never feed an incremental twin).
+    * The near-dup stage sketches with the same MinHash banding
+    * (k=48, 24 bands) as [[CorpusIncrementalDag]]'s standing signature
+    * index, so the two DAGs' layer-by-layer equality contract is
+    * sketch-identical: they can differ only where exact verification
+    * differs, never through independent sketch-recall channels.
     *
     * `boilerGuardPermille` arms the boilerplate-before-banding guard
     * on the near-dup stage (warn-only here — the DAG strips paragraphs
@@ -137,7 +129,6 @@ object CorpusPipelineDag {
       s: SparkSession, sfDir: String, layout: Layout,
       cleanSuite: Seq[DataQuality.Expectation] = defaultCleanSuite,
       auditReadBack: Boolean = false,
-      sketchRoute: String = "minhash",
       boilerGuardPermille: Int = 0
   ): JobGraph = {
     val g = new JobGraph()
@@ -178,18 +169,8 @@ object CorpusPipelineDag {
       val survivors = s.read.parquet(layout.flags).where(col("r3")).select("doc_id")
       val gated = docs.join(survivors, Seq("doc_id"), "left_semi")
       write(
-        DedupOps.nearDupPairsAdaptive(gated, "doc_id", col("text"),
-          n = 3, minJaccardPct = 50,
-          // key = corpus fingerprint + gate id + RULES VERSION: the
-          // certified budget is only valid for the survivor set it
-          // was measured on, and that set depends on the gate rules'
-          // CODE, which the corpus fingerprint can't see — a rules
-          // bump forces re-certification on an unchanged corpus
-          budgetKey = Some(DedupOps.snapshotKey(s"$sfDir/documents.parquet") +
-            s"|r3|${QueriesText.funnelRulesVersion}"),
-          budgetStore = Some(DedupOps.defaultBudgetStore),
-          route = sketchRoute,
-          boilerGuardPermille = boilerGuardPermille),
+        DedupOps.nearDupPairs(gated, "doc_id", col("text"),
+          n = 3, minJaccardPct = 50, boilerGuardPermille = boilerGuardPermille),
         layout.pairs)
     }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Document deduplication family: exact, n-gram Jaccard, MinHash+LSH,
-  * SimHash, and winnowing fingerprints.
+  * SimHash fingerprints, and winnowing fingerprints.
   *
   * Scale design (SURVEY §4):
   *  - Exact dedup is a hash-groupBy with map-side combine.
@@ -16,9 +16,9 @@ import org.apache.spark.sql.expressions.Window
   *  - MinHash/LSH: per-(doc,seed) min aggregation (partial agg), then
   *    band-bucket self-join — candidates only within equal 4-seed
   *    band hashes.
-  *  - SimHash: per-(doc,bit) signed counts (partial agg; no
-  *    collect_list), banded hamming join, exact `bit_count(xor)`
-  *    verification.
+  *  - SimHash: a per-doc native fingerprint (one narrow map, no
+  *    shuffle); near-dup pair decisions go through MinHash only
+  *    ([[nearDupPairs]]).
   *  - All similarity decisions use exact integer arithmetic.
   */
 object DedupOps {
@@ -39,7 +39,7 @@ object DedupOps {
   /** The corpus-level boilerplate coverage as a 1-row frame
     * (n_positions, n_boiler, coverage_permille) — the #154 registry
     * surface; [[boilerplateCoveragePermille]] is its driver-side
-    * reading for the router guard. */
+    * reading for the near-dup guard. */
   def boilerplateCoverageFrame(
       docs: DataFrame, id: String, text: Column, n: Int, nDocs: Long): DataFrame =
     boilerplateCoverageFrame(docs, id, text, n,
@@ -49,7 +49,7 @@ object DedupOps {
     * plan as a broadcast 1-row aggregate (#83's `boilerplateOn`
     * shape) instead of a driver-side `docs.count()` pre-pass — frame
     * construction triggers NO job; callers that already hold nDocs
-    * (the router guard) keep the literal-threshold overload above. */
+    * (the near-dup guard) keep the literal-threshold overload above. */
   def boilerplateCoverageFrame(
       docs: DataFrame, id: String, text: Column, n: Int): DataFrame =
     boilerplateCoverageFrame(docs, id, text, n,
@@ -385,8 +385,7 @@ object DedupOps {
     // sub-threshold pairs die before the exchange and the distinct's
     // shuffle rows carry 3 narrow columns instead of two k-long
     // signature arrays. `pregate_minhash` counts the band-join volume
-    // before the estimate gate — the MinHash twin of
-    // `pregate_simhash`, whose growth is similarity-driven (no
+    // before the estimate gate; its growth is similarity-driven (no
     // keyspace floor: band keys live in the full 64-bit minima space)
     val pairs = observeCount(
       a.join(b, Seq("band", "bkey")).where(col("doc1") < col("doc2")),
@@ -410,432 +409,48 @@ object DedupOps {
     docs.select(col(id), call_function("simhash64", TextOps.tokens(text)).as("simhash"))
   }
 
-  /** SimHash over the word n-GRAM multiset instead of the token
-    * multiset. On templated corpora (shared vocabulary, local edits —
-    * exactly what synthetic and boilerplate-heavy web text look like)
-    * token-level SimHash collapses: docs share most tokens, so nearly
-    * ALL pairs land within small hamming distance (measured on the
-    * sf0.1 corpus: 951k of 12.5M pairs within hamming 12, vs 256 real
-    * near-dups) and the candidate set is useless. Gram-level SimHash
-    * uses the same unit as the n-gram Jaccard ground truth, so
-    * unrelated docs diverge (~32 bits) while true near-dups stay
-    * close. Still one narrow map pass. */
-  /** Sliding word-gram STRING window over the materialized token
-    * array `__t` (short docs → empty array; the `size < n` guard also
-    * keeps the `sequence` bound non-negative). Shared by both SimHash
-    * widths so the two fingerprints are built from the SAME gram set
-    * — the spec-asserted h0 == simhash64 parity depends on it. */
-  private def gramStringWindow(n: Int): Column =
-    when(size(col("__t")) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(col("__t")) - n),
-        i => concat_ws(" ", slice(col("__t"), i + 1, lit(n)))))
-
-  def simhashGrams(docs: DataFrame, id: String, text: Column, n: Int): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
-    docs.select(col(id), TextOps.tokens(text).as("__t"))
-      .select(col(id), call_function("simhash64", gramStringWindow(n)).as("simhash"))
-  }
-
-  /** 128-bit variant of [[simhashGrams]]: emits `simhash0`/`simhash1`
-    * (two independent 64-bit halves, h0 bit-identical to `simhash`).
-    * Same single narrow map pass — the width buys band selectivity,
-    * see [[graft.functions.SimHash128]]. */
-  def simhashGrams128(docs: DataFrame, id: String, text: Column, n: Int): DataFrame = {
-    graft.functions.SimHash128.register(docs.sparkSession)
-    docs.select(col(id), TextOps.tokens(text).as("__t"))
-      .select(col(id), call_function("simhash128", gramStringWindow(n)).as("__h"))
-      .select(col(id),
-        element_at(col("__h"), 1).as("simhash0"),
-        element_at(col("__h"), 2).as("simhash1"))
-  }
-
-  /** Near-dup pairs by SimHash hamming distance <= maxDist, using
-    * `bands` equal bit-slices as bucket keys (pigeonhole: dist <
-    * bands guarantees one equal band) then exact `bit_count(xor)`
-    * verification. Band width trades completeness against bucket
-    * selectivity: 4×16 bands are selective enough for web-scale
-    * corpora but only guarantee dist<=3; 8×8 bands guarantee dist<=7
-    * and (measured on the testdata) catch every planted near-dup up
-    * to dist 12. */
-  def simhashPairs(hashes0: DataFrame, id: String, maxDist: Int, bands: Int = 4): DataFrame = {
-    // bands >= 2: at bands = 1 the 64-bit band width makes
-    // `(1L << 64) - 1` wrap to mask 0 (JVM shifts are mod 64) and
-    // every key degenerates to 0 — a silent full n² self-join
-    require(bands >= 2 && 64 % bands == 0)
-    require(maxDist < bands,
-      s"pigeonhole completeness needs maxDist < bands (got $maxDist vs $bands): " +
-        "a pair can differ in every band otherwise and silently vanish")
-    val width = 64 / bands
-    val mask = (1L << width) - 1
-    // one row per doc: materialize once, both join sides reuse it
-    val hashes = hashes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = hashes.select(
-      col(id), col("simhash"),
-      explode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"), call_function("shiftright", col("simhash"), (b * width).cast("int")).bitwiseAND(lit(mask)).as("bkey")))
-      ).as("bb")
-    ).select(col(id), col("simhash"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-
-    val a = banded.select(col(id).as("doc1"), col("simhash").as("h1"), col("band"), col("bkey"))
-    val b = banded.select(col(id).as("doc2"), col("simhash").as("h2"), col("band"), col("bkey"))
-    // hamming-filter BEFORE the pair distinct: band-key chance
-    // collisions (2^-width per band per pair) die on a cheap xor
-    // instead of flooding the distinct's shuffle. Selectivity scales
-    // as n²·bands·2^-width, so bands (completeness: > maxDist) and
-    // width (selectivity: ≥ log2 n + margin) pull against each other
-    // within the 64-bit budget — a corpus needing maxDist ≈ 12 at
-    // n ≫ 10⁶ wants a 128-bit fingerprint, not narrower bands.
-    val pairs = a.join(b, Seq("band", "bkey"))
-      .where(col("doc1") < col("doc2"))
-      .withColumn("hamming", bit_count(col("h1").bitwiseXOR(col("h2"))))
-      .where(col("hamming") <= maxDist)
-      .select("doc1", "doc2", "hamming")
-      .distinct()
-    graft.Caching.reap(observeCount(pairs, "cand_simhash"))(hashes)
-  }
-
-  /** 128-bit variant of [[simhashPairs]] over [[simhashGrams128]]
-    * output: near-dup pairs with 128-bit hamming <= maxDist, banded
-    * via [[graft.functions.SimHashBandKeys]] — `bands` 8-bit keys per
-    * band TABLE, `tables` independently bit-permuted tables (default
-    * 2), candidates = docs sharing any (table, band) bucket in any
-    * table.
-    *
-    * Why 128 bits: band-key chance collisions scale as
-    * n²·bands·2^-width. The 64-bit/16-band layout leaves 4-bit keys —
-    * 16 possible values per band, so every band partitions the corpus
-    * into <=16 buckets and candidate volume has an n²/32 FLOOR
-    * regardless of data (measured round 9: 7.1× time per 10× docs).
-    * 8-bit keys widen the band keyspace 16×, dropping the chance-
-    * collision constant 16× while the fingerprint stays one narrow
-    * map pass.
-    *
-    * Why two tables: pigeonhole guarantees a band hit only for
-    * d128 < bands (16) — per table. True pairs in the window
-    * [bands, maxDist] are found by chance collisions, so BANDING
-    * recall (not the hamming gate) is the correctness surface; with a
-    * second independently-permuted table the miss odds of that window
-    * MULTIPLY (measured zero misses per table on the testdata corpus,
-    * whose true pairs reach d128 = 22 — see tools/Simhash128Probe),
-    * at the price of ~2× pre-gate candidate volume. Corpus sizes
-    * where that volume binds should route deep-threshold dedup to
-    * MinHash banding instead — [[nearDupPairsAdaptive]] makes exactly
-    * that decision, and also tightens maxDist to the corpus's
-    * measured margin instead of this signature's loose default.
-    *
-    * The `pregate_simhash` observe counter measures the band-join
-    * volume BEFORE the hamming gate — the n²·bands·2^-(width+1)
-    * keyspace-floor term itself, tracked per bench run so sub-
-    * quadratic growth is an artifact, not an inference. */
-  def simhashPairs128(hashes0: DataFrame, id: String, maxDist: Int,
-                      bands: Int = 16, tables: Int = 2): DataFrame = {
-    // width <= 63: a 64-bit band width would wrap the key mask to 0
-    // (JVM shifts are mod 64) and silently degenerate the LSH join to
-    // the full n² self-join it exists to avoid — SimHashBandKeys
-    // enforces the same bound at type-check time
-    require(bands >= 4 && 128 % bands == 0 && 128 / bands <= 63,
-      s"bands must divide 128 with width <= 63 (got $bands)")
-    require(tables >= 1, s"need at least one band table (got $tables)")
-    graft.functions.SimHashBandKeys.register(hashes0.sparkSession)
-    val hashes = hashes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one narrow map pass emits ALL band keys (both tables) as one
-    // array; posexplode's position IS the (table, band) bucket id
-    val banded = hashes.select(
-      col(id), col("simhash0"), col("simhash1"),
-      posexplode(call_function("simhash_bandkeys",
-        col("simhash0"), col("simhash1"), lit(bands), lit(tables))).as(Seq("band", "bkey")))
-
-    val a = banded.select(col(id).as("doc1"),
-      col("simhash0").as("a0"), col("simhash1").as("a1"), col("band"), col("bkey"))
-    val b = banded.select(col(id).as("doc2"),
-      col("simhash0").as("b0"), col("simhash1").as("b1"), col("band"), col("bkey"))
-    // hamming-filter BEFORE the pair distinct, same ordering argument
-    // as [[simhashPairs]]: chance collisions die on two xors instead
-    // of flooding the distinct's exchange
-    val pairs = observeCount(
-      a.join(b, Seq("band", "bkey")).where(col("doc1") < col("doc2")),
-      "pregate_simhash")
-      .withColumn("hamming",
-        bit_count(col("a0").bitwiseXOR(col("b0"))) +
-          bit_count(col("a1").bitwiseXOR(col("b1"))))
-      .where(col("hamming") <= maxDist)
-      .select("doc1", "doc2", "hamming")
-      .distinct()
-    graft.Caching.reap(observeCount(pairs, "cand_simhash"))(hashes)
-  }
-
-  /** Upper bound on the SimHash band-join's CHANCE-collision volume:
-    * n²/2 unordered pairs × bands·tables buckets × 2^-width per-bucket
-    * collision odds. This is the keyspace FLOOR of fixed-width SimHash
-    * banding — data-independent, quadratic in corpus size (measured:
-    * 0.81M → 80.9M → 729M at 5k/50k/150k docs for 16×8-bit bands) —
-    * and therefore the quantity the routing decision must bound.
-    * MinHash banding has no such floor (its band keys live in the full
-    * 64-bit minima space; collisions are similarity-driven), which is
-    * why it is the deep-threshold path past the cutover. */
-  private[graft] def simhashPreGateBound(nDocs: Long, bands: Int, tables: Int): Double =
-    nDocs.toDouble * nDocs / 2.0 * (bands.toDouble * tables) / math.pow(2.0, 128.0 / bands)
-
-  /** Certified hamming budget from the CORPUS-WIDE true-pair
-    * distance maximum: `min(cap, max + 3)`. Because every true pair
-    * was measured (not a sample), exactness on this corpus needs only
-    * `>= max`; the +3 absorbs small corpus drift under a reused key.
-    * No sigma-extrapolation term — that belongs to sample fitting,
-    * and over-widens a certificate to the point of never tightening
-    * (a heavy-tailed corpus with max 22 would fit μ+6σ > the 31 cap).
-    * Fewer than `minPairs` observations is thin evidence that the
-    * corpus HAS a stable margin — keep the cap. */
-  private[graft] def certifiedBudgetFromStats(
-      nPairs: Long, maxHam: Int, cap: Int, minPairs: Long): Int =
-    if (nPairs < minPairs) cap
-    else math.min(cap, maxHam + 3)
-
-  /** Certified hamming budgets, keyed by caller-supplied corpus key +
-    * routing parameters. A budget lands here only after a full
-    * corpus-wide run at the loose cap measured every true pair's
-    * hamming distance — so reusing it prunes only candidates proven
-    * non-pairs on this corpus (plus the +3/6σ drift margin). The key
-    * MUST identify an immutable corpus snapshot (a parquet dir, an
-    * index path — the Ivf.save contract); a mutated corpus under a
-    * reused key downgrades the certificate to a statistical prior. */
-  private val budgetMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** `stripped` = the EFFECTIVE sketch-input posture (the armed
-    * boilerplate guard fired AND universal blocks were removed from
-    * the sketch input): a hamming-budget certificate is a measurement
-    * of the est-sim distribution the sketch actually saw, so one
-    * minted on original text must never gate a run sketching on
-    * stripped text (or vice versa) — the margin contract would be
-    * validated against a different distribution (ADVICE r15). Route
-    * needs no key component: certificates are only minted/consulted
-    * on the SimHash branch. */
-  private def budgetMemoKey(key: String, nDocs: Long, n: Int,
-      minJaccardPct: Int, bands: Int, tables: Int, cap: Int,
-      stripped: Boolean = false): String =
-    s"$key|$nDocs|$n|$minJaccardPct|$bands|$tables|$cap|sketch=${if (stripped) "stripped" else "orig"}"
-
-  private[graft] def certifiedBudget(key: String, nDocs: Long, n: Int,
-      minJaccardPct: Int, bands: Int, tables: Int, cap: Int,
-      stripped: Boolean = false): Option[Int] =
-    Option(budgetMemo.get(budgetMemoKey(key, nDocs, n, minJaccardPct,
-      bands, tables, cap, stripped))).map(_.intValue)
-
-  private[graft] def clearBudgetMemo(): Unit = budgetMemo.clear()
-
-  private[graft] def budgetMemoSize: Int = budgetMemo.size
-
-  /** Corpus snapshot key: the caller-visible path PLUS a cheap content
-    * fingerprint (file listing digest: relative name, size, mtime per
-    * data file). A corpus mutated IN PLACE under the same path gets a
-    * different key, so a certified budget can never be reused against
-    * data it was not measured on (the r12 memo keyed on path + row
-    * count alone, which a count-preserving mutation could fool). The
-    * listing walk is metadata-only — no file content is read — so the
-    * cost is one directory scan per query build, trivial next to the
-    * corpus scan itself.
-    *
-    * The listing goes through the Hadoop FileSystem resolved from the
-    * active session's hadoopConf (falling back to a default conf), so
-    * remote corpus URIs (hdfs://, s3a://) fingerprint their actual
-    * file listings — the 100 TB deployment regime — instead of
-    * silently degenerating to a constant. A path that resolves to
-    * NOTHING throws: a key for an invisible corpus would let every
-    * later mutation reuse a stale certificate, the exact staleness
-    * class the key exists to eliminate. */
-  def snapshotKey(corpusPath: String): String = {
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val p = new org.apache.hadoop.fs.Path(corpusPath)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p))
-      throw new IllegalArgumentException(
-        s"snapshotKey: corpus path does not exist (or is invisible to this " +
-          s"filesystem): $corpusPath — refusing to mint a key a stale " +
-          s"certificate could hide behind")
-    val base = fs.makeQualified(p)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(base, true)
-    while (it.hasNext) {
-      val st = it.next()
-      entries += s"${st.getPath.toString.stripPrefix(base.toString)}|${st.getLen}|${st.getModificationTime}\n"
-    }
-    val digest = java.security.MessageDigest.getInstance("MD5")
-    entries.sorted.foreach(e => digest.update(e.getBytes("UTF-8")))
-    val hex = digest.digest().map("%02x".format(_)).mkString
-    s"$corpusPath#$hex"
-  }
-
-  /** Default on-disk budget store: certified budgets persist across
-    * driver JVMs here unless the caller points elsewhere. Keys carry
-    * the corpus content fingerprint ([[snapshotKey]]), so a shared
-    * store can never serve a stale certificate to changed data. The
-    * default is PER-USER (user name in the path, owner-only perms on
-    * create) — a world-writable shared store would let any local user
-    * plant a crafted certificate that silently narrows another user's
-    * hamming gate; [[loadBudget]] additionally range-checks what it
-    * reads so even a writable store can only widen back to the cap,
-    * never below zero. */
-  def defaultBudgetStore: String =
-    sys.env.getOrElse("SPARK_GRAFT_BUDGET_DIR",
-      s"${sys.props("java.io.tmpdir")}/graft_hamming_budgets_${sys.props("user.name")}")
-
-  private def budgetFile(storeDir: String, memoKey: String): java.nio.file.Path = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(memoKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.nio.file.Paths.get(storeDir, s"$h.budget")
-  }
-
-  /** Persist one certified (key, budget) pair — the
-    * [[graft.vector.Ivf.save]] build-once/probe-many shape applied to
-    * the hamming certificate: a fresh driver JVM seeds the memo from
-    * disk instead of re-paying the loose-cap certification run
-    * (visible in r12 boards as q_dedup_simhash 2.69 s cold vs
-    * 1.48-1.68 s warm). The file stores the FULL memo key and the
-    * loader verifies it, so a filename-hash collision degrades to a
-    * miss, never a wrong budget. */
-  private[graft] def saveBudget(storeDir: String, memoKey: String, budget: Int): Unit = {
-    import java.nio.file.Files
-    try {
-      val dir = java.nio.file.Paths.get(storeDir)
-      Files.createDirectories(dir)
-      // owner-only store: a certificate is trusted input to the
-      // hamming gate, so nobody else gets to write one for us
-      try {
-        import java.nio.file.attribute.PosixFilePermissions
-        Files.setPosixFilePermissions(dir, PosixFilePermissions.fromString("rwx------"))
-      } catch { case _: UnsupportedOperationException => () } // non-POSIX FS
-      Files.writeString(budgetFile(storeDir, memoKey), s"$memoKey\n$budget\n")
-    } catch { case scala.util.control.NonFatal(e) =>
-      // a read-only store must not fail the query — the certificate
-      // is an accelerator; the in-JVM memo still has it
-      System.err.println(s"[dedup] could not persist certified budget: ${e.getMessage}")
-    }
-  }
-
-  /** Load a persisted certificate, VERIFYING both the full memo key
-    * and the budget's range: anything outside [0, cap] (a tampered or
-    * corrupt entry — a too-small budget would silently narrow the
-    * hamming gate and drop true pairs) is treated as a miss, so the
-    * worst a bad store can do is force the loose-cap certification
-    * run to be re-paid. */
-  private[graft] def loadBudget(storeDir: String, memoKey: String, cap: Int): Option[Int] = {
-    import java.nio.file.Files
-    val f = budgetFile(storeDir, memoKey)
-    try {
-      if (!Files.exists(f)) None
-      else Files.readString(f).split("\n", -1).toList match {
-        case k :: b :: _ if k == memoKey =>
-          scala.util.Try(b.trim.toInt).toOption.filter(v => v >= 0 && v <= cap)
-        case _ => None // foreign/corrupt entry: treat as a miss
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Deep-threshold (exact n-gram Jaccard >= minJaccardPct) near-dup
-    * pair detection with ADAPTIVE candidate routing — the code path
-    * that makes SimHash banding's keyspace floor degrade by
-    * construction instead of by operator choice.
-    *
-    * The output contract is sketch-independent: candidates from
-    * WHICHEVER sketch are verified by [[verifyPairsExact]], so the
-    * result is defined by the exact threshold alone and both routes
-    * produce the same pairs (each sketch's recall is probe-measured /
-    * pigeonhole-bounded as documented on its generator).
-    *
-    * Routing: the SimHash pre-gate chance-collision bound
-    * ([[simhashPreGateBound]]) is compared against a LINEAR candidate
-    * budget (`candBudgetPerDoc · n`). Under the budget, SimHash runs.
-    * Past the budget (~33k docs at the defaults), the same exact
-    * decision routes through MinHash banding, whose candidate volume
-    * is similarity-driven with no keyspace floor — at web scale the
-    * pre-gate join of 16×8-bit SimHash banding materializes
-    * ~n²/16 rows regardless of how fast the hamming filter kills
-    * them, which is a scale-killer a 1000-executor cluster cannot
-    * outrun. Production SimHash deployments avoid this with tight
-    * hamming budgets (d <= 3); deep thresholds (J >= 50 ⇒ d128 up to
-    * ~22 on this corpus) genuinely need the floor-free sketch.
-    *
-    * Recall, stated per route (the sketch is the only statistical
-    * stage — verification is exact): the SimHash route's per-table
-    * banding recall is pigeonhole-GUARANTEED for d128 < bands (< 16
-    * at the defaults) and statistical in the window [bands, gate];
-    * the second independently-permuted table multiplies that window's
-    * per-table miss odds. The MinHash route misses a pair of true
-    * Jaccard J with probability (1−J^(k/bands))^bands — ≈0.1% at
-    * exactly J=0.5 with the 24×2 defaults, vanishing as J grows — so
-    * past the cutover the contract is LSH-statistical, the standard
-    * web-scale dedup trade.
-    *
-    * Hamming-gate tightening is certificate-driven, never sampled:
-    * with no prior evidence the gate is the loose `hammingCap`
-    * (chance collisions sit ~5.7σ above it at 128 bits, so the cap
-    * drops no true candidate the banding surfaced), and that run
-    * doubles as the CERTIFICATION — it measures every verified true
-    * pair's hamming corpus-wide (one extra join against the already-
-    * checkpointed candidates plus a one-row agg, NOT a re-run of the
-    * pipeline) and memoizes `min(cap, max+3)` under
-    * `budgetKey`. Later runs on the same corpus key reuse the
-    * certified budget and prune only candidate pairs proven non-dups.
-    * This replaces round 11's per-invocation 1/16-pair sample probe,
-    * which (a) re-paid ~6% of the pipeline on EVERY run and (b) could
-    * clip a true pair whose distance sat outside the sampled tail —
-    * the certificate is fitted on all pairs, so neither holds.
-    * `hammingBudget` lets a caller inject a budget certified out of
-    * band (the build-once/probe-many shape of [[vector.Ivf.save]]);
-    * `budgetStore` points at an on-disk certificate directory
-    * ([[saveBudget]]/[[loadBudget]]) so certificates survive driver
-    * restarts — pair it with a [[snapshotKey]]-fingerprinted
-    * `budgetKey` so a mutated corpus can never reuse one.
-    *
-    * `route` pins the candidate generator: "adaptive" (default) keeps
-    * the pre-gate-bound routing above; "minhash" forces the floor-free
-    * MinHash branch regardless of corpus size. The pinned route exists
-    * for twin contracts — [[graft.operators.CorpusIncrementalDag]]'s
-    * standing signature index is MinHash, so its full-rebuild
-    * equivalence target must sketch with the SAME generator (two
-    * sketches have independent probabilistic recall; equality claimed
-    * across different sketches would be recall-coincidental).
+  /** Deep-threshold near-dup pairs: every doc pair whose exact word
+    * n-gram Jaccard is >= minJaccardPct, found through ONE pipeline —
+    * native MinHash signatures (k = 48) → 24 bands × 2 rows candidate
+    * join with an est-sim gate at 0.25 → [[verifyPairsExact]] on the
+    * original text. The output is defined by the exact threshold
+    * alone; the sketch only proposes candidates. A pair of true
+    * Jaccard J is missed with probability (1 − J²)^24 — ≈0.1% at
+    * exactly J = 0.5, vanishing as J grows. MinHash band keys live in
+    * the full 64-bit minima space, so candidate volume follows pair
+    * similarity, not corpus size. Frame construction runs only the
+    * candidate checkpoint ([[minhashLshPairs]]); no pre-pass job.
     *
     * `boilerGuardPermille` > 0 arms the boilerplate-before-banding
     * guard: a universal banner (one block on ~all docs) pushes every
     * pairwise est-sim toward the banding threshold, and band-collision
     * volume stops being true-pair-driven — the one input shape that
     * breaks the banding contract SILENTLY (wall time blows up, answers
-    * stay right). The guard measures corpus gram coverage by high-df
-    * grams ([[boilerplateCoveragePermille]]) and, at or above the
-    * bound, WARNS via the `boiler_coverage` observe metric + log.
-    * With `boilerStripForSketch` it additionally removes UNIVERSAL
-    * blocks (df ≥ half the docs, [[stripUniversalBlocksForSketch]])
-    * from the SKETCH input only — candidate volume returns to
-    * content-similarity-driven. Contract change, stated: pairs whose
-    * similarity lives ONLY in universal boilerplate are then not
-    * candidates (by design — those are banner matches, not content
-    * dups); verification stays exact on the ORIGINAL text. */
-  def nearDupPairsAdaptive(
+    * stay right). The armed guard counts the docs, measures corpus
+    * gram coverage by high-df grams ([[boilerplateCoveragePermille]])
+    * and, at or above the bound, WARNS via the `boiler_coverage`
+    * observe metric + log. With `boilerStripForSketch` it additionally
+    * removes UNIVERSAL blocks (df ≥ half the docs,
+    * [[stripUniversalBlocksForSketch]]) from the SKETCH input only —
+    * candidate volume returns to content-similarity-driven. Contract
+    * change, stated: pairs whose similarity lives ONLY in universal
+    * boilerplate are then not candidates (by design — those are banner
+    * matches, not content dups); verification stays exact on the
+    * ORIGINAL text. */
+  def nearDupPairs(
       docs: DataFrame, id: String, text: Column, n: Int, minJaccardPct: Int,
-      candBudgetPerDoc: Long = 2048,
-      simhashBands: Int = 16, simhashTables: Int = 2, hammingCap: Int = 31,
-      minhashK: Int = 48, minhashBands: Int = 24, minhashMinEst: Double = 0.25,
-      hammingBudget: Option[Int] = None, budgetKey: Option[String] = None,
-      marginMinPairs: Long = 12, budgetStore: Option[String] = None,
-      route: String = "adaptive",
       boilerGuardPermille: Int = 0, boilerStripForSketch: Boolean = false): DataFrame = {
-    require(route == "adaptive" || route == "minhash",
-      s"nearDupPairsAdaptive: unknown route '$route' (adaptive | minhash)")
-    // one cheap count (parquet row-group stats) sizes the decision
-    val nDocs = docs.count()
-    // boilerplate-before-banding guard (one gram-grain aggregate;
-    // armed only when the caller sets a bound)
-    val boilerCov =
-      if (boilerGuardPermille > 0) boilerplateCoveragePermille(docs, id, text, n, nDocs)
-      else -1L
+    val k = 48
+    // boilerplate-before-banding guard (one count + one gram-grain
+    // aggregate; armed only when the caller sets a bound)
+    val (nDocs, boilerCov) =
+      if (boilerGuardPermille > 0) {
+        val nd = docs.count()
+        (nd, boilerplateCoveragePermille(docs, id, text, n, nd))
+      } else (-1L, -1L)
     val guardFired = boilerGuardPermille > 0 && boilerCov >= boilerGuardPermille
     if (guardFired) log.warn(
-      s"nearDupPairsAdaptive: high-df boilerplate covers $boilerCov permille of gram " +
+      s"nearDupPairs: high-df boilerplate covers $boilerCov permille of gram " +
         s"positions (bound $boilerGuardPermille) — banding candidate volume is " +
         s"boilerplate-driven; ${if (boilerStripForSketch) "sketching on universal-block-stripped text"
         else "consider boilerStripForSketch or a paragraph strip before dedup"}")
@@ -846,55 +461,14 @@ object DedupOps {
       if (guardFired && boilerStripForSketch)
         stripUniversalBlocksForSketch(docs, id, text, nDocs)
       else docs.select(col(id), text.as("__stext"))
-    def withGuardMetric(df: DataFrame): DataFrame =
-      if (boilerGuardPermille > 0)
-        df.observe("boiler_coverage", max(lit(boilerCov)).as("n")) else df
-    val preGate = simhashPreGateBound(nDocs, simhashBands, simhashTables)
-    if (route == "minhash" || preGate > candBudgetPerDoc.toDouble * nDocs) {
-      // floor-free route: MinHash band keys collide on similarity,
-      // not keyspace exhaustion — candidate volume stays linear in
-      // true-pair density at any corpus size
-      val sigs = minhashSignaturesNative(sketchDocs, id, col("__stext"), n, minhashK)
-      val cands = minhashLshPairs(sigs, id, minhashK, minhashBands, minhashMinEst)
-      withGuardMetric(verifyPairsExact(cands, docs, id, text, n, minJaccardPct)
-        .observe("route_minhash", max(lit(1L)).as("n")))
-    } else {
-      val memoKey = budgetKey.map(k => budgetMemoKey(k, nDocs, n,
-        minJaccardPct, simhashBands, simhashTables, hammingCap,
-        stripped = guardFired && boilerStripForSketch))
-      val known: Option[Int] = hammingBudget
-        .orElse(memoKey.flatMap(k => Option(budgetMemo.get(k)).map(_.intValue)))
-        .orElse(for {
-          k <- memoKey; d <- budgetStore; b <- loadBudget(d, k, hammingCap)
-        } yield { budgetMemo.put(k, b); b }) // disk certificate seeds the memo
-      val gate = known.getOrElse(hammingCap)
-      val cands = simhashPairs128(simhashGrams128(sketchDocs, id, col("__stext"), n), id,
-        maxDist = gate, bands = simhashBands, tables = simhashTables)
-      val verified = verifyPairsExact(cands, docs, id, text, n, minJaccardPct)
-      val out =
-        if (known.isEmpty && memoKey.isDefined) {
-          // certification: true-pair hamming stats ride this run —
-          // `cands` is checkpointed, so the join back for distances
-          // scans materialized rows, and the stats agg is one row
-          val withHam = graft.Caching.reap(
-            verified.join(cands.select("doc1", "doc2", "hamming"),
-              Seq("doc1", "doc2")))()
-          val st = withHam.agg(count(lit(1)).as("n"),
-            max("hamming").as("max")).head()
-          val certified =
-            if (st.getLong(0) == 0L) hammingCap
-            else certifiedBudgetFromStats(st.getLong(0),
-              st.getAs[Number](1).intValue(), hammingCap, marginMinPairs)
-          budgetMemo.put(memoKey.get, certified)
-          // persist the certificate so the NEXT driver JVM starts warm
-          budgetStore.foreach(d => saveBudget(d, memoKey.get, certified))
-          withHam.drop("hamming")
-        } else verified
-      // max() metrics: idempotent under a Sort's sampling-pass
-      // double-fire, so callers may orderBy above them
-      withGuardMetric(out.observe("route_minhash", max(lit(0L)).as("n"))
-        .observe("hamming_gate", max(lit(gate.toLong)).as("n")))
-    }
+    val sigs = minhashSignaturesNative(sketchDocs, id, col("__stext"), n, k)
+    val cands = minhashLshPairs(sigs, id, k, bands = 24, minEst = 0.25)
+    val verified = verifyPairsExact(cands, docs, id, text, n, minJaccardPct)
+    // max() metric: idempotent under a Sort's sampling-pass
+    // double-fire, so callers may orderBy above it
+    if (boilerGuardPermille > 0)
+      verified.observe("boiler_coverage", max(lit(boilerCov)).as("n"))
+    else verified
   }
 
   /** Candidate-volume telemetry: a named `observe` counter on the
@@ -915,8 +489,8 @@ object DedupOps {
     * refine step of the candidate-generate → verify dedup pipeline.
     * Recounts grams only for docs that appear in a candidate pair
     * (broadcast semi-join gate), so the cost is proportional to the
-    * candidate set — at 100 TB the sketches (MinHash bands, SimHash
-    * buckets) cut n² down to candidates and this pass makes the final
+    * candidate set — at 100 TB the sketch (MinHash bands) cuts n²
+    * down to candidates and this pass makes the final
     * DECISION exact, which is also what makes the whole pipeline
     * verifiable against an engine-independent oracle: the output is
     * defined by the Jaccard threshold alone, with the sketch as a

@@ -5,7 +5,7 @@ import graft.text.DedupOps
 
 /** Boilerplate-before-banding guard (VERDICT r14 item 7): a universal
   * banner block (on 100% of docs, unlike the 1%-df template farms the
-  * router already tolerates) pushes every pairwise est-sim toward the
+  * banding already tolerates) pushes every pairwise est-sim toward the
   * banding threshold, so band-collision volume stops being true-pair
   * driven — the one input shape that breaks the banding contract's
   * cost bound SILENTLY. The guard (a) measures high-df gram coverage
@@ -76,8 +76,8 @@ class BoilerplateGuardSpec extends SparkSpec {
   test("guarded router: exact decisions unchanged for content dups; banner-only similarity excluded by contract") {
     val docs = bannerCorpus(40, 2).persist()
     val truth = Set((1000L, 1001L), (1002L, 1003L))
-    val got = DedupOps.nearDupPairsAdaptive(
-      docs, "doc_id", $"text", 3, 50, route = "minhash",
+    val got = DedupOps.nearDupPairs(
+      docs, "doc_id", $"text", 3, 50,
       boilerGuardPermille = 150, boilerStripForSketch = true)
       .select("doc1", "doc2").as[(Long, Long)].collect().toSet
     assert(got == truth, s"guarded run must find exactly the content dups, got $got")
@@ -89,13 +89,12 @@ class BoilerplateGuardSpec extends SparkSpec {
       (1L, banner + " alpha beta gamma delta eps"),
       (2L, banner + " zeta eta theta iota kappa")).toDF("doc_id", "text")
     val withBoth = docs.union(tiny)
-    val unguarded = DedupOps.nearDupPairsAdaptive(
-      withBoth, "doc_id", $"text", 3, 50, route = "minhash")
+    val unguarded = DedupOps.nearDupPairs(withBoth, "doc_id", $"text", 3, 50)
       .select("doc1", "doc2").as[(Long, Long)].collect().toSet
     assert(unguarded.contains((1L, 2L)),
       "without the guard the banner-dominated pair passes the raw-text threshold")
-    val guarded = DedupOps.nearDupPairsAdaptive(
-      withBoth, "doc_id", $"text", 3, 50, route = "minhash",
+    val guarded = DedupOps.nearDupPairs(
+      withBoth, "doc_id", $"text", 3, 50,
       boilerGuardPermille = 150, boilerStripForSketch = true)
       .select("doc1", "doc2").as[(Long, Long)].collect().toSet
     assert(!guarded.contains((1L, 2L)),
@@ -106,20 +105,20 @@ class BoilerplateGuardSpec extends SparkSpec {
 
   test("warn-only guard leaves the pair set untouched; quiet corpus skips the strip") {
     val docs = bannerCorpus(40, 2)
-    val plain = DedupOps.nearDupPairsAdaptive(docs, "doc_id", $"text", 3, 50, route = "minhash")
+    val plain = DedupOps.nearDupPairs(docs, "doc_id", $"text", 3, 50)
       .select("doc1", "doc2").as[(Long, Long)].collect().toSet
-    val warned = DedupOps.nearDupPairsAdaptive(docs, "doc_id", $"text", 3, 50,
-      route = "minhash", boilerGuardPermille = 150)
+    val warned = DedupOps.nearDupPairs(docs, "doc_id", $"text", 3, 50,
+      boilerGuardPermille = 150)
       .select("doc1", "doc2").as[(Long, Long)].collect().toSet
     assert(warned == plain, "warn-only mode must not change decisions")
 
     // a quiet corpus (no universal banner): the armed strip never
     // engages, so the pair set equals the unguarded run's
     val quiet = Tables.documents(spark, sf).limit(150).select($"doc_id", $"text")
-    val a = DedupOps.nearDupPairsAdaptive(quiet, "doc_id", $"text", 3, 50, route = "minhash")
+    val a = DedupOps.nearDupPairs(quiet, "doc_id", $"text", 3, 50)
       .select("doc1", "doc2").as[(Long, Long)].collect().toSet
-    val b = DedupOps.nearDupPairsAdaptive(quiet, "doc_id", $"text", 3, 50,
-      route = "minhash", boilerGuardPermille = 150, boilerStripForSketch = true)
+    val b = DedupOps.nearDupPairs(quiet, "doc_id", $"text", 3, 50,
+      boilerGuardPermille = 150, boilerStripForSketch = true)
       .select("doc1", "doc2").as[(Long, Long)].collect().toSet
     assert(a == b, "below-bound corpus: armed guard is a no-op on decisions")
   }
@@ -151,44 +150,6 @@ class BoilerplateGuardSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
       docs.unpersist()
       ()
-    }
-  }
-
-  test("hamming certificates are keyed to the sketch posture: orig-text and stripped-sketch never share one") {
-    import graft.text.DedupOps
-    val rnd = new scala.util.Random(7)
-    val docs = (0 until 40).flatMap { i =>
-      val content = (1 to 60).map(_ => s"c${i}_${rnd.nextInt(100000)}").mkString(" ")
-      Seq((i * 2L, banner + " " + content), (i * 2L + 1L, banner + " " + content))
-    }.toDF("doc_id", "text").persist()
-    val n = docs.count()
-    DedupOps.clearBudgetMemo()
-    val key = "spec://sketch-posture"
-    // run 1: armed guard, NO strip — certificate minted on ORIGINAL text
-    DedupOps.nearDupPairsAdaptive(docs, "doc_id", $"text", 3, 50,
-      budgetKey = Some(key), boilerGuardPermille = 150).collect()
-    assert(DedupOps.certifiedBudget(key, n, 3, 50, 16, 2, 31).isDefined,
-      "orig-posture certification run must mint a certificate")
-    assert(DedupOps.certifiedBudget(key, n, 3, 50, 16, 2, 31, stripped = true).isEmpty,
-      "an orig-text certificate must be INVISIBLE to the stripped-sketch posture (ADVICE r15)")
-    // run 2: the strip fires — re-certifies under its own posture key
-    DedupOps.nearDupPairsAdaptive(docs, "doc_id", $"text", 3, 50,
-      budgetKey = Some(key), boilerGuardPermille = 150, boilerStripForSketch = true).collect()
-    assert(DedupOps.certifiedBudget(key, n, 3, 50, 16, 2, 31, stripped = true).isDefined,
-      "stripped-posture run certifies its own budget")
-    DedupOps.clearBudgetMemo()
-    docs.unpersist()
-  }
-
-  test("route=minhash equals route=adaptive on a small corpus (sketch-identical twin contract)") {
-    val docs = bannerCorpus(30, 2)
-    def pairs(route: String) = DedupOps.nearDupPairsAdaptive(
-      docs, "doc_id", $"text", 3, 50, route = route)
-      .select("doc1", "doc2").as[(Long, Long)].collect().toSet
-    assert(pairs("minhash") == pairs("adaptive"),
-      "forced MinHash route and adaptive routing agree (exact verification decides)")
-    intercept[IllegalArgumentException] {
-      DedupOps.nearDupPairsAdaptive(docs, "doc_id", $"text", 3, 50, route = "bogus")
     }
   }
 }

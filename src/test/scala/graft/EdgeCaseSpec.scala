@@ -58,16 +58,6 @@ class EdgeCaseSpec extends SparkSpec {
     val mh = graft.text.DedupOps.minhashSignaturesNative(df, "doc_id", col("text"), n = 3, k = 4)
     // docs 1 and 2 have < 3 tokens -> no signature row
     assert(mh.select("doc_id").as[Long].collect().toSeq == Seq(3L))
-    // 128-bit variant is total too, with both halves zero on an empty
-    // gram set (all counters stay 0, sign bits all clear) and the
-    // first half always equal to the 64-bit fingerprint
-    val sh128 = graft.text.DedupOps.simhashGrams128(df, "doc_id", col("text"), 3)
-    assert(sh128.count() == 3)
-    val sh64 = graft.text.DedupOps.simhashGrams(df, "doc_id", col("text"), 3)
-    assert(sh128.join(sh64, "doc_id").where($"simhash0" =!= $"simhash").isEmpty)
-    assert(sh128.where($"doc_id" < 3L)
-      .where($"simhash0" =!= 0L || $"simhash1" =!= 0L).isEmpty,
-      "sub-n-token docs hash to the zero fingerprint in both halves")
   }
 
   test("knnJoinExact on degenerate corpora: single vector, k > corpus") {

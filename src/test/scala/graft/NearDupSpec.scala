@@ -1,0 +1,66 @@
+package graft
+
+import graft.text.DedupOps
+
+/** The one near-dup pipeline, [[DedupOps.nearDupPairs]]: its pair set
+  * is the exact n-gram Jaccard ground truth, and building its frame
+  * runs no pre-pass — the only query it executes is the
+  * candidate checkpoint. */
+class NearDupSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Clone-heavy corpus: groups of near-identical docs (1-token edits
+    * of a 200-token base) are true J>=50 pairs; unrelated bases are
+    * far. Deterministic. */
+  private def cloneCorpus(nGroups: Int, perGroup: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(11)
+    (0 until nGroups).flatMap { g =>
+      val base = Vector.fill(200)(s"tok${rnd.nextInt(500)}")
+      (0 until perGroup).map { c =>
+        val doc = if (c == 0) base else base.updated(rnd.nextInt(200), s"mut${g}_$c")
+        ((g * perGroup + c).toLong, doc.mkString(" "))
+      }
+    }
+  }
+
+  test("nearDupPairs emits exactly the exact-Jaccard J>=50 pairs of a clone corpus") {
+    val docs = cloneCorpus(12, 3).toDF("doc_id", "text")
+    val truth = DedupOps.ngramJaccardPairs(docs, "doc_id", $"text", 3, Int.MaxValue, 50)
+      .select("doc1", "doc2", "jaccard_pct").as[(Long, Long, Long)].collect().toSet
+    assert(truth.nonEmpty, "corpus must contain true pairs")
+    val got = DedupOps.nearDupPairs(docs, "doc_id", $"text", 3, 50)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(got == truth, s"missing=${(truth -- got).take(3)} extra=${(got -- truth).take(3)}")
+  }
+
+  test("building a near-dup frame runs no pre-pass query, only the candidate checkpoint") {
+    // record every SQL execution started while the frames are built
+    // (its description is the action's call site: "count at …",
+    // "localCheckpoint at …"), draining the async listener bus before
+    // reading
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          actions.add(st.description); ()
+        case _ => ()
+      }
+    }
+    val docs = Tables.documents(spark, sf).persist()
+    docs.count() // materialize OUTSIDE the recorded window
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      DedupOps.nearDupPairs(docs, "doc_id", $"text", 3, 50)
+      SparkEntry.queries("q_dedup_simhash")(spark, sf)
+      org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
+      val all = actions.toArray.map(_.toString).toSeq
+      assert(all.nonEmpty, "the candidate checkpoint must have run")
+      val prePass = all.filterNot(_.startsWith("localCheckpoint at "))
+      assert(prePass.isEmpty, s"queries other than the candidate checkpoint ran: $prePass")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      docs.unpersist()
+      ()
+    }
+  }
+}

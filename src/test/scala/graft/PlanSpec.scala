@@ -91,8 +91,6 @@ class PlanSpec extends SparkSpec {
     assert(!sh.contains("Exchange") && sh.contains("simhash64"), sh)
     val mh = planOf(graft.text.DedupOps.minhashSignaturesNative(docs, "doc_id", col("text"), 3, 32))
     assert(!mh.contains("Exchange") && mh.contains("minhash_sig"), mh)
-    val sh128 = planOf(graft.text.DedupOps.simhashGrams128(docs, "doc_id", col("text"), 3))
-    assert(!sh128.contains("Exchange") && sh128.contains("simhash128"), sh128)
   }
 
   test("kpi summary: distinct counts avoid the multi-distinct Expand") {

@@ -78,42 +78,22 @@ class TextSpec extends SparkSpec {
     val h = DedupOps.simhash(df, "doc_id", $"text")
     val hs = h.as[(Long, Long)].collect().toMap
     assert(hs(1L) == hs(2L))
-    val pairs = DedupOps.simhashPairs(h, "doc_id", 0)
-      .select("doc1", "doc2", "hamming").as[(Long, Long, Int)].collect().toSeq
-    assert(pairs == Seq((1L, 2L, 0)))
+    // hamming distance of every pair, as bit_count of the xor
+    val ham = h.select($"doc_id".as("d1"), $"simhash".as("h1"))
+      .join(h.select($"doc_id".as("d2"), $"simhash".as("h2")), $"d1" < $"d2")
+      .select($"d1", $"d2", bit_count($"h1".bitwiseXOR($"h2")).as("hamming"))
+      .as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(ham((1L, 2L)) == 0)
+    assert(ham((1L, 3L)) > 0 && ham((2L, 3L)) > 0)
   }
 
-  test("simhash128: h0 is bit-identical to the 64-bit fingerprint; h1 is independent") {
-    val docs = Tables.documents(spark, sf).where($"doc_id" < 80).select($"doc_id", $"text")
-    val h64 = DedupOps.simhashGrams(docs, "doc_id", $"text", 3)
-    val h128 = DedupOps.simhashGrams128(docs, "doc_id", $"text", 3)
-    val joined = h64.join(h128, "doc_id")
-    assert(joined.where($"simhash" =!= $"simhash0").isEmpty,
-      "first half must reuse seed 42 bit-for-bit")
-    // the halves come from independent seeds: they must not collapse
-    // into each other on real text
-    assert(joined.where($"simhash0" === $"simhash1").count() === 0L)
-  }
-
-  test("simhash128 pairs: identical docs at hamming 0, unrelated docs rejected") {
-    val df = Seq(
-      (1L, "spark makes big data small again and again for everyone"),
-      (2L, "spark makes big data small again and again for everyone"),
-      (3L, "entirely unrelated words live here now with different content")
-    ).toDF("doc_id", "text")
-    val h = DedupOps.simhashGrams128(df, "doc_id", $"text", 3)
-    val pairs = DedupOps.simhashPairs128(h, "doc_id", maxDist = 0)
-      .select("doc1", "doc2", "hamming").as[(Long, Long, Int)].collect().toSeq
-    assert(pairs == Seq((1L, 2L, 0)))
-  }
-
-  test("simhash128 end-to-end recall: the banded pipeline reproduces the exact J>=50 truth") {
+  test("q_dedup_simhash end to end: the near-dup pipeline reproduces the exact J>=50 truth") {
     val docs = Tables.documents(spark, sf)
     val truth = DedupOps.ngramJaccardPairs(docs, "doc_id", $"text", 3, Int.MaxValue, 50)
       .select("doc1", "doc2")
-    val banded = QueriesText.dedupSimhash(spark, sf).select("doc1", "doc2")
+    val banded = SparkEntry.queries("q_dedup_simhash")(spark, sf).select("doc1", "doc2")
     assert(truth.exceptAll(banded).isEmpty,
-      "a true J>=50 pair escaped the 16x8 banding — recall margin broken")
+      "a true J>=50 pair escaped the 24x2 MinHash banding — recall margin broken")
     assert(banded.exceptAll(truth).isEmpty,
       "exact verification must kill every sub-threshold candidate")
   }

@@ -16,9 +16,6 @@
 #
 # Invariants the recipe depends on:
 #  - builds and runs are SEQUENTIAL (never two sbt processes at once);
-#  - both sides share the hamming-certificate store (/tmp default), so
-#    neither pays a one-time certification the other skipped — run a
-#    throwaway warm-up if the ref side changes budgetMemoKey shape;
 #  - SPARK_GRAFT_ONLY keeps Bench from writing stamped full-board
 #    copies; per-run lines land where SPARK_GRAFT_BENCH_OUT points.
 set -euo pipefail

@@ -32,7 +32,6 @@ import os
 # SF; why)). An oracle pass on an empty output checks nothing, so each
 # entry states why the data makes the result empty.
 EMPTY_OK = {
-    "q_asof_forward": (None, "every event postdates the last order, so no order has a next event"),
     "q_anti_join": ({"sf0.001", "sf0.01"}, "every customer has at least one order at these SFs"),
 }
 
