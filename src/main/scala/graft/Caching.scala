@@ -1,80 +1,123 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import java.util.concurrent.ConcurrentHashMap
 
-/** Cache scoping for multi-consumer operator pipelines.
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.{DataFrame, GraftPlans}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.storage.StorageLevel
+
+/** The one materialization primitive for multi-consumer intermediates.
   *
-  * Operators that persist an intermediate consumed by several plan
-  * branches (postings, signatures, inverted lists) must not leak that
-  * storage past their own lifetime: in a long-lived session running
-  * many queries, leaked blocks accumulate in the block manager and
-  * the resulting GC pressure taxes every *later* query (the round-2
-  * bench regression cluster was exactly this).
+  * [[share]] wraps a frame's plan in a [[Share]] node; building the
+  * frame runs nothing. When an action runs a plan that reads the share
+  * (once or from several branches), the first branch to execute it
+  * materializes the child as plain serialized row blocks
+  * (MEMORY_AND_DISK) and every other branch of the same action reads
+  * those blocks. Row blocks, not the columnar cache: one serialization
+  * pass to build, and consumers deserialize rows directly — 0.36–0.84×
+  * the columnar cache's time on the grain queries at sf0.1
+  * (OPTIMIZATION_r17.md §2).
   *
-  * [[reap]] is the owning-handle pattern in one move: eagerly
-  * materialize the operator's (small) result via an executor-local
-  * checkpoint — cutting its lineage over the temps — then release the
-  * temps' storage. The caller receives a frame whose storage is the
-  * result rows only.
-  */
+  * Lifetime: per action. The blocks are keyed by the action's SQL
+  * execution id and freed when that execution ends, whether it
+  * succeeded or failed (the end event rides the listener bus, so the
+  * free lands just after the action returns). Nothing outlives the
+  * action, so a caller has nothing to release.
+  *
+  * Concurrency: two actions over one frame — concurrent or not — run
+  * under different execution ids and never read or free each other's
+  * blocks. Within one action, branches share only when their physical
+  * children are identical (canonical plan equality), so a branch
+  * re-planned differently by AQE reads its own materialization, never
+  * rows partitioned for another.
+  *
+  * Safety: the blocks are a persisted RDD with its lineage intact, not
+  * a checkpoint — a lost block is recomputed from the child, never
+  * read as missing rows. A plan run outside any SQL execution (a bare
+  * `queryExecution.toRdd`) reads its child directly, unshared.
+  *
+  * Placement: the share reports its child's partitioning and ordering,
+  * so a consumer keyed like the child plans no exchange over it. An
+  * `observe` counter belongs ABOVE a share or behind an exchange, never
+  * inside one: a branch that reads another branch's blocks never runs
+  * its own copy of the counter. */
 object Caching {
-  /** Share a multi-consumer intermediate: materialize it ONCE, as an
-    * eager `localCheckpoint`, so the consumers never re-execute the
-    * subtree. Rows land in the block manager as plain serialized row
-    * blocks (MEMORY_AND_DISK): one serialization pass to build, and
-    * consumers deserialize rows directly. Against the columnar cache
-    * it measured 10–25% faster end to end on every postings/grain
-    * query at sf0.1, same rows (OPTIMIZATION_r17.md §2).
-    *
-    * The checkpoint truncates lineage: blocks lost before a consumer
-    * runs fail that consumer ("checkpoint block not found") instead
-    * of recomputing — fine while the share is not the job's sole
-    * fault-tolerance point, the same trade [[reap]] makes for
-    * results. A share's own executed plan is visible to a
-    * `QueryExecutionListener` as the `localCheckpoint` action. */
-  def share(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+  /** A frame whose plan materializes `df` once per action that reads
+    * it. Lazy: building it starts no job. */
+  def share(df: DataFrame): DataFrame = GraftPlans.ofRows(df, Share(df.queryExecution.analyzed))
 
-  /** Materialize `result` eagerly and release every `temps` frame's
-    * block-manager storage. The returned frame scans the checkpointed
-    * rows; the temps' lineage is no longer referenced.
-    *
-    * Use when the result is much smaller than the temps (candidate
-    * pairs vs postings) — the checkpoint itself occupies storage until
-    * the frame is garbage-collected or [[release]]d. */
-  def reap(result: DataFrame)(temps: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(eager = true)
-    temps.foreach(unshare)
-    out
+  /** Logical share node: output, statistics and column set are the
+    * child's. Its references are the child's whole output, so column
+    * pruning never rewrites the child per consumer (which would give
+    * every consumer a different, unshared child). */
+  case class Share(child: LogicalPlan) extends UnaryNode {
+    override def output: Seq[Attribute] = child.output
+    override def references: AttributeSet = child.outputSet
+    override protected def withNewChildInternal(c: LogicalPlan): Share = copy(child = c)
   }
 
-  /** Release a [[share]]d frame's storage: [[release]] drops the
-    * checkpoint's LogicalRDD blocks, for which `Dataset.unpersist` is
-    * a no-op (localCheckpoint RDDs never enter the cacheManager);
-    * `unpersist` covers frames `.persist`ed directly (the DedupOps
-    * postings shares). Callers that hold a share past a [[reap]] — or
-    * never reap at all — must route their cleanup here, not through a
-    * bare `.unpersist`. */
-  def unshare(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    release(df)
+  /** Physical share: see [[Caching]] for the lifetime and keying. */
+  case class ShareExec(child: SparkPlan) extends UnaryExecNode {
+    override def output: Seq[Attribute] = child.output
+    override def outputPartitioning: Partitioning = child.outputPartitioning
+    override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+    override protected def doExecute(): RDD[InternalRow] =
+      Option(sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)) match {
+        case Some(id) => materialize(sparkContext, id.toLong, child)
+        case None => child.execute()
+      }
+    override protected def withNewChildInternal(c: SparkPlan): ShareExec = copy(child = c)
   }
 
-  /** Release the block-manager storage behind a `localCheckpoint`ed
-    * frame (the ContextCleaner would only reclaim it at some future
-    * GC; iterative loops need each round freed deterministically).
-    *
-    * Only fires when the frame's plan ROOT is itself the checkpoint's
-    * LogicalRDD — i.e. the frame IS the checkpoint handle. Releasing
-    * every LogicalRDD found anywhere in a plan would let a frame
-    * merely DERIVED from a still-live checkpointed share drop that
-    * share's blocks, which a localCheckpoint cannot recompute
-    * ("checkpoint block not found" on the next consumer). A derived
-    * frame is a no-op here; its underlying share is released by
-    * whoever owns the share handle. */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
+  /** Plans [[Share]] as [[ShareExec]]; injected by [[GraftExtensions]]. */
+  object ShareStrategy extends SparkStrategy {
+    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case Share(child) => ShareExec(planLater(child)) :: Nil
+      case _ => Nil
+    }
+  }
+
+  // (execution id, canonical child) -> the materialized rows
+  private val live = new ConcurrentHashMap[(Long, SparkPlan), RDD[InternalRow]]()
+  @volatile private var watched: SparkContext = _
+
+  private def materialize(sc: SparkContext, executionId: Long, child: SparkPlan): RDD[InternalRow] = {
+    watch(sc)
+    val key = (executionId, child.canonicalized)
+    Option(live.get(key)).getOrElse {
+      // execute outside any lock: a child may block on a broadcast
+      // whose own plan reads another share
+      val rows = child.execute().map(_.copy())
+        .setName(s"share of execution $executionId")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val won = live.putIfAbsent(key, rows)
+      if (won == null) rows else { rows.unpersist(blocking = false); won }
+    }
+  }
+
+  /** Free an execution's shares when it ends. One listener per context. */
+  private def watch(sc: SparkContext): Unit = if (watched ne sc) synchronized {
+    if (watched ne sc) {
+      sc.addSparkListener(new SparkListener {
+        override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+          case end: SparkListenerSQLExecutionEnd => free(end.executionId)
+          case _ => ()
+        }
+      })
+      watched = sc
+    }
+  }
+
+  private def free(executionId: Long): Unit =
+    live.entrySet.removeIf { e =>
+      e.getKey._1 == executionId && { e.getValue.unpersist(blocking = false); true }
     }
 }

@@ -68,8 +68,9 @@ object GraftFunctions {
 }
 
 /** Session extension: `spark.sql.extensions=graft.GraftExtensions`.
-  * Injects the function table plus two optimizer rules, neither with
-  * a switch of its own:
+  * Injects the function table, the planner strategy for
+  * [[Caching.share]]'s plan node, and two optimizer rules, neither
+  * with a switch of its own:
   *  - [[graft.plans.FactSpread]] decides, from the plan, whether an
   *    unsplittable file scan gets a round-robin spread;
   *  - [[graft.plans.ExpandFreeDistinct]] rewrites multi-distinct
@@ -85,5 +86,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(graft.plans.FactSpread(_))
     ext.injectOptimizerRule(_ => graft.plans.ExpandFreeDistinct)
+    ext.injectPlannerStrategy(_ => Caching.ShareStrategy)
   }
 }

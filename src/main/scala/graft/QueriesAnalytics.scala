@@ -463,14 +463,6 @@ object QueriesAnalytics {
     * of partitioning; an ntile formulation would need a global
     * row_number AND make tied customers' scores order-dependent. */
   def rfmSegments(s: SparkSession, dir: String): DataFrame = {
-    val (out, met) = rfmSegmentsRaw(s, dir)
-    Caching.reap(out)(met)
-  }
-
-  /** Un-reaped [[rfmSegments]] pipeline (result, persisted grain) —
-    * the plan-shape spec asserts on the result BEFORE the checkpoint
-    * truncates its lineage. */
-  private[graft] def rfmSegmentsRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val o = Tables.orders(s, dir)
     // the corpus as-of date is the global max order date — a pruned
     // 1-column scan (parquet stats short-circuit it), computed once,
@@ -515,7 +507,7 @@ object QueriesAnalytics {
       .withColumn("r_score", lit(5L) - above(col("recency_days"), "r")) // recent = low days = high score
       .withColumn("f_score", above(col("frequency"), "f"))
       .withColumn("m_score", above(col("__cents"), "m"))
-    val out = scored.select(
+    scored.select(
       col("custkey"),
       col("recency_days"),
       col("frequency"),
@@ -528,7 +520,6 @@ object QueriesAnalytics {
         .when(col("r_score") <= 1 && col("f_score") >= 3, "at_risk")
         .when(col("r_score") <= 1, "lost")
         .otherwise("regular").as("segment"))
-    (out, met)
   }
 
   /** #111 weekday seasonality: order count, exact revenue, and
@@ -662,21 +653,10 @@ object QueriesAnalytics {
     rollingUsersOn(Tables.events(s, dir))
 
   private[graft] def rollingUsersOn(events: DataFrame): DataFrame = {
-    val (out, ud) = rollingUsersRaw(events, shareGrain = true)
-    Caching.reap(out)(ud)
-  }
-
-  /** [[rollingUsersOn]] with the grain share toggleable — the
-    * plan-shape spec asserts on the UNSHARED pipeline (the checkpoint
-    * truncates the lineage below the explode, same situation as
-    * [[rfmSegmentsRaw]]); the public query shares + reaps. */
-  private[graft] def rollingUsersRaw(events: DataFrame,
-      shareGrain: Boolean): (DataFrame, DataFrame) = {
     // the user-day grain feeds THREE consumers (day dimension, daily
     // count, 7-day vote expansion) — share it once instead of paying
     // the events scan + distinct exchange per consumer (guide §2.4)
-    val udBase = events.select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-    val ud = if (shareGrain) Caching.share(udBase) else udBase
+    val ud = Caching.share(events.select(to_date(col("ts")).as("day"), col("user_id")).distinct())
     val days = ud.select(col("day").as("rday")).distinct()
     val daily = ud.groupBy(col("day").as("rday")).agg(count(lit(1)).as("n_users_1d"))
     val rolled = ud
@@ -685,10 +665,9 @@ object QueriesAnalytics {
       .join(broadcast(days), "rday")
       .distinct()
       .groupBy("rday").agg(count(lit(1)).as("active_users_7d"))
-    val out = rolled.join(daily, "rday")
+    rolled.join(daily, "rday")
       .select(col("rday").as("day"), col("n_users_1d"), col("active_users_7d"))
       .orderBy("day")
-    (out, ud)
   }
 
   /** #115 click→purchase attribution: every purchase event paired

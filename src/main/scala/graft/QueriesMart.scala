@@ -175,11 +175,11 @@ object QueriesMart {
     abcPartsOn(Tables.lineitem(s, dir))
 
   private[graft] def abcPartsOn(lineitem: DataFrame): DataFrame = {
-    // part-grain persist (same reasoning as #94's Gini): the
+    // part-grain share (same reasoning as #94's Gini): the
     // prefix-sum's bucket-bounds pass, its main path, and the 1-row
     // total would otherwise EACH re-run the fact aggregation —
-    // cached, the fact is scanned once and all three read ~#parts
-    // rows. Reaped before return.
+    // shared, the fact is scanned once and all three read ~#parts
+    // rows.
     val perPart = lineitem
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n_lines"), revCents4.as("__c"))
@@ -188,7 +188,7 @@ object QueriesMart {
       .withColumn("__negc", -col("__c"))
       .transform(Caching.share)
     val total = perPart.agg(sum(col("__c")).as("__total"))
-    val out = graft.operators.ScanOps
+    graft.operators.ScanOps
       .exclusivePrefixSum(perPart, Nil, Seq("__negc", "l_partkey"), col("__c"), "__pre")
       .withColumn("__cum", col("__pre") + col("__c"))
       .crossJoin(broadcast(total))
@@ -204,7 +204,6 @@ object QueriesMart {
         (sum(col("__c")).cast("double") / lit(10000.0)).as("revenue"),
         permille(sum(col("__c")), first(col("__total"))).as("share_permille"))
       .orderBy("abc_class")
-    Caching.reap(out)(perPart)
   }
 
   /** #120 week-over-week growth: ISO-week revenue with each week's
@@ -325,7 +324,7 @@ object QueriesMart {
     * grain (≤ a few thousand rows at ANY fact size — the big-grain
     * rank-selection machinery of #94/#119 would be overkill here,
     * exactly as the calendar-grain windows of #88 argue). The grain
-    * persists for the median pass and the gate; reaped on return. */
+    * is shared by the median pass and the gate. */
   def anomalyDays(s: SparkSession, dir: String): DataFrame =
     anomalyDaysOn(Tables.orders(s, dir))
 
@@ -345,7 +344,7 @@ object QueriesMart {
       .transform(Caching.share)
     val dev = d.join(broadcast(lowerMedian(d, col("__c"), "__med")), "dow_iso")
       .withColumn("__dev", abs(col("__c") - col("__med")))
-    val out = dev.join(broadcast(lowerMedian(dev, col("__dev"), "__mad")), "dow_iso")
+    dev.join(broadcast(lowerMedian(dev, col("__dev"), "__mad")), "dow_iso")
       .where(col("__dev") > lit(3L) * col("__mad"))
       .select(
         col("day"), col("dow_iso"), col("n_orders"),
@@ -354,7 +353,6 @@ object QueriesMart {
         (col("__dev").cast("double") / lit(100.0)).as("deviation"),
         (col("__mad").cast("double") / lit(100.0)).as("weekday_mad"))
       .orderBy("day")
-    Caching.reap(out)(d)
   }
 
   /** #125 order-size profile: how many lines an order carries —
@@ -409,7 +407,7 @@ object QueriesMart {
     // both the cohort denominator and the final-year trim (everyone
     // is vacuously `gone` after the last observed year) are windows
     // over the bounded matrix grain — no second scan, no 1-row join
-    val out = matrix
+    matrix
       .withColumn("__cohort",
         sum(col("n_customers")).over(Window.partitionBy("year_from", "band_from")))
       .withColumn("__maxy", max(col("year_from")).over(Window.partitionBy()))
@@ -417,7 +415,6 @@ object QueriesMart {
       .select(col("year_from"), col("band_from"), col("band_to"), col("n_customers"),
         permille(col("n_customers"), col("__cohort")).as("cohort_permille"))
       .orderBy("year_from", "band_from", "band_to")
-    Caching.reap(out)(cy)
   }
 
   /** #127 freshness audit: per fact table — row count, latest
@@ -713,7 +710,7 @@ object QueriesMart {
       .select(col("pr.c1").as("cat_1"), col("pr.c2").as("cat_2"))
       .groupBy("cat_1", "cat_2").agg(count(lit(1)).as("n_both"))
     val total = baskets.agg(count(lit(1)).as("n_baskets"))
-    val out = pairs
+    pairs
       .join(broadcast(support.select(col("cat").as("cat_1"), col("n").as("n1"))), "cat_1")
       .join(broadcast(support.select(col("cat").as("cat_2"), col("n").as("n2"))), "cat_2")
       .crossJoin(broadcast(total))
@@ -723,7 +720,6 @@ object QueriesMart {
           col("n_both").cast(dec38) * col("n_baskets") * lit(1000L),
           col("n1").cast(dec38) * col("n2")).as("lift_permille"))
       .orderBy("cat_1", "cat_2")
-    Caching.reap(out)(baskets)
   }
 
   def all: Map[String, Q] = Map(

@@ -226,57 +226,52 @@ object QueriesScale {
     * pre-pass and no self-join re-shuffling the lines a second and
     * third time. Work stays bounded by Σ lines-per-order²; the pair
     * and support aggregates see only basket-derived rows. */
-  def copurchase(s: SparkSession, dir: String): DataFrame = {
-    val (out, baskets) = copurchaseRaw(s, dir)
-    // the co-occurrence matrix is tiny next to the persisted baskets:
-    // materialize it and free them
-    Caching.reap(out)(baskets)
-  }
+  def copurchase(s: SparkSession, dir: String): DataFrame =
+    copurchaseOf(basketsOf(s, dir).transform(Caching.share))
 
-  /** Un-reaped [[copurchase]] pipeline (result, persisted temp) — the
-    * plan-shape spec asserts on the result BEFORE the checkpoint
-    * truncates its lineage. */
-  private[graft] def copurchaseRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (pairs, baskets) = basketPairsRaw(s, dir)
+  /** [[copurchase]] over a basket frame ([[basketsOf]]) — shared by
+    * the caller: the pair expansion and the support counts read it. */
+  private def copurchaseOf(baskets: DataFrame): DataFrame = {
+    val pairs = basketPairs(baskets)
     val support = baskets.select(explode(col("parts")).as("l_partkey"))
       .groupBy("l_partkey").agg(count(lit(1)).as("n"))
     // per-part support is bounded by the part dimension (tiny next to
     // the pair matrix): broadcast both enrichment joins
-    val out = pairs
+    pairs
       .join(broadcast(support.select(col("l_partkey").as("p1"), col("n").as("n1"))), "p1")
       .join(broadcast(support.select(col("l_partkey").as("p2"), col("n").as("n2"))), "p2")
       .select("p1", "p2", "n_orders", "n1", "n2")
-    (out, baskets)
   }
 
-  /** The thresholded qualifying-pair matrix WITHOUT support
-    * enrichment (pairs, persisted baskets) — #122 consumes this bare
-    * form: the optimizer cannot prune the support joins out of
-    * [[copurchaseRaw]]'s output (inner joins filter semantically),
-    * so a PageRank built on it would pay the support aggregation and
-    * two broadcast joins just to drop n1/n2. */
-  private[graft] def basketPairsRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val baskets = Tables.lineitem(s, dir)
+  /** One sorted part basket per order. */
+  private def basketsOf(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
       .groupBy("l_orderkey")
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
       .select("parts")
-      .transform(Caching.share)
+
+  /** The thresholded qualifying-pair matrix WITHOUT support
+    * enrichment — #122 consumes this bare form: the optimizer cannot
+    * prune the support joins out of [[copurchase]]'s output (inner
+    * joins filter semantically), so a PageRank built on it would pay
+    * the support aggregation and two broadcast joins just to drop
+    * n1/n2. */
+  private def basketPairs(baskets: DataFrame): DataFrame = {
     // sorted basket → ordered (parts[i], parts[j>i]) pairs, all map-side
     val pairList = flatten(transform(col("parts"), (x, i) =>
       transform(slice(col("parts"), i + lit(2), size(col("parts"))), y =>
         struct(x.as("p1"), y.as("p2")))))
-    val pairs = baskets
+    baskets
       .select(explode(pairList).as("pr"))
       .select(col("pr.p1").as("p1"), col("pr.p2").as("p2"))
       .groupBy("p1", "p2")
       .agg(count(lit(1)).as("n_orders"))
       .where(col("n_orders") >= 3)
-    (pairs, baskets)
   }
 
   /** #110 association rules over the co-purchase matrix: confidence
     * and lift per qualifying part pair, from the SAME single-shuffle
-    * basket pipeline as #66 (`copurchaseRaw` is shared — the pair
+    * basket pipeline as #66 (the basket share is read by both — the pair
     * expansion stays a map-only array transform over each sorted
     * basket). Confidence p(p2|p1) and lift n·N/(n1·n2) are emitted as
     * exact integer permille (`div` on long counts — no float ratio to
@@ -288,17 +283,9 @@ object QueriesScale {
     * realistic order count; past that, lift the products to
     * DECIMAL(38,0) before the divide. */
   def basketLift(s: SparkSession, dir: String): DataFrame = {
-    val (out, baskets) = basketLiftRaw(s, dir)
-    Caching.reap(out)(baskets)
-  }
-
-  /** Un-reaped [[basketLift]] pipeline (result, persisted baskets) —
-    * the plan-shape spec asserts on the result BEFORE the checkpoint
-    * truncates its lineage. */
-  private[graft] def basketLiftRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (pairs, baskets) = copurchaseRaw(s, dir)
+    val baskets = basketsOf(s, dir).transform(Caching.share)
     val total = baskets.agg(count(lit(1)).as("n_baskets"))
-    val out = pairs
+    copurchaseOf(baskets)
       .crossJoin(broadcast(total))
       .select(
         col("p1"), col("p2"), col("n_orders"), col("n1"), col("n2"), col("n_baskets"),
@@ -308,7 +295,6 @@ object QueriesScale {
           .as("conf_p2_permille"),
         call_function("div", col("n_orders") * col("n_baskets") * lit(1000L),
           col("n1") * col("n2")).as("lift_permille"))
-    (out, baskets)
   }
 
   /** #122 co-purchase PageRank: power-iteration centrality over the
@@ -330,28 +316,18 @@ object QueriesScale {
     * same way it bounds #66), never the fact. The persisted pair
     * matrix feeds all three rounds; fixed iteration count keeps the
     * lineage shallow. The head is a distributed TakeOrdered. */
-  def partRank(s: SparkSession, dir: String): DataFrame = {
-    val (pairs0, baskets) = basketPairsRaw(s, dir)
+  def partRank(s: SparkSession, dir: String): DataFrame =
     // the thresholded pair matrix is read by the degree pass plus
-    // every iteration — persist it, not the basket-scale temps
-    val pairs = pairs0.select("p1", "p2")
-      .transform(Caching.share)
-    val (out, ed, deg) = partRankFromPairsRaw(pairs)
-    Caching.reap(out)(baskets, pairs, ed, deg)
-  }
+    // every iteration — share it; its baskets have one reader here
+    partRankFromPairs(basketPairs(basketsOf(s, dir)).select("p1", "p2").transform(Caching.share))
 
   /** Rank iteration algebra over a (p1, p2) qualifying-pair frame —
     * split out so the spec can drive a hand-computable graph. */
   private[graft] def partRankFromPairs(pairs: DataFrame): DataFrame = {
-    val (out, ed, deg) = partRankFromPairsRaw(pairs)
-    Caching.reap(out)(ed, deg)
-  }
-
-  private def partRankFromPairsRaw(pairs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
       .union(pairs.select(col("p2").as("src"), col("p1").as("dst")))
     // deg feeds the initial ranks, every iteration (via ed) and the
-    // final enrichment; ed feeds all three iterations — persisting
+    // final enrichment; ed feeds all three iterations — sharing
     // both means the degree shuffle runs ONCE, not once per round
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).transform(Caching.share)
     val ed = edges.join(deg, "src").transform(Caching.share)
@@ -368,11 +344,10 @@ object QueriesScale {
         .agg((lit(150000L) + sum(col("__contrib"))).as("r"))
         .select(col("dst").as("pk"), col("r"))
     }
-    val out = ranks.join(deg, col("pk") === col("src"))
+    ranks.join(deg, col("pk") === col("src"))
       .select(col("pk").as("partkey"), col("deg").as("degree"), col("r").as("rank_ppm"))
       .orderBy(col("rank_ppm").desc, col("partkey").asc)
       .limit(20)
-    (out, ed, deg)
   }
 
   /** #68 temporal (point-in-time) dimension join: every order joins
@@ -512,8 +487,7 @@ object QueriesScale {
     val allRow = allExact.crossJoin(allEst).select(
       lit("ALL").as("scope"), col("exact_users"),
       ok(col("__est"), col("exact_users")).as("sketch_ok"))
-    val out = typeRows.unionByName(allRow).orderBy("scope")
-    Caching.reap(out)(perType)
+    typeRows.unionByName(allRow).orderBy("scope")
   }
 
   /** #55 Space-Saving top-k frequent words per language, verified
@@ -596,7 +570,7 @@ object QueriesScale {
       .transform(Caching.share)
     val top = head.where(col("rank") === 1)
       .select(col("lang"), col("word").as("top_word"), col("n_occurrences").as("n_top"))
-    val out = head.where(col("rank") >= 2)
+    head.where(col("rank") >= 2)
       .join(broadcast(top), "lang")
       .groupBy(col("lang"), col("top_word"), col("n_top"))
       .agg(
@@ -613,7 +587,6 @@ object QueriesScale {
       .select(col("lang"), col("top_word"), col("n_top"),
         call_function("div", col("__dev"), col("__nr")).as("zipf_dev_permille"))
       .orderBy("lang")
-    Caching.reap(out)(head)
   }
 
   /** #56 forward as-of join: for every order, the same customer's
@@ -803,7 +776,7 @@ object QueriesScale {
       // projection. If the verification twin is dropped in production
       // (sketch-only path), drop the persist with it — a 2-consumer
       // narrow pipeline can prefer recompute when executor disk is
-      // scarce. Reaped before return.
+      // scarce.
       .transform(Caching.share)
     val ap = o.groupBy("c_mktsegment")
       .agg(percentile_approx(col("o_totalprice"), lit(0.5), lit(acc)).as("__ap"))
@@ -822,12 +795,11 @@ object QueriesScale {
     // [target - n/acc, target + n/acc]. +1 absorbs discreteness.
     val target = col("n_orders").cast("double") * 0.5
     val env = col("n_orders").cast("double") / acc + 1.0
-    val out = stats.join(exact, "c_mktsegment")
+    stats.join(exact, "c_mktsegment")
       .select(col("c_mktsegment"), col("n_orders"), col("median_order_value"),
         (col("__lt").cast("double") <= target + env &&
           col("__le").cast("double") >= target - env).as("sketch_ok"))
       .orderBy("c_mktsegment")
-    graft.Caching.reap(out)(o)
   }
 
   /** #94 revenue concentration: the Gini coefficient and top-decile
@@ -842,22 +814,13 @@ object QueriesScale {
     * [[graft.operators.ScanOps.exclusivePrefixSum]] — the two-level
     * bucket scan — NOT a single-task `Window.orderBy`, so the sort
     * stays bounded by bucket size at any customer count. The
-    * customer-grain frame persists for its two consumers (moments +
-    * decile gate) and is reaped before return; the fact is scanned
-    * once. */
+    * customer-grain frame is shared by its two consumers (moments +
+    * decile gate); the fact is scanned once. */
   def revenueGini(s: SparkSession, dir: String): DataFrame =
     revenueGiniOn(Tables.orders(s, dir))
 
   private[graft] def revenueGiniOn(orders: DataFrame): DataFrame = {
-    val (out, ranked, x) = revenueGiniRaw(orders)
-    Caching.reap(out)(ranked, x)
-  }
-
-  /** Un-reaped [[revenueGiniOn]] pipeline (result, persisted temps) —
-    * the plan-shape spec asserts on the result BEFORE the checkpoint
-    * truncates its lineage. */
-  private[graft] def revenueGiniRaw(orders: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    // customer-grain persist: the prefix-sum's bucket-bounds pass and
+    // customer-grain share: the prefix-sum's bucket-bounds pass and
     // its main path would otherwise each re-run the fact aggregation —
     // cached, the fact is scanned once and both read ~#customers rows
     val x = orders.groupBy("o_custkey")
@@ -876,7 +839,7 @@ object QueriesScale {
       .crossJoin(broadcast(moments.select(col("n_customers").as("__n"))))
       .agg(sum(when(col("__i") > col("__n") - call_function("div", col("__n"), lit(10L)),
         col("cents")).otherwise(0L)).as("__top"))
-    val out = moments.crossJoin(broadcast(top))
+    moments.crossJoin(broadcast(top))
       .select(
         col("n_customers"),
         (col("__s0").cast("double") / lit(100.0)).as("total_revenue"),
@@ -886,7 +849,6 @@ object QueriesScale {
         // widened: top-decile cents ×1000 passes Int64 at ~300× sf1
         call_function("div", col("__top").cast(dec38) * lit(1000L), col("__s0"))
           .as("top_decile_permille"))
-    (out, ranked, x)
   }
 
   /** #98 join-key skew report: rows-per-key distribution of the fact's

@@ -392,15 +392,12 @@ object QueriesText {
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val isNew = pmod(col("doc_id"), lit(10)) === 7
-    // one signature pass: both probe sides filter the same cached
+    // one signature pass: both probe sides filter the same shared
     // frame instead of re-running the native sig map per side
     val sigsAll = DedupOps.minhashSignaturesNative(docs, "doc_id", col("text"), n = 3, k = 48)
       .transform(Caching.share)
-    // the across-generator checkpoints its own (counted) result, so
-    // the signature cache can be released as soon as it returns
     val cands = DedupOps.minhashLshPairsAcross(
       sigsAll.where(isNew), sigsAll.where(!isNew), "doc_id", k = 48, bands = 24, minEst = 0.25)
-    Caching.unshare(sigsAll)
     DedupOps.verifyPairsExact(cands, docs, "doc_id", col("text"), n = 3, minJaccardPct = 50)
       .select(col("doc1").as("new_doc_id"), col("doc2").as("known_doc_id"), col("jaccard_pct"))
       .orderBy("new_doc_id", "known_doc_id")
@@ -473,8 +470,8 @@ object QueriesText {
       // join) need the SAME shuffled aggregate, and recomputing it
       // means re-tokenizing + re-shuffling the whole corpus, which
       // costs more than one spill-read. The trade flips only if
-      // executor disk is the scarce resource; then drop the persist
-      // and eat the second shuffle. Reaped before return.
+      // executor disk is the scarce resource; then drop the share
+      // and eat the second shuffle.
       .transform(Caching.share)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val score = col("tf").cast("double") / col("df")
@@ -484,7 +481,7 @@ object QueriesText {
       .withColumn("__rk", row_number().over(w))
       .where(col("__rk") === 1)
       .select(col("doc_id"), col("term"), col("tf"), col("df"), score.as("score"))
-    Caching.reap(top)(tf)
+    top
   }
 
   /** #75 Bloom-gated corpus membership: for each new-batch document
@@ -678,21 +675,12 @@ object QueriesText {
     * the doc grain (count + sum, both combinable). Both exchanges
     * key on the gram hash; gram-popularity skew is absorbed by
     * map-side partial aggregation on the count side and bounded on
-    * the join side by the postings' own row count. Doc-grain result
-    * checkpointed, postings released ([[Caching.reap]], the gram
-    * family's reap-after-shape contract). */
+    * the join side by the postings' own row count. The postings are
+    * a share: materialized once inside the action, freed with it. */
   def bigramLm(s: SparkSession, dir: String): DataFrame =
     bigramLmOn(Tables.documents(s, dir))
 
   private[graft] def bigramLmOn(docs: DataFrame): DataFrame = {
-    val (out, postings) = bigramLmRaw(docs)
-    Caching.reap(out)(postings)
-  }
-
-  /** Un-reaped [[bigramLmOn]] pipeline (result, persisted postings) —
-    * the plan-shape spec asserts on the result BEFORE the checkpoint
-    * truncates its lineage. */
-  private[graft] def bigramLmRaw(docs: DataFrame): (DataFrame, DataFrame) = {
     val nn = docs.where(col("text").isNotNull)
     val postings = DedupOps.wordGramHashesAll(nn, "doc_id", col("text"), n = 2)
       .transform(Caching.share)
@@ -701,7 +689,7 @@ object QueriesText {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(length(bin(col("__c"))) - 1).cast("long").as("flog2_sum"))
-    val out = nn.select(col("doc_id"))
+    nn.select(col("doc_id"))
       .join(sc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
@@ -711,7 +699,6 @@ object QueriesText {
           call_function("div", col("flog2_sum") * lit(100L), col("n_bigrams")))
           .otherwise(lit(0L)))
       .orderBy("doc_id")
-    (out, postings)
   }
 
   /** #144 end-to-end corpus admission funnel: the whole C4-style
@@ -738,14 +725,6 @@ object QueriesText {
   def corpusFunnel(s: SparkSession, dir: String): DataFrame =
     corpusFunnelOn(Tables.documents(s, dir))
 
-  private[graft] def corpusFunnelOn(docs: DataFrame): DataFrame = {
-    val (out, temps) = corpusFunnelRaw(docs)
-    Caching.reap(out)(temps: _*)
-  }
-
-  /** Un-reaped [[corpusFunnelOn]] pipeline (result, persisted temps) —
-    * the plan-shape spec asserts on the result BEFORE the checkpoint
-    * truncates its lineage. */
   /** THE funnel gate derivation — one doc-grain projection (no
     * aggregate, no state) computing the r0 (ingest) / r1 (lang-id
     * confirmation) / r2 (quality) flags plus n_words. Batch (#144)
@@ -811,10 +790,10 @@ object QueriesText {
       .orderBy("stage")
   }
 
-  private[graft] def corpusFunnelRaw(docs: DataFrame): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def corpusFunnelOn(docs: DataFrame): DataFrame = {
     import graft.text.TextOps
     val t = col("text")
-    // the ONE corpus-grain persist that carries `text` — every other
+    // the ONE corpus-grain share that carries `text` — every other
     // frame below is narrow (8-byte id + flags) or collapsed. r12
     // persisted a SECOND full-corpus text frame (`staged`) alongside
     // this one; at 100 TB that is two complete corpus
@@ -822,7 +801,7 @@ object QueriesText {
     val flags = funnelFlags(docs)
       .transform(Caching.share)
     // exact-dup keepers among quality survivors: the min doc per
-    // normalized-text hash IS the stage-3 survivor set. Persisted
+    // normalized-text hash IS the stage-3 survivor set. Shared
     // narrow (id + bool) for its TWO consumers — the strip's survivor
     // gate and the summary's r3 flag.
     val r3set = flags.where(col("r2"))
@@ -833,7 +812,7 @@ object QueriesText {
     // block firsts among dedup survivors — #141's combinable-min
     // shape, carrying each block's token count for stage-4 mass; the
     // survivor gate is a narrow id semi-join, text rides only from
-    // the one persisted flags frame
+    // the one shared flags frame
     val paras = graft.text.DedupOps.paragraphBlocks(
       flags.join(r3set, Seq("doc_id"), "left_semi")
         .select(col("doc_id"), TextOps.tokens(t).as("__t")),
@@ -847,8 +826,7 @@ object QueriesText {
     // the summary consumer needs flags + r3 only — text never rides
     val staged = flags.drop("text").join(r3set, Seq("doc_id"), "left")
       .withColumn("r3", coalesce(col("__r3"), lit(false)))
-    val out = funnelSummary(staged.join(kept, Seq("doc_id"), "left"))
-    (out, Seq(r3set, flags))
+    funnelSummary(staged.join(kept, Seq("doc_id"), "left"))
   }
 
   /** #145 token-budget corpus selection: the "fit the best B tokens
@@ -895,13 +873,12 @@ object QueriesText {
       .transform(Caching.share)
     val budget = scored.agg(
       call_function("div", sum(col("n_words")), lit(2L)).as("__budget"))
-    val out = graft.operators.ScanOps
+    graft.operators.ScanOps
       .exclusivePrefixSum(scored, Seq.empty, Seq("__ord"), col("n_words"), "cum_before")
       .crossJoin(broadcast(budget))
       .select(col("doc_id"), col("quality_score"), col("n_words"), col("cum_before"),
         (col("cum_before") < col("__budget")).as("admitted"))
       .orderBy("doc_id")
-    Caching.reap(out)(scored)
   }
 
   /** Shared doc-grain (doc_id, n_words, quality_score) projection for
@@ -949,7 +926,7 @@ object QueriesText {
     val totals = scored.agg(
       count(lit(1)).as("__td"), coalesce(sum(col("n_words")), lit(0L)).as("__tt"))
     val grid = spark.range(0, 101, 5).select(col("id").as("threshold"))
-    val out = grid.join(byScore, col("quality_score") >= col("threshold"), "left")
+    grid.join(byScore, col("quality_score") >= col("threshold"), "left")
       .groupBy("threshold")
       .agg(sum(coalesce(col("__docs"), lit(0L))).as("docs_kept"),
         sum(coalesce(col("__toks"), lit(0L))).as("tokens_kept"))
@@ -963,7 +940,6 @@ object QueriesText {
         call_function("div", col("tokens_kept") * 1000L, greatest(col("__tt"), lit(1L)))
           .as("tokens_permille"))
       .orderBy("threshold")
-    Caching.reap(out)(scored)
   }
 
   /** #147 budgeted mixture allocation: split a global token budget
@@ -989,14 +965,13 @@ object QueriesText {
   private[graft] def mixAllocateOn(docs: DataFrame): DataFrame = {
     val cells = tokenCells(docs)
       .transform(Caching.share)
-    val out = waterFill(cells, col("cap_tokens"))
+    waterFill(cells, col("cap_tokens"))
       .select(col("lang"), col("source"), col("cap_tokens"),
         col("allocated_tokens"),
         call_function("div", col("allocated_tokens") * 1000L,
           greatest(col("cap_tokens"), lit(1L))).as("fill_permille"),
         col("level"))
       .orderBy("lang", "source")
-    Caching.reap(out)(cells)
   }
 
   /** (lang, source) token-capacity cells — one combinable aggregate. */
@@ -1076,14 +1051,13 @@ object QueriesText {
   private[graft] def mixEpochsOn(docs: DataFrame): DataFrame = {
     val cells = tokenCells(docs)
       .transform(Caching.share)
-    val out = waterFill(cells, col("cap_tokens") * 4L)
+    waterFill(cells, col("cap_tokens") * 4L)
       .select(col("lang"), col("source"), col("cap_tokens"),
         col("allocated_tokens"),
         call_function("div", col("allocated_tokens") * 1000L,
           greatest(col("cap_tokens"), lit(1L))).as("epochs_permille"),
         col("level"))
       .orderBy("lang", "source")
-    Caching.reap(out)(cells)
   }
 
   /** #151 mixture materialization: the ACTION row of the #147/#150
@@ -1131,10 +1105,9 @@ object QueriesText {
       .select(col("doc_id"), col("lang"), col("source"),
         TextOps.wordCount(t).cast("long").as("n_words"))
       .transform(Caching.share)
-    val out = mixCopiesFromBase(base)
+    mixCopiesFromBase(base)
       .select(col("doc_id"), col("lang"), col("source"), col("n_words"),
         explode(sequence(lit(1L), col("n_copies"))).as("copy_id"))
-    Caching.reap(out)(base)
   }
 
   /** The #151 allocation at the PRE-EXPLODE grain: per-doc target copy
@@ -1176,25 +1149,17 @@ object QueriesText {
     sourceOverlapOn(Tables.documents(s, dir))
 
   private[graft] def sourceOverlapOn(docs: DataFrame): DataFrame = {
-    val (out, grams) = sourceOverlapRaw(docs)
-    Caching.reap(out)(grams)
-  }
-
-  /** Un-reaped [[sourceOverlapOn]] pipeline (result, persisted temp) —
-    * the plan-shape spec asserts on the result BEFORE the checkpoint
-    * truncates its lineage. */
-  private[graft] def sourceOverlapRaw(docs: DataFrame): (DataFrame, DataFrame) = {
     // 64-bit gram hashes, not gram strings: the postings shuffle and
     // the self-join key drop to 8 bytes, and set counts on hashes
     // equal counts on strings absent a ~2⁻⁶⁴ collision (the same
     // trade every sketch-dedup query here already makes). The
-    // distinct postings persist for their THREE consumers (sizes +
-    // both join sides) — postings-scale, reaped before return.
+    // distinct postings are shared by their THREE consumers (sizes +
+    // both join sides).
     val grams = DedupOps.wordGramHashes(docs, "source", col("text"), 3).distinct()
       .transform(Caching.share)
     val sz = grams.groupBy("source").agg(count(lit(1)).as("n"))
     val b = grams.toDF("source_b", "gram2")
-    val out = grams.toDF("source_a", "gram")
+    grams.toDF("source_a", "gram")
       .join(b, col("gram") === col("gram2") && col("source_a") < col("source_b"))
       .groupBy("source_a", "source_b").agg(count(lit(1)).as("n_inter"))
       .join(broadcast(sz.toDF("source_a", "n_a")), "source_a")
@@ -1204,7 +1169,6 @@ object QueriesText {
         call_function("div", col("n_inter") * lit(1000L), col("n_union")))
       .select("source_a", "source_b", "n_a", "n_b", "n_inter", "n_union", "jaccard_permille")
       .orderBy("source_a", "source_b")
-    (out, grams)
   }
 
   /** #92 per-source lexical diversity: type-token ratio, hapax share
@@ -1419,14 +1383,13 @@ object QueriesText {
     * dedup threshold). Docs with fewer than 3 tokens have no grams
     * and drop out, matching the gram-family convention.
     *
-    * Scale shape: the corpus tokenizes ONCE into persisted distinct-
-    * gram postings (hashes not strings — 8-byte shuffle cells, same
-    * as the rest of the gram family) consumed by both grains: the
-    * doc-keyed gram counts and the gram-keyed map-side-combined
-    * min(doc_id) ownership pass; owner counts collapse back to ≤
-    * |docs| rows, the doc-grain result is checkpointed and the
-    * postings released ([[graft.Caching.reap]]). At 100 TB the
-    * postings exchange is the same one every df/tfidf operator pays,
+    * Scale shape: the corpus tokenizes ONCE into shared distinct-gram
+    * postings (hashes not strings — 8-byte shuffle cells, same as the
+    * rest of the gram family) consumed by both grains: the doc-keyed
+    * gram counts and the gram-keyed map-side-combined min(doc_id)
+    * ownership pass; owner counts collapse back to ≤ |docs| rows; the
+    * postings are freed with the action. At 100 TB the postings
+    * exchange is the same one every df/tfidf operator pays,
     * and novelty needs no second pass. (An earlier draft gated an
     * array-form gram SET on `size(__grams) > 0` — the alias-inline
     * trap documented on [[DedupOps.wordGramHashes]]: the pushed
@@ -1436,32 +1399,26 @@ object QueriesText {
     ngramNoveltyOn(Tables.documents(s, dir))
 
   /** Per-doc novelty core shared by #136 and #140: one tokenize pass
-    * into persisted hash postings, the doc-keyed gram counts and the
+    * into shared hash postings, the doc-keyed gram counts and the
     * gram-keyed min(doc_id) ownership pass joined to one doc-grain
-    * frame (doc_id, n_grams, n_novel). Returns the postings handle
-    * too — the CALLER must release it via [[Caching.reap]] on its
-    * final frame (the reap-after-shape contract of the gram family). */
-  private def perDocNovelty(docs: DataFrame): (DataFrame, DataFrame) = {
+    * frame (doc_id, n_grams, n_novel). */
+  private def perDocNovelty(docs: DataFrame): DataFrame = {
     val postings = DedupOps.wordGramHashes(docs, "doc_id", col("text"), n = 3)
       .transform(Caching.share)
     val counts = postings.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
     val novel = postings.groupBy(col("gram")).agg(min(col("doc_id")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_novel"))
-    val perDoc = counts.join(novel, Seq("doc_id"), "left")
+    counts.join(novel, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("n_novel"), lit(0L)).as("n_novel"))
-    (perDoc, postings)
   }
 
-  private[graft] def ngramNoveltyOn(docs: DataFrame): DataFrame = {
-    val (perDoc, postings) = perDocNovelty(docs)
-    val out = perDoc
+  private[graft] def ngramNoveltyOn(docs: DataFrame): DataFrame =
+    perDocNovelty(docs)
       .select(col("doc_id"), col("n_grams"), col("n_novel"),
         call_function("div", col("n_novel") * lit(1000L), col("n_grams"))
           .as("novelty_permille"))
       .orderBy("doc_id")
-    Caching.reap(out)(postings)
-  }
 
   /** #137 gram document-frequency histogram: for every distinct
     * 3-gram, in how many docs it appears (df), reported as exact
@@ -1552,9 +1509,8 @@ object QueriesText {
   def noveltyBySource(s: SparkSession, dir: String): DataFrame =
     noveltyBySourceOn(Tables.documents(s, dir))
 
-  private[graft] def noveltyBySourceOn(docs: DataFrame): DataFrame = {
-    val (perDoc, postings) = perDocNovelty(docs)
-    val out = perDoc
+  private[graft] def noveltyBySourceOn(docs: DataFrame): DataFrame =
+    perDocNovelty(docs)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1564,8 +1520,6 @@ object QueriesText {
         call_function("div", col("n_novel") * lit(1000L), col("n_grams"))
           .as("novelty_permille"))
       .orderBy("source")
-    Caching.reap(out)(postings)
-  }
 
   def all: Map[String, Q] = Map(
     "q_boiler_coverage" -> (boilerCoverage _),

@@ -50,14 +50,9 @@ object QueriesVector {
     implicit val sp: SparkSession = s
     val emb = Tables.embeddings(s, dir)
     val index = Ivf.build(emb, "vec_id", "embedding", k = 8, iters = 2)
-    val res = Ivf.probeExact(index, Tables.table(s, dir, "embeddings").where(col("vec_id") < 10),
+    Ivf.probeExact(index, Tables.table(s, dir, "embeddings").where(col("vec_id") < 10),
       "vec_id", "embedding", nprobe = 2, topK = 5)
       .orderBy("query_id", "rank")
-    // the probe result is 5 rows per query: materialize it, then
-    // release the index's persisted lists/centroids
-    val out = res.localCheckpoint(true)
-    index.release()
-    out
   }
 
   /** #61 int8-quantized brute-force ANN (4× scan bandwidth, integer
@@ -220,7 +215,7 @@ object QueriesVector {
       .transform(Caching.share)
     val diag = dots.where(col("label_a") === col("label_b"))
       .select(col("label_a").as("__l"), col("dot").as("__sd"))
-    val out = dots.where(col("label_a") < col("label_b"))
+    dots.where(col("label_a") < col("label_b"))
       .join(diag.select(col("__l").as("label_a"), col("__sd").as("__da")), "label_a")
       .join(diag.select(col("__l").as("label_b"), col("__sd").as("__db")), "label_b")
       .join(counts.select(col("label").as("label_a"), col("n").as("n_a")), "label_a")
@@ -230,7 +225,6 @@ object QueriesVector {
           (sqrt(col("__da").cast("double")) * sqrt(col("__db").cast("double"))))
           .as("cos_centroid"))
       .orderBy("label_a", "label_b")
-    Caching.reap(out)(dots, sums)
   }
 
   /** #149 per-label embedding outlier screen: each vector's cosine to
@@ -284,7 +278,7 @@ object QueriesVector {
           round(col("__ldot").cast("double") /
             (sqrt(col("__nv2").cast("double")) * sqrt(col("__lnorm2").cast("double")))
             * lit(1e6), 0).cast("long")))
-    val out = scored.groupBy("label")
+    scored.groupBy("label")
       .agg(
         count(lit(1)).as("n_vecs"),
         count(col("cos_e6")).as("n_scored"),
@@ -293,7 +287,6 @@ object QueriesVector {
         max(col("cos_e6")).as("cos_max_e6"),
         sum(col("cos_e6")).as("sum_cos_e6"))
       .orderBy("label")
-    Caching.reap(out)(sums)
   }
 
   def all: Map[String, Q] = Map(

@@ -35,10 +35,13 @@ object Tables {
   /** Doc-key spread for tables consumed by per-key compute (documents,
     * embeddings), on [[graft.plans.FactSpread]]'s scan-partition gate:
     * an identity once the scan yields `spark.sql.shuffle.partitions`
-    * partitions. */
+    * partitions. The spread has a fixed partition count, like
+    * FactSpread's own: a by-key repartition without one is a shuffle
+    * AQE coalesces, and at testdata sizes it coalesces to one
+    * partition, which puts the per-row work back in one task. */
   private def spreadKeyed(s: SparkSession, df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val target = s.conf.get("spark.sql.shuffle.partitions").toInt
-    if (graft.plans.FactSpread.scanPartitions(df) >= target) df else df.repartition(key)
+    if (graft.plans.FactSpread.scanPartitions(df) >= target) df else df.repartition(target, key)
   }
 
   /** `ts` normalization across testdata generations: older generators

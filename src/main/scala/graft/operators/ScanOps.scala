@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, D
   * range exchange: range-partitioner boundaries come from sampling
   * and are not guaranteed identical across evaluations of the frame,
   * which would silently mis-align the offsets. The price is one
-  * 1-row min/max aggregation over the input to size the divisor.
+  * 1-row min/max aggregation over the input to size the divisor, run
+  * as a scalar subquery inside the action.
   */
 object ScanOps {
   private val integralTypes = Seq(ByteType, ShortType, IntegerType, LongType, DateType)
@@ -48,21 +49,23 @@ object ScanOps {
       s"leading order column ${orderCols.head} must be integer-like, got ${leadType.simpleString}: " +
         "bucketing casts to long, and a fractional key would collapse into one bucket")
     val ord = col(orderCols.head).cast("long")
-    // 1-row bounds aggregation (one scan) to size the bucket divisor —
-    // the only driver-side materialization in the operator
-    val bounds = df.agg(min(ord).as("mn"), max(ord).as("mx")).head()
-    val (mn, mx) = if (bounds.isNullAt(0)) (0L, 0L) else (bounds.getLong(0), bounds.getLong(1))
-    // BigInt span: mx - mn overflows Long when keys straddle the full
+    // 1-row bounds aggregation (one scan) sizing the bucket divisor, as
+    // a scalar subquery: the operator stays one lazy plan, and the
+    // subquery runs inside the action that reads it
+    val (mn, mx) = (col("__mn"), col("__mx"))
+    // decimal span: mx - mn overflows Long when keys straddle the full
     // range; width always fits (span/buckets ≤ 2^64/buckets)
-    val width = ((BigInt(mx) - BigInt(mn)) / buckets + 1).toLong
-
+    val width = call_function("div", mx.cast("decimal(38,0)") - mn.cast("decimal(38,0)"),
+      lit(buckets)) + lit(1L)
     // div(ord, width) is monotone in ord with ~buckets distinct values
     // over [mn, mx] and needs NO row-side subtraction (ord - mn could
     // overflow under ANSI); NULL keys get the bucket strictly before
     // the smallest real one, matching NULLS FIRST window order
-    val nullBucket = lit(mn / width - 1)
+    val sizing = df.agg(coalesce(min(ord), lit(0L)).as("__mn"), coalesce(max(ord), lit(0L)).as("__mx"))
+      .select(struct(width.as("w"), (call_function("div", mn, width) - lit(1L)).as("nb")))
+      .scalar()
     val withB = df
-      .withColumn("__bkt", coalesce(call_function("div", ord, lit(width)), nullBucket))
+      .withColumn("__bkt", coalesce(call_function("div", ord, sizing.getField("w")), sizing.getField("nb")))
       .withColumn("__v", value)
       // ONE exchange on (group, bucket) shared by both consumers
       // below: the local window needs exactly this distribution and

@@ -108,6 +108,10 @@ final case class FactSpread(session: SparkSession) extends Rule[LogicalPlan]
           side(j.right, j.left, build.contains(BuildLeft))))
       case _: RepartitionOperation | _: RebalancePartitions | _: Window =>
         p.mapChildren(visit(_, AttributeSet.empty))
+      // a share's child is decided by its own work alone: every branch
+      // that reads the share must plan the same child, or each branch
+      // would materialize its own copy
+      case s: graft.Caching.Share => s.mapChildren(visit(_, AttributeSet.empty))
       case s: Sort if s.global => s.mapChildren(visit(_, AttributeSet.empty))
       case l: LocalLimit => l.mapChildren(visit(_, work, limited = true))
       // a deterministic filter pushes below the spread into the scan's

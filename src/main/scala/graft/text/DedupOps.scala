@@ -224,7 +224,7 @@ object DedupOps {
       docs: DataFrame, id: String, text: Column,
       n: Int, maxDf: Int, minJaccardPct: Int
   ): DataFrame = {
-    val (withCounts, shares) = sharedGramCounts(docs, id, text, n, maxDf, Some(minJaccardPct))
+    val withCounts = sharedGramCounts(docs, id, text, n, maxDf, Some(minJaccardPct))
     val union = col("grams1") + col("grams2") - col("shared_grams")
     val pairs = withCounts
       .withColumn("union_grams", union)
@@ -237,10 +237,7 @@ object DedupOps {
           col("union_grams") * 2L
         ).as("jaccard_pct")
       )
-    // the pair set is orders of magnitude smaller than the postings:
-    // materialize it and release the postings storage (leaked caches
-    // tax every later query in the session)
-    graft.Caching.reap(observeCount(pairs, "cand_ngram"))(shares: _*)
+    countedCandidates(pairs, "cand_ngram")
   }
 
   /** Exact n-gram CONTAINMENT pairs: shared / min(|A|, |B|) — the
@@ -255,7 +252,7 @@ object DedupOps {
       docs: DataFrame, id: String, text: Column,
       n: Int, maxDf: Int, minContainPct: Int
   ): DataFrame = {
-    val (withCounts, shares) = sharedGramCounts(docs, id, text, n, maxDf, None)
+    val withCounts = sharedGramCounts(docs, id, text, n, maxDf, None)
     val minc = least(col("grams1"), col("grams2"))
     val pairs = withCounts
       .where(col("shared_grams") * 100 >= minc * minContainPct)
@@ -267,7 +264,7 @@ object DedupOps {
           minc * 2L
         ).as("containment_pct")
       )
-    graft.Caching.reap(observeCount(pairs, "cand_containment"))(shares: _*)
+    countedCandidates(pairs, "cand_containment")
   }
 
   /** Shared core of the exact pair generators: one tokenize pass into
@@ -277,10 +274,9 @@ object DedupOps {
     * counts per candidate pair. `minJaccardPct` applies Jaccard's
     * exact length bound inside the join: shared ≤ min(|A|, |B|), so
     * J ≥ t needs 100·min(|A|, |B|) ≥ t·max(|A|, |B|); containment has
-    * no such bound and passes None. Returns (pair frame with
-    * grams1/grams2/shared_grams, shares) — callers apply their
-    * similarity filter and MUST release the shares via
-    * [[graft.Caching.reap]].
+    * no such bound and passes None. Returns the pair frame with
+    * grams1/grams2/shared_grams; callers apply their similarity
+    * filter.
     *
     * Measured and not built: a df-ordered PPJoin prefix filter with
     * array verification kept the same pairs and cut the join rows
@@ -290,17 +286,15 @@ object DedupOps {
   private def sharedGramCounts(
       docs: DataFrame, id: String, text: Column, n: Int, maxDf: Int,
       minJaccardPct: Option[Int]
-  ): (DataFrame, Seq[DataFrame]) = {
-    // both shares persist rather than [[graft.Caching.share]]: the
-    // columnar cache keeps the doc-key partitioning the keyed document
-    // spread gives them, so the count window and the pair aggregate
-    // (keyed by doc1) need no exchange. A localCheckpoint loses it once
-    // AQE coalesces, which measured 17 MB of pair-aggregate shuffle
-    // against 2 MB at sf0.1.
-    def share(df: DataFrame) = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  ): DataFrame = {
+    // both shares keep the doc-key partitioning the keyed document
+    // spread gives them (a share reports its child's partitioning),
+    // so the count window and the pair aggregate (keyed by doc1) need
+    // no exchange: losing it measured 17 MB of pair-aggregate shuffle
+    // against 2 MB at sf0.1
     // gram sets carry 64-bit gram hashes, not strings: cheaper to
     // build, and the self-join shuffles and compares longs
-    val sets = share(wordGramHashSets(docs, id, text, n))
+    val sets = graft.Caching.share(wordGramHashSets(docs, id, text, n))
 
     // document-frequency cutoff: drop grams too common to be
     // informative. The df side is tiny (distinct grams × count) —
@@ -312,7 +306,7 @@ object DedupOps {
     // each doc's gated gram count rides its postings: a window over
     // the doc key, which the keyed document spread already
     // partitions by — no per-doc aggregate, no count joins
-    val kept = share(
+    val kept = graft.Caching.share(
       sets.select(col(id), explode(col("__grams")).as("gram"))
         .join(broadcast(df.where(col("__df") <= maxDf)), "gram")
         .select(col(id), col("gram"),
@@ -327,10 +321,9 @@ object DedupOps {
       ordered && least(col("grams1"), col("grams2")) * 100L >=
         greatest(col("grams1"), col("grams2")) * t.toLong
     }
-    val withCounts = a.join(b, "gram").where(cond)
+    a.join(b, "gram").where(cond)
       .groupBy("doc1", "doc2", "grams1", "grams2")
       .agg(count(lit(1)).as("shared_grams"))
-    (withCounts, Seq(kept, sets))
   }
 
   /** MinHash signatures straight from the document text via the
@@ -376,7 +369,7 @@ object DedupOps {
     require(k % bands == 0)
     val r = k / bands
     // signatures feed both sides of the bucket join: materialize once
-    val sigs = sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = graft.Caching.share(sigs0)
     val banded = minhashBanded(sigs, id, r, bands)
     val a = banded.select(col(id).as("doc1"), col("sig").as("sig1"), col("band"), col("bkey"))
     val b = banded.select(col(id).as("doc2"), col("sig").as("sig2"), col("band"), col("bkey"))
@@ -394,7 +387,7 @@ object DedupOps {
       .where(col("est_sim") >= minEst)
       .select("doc1", "doc2", "est_sim")
       .distinct()
-    graft.Caching.reap(observeCount(pairs, "cand_minhash"))(sigs)
+    countedCandidates(pairs, "cand_minhash")
   }
 
   /** 64-bit SimHash per doc from the token multiset, via the native
@@ -418,8 +411,7 @@ object DedupOps {
     * Jaccard J is missed with probability (1 − J²)^24 — ≈0.1% at
     * exactly J = 0.5, vanishing as J grows. MinHash band keys live in
     * the full 64-bit minima space, so candidate volume follows pair
-    * similarity, not corpus size. Frame construction runs only the
-    * candidate checkpoint ([[minhashLshPairs]]); no pre-pass job.
+    * similarity, not corpus size. Building the frame runs nothing.
     *
     * `boilerGuardPermille` > 0 arms the boilerplate-before-banding
     * guard: a universal banner (one block on ~all docs) pushes every
@@ -478,12 +470,27 @@ object DedupOps {
     * artifact instead of something inferred from seconds. Metrics
     * ride the existing action; no extra job.
     *
-    * Placement: BELOW a [[graft.Caching.reap]] checkpoint (counted in
-    * the one materializing pass) or ABOVE any orderBy — a counter
-    * under a range-partitioned Sort double-fires on the sampling
-    * pass. */
+    * Placement: ABOVE any orderBy — a counter under a
+    * range-partitioned Sort double-fires on the sampling pass — or
+    * sealed under an exchange ([[countedCandidates]]). */
   def observeCount(df: DataFrame, name: String): DataFrame =
     df.observe(name, count(lit(1)).as("n"))
+
+  /** A candidate generator's output, shared, with its `cand_*`
+    * counter sealed under an exchange inside the share: the generator
+    * and its counter run exactly once per action however many
+    * consumers read the pairs (verifyPairsExact reads them three
+    * times), and a range sort above re-reads the share instead of
+    * re-running the counter. The exchange is what hides the counter
+    * from the consumers that reuse it (a reused stage is a leaf of the
+    * plan); the share keeps each consumer's column pruning from
+    * splitting it into different exchanges. Round-robin, because a
+    * keyed repartition is dropped when the input is already
+    * partitioned by that key (the keyed document spread reaches the
+    * MinHash candidates as doc1). */
+  private def countedCandidates(pairs: DataFrame, name: String): DataFrame =
+    graft.Caching.share(observeCount(pairs, name)
+      .repartition(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
 
   /** EXACT n-gram Jaccard verification of candidate pairs: the
     * refine step of the candidate-generate → verify dedup pipeline.
@@ -505,7 +512,7 @@ object DedupOps {
     // touches candidate docs only. Gram sets stay as one array row per
     // doc (wordGramHashSets), so verification is two doc-id hash joins
     // + a map-side array_intersect — no postings explode and no
-    // per-pair aggregate shuffle, hence nothing to persist/reap.
+    // per-pair aggregate shuffle, hence nothing to share.
     val gated = docs.join(broadcast(inPairs), col(id) === col("__d")).drop("__d")
     val g = wordGramHashSets(gated, id, text, n)
     candidates.select("doc1", "doc2")
@@ -551,13 +558,7 @@ object DedupOps {
       .where(col("est_sim") >= minEst)
       .select("doc1", "doc2", "est_sim")
       .distinct()
-    // checkpoint under the counter like every other cand_* generator:
-    // verifyPairsExact consumes the candidate frame twice (endpoint
-    // gate + main join), and an un-checkpointed CollectMetrics node
-    // would be duplicated into both subtrees of ONE physical plan —
-    // double-fire/overwrite behavior is version-dependent, and some
-    // Spark versions reject duplicate observed-metric subtrees outright
-    graft.Caching.reap(observeCount(pairs, "cand_minhash_across"))()
+    countedCandidates(pairs, "cand_minhash_across")
   }
 
   /** [[minhashLshPairsAcross]] with the Bloom pre-gate composed in —
@@ -580,11 +581,11 @@ object DedupOps {
     require(k % bands == 0)
     val r = k / bands
     val bandKey = xxhash64(col("band"), col("bkey"))
-    // batch side: banded once, persisted — it feeds the Bloom build
-    // (one batch-bounded action) and the join probe
+    // batch side: it feeds the Bloom build (batch-bounded actions
+    // while the frame is built) and the join probe, the only reader
+    // inside the action — so it is not shared
     val a = minhashBanded(newSigs, id, r, bands)
       .select(col(id).as("doc1"), col("sig").as("sig1"), col("band"), col("bkey"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val b = BloomDedup.gateBigSide(
       minhashBanded(standingSigs, id, r, bands)
         .select(col(id).as("doc2"), col("sig").as("sig2"), col("band"), col("bkey")),
@@ -594,7 +595,7 @@ object DedupOps {
       .where(col("est_sim") >= minEst)
       .select("doc1", "doc2", "est_sim")
       .distinct()
-    graft.Caching.reap(observeCount(pairs, "cand_minhash_across_gated"))(a)
+    countedCandidates(pairs, "cand_minhash_across_gated")
   }
 
   /** Benchmark-contamination report: for every corpus doc sharing at
@@ -734,7 +735,7 @@ object DedupOps {
       iter += 1
       // free the superseded round's checkpoint blocks now — the
       // ContextCleaner would only reclaim them at some future GC
-      graft.Caching.release(prev)
+      freeCut(prev)
     }
     edges.unpersist()
     directed.unpersist()
@@ -775,9 +776,17 @@ object DedupOps {
       // LongMap iteration is not mutation-safe
       val keys = parent.keysIterator.toArray
       keys.iterator.map(x => (x, find(x)))
-    }.toDF("doc_id", "group_id")
-    // materialize before releasing the edge cache (reap checkpoints)
-    graft.Caching.reap(out)(directed)
+    }.toDF("doc_id", "group_id").localCheckpoint()
+    // the labels are cut from the edge cache, so it can go now
+    directed.unpersist()
+    out
+  }
+
+  /** Free a per-round `localCheckpoint` cut of [[resolveGroups]]: the
+    * frame's plan root is the checkpoint's LogicalRDD. */
+  private def freeCut(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case _ => ()
   }
 
   /** THE paragraph-block derivation — the one place the corpus is cut

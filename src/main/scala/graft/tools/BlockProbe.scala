@@ -38,7 +38,6 @@ object BlockProbe {
     val scored = admitted.agg(sum(col("__ni") * col("__nj"))).head.getLong(0)
     println(s"n=$n k=$k blocks: $adm / $total admitted (${100.0 * adm / total}%)")
     println(s"scored pairs ≈ $scored vs brute ${n * n / 2} (${100.0 * scored / (n * n / 2.0)}%)")
-    idx.release()
     spark.stop()
   }
 }

@@ -26,16 +26,13 @@ import graft.functions.{NearestCentroid, VectorFunctions, VectorAggFunctions}
   * Centroid count k is the recall/speed dial.
   */
 object Ivf {
-  /** Owning handle for the built index: centroid ids/vectors live on
-    * the driver (k rows); `centroids` exposes them as a local-relation
-    * DataFrame for routing joins; `lists` is the persisted inverted
-    * file (id, cid, __c = cosine to its centroid, vector). Callers
-    * release the persisted lists when done probing (leaked caches tax
-    * every later query in the session). */
+  /** The built index: centroid ids/vectors live on the driver (k
+    * rows); `centroids` exposes them as a local-relation DataFrame for
+    * routing joins; `lists` is the inverted file (id, cid, __c =
+    * cosine to its centroid, vector), a share — each action that
+    * probes it materializes it once and frees it when it ends. */
   final case class Index(cids: Array[Int], cents: Array[Array[Float]],
-                         centroids: DataFrame, lists: DataFrame) {
-    def release(): Unit = graft.Caching.unshare(lists)
-  }
+                         centroids: DataFrame, lists: DataFrame)
 
   private def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column)(implicit s: SparkSession) = {
     VectorFunctions.register(s)
@@ -157,8 +154,8 @@ object Ivf {
     require(pairs.nonEmpty, s"Ivf.append: empty centroid set at $path")
     val rows = assign(vectors.where(col(vecCol).isNotNull), pairs.map(_._1), pairs.map(_._2), vecCol)
       .select(col(idCol), col("__a.cid").as("cid"), col("__a.cos").as("__c"), col(vecCol))
-      .transform(graft.Caching.share)
-    val n = rows.count()
+    // the appended row count rides the write itself: one action
+    val appended = new org.apache.spark.sql.Observation()
     // dynamic-partition append: new files land inside the existing
     // cid=... directories. Each FILE is atomic (parquet footers commit
     // last), but the BATCH is not: a reader listing mid-append can see
@@ -169,9 +166,9 @@ object Ivf {
     // rows); a deployment needing batch-atomic visibility should stage
     // the batch and publish via a manifest/_SUCCESS flow like
     // [[graft.sources.ParquetSink]]'s job-level commit.
-    rows.write.mode("append").partitionBy("cid").parquet(s"$path/lists.parquet")
-    graft.Caching.unshare(rows)
-    n
+    rows.observe(appended, count(lit(1)).as("n"))
+      .write.mode("append").partitionBy("cid").parquet(s"$path/lists.parquet")
+    appended.get("n").asInstanceOf[Long]
   }
 
   /** Staleness of a [[save]]d+[[append]]ed index: per list, the mean
@@ -207,8 +204,8 @@ object Ivf {
 
   /** Load a [[save]]d index. Driver footprint is k centroid vectors —
     * the same bound as [[build]] — and the lists stay a lazy
-    * parquet-backed frame (persisted for probe-many reuse; `release()`
-    * when done). Column names (id, vector) travel in the artifact's
+    * parquet-backed frame, shared within each probing action. Column
+    * names (id, vector) travel in the artifact's
     * schema, so load needs no schema arguments. */
   def load(s: SparkSession, path: String): Index = {
     val centroids = s.read.parquet(s"$path/centroids.parquet")
@@ -307,9 +304,8 @@ object Ivf {
     * join keys vs uniform hash tiles) — so the operator DECIDES from
     * the k² bound table (driver-small, known before any pair is
     * scored): if the admitted volume clears under `fallbackAt` of the
-    * brute total it scans blocks, otherwise it releases the index and
-    * hands the corpus to the tiled generator
-    * ([[VectorOps.cosinePairs]]). Either way the output is the exact
+    * brute total it scans blocks, otherwise it hands the corpus to
+    * the tiled generator ([[VectorOps.cosinePairs]]). Either way the output is the exact
     * thresholded pair set; only the plan differs. k dials pruning
     * granularity: more lists → tighter radii → fewer admitted blocks,
     * against k² bound rows and k Lloyd collect rows. */
@@ -346,21 +342,19 @@ object Ivf {
           greatest(col("__ang") - col("__ri") - col("__rj"), lit(0.0))))
       .where(col("__best") >= lit(minCos) - eps)
       .select(col("__ci"), col("__cj"), (col("__ni") * col("__nj")).as("__vol"))
-      .transform(graft.Caching.share)
-    // the plan decision, from k² rows before any pair is scored
+    // the plan decision, from k² rows before any pair is scored (the
+    // driver needs it before the plan exists; the pair plan below
+    // recomputes the k² rows from its own read of the lists share)
     val volRow = blocks.agg(sum(col("__vol"))).head
     val admittedVolume = if (volRow.isNullAt(0)) 0L else volRow.getLong(0)
-    if (admittedVolume >= fallbackAt * (n.toDouble * n / 2)) {
-      graft.Caching.unshare(blocks)
-      idx.release()
+    if (admittedVolume >= fallbackAt * (n.toDouble * n / 2))
       return VectorOps.cosinePairs(corpus, idCol, vecCol, minCos)
-    }
     // each vector lives in exactly one list, so unordered pair (x,y)
     // appears in exactly one block (i<j: one orientation; i=j: the
     // id1<id2 half of the diagonal) — no pair scored twice, none missed
     val a = idx.lists.select(col(idCol).as("id1"), col(vecCol).as("__v1"), col("cid").as("__ci"))
     val b = idx.lists.select(col(idCol).as("id2"), col(vecCol).as("__v2"), col("cid").as("__cj"))
-    val out = a.join(broadcast(blocks.select("__ci", "__cj")), Seq("__ci"))
+    a.join(broadcast(blocks.select("__ci", "__cj")), Seq("__ci"))
       .join(b, Seq("__cj"))
       .where(col("__ci") =!= col("__cj") || col("id1") < col("id2"))
       .withColumn("cosine", round(cos(col("__v1"), col("__v2")), 4))
@@ -369,7 +363,6 @@ object Ivf {
         least(col("id1"), col("id2")).as("id1"),
         greatest(col("id1"), col("id2")).as("id2"),
         col("cosine"))
-    graft.Caching.reap(out)(idx.lists, blocks)
   }
 
   /** Per-nprobe RECALL telemetry against the exact neighbors — the
@@ -393,20 +386,23 @@ object Ivf {
   def recallReport(index: Index, queries: DataFrame, idCol: String, vecCol: String,
                    topK: Int, nprobes: Seq[Int])(implicit s: SparkSession): DataFrame = {
     import s.implicits._
+    // the truth set is read by 2 + |nprobes| driver actions: a
+    // multi-action scope, so it persists here and is freed on return
     val truth = probeExact(index, queries, idCol, vecCol, nprobe = 1, topK = topK)
       .select(col("query_id"), col("neighbor_id"))
-      .transform(graft.Caching.share)
-    val nTruth = truth.count()
-    val nQueries = truth.select("query_id").distinct().count()
-    val rows = nprobes.distinct.sorted.map { np =>
-      val hits = probe(index, queries, idCol, vecCol, nprobe = np, topK = topK)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
-        .count()
-      (np, nQueries, topK, hits, nTruth,
-        if (nTruth == 0) 1000L else hits * 1000L / nTruth)
-    }
-    graft.Caching.unshare(truth)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = try {
+      val nTruth = truth.count()
+      val nQueries = truth.select("query_id").distinct().count()
+      nprobes.distinct.sorted.map { np =>
+        val hits = probe(index, queries, idCol, vecCol, nprobe = np, topK = topK)
+          .select(col("query_id"), col("neighbor_id"))
+          .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
+          .count()
+        (np, nQueries, topK, hits, nTruth,
+          if (nTruth == 0) 1000L else hits * 1000L / nTruth)
+      }
+    } finally truth.unpersist()
     rows.toDF("nprobe", "n_queries", "top_k", "n_hits", "n_truth", "recall_permille")
   }
 

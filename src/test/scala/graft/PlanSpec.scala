@@ -7,6 +7,20 @@ class PlanSpec extends SparkSpec {
   private def plan(q: String): String =
     Queries.all(q)(spark, sf).queryExecution.executedPlan.toString
 
+  /** The physical plan of a built (not yet run) frame, below AQE's
+    * wrapper: shares are nodes of it. */
+  private def physical(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  /** The distinct shares of a frame's plan (a share read by several
+    * branches appears once per branch). */
+  private def shares(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    physical(df).collect { case s: Caching.ShareExec => s }
+      .groupBy(_.canonicalized).values.map(_.head).toSeq
+
   private def scanLine(q: String): String =
     Queries.all(q)(spark, sf).queryExecution.executedPlan.toString
       .linesIterator.filter(_.contains("Scan parquet")).mkString("\n")
@@ -119,12 +133,13 @@ class PlanSpec extends SparkSpec {
     // pair expansion is a map-side array transform over collected
     // baskets; a join in the basket share would mean the lineitem
     // self-join (3 fact shuffles) crept back in. The baskets are a
-    // share, so its own captured plan carries the assembly; the
-    // consumer's only joins are the two support broadcasts.
-    val ((out, baskets), shares) = sharePlans(QueriesScale.copurchaseRaw(spark, sf))
-    val p = try out.queryExecution.executedPlan.toString finally Caching.unshare(baskets)
-    assert(shares.size == 1, shares.mkString("\n---\n"))
-    val basketPlan = shares.head.toString
+    // share node of the query's plan, carrying the assembly; the
+    // plan's only joins are the two support broadcasts.
+    val out = QueriesScale.copurchase(spark, sf)
+    val p = physical(out).toString
+    val basketShares = shares(out)
+    assert(basketShares.size == 1, basketShares.mkString("\n---\n"))
+    val basketPlan = basketShares.head.toString
     assert(basketPlan.contains("collect_set") && basketPlan.contains("Scan parquet"), basketPlan)
     assert(!basketPlan.contains("Join"), basketPlan)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
@@ -250,10 +265,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("source overlap: set sizes broadcast, no nested-loop anywhere") {
-    // pre-reap pipeline: the checkpoint would truncate the lineage
-    val (out, grams) = QueriesText.sourceOverlapRaw(Tables.documents(spark, sf))
-    val p = try out.queryExecution.executedPlan.toString
-    finally grams.unpersist(blocking = false)
+    val p = plan("q_source_overlap")
     assert("BroadcastHashJoin".r.findAllIn(p).length >= 2,
       "both size joins must broadcast")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
@@ -269,30 +281,27 @@ class PlanSpec extends SparkSpec {
   }
 
   test("revenue gini: prefix-sum rank, never a sort-merge or global-sort rank") {
-    // the rank is a share: its own captured plan carries the prefix
+    // the rank is a share of the query's plan carrying the prefix
     // sum, whose offsets join must broadcast (totals are bucket-grain)
-    val ((out, ranked, x), shares) =
-      sharePlans(QueriesScale.revenueGiniRaw(Tables.orders(spark, sf)))
-    val p = try out.queryExecution.executedPlan.toString
-    finally { Caching.unshare(ranked); Caching.unshare(x) }
-    assert(shares.size == 2, shares.mkString("\n---\n"))
-    val rankPlan = shares(1).toString
-    assert(rankPlan.contains("BroadcastHashJoin") && rankPlan.contains("Window"), rankPlan)
-    (p +: shares.map(_.toString)).foreach { plan =>
-      assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"), plan)
-      // a global-sort (orderBy) rank would plan a range exchange
-      assert(!plan.contains("rangepartitioning"), plan)
-    }
+    val out = QueriesScale.revenueGiniOn(Tables.orders(spark, sf))
+    val p = physical(out).toString
+    val both = shares(out)
+    assert(both.size == 2, both.mkString("\n---\n"))
+    val rankPlan = both.map(_.toString).find(_.contains("Window")).getOrElse(fail(p))
+    assert(rankPlan.contains("BroadcastHashJoin"), rankPlan)
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
+    // a global-sort (orderBy) rank would plan a range exchange
+    assert(!p.contains("rangepartitioning"), p)
   }
 
   test("lexical diversity is map-only: zero exchanges, text-pruned scan") {
     val p = plan("q_lexical_diversity")
     // the only exchange allowed is the testdata loader's deliberate
-    // single-file spread (Tables.spread, REPARTITION_BY_COL) — the
-    // query itself (fold, projections) must add none: no
-    // ENSURE_REQUIREMENTS hash partitioning above the scan
+    // single-file spread (Tables.spreadKeyed, a fixed-count
+    // REPARTITION_BY_NUM) — the query itself (fold, projections) must
+    // add none: no ENSURE_REQUIREMENTS hash partitioning above the scan
     val queryExchanges = "Exchange".r.findAllIn(p).length -
-      "REPARTITION_BY_COL".r.findAllIn(p).length
+      "REPARTITION_BY_NUM".r.findAllIn(p).length
     assert(queryExchanges == 0,
       s"the per-doc fold must never shuffle the token stream\n$p")
     val s = scanLine("q_lexical_diversity")
@@ -319,11 +328,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("basket lift: no cartesian pair expansion; supports and total join broadcast") {
-    // the public query reaps (checkpoint truncates lineage) — assert
-    // on the raw pipeline, like revenue gini and rfm
-    val (out, baskets) = QueriesScale.basketLiftRaw(spark, sf)
-    val p = try out.queryExecution.executedPlan.toString
-    finally baskets.unpersist(blocking = false)
+    val p = plan("q_basket_lift")
     assert(!p.contains("CartesianProduct"), p)
     // the per-part support joins stay broadcast (part-dim-bounded);
     // the only nested-loop allowed is the 1-row basket-total recombine
@@ -360,12 +365,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rolling users: expansion runs on the user-day grain, day semi-join broadcasts") {
-    // the public query shares the user-day grain (checkpoint truncates
-    // the lineage below the explode) — assert on the unshared raw
-    // pipeline, like rfm
-    val (raw, _) = QueriesAnalytics.rollingUsersRaw(
-      Tables.events(spark, sf), shareGrain = false)
-    val p = raw.queryExecution.executedPlan.toString
+    // the user-day grain is a share; the plan shows the explode and
+    // the grain's distinct aggregate below it, through the share
+    val p = physical(QueriesAnalytics.rollingUsersOn(Tables.events(spark, sf))).toString
     assert(!p.contains("CartesianProduct"), p)
     // the 7x explode must sit ABOVE the user-day distinct aggregate
     // (expanding raw events would multiply the fact, not the grain)
@@ -384,11 +386,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rfm: no cartesian, no global sort of the customer grain") {
-    // the public query reaps (checkpoint truncates lineage) — assert
-    // on the raw pipeline, like revenue gini
-    val (out, met) = QueriesAnalytics.rfmSegmentsRaw(spark, sf)
-    val p = try out.queryExecution.executedPlan.toString
-    finally met.unpersist(blocking = false)
+    val p = plan("q_rfm_segments")
     assert(!p.contains("CartesianProduct"), p)
     // value-based scoring joins the 1-row breakpoint frame broadcast;
     // no ntile/global row_number over the raw customer grain (the only

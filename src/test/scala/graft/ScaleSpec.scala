@@ -182,7 +182,6 @@ class ScaleSpec extends SparkSpec {
     val brute = graft.vector.VectorOps.bruteForceTopK(
       emb.where($"vec_id" < 5), emb, "vec_id", "embedding", k = 3)
     assert(exact.exceptAll(brute).isEmpty && brute.exceptAll(exact).isEmpty)
-    idx.release()
   }
 
   test("contamination report broadcasts the eval side and hits planted overlaps") {

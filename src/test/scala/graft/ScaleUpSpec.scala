@@ -111,7 +111,15 @@ class ScaleUpSpec extends SparkSpec {
     "q_quality_sweep",  // 21-row threshold grid theta-joins the ≤101-row score grain
     "q_mix_allocate",   // 1-row budget/level frames broadcast onto the cell grain
     "q_mix_epochs",     // same waterFill machinery on 4x-scaled caps
-    "q_mix_materialize") // same waterFill ledger, materialized per doc
+    "q_mix_materialize", // same waterFill ledger, materialized per doc
+    // 1-row recombinations around shared intermediates: a share is a
+    // plan node, so the spec sees the operators on both sides of it
+    "q_basket_lift",       // scalar basket-total crossJoin onto the pair grain
+    "q_category_affinity", // scalar basket-total crossJoin onto the category pairs
+    "q_hll_union",         // 1-row exact total x 1-row sketch estimate
+    "q_revenue_gini",      // 1-row moments x 1-row top-decile sum
+    "q_rfm_segments",      // 1-row breakpoint frame crossJoined onto the customer grain
+    "q_ann_ivf")           // the k centroids (with radii) broadcast onto the query set
 
   test("no query picks a cartesian/unbounded nested-loop plan at sf1 stats") {
     val offenders = Queries.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>

@@ -31,7 +31,9 @@ SFDIR="${4:-/root/testdata/sf0.1}"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 TS="$(date -u +%Y%m%dT%H%M%SZ)"
-WT="/tmp/ab_ref_$TS"
+# the reference worktree lives under the checkout, in the git-ignored
+# .ab/ directory, so the recipe needs no write access outside the repo
+WT="$REPO/.ab/ref_$TS"
 mkdir -p "$REPO/bench"
 
 # ---- pick the top-K heaviest queries from the newest full board ----

@@ -16,7 +16,8 @@ Usage: selfcheck.py <sfdir> <verify_outdir> [--skip q1,q2,...] [--only q1,q2,...
  two runs — e.g. at different core counts — compare with `diff`)
 
 Every query's row count is printed. An empty output fails the check
-unless the query and SF are in EMPTY_OK with the reason it is empty.
+unless the query and SF are in EMPTY_OK (tools/empty_ok.tsv) with the
+reason it is empty.
 """
 import sys, json, glob
 import duckdb
@@ -29,11 +30,20 @@ import hashlib
 import os
 
 # (query -> (SFs where an empty result is expected, or None for every
-# SF; why)). An oracle pass on an empty output checks nothing, so each
-# entry states why the data makes the result empty.
-EMPTY_OK = {
-    "q_anti_join": ({"sf0.001", "sf0.01"}, "every customer has at least one order at these SFs"),
-}
+# SF; why)), from empty_ok.tsv beside this script — the one allowlist
+# RegistrySpec reads too. An oracle pass on an empty output checks
+# nothing, so each entry states why the data makes the result empty.
+def _load_empty_ok():
+    out = {}
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "empty_ok.tsv")) as f:
+        for line in f:
+            if line.startswith("#") or not line.strip():
+                continue
+            name, sfs, why = line.rstrip("\n").split("\t")
+            out[name] = (None if sfs == "*" else set(sfs.split(",")), why)
+    return out
+
+EMPTY_OK = _load_empty_ok()
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
