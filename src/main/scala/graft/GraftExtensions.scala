@@ -1,23 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, IntegerLiteral, Literal}
 import org.apache.spark.sql.types.IntegerType
 import graft.functions._
 
-/** The library's SQL function surface — one table of
-  * (name, info, builder) used two ways:
-  *
-  *  - [[GraftExtensions]] injects it at session build time:
+/** The library's SQL function surface: one table of
+  * (name, info, builder), which [[GraftExtensions]] injects at session
+  * build time —
   *    {{{ --conf spark.sql.extensions=graft.GraftExtensions }}}
-  *    the idiomatic way a Spark library ships custom expressions to
-  *    pure-SQL users (extensions are a static conf, honored when the
-  *    FIRST session of the application is created).
-  *  - [[GraftFunctions.install]] registers the same table onto an
-  *    already-running session (temp-function registry) — what the
-  *    operators use internally, and the only route once a session
-  *    exists.
+  * the idiomatic way a Spark library ships custom expressions to
+  * pure-SQL users (extensions are a static conf, honored when the
+  * FIRST session of the application is created). It is the only
+  * route: every graft session is built with the extension, without
+  * which no graft frame can be planned (the share planner lives
+  * there too), and the operators resolve these functions by name.
   */
 object GraftFunctions {
   type Builder = Seq[Expression] => Expression
@@ -60,11 +58,6 @@ object GraftFunctions {
     // hyperplane_bucket is absent: its plane matrix is a closure-bound
     // reference object (see VectorOps.lshBucket), not SQL-expressible.
   )
-
-  /** Register every graft function on an existing session. */
-  def install(spark: SparkSession): Unit = all.foreach { case (name, _, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-  }
 }
 
 /** Session extension: `spark.sql.extensions=graft.GraftExtensions`.

@@ -135,6 +135,10 @@ object GraftSession {
     * collection bills one query's garbage to the next. BLOCKING: the
     * removal lands here, not inside the next query's timed window. */
   def clearCache(spark: SparkSession): Unit = {
+    // deliver the last action's end event first: its share blocks are
+    // freed by Caching's listener, and a blocking unpersist racing that
+    // removal fails on the block the other one took
+    org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     System.gc()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{Money, TextNormalize, TopKSketchAgg}
+import graft.functions.Money
 import graft.operators.{RangeJoin, Skew}
 import graft.text.TextOps
 
@@ -428,7 +428,6 @@ object QueriesScale {
     * / #StripAccents): canonical NFC fold + accent strip + dedup keys
     * over the canonical form. */
   def unicodeNorm(s: SparkSession, dir: String): DataFrame = {
-    TextNormalize.register(s)
     Tables.documents(s, dir).select(
       col("doc_id"),
       md5(call_function("nfc_norm", col("text"))).as("nfc_md5"),
@@ -525,7 +524,6 @@ object QueriesScale {
     * trustworthy only as deep as the nomination margin — callers
     * consume the shallow head (≤10), nominated 128-of-1024. */
   private def rankedWordCounts(s: SparkSession, dir: String): DataFrame = {
-    TopKSketchAgg.register(s)
     val words = Tables.documents(s, dir)
       .select(col("lang"), explode(TextOps.tokens(col("text"))).as("word"))
     val nominated = words.groupBy("lang")

@@ -128,7 +128,6 @@ object QueriesText {
     * hashes, and min(fps) = min(gram hashes) (the global minimum wins
     * its own window). A fingerprint bug breaks one of these. */
   def docFingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.WinnowFps.register(s)
     val window = 4
     val toks = TextOps.tokens(col("text"))
     val th = col("__th")

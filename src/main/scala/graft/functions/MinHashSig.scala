@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -94,15 +93,4 @@ object MinHashSig {
     }
     new GenericArrayData(sig)
   }
-
-  /** Register `minhash_sig(tokens, n, k)` (n, k int literals). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => (exprs(1), exprs(2)) match {
-        case (IntegerLiteral(n), IntegerLiteral(k)) => MinHashSig(exprs.head, n, k)
-        case other => throw new IllegalArgumentException(
-          s"minhash_sig n/k must be int literals, got $other")
-      },
-      "built-in")
 }

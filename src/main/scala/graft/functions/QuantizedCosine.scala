@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -62,9 +61,4 @@ object QuantizedCosine {
     if (na == 0L || nb == 0L) 0.0
     else dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
   }
-
-  /** Register `cosine_sim_i8(a, b)` for SQL/`expr` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim_i8", exprs => QuantizedCosine(exprs(0), exprs(1)), "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.text.Normalizer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -38,14 +37,6 @@ object TextNormalize {
       i += 1
     }
     UTF8String.fromString(Normalizer.normalize(sb.toString, Normalizer.Form.NFC))
-  }
-
-  /** Register `nfc_norm(s)` and `strip_accents(s)` for SQL/`expr`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_norm", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "strip_accents", exprs => StripAccents(exprs.head), "built-in")
   }
 }
 

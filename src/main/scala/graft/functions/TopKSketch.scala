@@ -3,10 +3,9 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.io.{ByteArrayOutputStream, DataOutputStream, DataInputStream, ByteArrayInputStream}
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -162,18 +161,4 @@ object TopKSketchAgg {
       order -= ((c.count, k)); c.count += 1; order += ((c.count, k))
     }
   }
-
-  /** Register `topk_sketch(item, capacity)` (capacity: int literal). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_sketch",
-      exprs => {
-        val cap = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"topk_sketch capacity must be an int literal, got $other")
-        }
-        TopKSketchAgg(exprs.head, cap).toAggregateExpression()
-      },
-      "built-in")
 }

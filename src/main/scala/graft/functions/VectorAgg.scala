@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -188,16 +187,4 @@ case class VectorSumDoubleAgg(
   override def withNewMutableAggBufferOffset(o: Int): VectorSumDoubleAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): VectorSumDoubleAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(child = c.head)
-}
-
-object VectorAggFunctions {
-  /** Register vec_sum / vec_min / vec_sum_d for SQL/`expr` use. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_sum", exprs => VectorSumAgg(exprs.head).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_min", exprs => VectorMinAgg(exprs.head).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_sum_d", exprs => VectorSumDoubleAgg(exprs.head).toAggregateExpression(), "built-in")
-  }
 }

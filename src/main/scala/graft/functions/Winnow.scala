@@ -1,9 +1,8 @@
 package graft.functions
 
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -86,15 +85,4 @@ object WinnowFps {
     }
     new GenericArrayData(out.toArray)
   }
-
-  /** Register `winnow_fps(tokens, n, window)` (int literals). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps",
-      exprs => (exprs(1), exprs(2)) match {
-        case (IntegerLiteral(n), IntegerLiteral(w)) => WinnowFps(exprs.head, n, w)
-        case other => throw new IllegalArgumentException(
-          s"winnow_fps n/window must be int literals, got $other")
-      },
-      "built-in")
 }

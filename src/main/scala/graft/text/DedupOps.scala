@@ -333,7 +333,6 @@ object DedupOps {
     * that relational formulation as the reference); docs with fewer
     * than `n` tokens are dropped (no grams → no signature). */
   def minhashSignaturesNative(docs: DataFrame, id: String, text: Column, n: Int, k: Int): DataFrame = {
-    graft.functions.MinHashSig.register(docs.sparkSession)
     docs
       .select(col(id), call_function("minhash_sig", TextOps.tokens(text), lit(n), lit(k)).as("sig"))
       .where(col("sig").isNotNull)
@@ -398,7 +397,6 @@ object DedupOps {
     * none of it). Values are bit-identical to that formulation: same
     * seed-42 xxhash64 per token, same sign rule per bit. */
   def simhash(docs: DataFrame, id: String, text: Column): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
     docs.select(col(id), call_function("simhash64", TextOps.tokens(text)).as("simhash"))
   }
 
@@ -759,7 +757,12 @@ object DedupOps {
   private def resolveLocal(directed: DataFrame): DataFrame = {
     val spark = directed.sparkSession
     import spark.implicits._
-    val out = directed.as[(Long, Long)].coalesce(1).mapPartitions { it =>
+    // cut from the cached rows' RDD, not the cached plan: every SQL
+    // execution that scans a cached plan (`Dataset.rdd` starts one too)
+    // reports the plan's observed metrics again, and the edge count has
+    // already reported the `cand_*` counter under `directed`
+    val edges = directed.as[(Long, Long)].queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
+    val out = edges.coalesce(1).mapPartitions { it =>
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = parent.getOrElseUpdate(x, x)
@@ -984,7 +987,6 @@ object DedupOps {
     * formulation shuffled AND sorted the whole gram stream). Values
     * are bit-identical (equivalence spec in TextSpec). */
   def fingerprints(docs: DataFrame, id: String, text: Column, n: Int, window: Int): DataFrame = {
-    graft.functions.WinnowFps.register(docs.sparkSession)
     docs.select(col(id),
       explode(call_function("winnow_fps", TextOps.tokens(text), lit(n), lit(window))).as("fp"))
   }

@@ -27,7 +27,6 @@ object BlockProbe {
       col("__r").as("__ri"), col("__n").as("__ni"))
     val cj = cents.select(col("cid").as("__cj"), col("centroid").as("__cvj"),
       col("__r").as("__rj"), col("__n").as("__nj"))
-    graft.functions.VectorFunctions.register(spark)
     val eps = 1e-9 + 0.5e-4
     val blocks = ci.crossJoin(cj).where(col("__ci") <= col("__cj"))
       .withColumn("__ang", acos(clamp(call_function("cosine_sim", col("__cvi"), col("__cvj")))))

@@ -3,7 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{NearestCentroid, VectorFunctions, VectorAggFunctions}
+import graft.functions.NearestCentroid
 
 /** IVF (inverted-file) approximate nearest neighbor.
   *
@@ -34,10 +34,8 @@ object Ivf {
   final case class Index(cids: Array[Int], cents: Array[Array[Float]],
                          centroids: DataFrame, lists: DataFrame)
 
-  private def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column)(implicit s: SparkSession) = {
-    VectorFunctions.register(s)
+  private def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     call_function("cosine_sim", a, b)
-  }
 
   private val fnCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -58,7 +56,6 @@ object Ivf {
 
   def build(corpus: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int = 2)(
       implicit s: SparkSession): Index = {
-    VectorAggFunctions.register(s)
     // null-vector rows are unindexable: a null seed would NPE below
     // and a null assignment would surface as a null __a group in the
     // Lloyd collect. The index simply excludes them.

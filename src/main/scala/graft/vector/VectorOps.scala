@@ -3,7 +3,6 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorFunctions
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -15,10 +14,7 @@ import graft.functions.VectorFunctions
   * never materializes; the bucket id is the shuffle key.
   */
 object VectorOps {
-  private def cos(a: Column, b: Column)(implicit spark: SparkSession): Column = {
-    VectorFunctions.register(spark)
-    call_function("cosine_sim", a, b)
-  }
+  private def cos(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
   /** Exact top-k cosine neighbors for each query vector (self-matches
     * excluded). `queries`/`corpus`: (idCol, vecCol). */
@@ -66,7 +62,6 @@ object VectorOps {
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int
   )(implicit spark: SparkSession): DataFrame = {
-    graft.functions.QuantizedCosine.register(spark)
     val q = quantizeI8(queries, idCol, vecCol)
       .select(col(idCol).as("query_id"), col("qvec").as("__qv"))
     val c = quantizeI8(corpus, idCol, vecCol)

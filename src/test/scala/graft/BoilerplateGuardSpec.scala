@@ -124,22 +124,12 @@ class BoilerplateGuardSpec extends SparkSpec {
   }
 
   test("#154 is ONE plan: frame construction runs no driver pre-pass job; in-plan nDocs equals the literal overload") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val docs = bannerCorpus(30, 2).persist()
-    docs.count() // materialize OUTSIDE the counted window
-    spark.sparkContext.addSparkListener(listener)
+    docs.count() // materialize OUTSIDE the profiled window
     try {
-      val frame = QueriesText.boilerCoverageOn(docs)
-      // drain the async listener bus so a pre-pass job could not hide
-      // in flight before the zero-job assertion
-      org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
-      assert(jobs.get() == 0,
-        s"building #154's frame must be lazy — ${jobs.get()} job(s) ran (VERDICT r15 item 4)")
+      val (frame, profile) = Profile.window(spark)(p => p.build(QueriesText.boilerCoverageOn(docs)))
+      assert(profile.build.jobs == 0,
+        s"building #154's frame must be lazy — ${profile.build.jobs} job(s) ran")
       val got = frame.head()
       val want = DedupOps.boilerplateCoverageFrame(
         docs, "doc_id", $"text", 3, docs.count()).head()
@@ -147,7 +137,6 @@ class BoilerplateGuardSpec extends SparkSpec {
       assert(got.getAs[Long]("coverage_permille") >= 150,
         "banner corpus still reads as boilerplate-covered")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       docs.unpersist()
       ()
     }

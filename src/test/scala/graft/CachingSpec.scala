@@ -18,13 +18,13 @@ class CachingSpec extends SparkSpec {
   // registered DURING the test may not survive it.
   private def persistentRddIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
 
-  /** The action's end event rides the listener bus; drain it, then
-    * give the asynchronous block removal a bounded moment. */
-  private def assertRestored(rdds: Set[Int], blocks: Set[org.apache.spark.storage.RDDBlockId],
-      clue: String): Unit = {
-    org.apache.spark.GraftBusFlush.flush(sc)
-    val leaked = persistentRddIds -- rdds
-    assert(leaked.isEmpty, s"$clue: leaked persistent RDDs $leaked")
+  /** Run `action` under a [[Profile]] window: it may leave no persisted
+    * RDD, and, after a bounded moment for the asynchronous block
+    * removal, no RDD block the window did not start with. */
+  private def assertRestored(clue: String)(action: => Unit): Unit = {
+    val blocks = GraftBlocks.rddBlocks(sc)
+    val (_, profile) = Profile.window(spark)(_ => action)
+    assert(profile.leaked.isEmpty, s"$clue: leaked persistent RDDs ${profile.leaked}")
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
     var left = GraftBlocks.rddBlocks(sc) -- blocks
     while (left.nonEmpty && System.nanoTime() < deadline) {
@@ -42,23 +42,13 @@ class CachingSpec extends SparkSpec {
   }
 
   test("a share is a plan node: building its frame starts no SQL execution") {
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          started.incrementAndGet(); ()
-        case _ => ()
+    val (out, profile) = Profile.window(spark) { p =>
+      p.build {
+        val shared = Caching.share(Seq(1, 2, 3).toDF("x").withColumn("y", $"x" * 2))
+        shared.join(shared.groupBy().sum("y"))
       }
     }
-    org.apache.spark.GraftBusFlush.flush(sc)
-    sc.addSparkListener(listener)
-    val out = try {
-      val shared = Caching.share(Seq(1, 2, 3).toDF("x").withColumn("y", $"x" * 2))
-      val built = shared.join(shared.groupBy().sum("y"))
-      org.apache.spark.GraftBusFlush.flush(sc)
-      assert(started.get == 0, "building a shared frame must not run it")
-      built
-    } finally sc.removeSparkListener(listener)
+    assert(profile.build.executions.isEmpty, s"building a shared frame must not run it: ${profile.build.executions}")
     val shares = out.queryExecution.optimizedPlan.collect { case s: Caching.Share => s }
     assert(shares.size == 2, out.queryExecution.optimizedPlan)
     assert(out.queryExecution.executedPlan.toString.contains("Share"), out.queryExecution.executedPlan)
@@ -72,21 +62,19 @@ class CachingSpec extends SparkSpec {
     assert(branches(base).count() == 100)
     assert(evals.value == 200, "control: two unshared branches compute the source twice")
     evals.reset()
-    val rdds = persistentRddIds
-    val blocks = GraftBlocks.rddBlocks(sc)
-    assert(branches(Caching.share(base)).collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
+    assertRestored("after the action") {
+      assert(branches(Caching.share(base)).collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
+    }
     assert(evals.value == 100, "the shared source must be computed once")
-    assertRestored(rdds, blocks, "after the action")
   }
 
   test("a failed action frees its shares too") {
     val boom = udf((x: Long) => { if (x == 57) throw new IllegalStateException("boom"); x })
-    val rdds = persistentRddIds
-    val blocks = GraftBlocks.rddBlocks(sc)
-    val shared = Caching.share(spark.range(0, 100, 1, 4).toDF("x"))
-    val failing = shared.select(boom($"x").as("y")).union(shared.select($"x".as("y")))
-    intercept[org.apache.spark.SparkException](failing.collect())
-    assertRestored(rdds, blocks, "after the failed action")
+    assertRestored("after the failed action") {
+      val shared = Caching.share(spark.range(0, 100, 1, 4).toDF("x"))
+      val failing = shared.select(boom($"x").as("y")).union(shared.select($"x".as("y")))
+      intercept[org.apache.spark.SparkException](failing.collect())
+    }
   }
 
   test("a lost share block is recomputed from the child, never read as missing rows") {
@@ -121,8 +109,6 @@ class CachingSpec extends SparkSpec {
       .join(shared.groupBy(($"x" % 7).as("k")).agg(count(lit(1)).as("n")), "k")
     val expect = out.collect().map(_.toSeq).toSet
     assert(expect.size == 7)
-    val rdds = persistentRddIds
-    val blocks = GraftBlocks.rddBlocks(sc)
     val g = new graft.operators.JobGraph
     (1 to 2).foreach { i =>
       g.add(s"reader$i") {
@@ -133,9 +119,10 @@ class CachingSpec extends SparkSpec {
         1L
       }
     }
-    val reports = g.runConcurrent(2)
-    assert(reports.forall(_.status.ok), reports)
-    assertRestored(rdds, blocks, "after the concurrent actions")
+    assertRestored("after the concurrent actions") {
+      val reports = g.runConcurrent(2)
+      assert(reports.forall(_.status.ok), reports)
+    }
   }
 
   test("edge: empty inputs through the new operators") {

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The extension-installed SQL surface: a session built with
   * `spark.sql.extensions=graft.GraftExtensions` can use every graft
-  * function from pure SQL — no Scala-side register calls. */
+  * function from pure SQL — no Scala-side register calls. The shared
+  * session is built `withExtensions(new GraftExtensions)`
+  * (GraftSession.local), the only route the functions have. */
 class ExtensionsSpec extends SparkSpec {
-  // the shared session is built `withExtensions(new GraftExtensions)`
-  // (GraftSession.local), so every injected function already resolves;
-  // install() exercises the SAME table's live-session registration
-  // route on top (idempotent by construction).
-  override lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    GraftFunctions.install(s)
-    s
-  }
 
   test("the extension wraps the full function table") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions

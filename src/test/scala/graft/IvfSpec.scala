@@ -78,7 +78,6 @@ class IvfSpec extends SparkSpec {
     val index = Ivf.build(emb, "vec_id", "embedding", k = 8, iters = 2)
     // reference formulation: score every (vector, centroid) pair,
     // keep the max-cosine centroid (ties -> smallest cid)
-    graft.functions.VectorFunctions.register(spark)
     val joined = emb.crossJoin(broadcast(index.centroids))
       .withColumn("__c", call_function("cosine_sim", $"embedding", $"centroid"))
       .groupBy($"vec_id")
@@ -163,7 +162,6 @@ class IvfSpec extends SparkSpec {
     // blocks can qualify — assert the pruning is real, not vacuous
     val k = 15
     val idx = Ivf.build(emb, "vec_id", "embedding", k, iters = 2)
-    graft.functions.VectorFunctions.register(spark)
     val clamp = (c: org.apache.spark.sql.Column) => greatest(lit(-1.0), least(lit(1.0), c))
     val radii = idx.lists.groupBy("cid").agg(max(acos(clamp($"__c"))).as("__r"))
     val cents = idx.centroids.join(radii, "cid")

@@ -33,29 +33,15 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("building a near-dup frame starts no SQL execution") {
-    // record every SQL execution started while the frames are built
-    // (its description is the action's call site, e.g. "count at …"),
-    // draining the async listener bus before reading
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          actions.add(st.description); ()
-        case _ => ()
+    // every SQL execution started while the frames are built (its
+    // description is the action's call site, e.g. "count at …")
+    val (_, profile) = Profile.window(spark) { p =>
+      p.build {
+        DedupOps.nearDupPairs(Tables.documents(spark, sf), "doc_id", $"text", 3, 50)
+        SparkEntry.queries("q_dedup_simhash")(spark, sf)
+        SparkEntry.queries("q_dedup_minhash")(spark, sf)
       }
     }
-    org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      DedupOps.nearDupPairs(Tables.documents(spark, sf), "doc_id", $"text", 3, 50)
-      SparkEntry.queries("q_dedup_simhash")(spark, sf)
-      SparkEntry.queries("q_dedup_minhash")(spark, sf)
-      org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
-      val all = actions.toArray.map(_.toString).toSeq
-      assert(all.isEmpty, s"building the frames ran SQL executions: $all")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      ()
-    }
+    assert(profile.build.executions.isEmpty, s"building the frames ran SQL executions: ${profile.build.executions}")
   }
 }

@@ -26,31 +26,20 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 class RegistrySpec extends SparkSpec {
   import RegistrySpec._
 
-  /** Each query built at 1 shuffle partition while a listener records
-    * the SQL executions building starts; then the 1-partition frames
-    * and 7-partition rebuilds (a second session) run concurrently. */
+  /** Each query built at 1 shuffle partition under a [[Profile]]
+    * window, which records the SQL executions building starts; then the
+    * 1-partition frames and 7-partition rebuilds (a second session) run
+    * concurrently. */
   private lazy val runs: Seq[Run] = {
     val key = "spark.sql.shuffle.partitions"
     val (one, seven) = (spark.newSession(), spark.newSession())
     one.conf.set(key, "1")
     seven.conf.set(key, "7")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          started.add(st.description); ()
-        case _ => ()
-      }
+    val built = queries.map { case (name, fn) =>
+      val (df, profile) = Profile.window(spark)(p => p.build(scala.util.Try(fn(one, sf))))
+      (name, profile.build.executions, df)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val built = try queries.map { case (name, fn) =>
-      org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
-      started.clear()
-      val df = scala.util.Try(fn(one, sf))
-      org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
-      (name, started.asScala.toSeq, df)
-    } finally spark.sparkContext.removeSparkListener(listener)
     def outcome(df: scala.util.Try[DataFrame]) =
       df.flatMap(d => scala.util.Try(digest(d))).toEither.left.map(_.toString)
     // two streams per partitioning: sf0.001 queries are scheduling-

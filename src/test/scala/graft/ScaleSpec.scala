@@ -1,13 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{TextNormalize, TopKSketchAgg}
 
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
   test("nfc_norm unifies decomposed and precomposed forms") {
-    TextNormalize.register(spark)
     // a = decomposed (e + combining acute), b = precomposed \u00e9
     val out = Seq(("e\u0301tude", "\u00e9tude")).toDF("a", "b")
       .select(
@@ -22,7 +20,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("topk_sketch is exact when capacity exceeds distinct items") {
-    TopKSketchAgg.register(spark)
     val words = Seq.fill(50)("alpha") ++ Seq.fill(30)("beta") ++ Seq.fill(20)("gamma") ++ Seq.fill(5)("delta")
     val out = words.toDF("w").repartition(7)
       .agg(call_function("topk_sketch", $"w", lit(16)).as("top"))
@@ -33,7 +30,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("topk_sketch under pressure keeps the heavy hitter with bounded error") {
-    TopKSketchAgg.register(spark)
     // 1000 occurrences of "hot", 200 distinct cold items × 1 — capacity 64
     val words = Seq.fill(1000)("hot") ++ (1 to 200).map(i => f"cold$i%03d")
     val out = words.toDF("w").repartition(5)
@@ -194,8 +190,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("minhash_sig / winnow_fps tolerate NULL array elements (SQL surface)") {
-    graft.functions.MinHashSig.register(spark)
-    graft.functions.WinnowFps.register(spark)
     val out = spark.sql(
       """SELECT minhash_sig(array('a', CAST(NULL AS STRING), 'b'), 2, 4) AS sig,
         |       winnow_fps(array('a', CAST(NULL AS STRING), 'b', 'c'), 2, 2) AS fps

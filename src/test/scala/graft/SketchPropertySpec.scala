@@ -30,7 +30,6 @@ class SketchPropertySpec extends SparkSpec {
   } yield s
 
   test("space-saving bounds hold on arbitrary streams and partitionings") {
-    graft.functions.TopKSketchAgg.register(spark)
     for ((stream, i) <- samples(streamGen, 25, 0xC0FFEE).zipWithIndex) {
       val capacity = 8 + (i % 3) * 8 // 8, 16, 24
       val truth = stream.groupBy(identity).view.mapValues(_.size.toLong).toMap

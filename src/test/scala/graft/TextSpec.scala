@@ -8,7 +8,6 @@ class TextSpec extends SparkSpec {
     * k seeded xxhash64 values of each gram in one array, reduced per
     * doc by the element-wise `vec_min` aggregate. */
   private def minhashSignatures(grams: org.apache.spark.sql.DataFrame, id: String, k: Int) = {
-    graft.functions.VectorAggFunctions.register(grams.sparkSession)
     grams
       .withColumn("vec", transform(sequence(lit(0), lit(k - 1)), s => xxhash64(s, col("gram"))))
       .groupBy(col(id))
@@ -175,7 +174,6 @@ class TextSpec extends SparkSpec {
   }
 
   test("native simhash is bit-identical to the relational ±count formulation") {
-    graft.functions.VectorAggFunctions.register(spark)
     val docs = Tables.documents(spark, sf).where($"doc_id" < 50).select($"doc_id", $"text")
     // the pre-round-2 relational pipeline, reconstructed inline
     val relational = docs

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.vector.VectorOps
-import graft.functions.VectorFunctions
 
 class VectorSpec extends SparkSpec {
 
@@ -40,7 +39,6 @@ class VectorSpec extends SparkSpec {
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
 
   test("cosine_sim expression: orthogonal, identical, opposite, zero") {
-    VectorFunctions.register(spark)
     val d = Seq(
       (Seq(1f, 0f), Seq(0f, 1f), 0.0),
       (Seq(1f, 2f), Seq(1f, 2f), 1.0),
@@ -53,7 +51,6 @@ class VectorSpec extends SparkSpec {
   }
 
   test("cosine_sim survives codegen (runs inside a projection over real data)") {
-    VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val n = emb.select(expr("cosine_sim(embedding, embedding)").as("c"))
       .where(abs($"c" - 1.0) < 1e-9).count()
@@ -76,8 +73,6 @@ class VectorSpec extends SparkSpec {
   }
 
   test("null array ELEMENTS read as 0 across all vector expressions") {
-    VectorFunctions.register(spark)
-    graft.functions.QuantizedCosine.register(spark)
     // (1, null, 2) must behave exactly like (1, 0, 2) — parquet dense
     // embeddings are routinely element-nullable in the schema.
     val d = spark.range(1).select(
@@ -103,7 +98,6 @@ class VectorSpec extends SparkSpec {
   }
 
   test("null array ELEMENTS read as 0 in vec_sum / vec_min / vec_sum_d") {
-    graft.functions.VectorAggFunctions.register(spark)
     // same convention as the scalar expressions above: a null slot is
     // 0, never a blind buffer read.
     val d = spark.range(2).select(
