@@ -46,16 +46,16 @@ object Profile {
     * descriptions (call sites) of the SQL executions it started, and
     * the jobs, completed stages and tasks they ran. Task figures are
     * summed executor run time, the slowest and the median task
-    * duration, and summed GC time; bytes are shuffle read, shuffle
-    * write and input. */
+    * duration, and summed GC time; bytes are shuffle read and shuffle
+    * write. */
   final case class Phase(ms: Double, executions: Seq[String], jobs: Int, stages: Int, tasks: Int,
       taskMs: Long, maxTaskMs: Long, p50TaskMs: Long, gcMs: Long,
-      shuffleReadBytes: Long, shuffleWriteBytes: Long, inputBytes: Long) {
+      shuffleReadBytes: Long, shuffleWriteBytes: Long) {
     def json: String =
       s"""{"ms":${Profile.fmt(ms)},"executions":${executions.map(Profile.quote).mkString("[", ",", "]")},""" +
         s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_ms":$taskMs,"max_task_ms":$maxTaskMs,""" +
         s""""p50_task_ms":$p50TaskMs,"gc_ms":$gcMs,"shuffle_read_bytes":$shuffleReadBytes,""" +
-        s""""shuffle_write_bytes":$shuffleWriteBytes,"input_bytes":$inputBytes}"""
+        s""""shuffle_write_bytes":$shuffleWriteBytes}"""
   }
 
   /** A persisted RDD the window created and left persisted: the RDD's
@@ -136,13 +136,13 @@ object Profile {
   private final class Acc {
     val executions = mutable.ArrayBuffer.empty[String]
     var jobs, stages = 0
-    var taskMs, gcMs, shuffleRead, shuffleWrite, input = 0L
+    var taskMs, gcMs, shuffleRead, shuffleWrite = 0L
     val durations = mutable.ArrayBuffer.empty[Long]
     def phase(ns: Long): Phase = {
       val d = durations.sorted
       Phase(ns / 1e6, executions.toSeq, jobs, stages, d.size, taskMs,
         d.lastOption.getOrElse(0L), if (d.isEmpty) 0L else d(d.size / 2), gcMs,
-        shuffleRead, shuffleWrite, input)
+        shuffleRead, shuffleWrite)
     }
   }
 
@@ -181,7 +181,6 @@ object Profile {
           a.gcMs += m.jvmGCTime
           a.shuffleRead += m.shuffleReadMetrics.totalBytesRead
           a.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-          a.input += m.inputMetrics.bytesRead
         }
       }
     }

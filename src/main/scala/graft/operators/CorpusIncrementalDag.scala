@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.{QueriesText, Tables}
 import graft.text.{BloomDedup, DedupOps}
@@ -17,11 +16,13 @@ import graft.text.{BloomDedup, DedupOps}
   * release's text-hash index, near-dup-probed against the standing
   * MinHash signature index (#71's cross-corpus probe with #75's Bloom
   * pre-gate composed in), paragraph-stripped against the standing
-  * block-hash index, and APPENDED to the clean layer — then the
-  * corpus-global selection chain (#145 budget → #151 mixture → #72
-  * split → #51 pack) re-runs over the full clean layer, because
-  * admission thresholds move with every batch and do not compose
-  * per-batch.
+  * block-hash index, and APPENDED to the clean layer — then
+  * [[CorpusSelectionDelta]] refreshes the corpus-global selection
+  * chain (#145 budget → #151 mixture → #72 split → #51 pack → export)
+  * from the batch and narrow standing ledgers, emitting add/drop
+  * patches: the cycle costs in proportion to the batch, not the
+  * corpus. [[runCompaction]] re-runs the full chain when contiguous
+  * pack ids are wanted.
   *
   * == Equivalence contract (first-arrival = min-id) ==
   * Batches arrive in ascending `doc_id` ranges (the watermark enforces
@@ -32,7 +33,7 @@ import graft.text.{BloomDedup, DedupOps}
   * id, i.e. the earliest arrival. So processing batch k sees exactly
   * the state the full rebuild's min-rules would consult, and the
   * incremental layers equal [[CorpusPipelineDag]]'s full rebuild on
-  * the union (CorpusIncrementalDagSpec pins it layer by layer).
+  * the union (CorpusSelectionDeltaSpec pins it layer by layer).
   * SKETCH IDENTITY backs that equality: this path's candidates come
   * from MinHash banding (k=48, bands=24), the one near-dup candidate
   * generator, which [[CorpusPipelineDag]] runs too
@@ -74,8 +75,9 @@ import graft.text.{BloomDedup, DedupOps}
   */
 object CorpusIncrementalDag {
 
-  /** On-disk layout: per-batch partitioned layers + global refresh
-    * layers + the three standing indexes. */
+  /** On-disk layout: per-batch partitioned layers, the three standing
+    * indexes, and the selection layers [[runCompaction]] writes (the
+    * per-batch selection patches live in [[CorpusSelectionDelta.Layers]]). */
   final case class Layout(root: String) {
     val flags: String = s"$root/flags"               // batch=N: doc flags incl. r3
     val textHashes: String = s"$root/text_hashes"    // batch=N: fresh exact-dup hashes
@@ -87,11 +89,11 @@ object CorpusIncrementalDag {
     val clean: String = s"$root/clean"               // batch=N: stripped clean docs
     val retractions: String = s"$root/retractions"   // batch=N: full-rebuild-would-drop ledger
     val batchMeta: String = s"$root/batch_meta"      // scratch: (mark, batch_id, n_docs)
-    val selected: String = s"$root/selected"         // global refresh (overwrite)
+    val selected: String = s"$root/selected"         // compaction only (overwrite)
     val mixture: String = s"$root/mixture"
     val splits: String = s"$root/splits"
     val packs: String = s"$root/packs"
-    val export: String = s"$root/export"             // global refresh: release artifact
+    val export: String = s"$root/export"             // compaction: renamed into the rebased base
     val packPayloads: String = s"$root/pack_payloads"
     val rebuildFlag: String = s"$root/rebuild_flag"  // batch=N: ReleasePolicy verdicts
     val marks: String = s"$root/marks"               // WatermarkStore dir
@@ -100,40 +102,25 @@ object CorpusIncrementalDag {
   /** The rebuild-scheduling policy (VERDICT r14 item 4): the two
     * honesty ledgers this operator emits — near-dup RETRACTIONS
     * (standing keepers a full rebuild would have dropped; bridge
-    * merges) and, on the delta selection path, pack TOMBSTONES (dead
-    * tokens inside standing shards) — previously reported and nothing
-    * consumed them. The policy turns them into an action: when either
-    * crosses its bound, the batch writes a `rebuild_flag` row, and
-    * [[rebuildRequested]] tells the scheduler (RunIncremental, or a
-    * real orchestrator's branch operator) to run a full-rebuild
-    * COMPACTION cycle instead of the next incremental one. Defaults:
+    * merges) and pack TOMBSTONES (dead tokens inside standing delta
+    * shards) — previously reported and nothing consumed them. The
+    * policy turns them into an action: when either crosses its bound,
+    * the batch writes a `rebuild_flag` row, and [[rebuildRequested]]
+    * tells the scheduler (RunIncremental, or a real orchestrator's
+    * branch operator) to run a full-rebuild COMPACTION cycle instead
+    * of the next incremental one. Defaults:
     * any retraction flags (first-arrival drift is a correctness-shaped
     * debt), dead tokens flag at 10% (a storage/efficiency debt). */
   final case class ReleasePolicy(
       maxRetractions: Long = 0L,
       maxDeadTokenPermille: Long = 100L)
 
-  /** Default ledger-snapshot cadence (VERDICT r16 item 5): on the
-    * delta path the narrow op ledgers roll up once the unsnapshotted
-    * tail reaches this many batches, so per-batch standing reads stay
-    * one-base + bounded-tail BY DEFAULT. Unbounded tails are the
-    * explicit choice (`snapshotEvery = 0`), not the default — and an
-    * explicit-off run warns loudly once the tail passes
-    * [[tailWarnBound]] (one more partition listed and unioned into
-    * every standing read per ingest day, forever). */
+  /** Default ledger-snapshot cadence (VERDICT r16 item 5): the narrow
+    * op ledgers roll up once the unsnapshotted tail reaches this many
+    * batches, so per-batch standing reads stay one base + a bounded
+    * tail. There is no snapshots-off mode: without roll-ups every
+    * ledger gains one partition per ingest day, forever. */
   val defaultSnapshotEvery: Int = 8
-
-  /** Tail size past which an explicit snapshots-off run warns. */
-  val tailWarnBound: Int = 32
-
-  /** The warning an unbounded-mode cycle prints (pure, spec-pinned). */
-  private[graft] def tailWarning(maxTail: Int, snapshotEvery: Int): Option[String] =
-    if (snapshotEvery <= 0 && maxTail >= tailWarnBound)
-      Some(s"ledger snapshots are OFF and the unsnapshotted tail is $maxTail " +
-        s"partitions (warn bound $tailWarnBound): every standing ledger read now " +
-        s"lists and unions $maxTail partitions and grows one more per ingest day — " +
-        s"pass snapshotEvery > 0 (default $defaultSnapshotEvery) to bound it")
-    else None
 
   /** The COMMITTED release watermark — the last batch id whose every
     * layer landed (the mark only advances after all stages). Pass it
@@ -156,11 +143,12 @@ object CorpusIncrementalDag {
   /** EXECUTABLE compaction (VERDICT r15 item 1): the full-rebuild
     * cycle [[rebuildRequested]] asks for, as a crash-rerun-convergent
     * job graph. Runs the SHARED selection chain
-    * ([[CorpusPipelineDag.addSelectionChain]] — the same derivation
-    * both DAG modes use) over the committed clean layer into the
-    * rebuild layers, then REBASES the delta ledgers onto it inside a
-    * FRESH generation directory (`<root>/selgen=<mark>`) and flips
-    * the [[CorpusSelectionDelta.genPointerName]] pointer atomically
+    * ([[CorpusPipelineDag.addSelectionChain]] — the derivation the
+    * full-rebuild DAG uses) over the committed clean layer into the
+    * [[Layout]]'s selection layers (their only writer), then REBASES
+    * the delta ledgers onto it inside a FRESH generation directory
+    * (`<root>/selgen=<mark>`) and flips the
+    * [[CorpusSelectionDelta.genPointerName]] pointer atomically
     * (VERDICT r16 item 4 — the ScdStream `_CURRENT` pattern):
     *
     *   1. `compact_selection` — token budget → mixture → split →
@@ -373,12 +361,15 @@ object CorpusIncrementalDag {
     * first batch includes id 0 (`doc_id > mark` is strict). */
   private[graft] val bootstrapMark: String = "-1"
 
-  /** Read a standing layer, or an empty frame of the declared schema
-    * when the layer doesn't exist yet (first batch) — [[LayerIO]]'s
-    * inference posture (these layers never hold file-less partitions;
-    * the DDL shapes only the empty fallback). */
-  private def readLayerOr(s: SparkSession, path: String, ddl: String): DataFrame =
-    LayerIO.readOr(s, path, ddl, explicitSchema = false)
+  /** Schemas of the per-batch dedup layers as their writers produce
+    * them, `batch` partition column included — what every standing
+    * read applies through [[LayerIO.readOr]] (spec-pinned equal to the
+    * written layers). */
+  private[graft] val textHashDdl = "text_hash STRING, batch BIGINT"
+  private[graft] val sigDdl = "doc_id BIGINT, sig ARRAY<BIGINT>, batch BIGINT"
+  private[graft] val keepDdl = "doc_id BIGINT, lang STRING, source STRING, n_words BIGINT, batch BIGINT"
+  private[graft] val paraHashDdl = "para_hash STRING, batch BIGINT"
+  private[graft] val retractionDdl = "doc_id BIGINT, group_id BIGINT, batch BIGINT"
 
   /** Delete per-batch partitions left behind by a CRASHED attempt that
     * ran with a DIFFERENT `upTo` (advice r14: a crashed wider-upTo
@@ -413,62 +404,37 @@ object CorpusIncrementalDag {
     removed
   }
 
-  /** Standing view of an ID-LESS index layer (text hashes, paragraph
-    * hashes): only partitions from batches at or below the current
-    * mark count as standing. The `batch` partition-column filter is
-    * what makes a CRASHED-RUN RERUN converge — the prior attempt's
-    * own `batch=<id>` partition sits on disk, and without the filter
-    * the batch would dedup against ITSELF (every hash "already
-    * known", zero keepers). Layers carrying `doc_id` filter on the id
-    * instead, which also survives torn wider-run partitions. Partition
-    * pruning turns the filter into a directory skip — standing scans
-    * never touch the in-flight partition. */
-  private def readIndexStanding(
-      s: SparkSession, path: String, ddl: String, mark: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (fs.exists(p)) s.read.parquet(path).where(col("batch") <= mark).drop("batch")
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType.fromDDL(ddl))
-  }
-
   /** Build the incremental job graph. `upTo` bounds the batch
     * (`mark < doc_id <= upTo`) — the "process up to ingest time T"
     * knob a scheduled daily run uses; default = everything new.
     *
-    * `selection` picks the refresh posture after the dedup layers:
-    *   - "rebuild" — re-run the full selection chain over the whole
-    *     clean layer (bit-identical release every batch, including
-    *     pack ids; the compaction mode, and the small-corpus default);
-    *   - "delta" — [[CorpusSelectionDelta]]: the admission cut from
-    *     the ≤101-cell ledger + one boundary-interval re-read of the
-    *     NARROW doc index, emitting add/drop patches and per-batch
-    *     pack/export/payload shards with tombstones. Batch-
-    *     proportional where rebuild is corpus-proportional — the
-    *     daily-100 TB posture; views equal the rebuild exactly except
-    *     pack-id numbering (content-equal, spec-pinned).
+    * After the dedup layers, [[CorpusSelectionDelta]] refreshes
+    * selection: the admission cut from the ≤101-cell ledger + one
+    * boundary-interval re-read of the NARROW doc index, emitting
+    * add/drop patches and per-batch pack/export/payload shards with
+    * tombstones. Its views equal the full rebuild exactly except
+    * pack-id numbering (content-equal, spec-pinned); [[runCompaction]]
+    * restores contiguous pack ids.
     *
-    * `policy` is evaluated every batch in BOTH modes (see
-    * [[ReleasePolicy]]); a violated bound writes `rebuild_flag`.
+    * `policy` is evaluated every batch (see [[ReleasePolicy]]); a
+    * violated bound writes `rebuild_flag`.
     *
-    * `snapshotEvery` (delta mode; DEFAULT ON at
-    * [[defaultSnapshotEvery]], 0 = explicitly unbounded): after the
-    * watermark advances, roll the narrow op ledgers up via
+    * `snapshotEvery` (at least 1, default [[defaultSnapshotEvery]]):
+    * after the watermark advances, roll the narrow op ledgers up via
     * [[CorpusSelectionDelta.snapshot]] once the unsnapshotted tail
     * reaches that many batches — per-batch ledger reads stay
     * one-base-partition + bounded tail instead of growing one
-    * partition per ingest day forever (VERDICT r15 item 2). An
-    * explicit-off run warns past [[tailWarnBound]] (r16 item 5). */
+    * partition per ingest day forever (VERDICT r15 item 2). */
   def build(
       s: SparkSession, sfDir: String, layout: Layout,
       upTo: Long = Long.MaxValue,
       cleanSuite: Seq[DataQuality.Expectation] = CorpusPipelineDag.defaultCleanSuite,
       auditReadBack: Boolean = false,
-      selection: String = "rebuild",
       policy: ReleasePolicy = ReleasePolicy(),
       snapshotEvery: Int = defaultSnapshotEvery
   ): JobGraph = {
-    require(selection == "rebuild" || selection == "delta",
-      s"CorpusIncrementalDag: unknown selection mode '$selection' (rebuild | delta)")
+    require(snapshotEvery >= 1,
+      s"CorpusIncrementalDag: snapshotEvery must be at least 1, got $snapshotEvery")
     val g = new JobGraph()
     val store = new WatermarkStore(layout.marks, defaultMark = bootstrapMark)
     // resolved ONCE at graph-build time: the scheduler is the single
@@ -479,11 +445,12 @@ object CorpusIncrementalDag {
     def write(df: DataFrame, path: String): Long =
       CorpusPipelineDag.writeLayer(df, path, auditReadBack)
 
-    /** (mark, batch_id, n_docs) from the written scratch layer. */
-    def meta(): (Long, Long, Long) = {
-      val r = s.read.parquet(layout.batchMeta).head()
-      (r.getAs[Long]("mark"), r.getAs[Long]("batch_id"), r.getAs[Long]("n_docs"))
-    }
+    /** (mark, batch_id, n_docs) of this run, set by `watermark_batch`
+      * (every other stage depends on it); also written to the scratch
+      * layer as the batch's record. */
+    @volatile var runMeta: Option[(Long, Long, Long)] = None
+    def meta(): (Long, Long, Long) = runMeta.getOrElse(
+      throw new IllegalStateException("watermark_batch has not run in this graph"))
     def batchDocs(mark: Long): DataFrame =
       docs.where(col("doc_id") > mark && col("doc_id") <= upTo)
 
@@ -515,6 +482,7 @@ object CorpusIncrementalDag {
       import s.implicits._
       Seq((mark, bid, n)).toDF("mark", "batch_id", "n_docs")
         .coalesce(1).write.mode("overwrite").parquet(layout.batchMeta)
+      runMeta = Some((mark, bid, n))
       n
     }
 
@@ -531,8 +499,8 @@ object CorpusIncrementalDag {
         // map-side, then the exact anti-join (right side now small
         // enough to broadcast) decides freshness
         val standing = BloomDedup.gateBigSide(
-          readIndexStanding(s, layout.textHashes, "text_hash STRING", mark)
-            .select(col("text_hash").as("__th")),
+          LayerIO.readOr(s, layout.textHashes, textHashDdl)
+            .where(col("batch") <= mark).select(col("text_hash").as("__th")),
           xxhash64(col("__th")), r2h, xxhash64(col("__th")))
         val fresh = r2h.join(standing, Seq("__th"), "left_anti")
         val r3set = fresh.groupBy("__th").agg(min("doc_id").as("doc_id"))
@@ -582,7 +550,7 @@ object CorpusIncrementalDag {
         val batchSigs = s.read.parquet(s"${layout.sigs}/batch=$bid")
         // standing side filtered by id, never by partition name, so a
         // torn wider-run partition can't leak into the standing index
-        val standingSigs = readLayerOr(s, layout.sigs, "doc_id BIGINT, sig ARRAY<BIGINT>")
+        val standingSigs = LayerIO.readOr(s, layout.sigs, sigDdl)
           .where(col("doc_id") <= mark).select("doc_id", "sig")
         val cross = DedupOps.minhashLshPairsAcrossGated(
           batchSigs, standingSigs, "doc_id", k = 48, bands = 24, minEst = 0.25)
@@ -632,8 +600,7 @@ object CorpusIncrementalDag {
     g.add("retraction_ledger", deps = Seq("neardup_resolved"), retries = 1) {
       val (mark, bid, n) = meta()
       if (n == 0) 0L else {
-        val standingKeep = readLayerOr(s, layout.keep,
-          "doc_id BIGINT, lang STRING, source STRING, n_words BIGINT")
+        val standingKeep = LayerIO.readOr(s, layout.keep, keepDdl)
           .where(col("doc_id") <= mark).select("doc_id")
         write(
           s.read.parquet(s"${layout.resolved}/batch=$bid")
@@ -649,7 +616,8 @@ object CorpusIncrementalDag {
       if (n == 0) 0L else {
         val keep = s.read.parquet(s"${layout.keep}/batch=$bid")
         val gated = batchDocs(mark).join(keep.select("doc_id"), Seq("doc_id"), "left_semi")
-        val standingParas = readIndexStanding(s, layout.paraHashes, "para_hash STRING", mark)
+        val standingParas = LayerIO.readOr(s, layout.paraHashes, paraHashDdl)
+          .where(col("batch") <= mark).select("para_hash")
         val (stripped, freshHashes, release) = DedupOps.paragraphStripIncremental(
           gated, "doc_id", col("text"), paraTokens = 20, known = standingParas)
         val written =
@@ -672,76 +640,47 @@ object CorpusIncrementalDag {
         s.read.parquet(s"${layout.clean}/batch=$bid"), cleanSuite))
     }
 
-    val terminals =
-      if (selection == "delta")
-        // batch-proportional refresh: admission delta from the cell
-        // ledger + narrow-index interval re-read, patch layers with
-        // tombstones (CorpusSelectionDelta's contract)
-        CorpusSelectionDelta.addDeltaChain(g, s, deltaLayers,
-          meta = () => meta(),
-          readCleanBatch = () => {
-            val (_, bid, _) = meta()
-            s.read.parquet(s"${layout.clean}/batch=$bid")
-          },
-          readCleanStanding = () => {
-            val (mark, _, _) = meta()
-            s.read.parquet(layout.clean)
-              .where(col("batch") <= mark && col("doc_id") <= mark)
-          },
-          firstDep = Seq("clean_quality_check"), write = write)
-      else
-        // global selection refresh over the FULL clean layer — shared
-        // derivation with the full-rebuild DAG (one function, bit-equal
-        // outputs on equal clean content)
-        CorpusPipelineDag.addSelectionChain(g, s,
-          readClean = () => {
-            val (_, bid, _) = meta()
-            // batch <= bid: partition-prunes any torn partition a crashed
-            // wider-upTo attempt might have left (also healed at start)
-            s.read.parquet(layout.clean)
-              .where(col("batch") <= bid && col("doc_id") <= bid)
-              .select("doc_id", "lang", "source", "n_paras", "n_kept", "text")
-          },
-          layout.selected, layout.mixture, layout.splits, layout.packs,
-          layout.export, layout.packPayloads,
-          firstDep = Seq("clean_quality_check"), write = write,
-          // an EMPTY batch leaves the clean layer untouched, and selection
-          // is a pure function of the clean layer — a no-op ingest day
-          // must not pay the corpus-scale selection rebuild
-          skipWhen = () => meta()._3 == 0)
+    // batch-proportional refresh: admission delta from the cell ledger
+    // + narrow-index interval re-read, patch layers with tombstones
+    // (CorpusSelectionDelta's contract)
+    val terminals = CorpusSelectionDelta.addDeltaChain(g, s, deltaLayers,
+      meta = () => meta(),
+      readCleanBatch = () => {
+        val (_, bid, _) = meta()
+        s.read.parquet(s"${layout.clean}/batch=$bid")
+      },
+      readCleanStanding = () => {
+        val (mark, _, _) = meta()
+        s.read.parquet(layout.clean)
+          .where(col("batch") <= mark && col("doc_id") <= mark)
+      },
+      firstDep = Seq("clean_quality_check"), write = write)
 
-    // the policy gate: consume the honesty ledgers (retractions; dead
-    // pack tokens on the delta path) and flag a full-rebuild
-    // compaction when a bound is crossed — part of the batch
-    // transaction, so the watermark never advances past an
-    // unevaluated policy
+    // the policy gate: consume the honesty ledgers (retractions, dead
+    // pack tokens) and flag a full-rebuild compaction when a bound is
+    // crossed — part of the batch transaction, so the watermark never
+    // advances past an unevaluated policy
     g.add("release_policy", deps = terminals :+ "retraction_ledger", retries = 1) {
       val (_, bid, n) = meta()
       if (n == 0) 0L else {
-        val nRetr = readLayerOr(s, layout.retractions,
-          "doc_id BIGINT, group_id BIGINT, batch BIGINT")
+        val nRetr = LayerIO.readOr(s, layout.retractions, retractionDdl)
           .where(col("batch") === bid).count()
         val flags = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
         if (nRetr > policy.maxRetractions)
           flags += (("retractions", nRetr, policy.maxRetractions))
-        if (selection == "delta") {
-          // snapshot-aware reads (readLedger): after a ledger snapshot
-          // or compaction, the packed-token denominator must still see
-          // the base rows, or the dead permille inflates and the flag
-          // fires early. The schema stays EXPLICIT (a patch-free batch
-          // partition has no files; inference would throw)
-          val packed = CorpusSelectionDelta.readLedger(s, deltaLayers.packsDelta,
-            "doc_id BIGINT, copy_id BIGINT, source STRING, n_words BIGINT, " +
-              "pack_id BIGINT, pack_offset BIGINT, batch BIGINT", bid)
-            .agg(coalesce(sum("n_words"), lit(0L))).head().getLong(0)
-          val dead = CorpusSelectionDelta.readLedger(s, deltaLayers.packTombs,
-            "doc_id BIGINT, copy_id BIGINT, source STRING, n_words BIGINT, " +
-              "pack_id BIGINT, batch BIGINT", bid)
-            .agg(coalesce(sum("n_words"), lit(0L))).head().getLong(0)
-          val permille = if (packed > 0L) dead * 1000L / packed else 0L
-          if (permille > policy.maxDeadTokenPermille)
-            flags += (("dead_tokens", permille, policy.maxDeadTokenPermille))
-        }
+        // snapshot-aware reads (readLedger): after a ledger snapshot or
+        // compaction, the packed-token denominator must still see the
+        // base rows, or the dead permille inflates and the flag fires
+        // early
+        val packed = CorpusSelectionDelta.readLedger(s, deltaLayers.packsDelta,
+          CorpusSelectionDelta.packDdl, bid)
+          .agg(coalesce(sum("n_words"), lit(0L))).head().getLong(0)
+        val dead = CorpusSelectionDelta.readLedger(s, deltaLayers.packTombs,
+          CorpusSelectionDelta.tombDdl, bid)
+          .agg(coalesce(sum("n_words"), lit(0L))).head().getLong(0)
+        val permille = if (packed > 0L) dead * 1000L / packed else 0L
+        if (permille > policy.maxDeadTokenPermille)
+          flags += (("dead_tokens", permille, policy.maxDeadTokenPermille))
         import s.implicits._
         flags.toSeq.toDF("reason", "metric", "bound")
           .coalesce(1).write.mode("overwrite")
@@ -766,54 +705,28 @@ object CorpusIncrementalDag {
     // just verdicts) + retries makes a crashed partial roll-up
     // self-healing: whichever ledger stayed unpruned keeps the count
     // high, so the next cadence hit re-snapshots all of them. Metric
-    // = ledgers snapped (0 = below cadence / disabled). A torn snap
-    // dir without _SUCCESS is invisible to readers and overwritten.
+    // = ledgers snapped (0 = below cadence). A torn snap dir without
+    // _SUCCESS is invisible to readers and overwritten.
     g.add("ledger_snapshot", deps = Seq("advance_watermark"), retries = 1) {
       // no n==0 guard: on an empty ingest day bid == the committed
       // mark, so even a no-op cycle can finish a roll-up a crashed
       // predecessor left partial
       val (_, bid, _) = meta()
-      if (selection != "delta") 0L
-      else {
-        val tail = CorpusSelectionDelta.maxTail(s, deltaLayers)
-        if (snapshotEvery <= 0) {
-          // unbounded mode is the EXPLICIT choice — say so, loudly,
-          // once the tail passes the warn bound (VERDICT r16 item 5)
-          tailWarning(tail, snapshotEvery)
-            .foreach(w => println(s"[warn] CorpusIncrementalDag: $w"))
-          0L
-        }
-        else if (tail >= snapshotEvery)
-          CorpusSelectionDelta.snapshot(s, deltaLayers, bid)
-        else 0L
-      }
+      if (CorpusSelectionDelta.maxTail(s, deltaLayers) >= snapshotEvery)
+        CorpusSelectionDelta.snapshot(s, deltaLayers, bid)
+      else 0L
     }
 
     g.add("release_report", deps = Seq("ledger_snapshot")) {
-      if (selection == "delta") CorpusSelectionDelta.packsLive(s, deltaLayers).count()
-      else {
-        // a first-ever cycle with an EMPTY batch never ran the selection
-        // chain, so the packs layer may not exist — report a no-op
-        // instead of throwing (mirrors the skipWhen guard)
-        val packsPath = new org.apache.hadoop.fs.Path(layout.packs)
-        val fs = packsPath.getFileSystem(s.sessionState.newHadoopConf())
-        if (meta()._3 == 0 && !fs.exists(packsPath)) 0L
-        else s.read.parquet(layout.packs).count()
-      }
+      CorpusSelectionDelta.packsLive(s, deltaLayers).count()
     }
     g
   }
 
   /** Build and run one incremental cycle; returns the report table. */
   def run(s: SparkSession, sfDir: String, root: String,
-          upTo: Long = Long.MaxValue): Seq[JobGraph.JobReport] =
-    build(s, sfDir, Layout(root), upTo).run()
-
-  /** One DELTA-selection cycle (the batch-proportional daily posture). */
-  def runDelta(s: SparkSession, sfDir: String, root: String,
-               upTo: Long = Long.MaxValue,
-               policy: ReleasePolicy = ReleasePolicy(),
-               snapshotEvery: Int = defaultSnapshotEvery): Seq[JobGraph.JobReport] =
-    build(s, sfDir, Layout(root), upTo, selection = "delta", policy = policy,
-      snapshotEvery = snapshotEvery).run()
+          upTo: Long = Long.MaxValue,
+          policy: ReleasePolicy = ReleasePolicy(),
+          snapshotEvery: Int = defaultSnapshotEvery): Seq[JobGraph.JobReport] =
+    build(s, sfDir, Layout(root), upTo, policy = policy, snapshotEvery = snapshotEvery).run()
 }

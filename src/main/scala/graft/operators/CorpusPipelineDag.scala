@@ -223,26 +223,23 @@ object CorpusPipelineDag {
 
   /** Register the GLOBAL selection chain (token budget → mixture
     * materialization → split → pack) over a clean layer — shared by
-    * the full-rebuild DAG and [[CorpusIncrementalDag]]'s per-batch
-    * refresh. Selection is corpus-global BY NATURE: the #145 budget
-    * threshold and the #147 water-fill allocation both move with
-    * every appended batch (a new batch can evict previously admitted
-    * docs), so the incremental path reruns this chain over the full
-    * clean layer instead of pretending admission composes per batch.
-    * One derivation = the two DAGs stay bit-identical on identical
-    * clean content (the batch/stream twin-contract practice). */
+    * the full-rebuild DAG and [[CorpusIncrementalDag.runCompaction]].
+    * Selection is corpus-global BY NATURE: the #145 budget threshold
+    * and the #147 water-fill allocation both move with every appended
+    * batch (a new batch can evict previously admitted docs); the
+    * per-batch path patches it through [[CorpusSelectionDelta]], and
+    * the compaction reruns this chain to restore contiguous packs.
+    * One derivation = the compacted release stays bit-identical to the
+    * full rebuild on identical clean content. */
   private[operators] def addSelectionChain(
       g: JobGraph, s: SparkSession, readClean: () => DataFrame,
       selected: String, mixture: String, splits: String, packs: String,
       export: String, packPayloads: String,
       firstDep: Seq[String], write: (DataFrame, String) => Long,
       skipWhen: () => Boolean = () => false): Seq[String] = {
-    // `skipWhen`: the incremental DAG passes "this batch was empty" —
-    // the standing selection layers are already exactly what a rerun
-    // would produce (selection is a pure function of the clean layer,
-    // which didn't change), so a no-op ingest day must not pay a
-    // corpus-scale selection rebuild. Stages report metric 0 and leave
-    // the layers untouched.
+    // `skipWhen`: the compaction passes "nothing to compact" (no
+    // committed batch, or a rerun after the committed flip). Stages
+    // report metric 0 and leave the layers untouched.
     def stage(id: String, deps: Seq[String])(body: => Long): Unit = {
       g.add(id, deps = deps, retries = 1) { if (skipWhen()) 0L else body }
       ()

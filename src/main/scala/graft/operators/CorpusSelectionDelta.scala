@@ -8,16 +8,15 @@ import graft.QueriesText
 import graft.streaming.SelectionStream
 import graft.text.BloomDedup
 
-/** INCREMENTAL selection refresh — the delta-release path that
-  * replaces [[CorpusIncrementalDag]]'s per-batch GLOBAL selection
-  * rebuild (VERDICT r14 item 1). The full chain (#145 token budget →
+/** INCREMENTAL selection refresh — the one way [[CorpusIncrementalDag]]
+  * refreshes selection per batch. The full chain (#145 token budget →
   * #151 mixture → #72 split → #51 pack → export) is corpus-global by
   * nature: every appended batch moves the admission threshold and the
-  * water-fill allocation. The rebuild answer re-runs the chain over
-  * the FULL clean layer every ingest day — five corpus-scale layer
-  * rewrites (three of them carrying TEXT) for a batch-sized question.
-  * This module computes the same decisions from bounded and NARROW
-  * state instead, and emits deltas:
+  * water-fill allocation. Re-running it over the FULL clean layer
+  * every ingest day costs five corpus-scale layer rewrites (three of
+  * them carrying TEXT) for a batch-sized question; a measured rehearsal
+  * rejected that posture (BENCH_NOTES). This module computes the same
+  * decisions from bounded and NARROW state instead, and emits deltas:
   *
   *   - the admission cut needs only the ≤101-cell score ledger
   *     ([[SelectionStream]]'s sufficient statistic — cells are
@@ -161,13 +160,6 @@ object CorpusSelectionDelta {
     def active(s: SparkSession, root: String): Layers = Layers(activeRoot(s, root))
   }
 
-  /** Delta layers always read schema-EXPLICIT ([[LayerIO]]): an
-    * adds-free batch writes a hive-partitioned partition with no
-    * parquet files (inference throws), and the DDL pins `batch` to
-    * BIGINT. Missing layers read as empty frames. */
-  private[operators] def readOr(s: SparkSession, path: String, ddl: String): DataFrame =
-    LayerIO.readOr(s, path, ddl, explicitSchema = true)
-
   // ---------------------------------------------------------------
   // Ledger snapshots (VERDICT r15 item 2). The op ledgers are
   // append-only and the views recompute latest-op-wins over the WHOLE
@@ -208,7 +200,7 @@ object CorpusSelectionDelta {
 
   /** Snapshot-aware ledger read: newest committed snapshot + ledger
     * tail (`S < batch <= upTo`). Without a snapshot this is exactly
-    * the old `readOr(...).where(batch <= upTo)` path. */
+    * `LayerIO.readOr(...).where(batch <= upTo)`. */
   private[graft] def readLedger(
       s: SparkSession, path: String, ddl: String, upTo: Long): DataFrame =
     latestSnap(s, path) match {
@@ -217,9 +209,9 @@ object CorpusSelectionDelta {
           s"readLedger($path): upTo=$upTo is below snapshot $sid — history " +
             "under a snapshot is rolled up and no longer readable")
         s.read.schema(StructType.fromDDL(ddl)).parquet(s"${snapRoot(path)}/snap=$sid")
-          .unionByName(readOr(s, path, ddl)
+          .unionByName(LayerIO.readOr(s, path, ddl)
             .where(col("batch") > sid && col("batch") <= upTo))
-      case None => readOr(s, path, ddl).where(col("batch") <= upTo)
+      case None => LayerIO.readOr(s, path, ddl).where(col("batch") <= upTo)
     }
 
   /** Unsnapshotted `batch=` partition count of a ledger — the tail a
@@ -324,9 +316,9 @@ object CorpusSelectionDelta {
     "doc_id BIGINT, lang STRING, source STRING, quality_score BIGINT, n_words BIGINT, op STRING, batch BIGINT"
   private val mixDdl =
     "doc_id BIGINT, lang STRING, source STRING, n_words BIGINT, copy_id BIGINT, op STRING, batch BIGINT"
-  private val packDdl =
+  private[graft] val packDdl =
     "doc_id BIGINT, copy_id BIGINT, source STRING, n_words BIGINT, pack_id BIGINT, pack_offset BIGINT, batch BIGINT"
-  private val tombDdl =
+  private[graft] val tombDdl =
     "doc_id BIGINT, copy_id BIGINT, source STRING, n_words BIGINT, pack_id BIGINT, batch BIGINT"
   private val headDdl = "source STRING, packs_end BIGINT, batch BIGINT"
   private val textDdl = "doc_id BIGINT, text STRING, batch BIGINT"
@@ -392,7 +384,7 @@ object CorpusSelectionDelta {
   def packsLive(s: SparkSession, L0: Layers, upTo: Long = Long.MaxValue): DataFrame = {
     val L = Layers.active(s, L0.root)
     val p = readLedger(s, L.packsDelta, packDdl, upTo)
-    val t = readOr(s, L.packTombs, tombDdl).where(col("batch") <= upTo)
+    val t = LayerIO.readOr(s, L.packTombs, tombDdl).where(col("batch") <= upTo)
       .groupBy("doc_id", "copy_id").agg(max("batch").as("__tb"))
     p.join(t, Seq("doc_id", "copy_id"), "left")
       .where(col("__tb").isNull || col("batch") > col("__tb"))
@@ -430,18 +422,14 @@ object CorpusSelectionDelta {
     * must never read as an empty release. */
   def exportView(s: SparkSession, L0: Layers, upTo: Long = Long.MaxValue): DataFrame = {
     val L = Layers.active(s, L0.root)
-    // orElse: a root compacted by the pre-generation code recorded its
-    // floor as a metadata-only `export_delta__snap/snap=mark` dir, not
-    // the floor file — keep honoring it (review r17), or "history
-    // rolled up" silently reads as an empty release on upgraded roots
-    exportFloor(s, L).orElse(latestSnap(s, L.exportDelta)).foreach { floor =>
+    exportFloor(s, L).foreach { floor =>
       if (upTo < floor) throw new IllegalStateException(
         s"exportView(${L.exportDelta}): upTo=$upTo is below the compaction floor $floor — " +
           "shard history under the rebase is rolled up and no longer readable")
     }
-    val e = readOr(s, L.exportDelta, exportDdl)
+    val e = LayerIO.readOr(s, L.exportDelta, exportDdl)
       .where(col("batch") <= upTo)
-    val t = readOr(s, L.exportTombs,
+    val t = LayerIO.readOr(s, L.exportTombs,
       "doc_id BIGINT, copy_id BIGINT, split STRING, source STRING, batch BIGINT")
       .where(col("batch") <= upTo)
       .groupBy("doc_id", "copy_id").agg(max("batch").as("__tb"))

@@ -84,11 +84,7 @@ object CorpusStream {
     "quality_score BIGINT, token_mass BIGINT, n_docs BIGINT")
 
   /** Accumulated-layer read with the schema EXPLICIT: inference picks
-    * one arbitrary footer, which breaks on mixed-schema layers (a
-    * resumed stream whose old files predate a column — the pair
-    * layer's `pass` verdict column is exactly that case; legacy rows
-    * read the missing column as null and the consumer decides the
-    * legacy meaning). */
+    * one arbitrary footer and throws on a glob that matches nothing. */
   private def readAccumulated(spark: SparkSession, glob: String, ddl: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(glob)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -193,12 +189,9 @@ object CorpusStream {
         col("jaccard_pct").isNotNull.as("pass"))
       .write.mode("overwrite").parquet(s"${layout.pairs}/cycle=$cycleId")
     fresh.unpersist(blocking = false)
-    // legacy migration: pair files written before the verdict-ledger
-    // change carried ONLY passing pairs (no `pass` column) — a null
-    // verdict on a resumed stream therefore means `pass = true`
     val allPairs = readAccumulated(spark, layout.pairs,
       "doc1 BIGINT, doc2 BIGINT, jaccard_pct BIGINT, pass BOOLEAN, cycle BIGINT")
-      .where(col("cycle") <= cycleId && coalesce(col("pass"), lit(true)))
+      .where(col("cycle") <= cycleId && col("pass"))
     val drops = DedupOps.resolveGroups(allPairs.select("doc1", "doc2", "jaccard_pct"))
       .where(col("doc_id") =!= col("group_id")).select("doc_id")
     val keptBefore = readAccumulated(spark, layout.keep,
@@ -494,10 +487,10 @@ object CorpusStream {
   def exportPatchView(spark: SparkSession, layout: Layout,
                       upTo: Long = Long.MaxValue): DataFrame = {
     import graft.operators.LayerIO
-    val adds = LayerIO.readOr(spark, layout.exportPatch, exportPatchDdl,
-      explicitSchema = true).where(col("cycle") <= upTo)
-    val tombs = LayerIO.readOr(spark, layout.exportPatchTombs, exportPatchTombDdl,
-      explicitSchema = true).where(col("cycle") <= upTo)
+    val adds = LayerIO.readOr(spark, layout.exportPatch, exportPatchDdl)
+      .where(col("cycle") <= upTo)
+    val tombs = LayerIO.readOr(spark, layout.exportPatchTombs, exportPatchTombDdl)
+      .where(col("cycle") <= upTo)
       .groupBy("doc_id", "copy_id").agg(max("cycle").as("__tc"))
     adds.join(tombs, Seq("doc_id", "copy_id"), "left")
       .where(col("__tc").isNull || col("cycle") > col("__tc"))

@@ -12,31 +12,26 @@ import graft.operators.{CorpusIncrementalDag, CorpusPipelineDag}
   * up the rest).
   *
   * Usage: `runMain graft.tools.RunIncremental <sfDir> <root> [upTo...]`
-  * e.g. `runMain graft.tools.RunIncremental /root/repo/testdata_sf1
+  * e.g. `runMain graft.tools.RunIncremental testdata_sf1
   * /tmp/inc_sf1 24999` → batch 1 = doc_id ≤ 24999, batch 2 = rest.
+  * Every cycle refreshes selection through [[graft.operators
+  * .CorpusSelectionDelta]] and prints the ledger tail partitions.
   *
-  * `SPARK_GRAFT_INC_MODE=delta` runs the [[CorpusSelectionDelta]]
-  * selection path instead of the per-batch full rebuild — the
-  * rehearsal that shows the selection chain's cycle wall dropping to
-  * batch-proportional; the equivalence check then compares the delta
-  * VIEWS against the full rebuild (packs content-equal, ids
-  * batch-sequential by design).
-  *
-  * `SPARK_GRAFT_INC_SNAPSHOT=N` (delta mode): roll the narrow op
-  * ledgers up once the unsnapshotted tail reaches N batches. Unset =
-  * the DAG default (ON at [[CorpusIncrementalDag.defaultSnapshotEvery]]);
-  * 0 = explicitly unbounded.
+  * `SPARK_GRAFT_INC_SNAPSHOT=N` (N ≥ 1): roll the narrow op ledgers up
+  * once the unsnapshotted tail reaches N batches. Unset = the DAG
+  * default ([[CorpusIncrementalDag.defaultSnapshotEvery]]).
   *
   * `SPARK_GRAFT_INC_CHECK=1`: after ALL cycles, run the full rebuild
-  * on the same corpus and diff the release layers/views.
+  * on the same corpus and diff the dedup layers and the delta VIEWS
+  * against it (packs content-equal, ids batch-sequential by design).
   * `SPARK_GRAFT_INC_CHECK=every` (the r16 soak posture): run that
   * diff after EVERY cycle, against a full rebuild of the corpus
   * bounded at the cycle's committed watermark (the bounded twin is
   * materialized per cycle — corpus-proportional, which is the point:
   * the check is the oracle, the delta run is the engine).
   *
-  * The scheduler branch (VERDICT r15 item 1): before each delta
-  * cycle, a standing rebuild flag ([[CorpusIncrementalDag
+  * The scheduler branch (VERDICT r15 item 1): before each cycle, a
+  * standing rebuild flag ([[CorpusIncrementalDag
   * .rebuildRequested]] — raised by the release policy on retractions
   * or dead-token debt) triggers [[CorpusIncrementalDag
   * .runCompaction]] INSTEAD of proceeding straight to the next
@@ -51,7 +46,7 @@ object RunIncremental {
     * from `corpusDir`. Symmetric exceptAll — both directions must be
     * empty. Returns the number of mismatched layers. */
   def equivalenceCheck(spark: SparkSession, corpusDir: String, root: String,
-                       fullRoot: String, delta: Boolean, tag: String): Int = {
+                       fullRoot: String, tag: String): Int = {
     val t0 = System.nanoTime()
     val rf = CorpusPipelineDag.run(spark, corpusDir, fullRoot)
     val okJobs = rf.count(_.status == graft.operators.JobGraph.Succeeded)
@@ -67,31 +62,19 @@ object RunIncremental {
     // committed-state read: out-of-band view consumers pass the
     // release watermark, never the in-flight MaxValue default
     val mark = CorpusIncrementalDag.releaseWatermark(li)
-    val layers: Seq[(String, () => org.apache.spark.sql.DataFrame, String, Seq[String])] =
-      if (delta) Seq(
-        ("flags", () => spark.read.parquet(li.flags), lf.flags,
-          Seq("doc_id", "lang", "source", "n_words", "r0", "r1", "r2", "r3")),
-        ("clean", () => spark.read.parquet(li.clean), lf.clean,
-          Seq("doc_id", "lang", "source", "n_paras", "n_kept", "text")),
-        ("selected(view)", () => graft.operators.CorpusSelectionDelta.selectedView(spark, dl, mark),
-          lf.selected, Seq("doc_id", "lang", "source", "quality_score", "n_words", "text")),
-        ("mixture(view)", () => graft.operators.CorpusSelectionDelta.mixtureView(spark, dl, mark),
-          lf.mixture, Seq("doc_id", "lang", "source", "n_words", "copy_id")),
-        ("export(view)", () => graft.operators.CorpusSelectionDelta.exportView(spark, dl, mark),
-          lf.export, Seq("doc_id", "copy_id", "lang", "source", "split", "n_words", "text")),
-        ("packs(content)", () => graft.operators.CorpusSelectionDelta.packsLive(spark, dl, mark),
-          lf.packs, Seq("doc_id", "copy_id", "source", "n_words")))
-      else Seq(
-        ("flags", () => spark.read.parquet(li.flags), lf.flags,
-          Seq("doc_id", "lang", "source", "n_words", "r0", "r1", "r2", "r3")),
-        ("clean", () => spark.read.parquet(li.clean), lf.clean,
-          Seq("doc_id", "lang", "source", "n_paras", "n_kept", "text")),
-        ("selected", () => spark.read.parquet(li.selected), lf.selected,
-          Seq("doc_id", "lang", "source", "quality_score", "n_words", "text")),
-        ("packs", () => spark.read.parquet(li.packs), lf.packs,
-          Seq("doc_id", "copy_id", "source", "n_words", "pack_id", "pack_offset")),
-        ("pack_payloads", () => spark.read.parquet(li.packPayloads), lf.packPayloads,
-          Seq("source", "pack_id", "n_docs", "n_tokens", "payload")))
+    val layers: Seq[(String, () => org.apache.spark.sql.DataFrame, String, Seq[String])] = Seq(
+      ("flags", () => spark.read.parquet(li.flags), lf.flags,
+        Seq("doc_id", "lang", "source", "n_words", "r0", "r1", "r2", "r3")),
+      ("clean", () => spark.read.parquet(li.clean), lf.clean,
+        Seq("doc_id", "lang", "source", "n_paras", "n_kept", "text")),
+      ("selected(view)", () => graft.operators.CorpusSelectionDelta.selectedView(spark, dl, mark),
+        lf.selected, Seq("doc_id", "lang", "source", "quality_score", "n_words", "text")),
+      ("mixture(view)", () => graft.operators.CorpusSelectionDelta.mixtureView(spark, dl, mark),
+        lf.mixture, Seq("doc_id", "lang", "source", "n_words", "copy_id")),
+      ("export(view)", () => graft.operators.CorpusSelectionDelta.exportView(spark, dl, mark),
+        lf.export, Seq("doc_id", "copy_id", "lang", "source", "split", "n_words", "text")),
+      ("packs(content)", () => graft.operators.CorpusSelectionDelta.packsLive(spark, dl, mark),
+        lf.packs, Seq("doc_id", "copy_id", "source", "n_words")))
     var bad = 0
     layers.foreach { case (name, incRead, fullPath, cols) =>
       val inc = incRead().select(cols.map(col): _*)
@@ -111,9 +94,7 @@ object RunIncremental {
     require(args.length >= 2, "usage: RunIncremental <sfDir> <root> [upTo...]")
     val sfDir = args(0)
     val root = args(1)
-    val delta = sys.env.get("SPARK_GRAFT_INC_MODE").contains("delta")
-    // unset = the DAG default (snapshots ON, VERDICT r16 item 5);
-    // "0" = explicitly unbounded (the DAG warns past the tail bound)
+    // unset = the DAG default cadence (VERDICT r16 item 5)
     val snapEvery = sys.env.get("SPARK_GRAFT_INC_SNAPSHOT").map(_.toInt)
       .getOrElse(CorpusIncrementalDag.defaultSnapshotEvery)
     // rehearsal knob: tighten the dead-token bound (permille) so the
@@ -127,7 +108,7 @@ object RunIncremental {
     val layout = CorpusIncrementalDag.Layout(root)
     var mismatches = 0
     bounds.zipWithIndex.foreach { case (upTo, i) =>
-      if (delta && CorpusIncrementalDag.rebuildRequested(spark, layout)) {
+      if (CorpusIncrementalDag.rebuildRequested(spark, layout)) {
         val t0 = System.nanoTime()
         val cr = CorpusIncrementalDag.runCompaction(spark, root)
         println(f"[cycle ${i + 1}] COMPACTION (rebuild flag standing) wall=${(System.nanoTime() - t0) / 1e9}%.1f s")
@@ -136,31 +117,27 @@ object RunIncremental {
         }
       }
       val t0 = System.nanoTime()
-      val reports =
-        if (delta) CorpusIncrementalDag.runDelta(spark, sfDir, root, upTo,
-          policy = policy, snapshotEvery = snapEvery)
-        else CorpusIncrementalDag.run(spark, sfDir, root, upTo)
+      val reports = CorpusIncrementalDag.run(spark, sfDir, root, upTo,
+        policy = policy, snapshotEvery = snapEvery)
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[cycle ${i + 1}] upTo=$upTo mode=${if (delta) "delta" else "rebuild"} wall=$wall%.1f s")
+      println(f"[cycle ${i + 1}] upTo=$upTo wall=$wall%.1f s")
       reports.foreach { r =>
         println(f"[cycle ${i + 1}]   ${r.id}%-22s ${r.status}%-12s ${r.millis / 1000.0}%8.2f s  metric=${r.metric}")
       }
-      if (delta) {
-        // the ledger-growth signal (VERDICT r15 item 2's rehearsal
-        // artifact): hive tail partitions per narrow ledger + whether
-        // a snapshot base is standing — with SPARK_GRAFT_INC_SNAPSHOT
-        // the tail stays bounded as cycles accumulate
-        val L = graft.operators.CorpusSelectionDelta.Layers.active(spark, root)
-        val counts = Seq("verdicts" -> L.verdicts, "mix" -> L.mixDelta,
-          "cells" -> L.cells, "heads" -> L.packHeads,
-          "packs" -> L.packsDelta, "index" -> L.docIndex).map { case (n, p) =>
-          val tail = graft.operators.CorpusSelectionDelta.tailPartitions(spark, p)
-          val snap = graft.operators.CorpusSelectionDelta.latestSnap(spark, p)
-            .map(sid => s"snap@$sid+").getOrElse("")
-          s"$n=$snap$tail"
-        }
-        println(s"[cycle ${i + 1}] ledger partitions: ${counts.mkString(" ")}")
+      // the ledger-growth signal (VERDICT r15 item 2's rehearsal
+      // artifact): hive tail partitions per narrow ledger + whether a
+      // snapshot base is standing — the snapshot cadence keeps the
+      // tail bounded as cycles accumulate
+      val L = graft.operators.CorpusSelectionDelta.Layers.active(spark, root)
+      val counts = Seq("verdicts" -> L.verdicts, "mix" -> L.mixDelta,
+        "cells" -> L.cells, "heads" -> L.packHeads,
+        "packs" -> L.packsDelta, "index" -> L.docIndex).map { case (n, p) =>
+        val tail = graft.operators.CorpusSelectionDelta.tailPartitions(spark, p)
+        val snap = graft.operators.CorpusSelectionDelta.latestSnap(spark, p)
+          .map(sid => s"snap@$sid+").getOrElse("")
+        s"$n=$snap$tail"
       }
+      println(s"[cycle ${i + 1}] ledger partitions: ${counts.mkString(" ")}")
       if (checkMode == "every") {
         // bounded twin corpus at this cycle's committed watermark:
         // the full rebuild must see exactly the docs the incremental
@@ -170,14 +147,14 @@ object RunIncremental {
         graft.Tables.documents(spark, sfDir).where(col("doc_id") <= mark)
           .write.mode("overwrite").parquet(s"$twinDir/documents.parquet")
         mismatches += equivalenceCheck(spark, twinDir, root, s"${root}_full",
-          delta, tag = s"check c${i + 1}")
+          tag = s"check c${i + 1}")
       }
     }
 
     // SPARK_GRAFT_INC_CHECK=1: one equivalence check at the end, over
     // the whole corpus
     if (checkMode == "1")
-      mismatches += equivalenceCheck(spark, sfDir, root, s"${root}_full", delta, tag = "check")
+      mismatches += equivalenceCheck(spark, sfDir, root, s"${root}_full", tag = "check")
     if (checkMode.nonEmpty)
       println(s"[check] TOTAL mismatched layers across checks: $mismatches" +
         (if (mismatches == 0) " — ALL OK" else " — FAILURES ABOVE"))

@@ -1,112 +1,63 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{CorpusIncrementalDag, CorpusPipelineDag, WatermarkStore}
+import org.apache.spark.sql.types.{LongType, StructType}
+import graft.operators.CorpusIncrementalDag
 import graft.operators.JobGraph.Succeeded
 
 /** Incremental corpus release (operators/CorpusIncrementalDag.scala):
-  * the watermark-gated daily-batch path. The headline contract is
-  * EQUIVALENCE — two incremental batches produce, layer by layer, the
-  * same release a full [[CorpusPipelineDag]] rebuild on the union
-  * produces (first-arrival = min-id; the retraction ledger is the
-  * documented divergence channel and must be EMPTY on this corpus) —
-  * plus restart convergence (rerun of an unadvanced batch overwrites
-  * its own partitions) and empty-batch no-op.
+  * the watermark-gated daily-batch path's dedup layers — the schema
+  * every standing read applies, torn-partition healing, and the Bloom
+  * gate and paragraph strip it builds on. Equivalence with the full
+  * [[CorpusPipelineDag]] rebuild, restart convergence and the
+  * empty-batch no-op are pinned in CorpusSelectionDeltaSpec.
   */
 class CorpusIncrementalDagSpec extends SparkSpec {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_cinc").toString
 
-  private def rows(path: String, cols: Seq[String]): Set[Seq[Any]] =
-    spark.read.parquet(path).select(cols.map(col): _*)
-      .collect().map(_.toSeq).toSet
-
-  test("two-batch incremental release == full rebuild on the union, ledger empty, restart converges") {
-    val docs = Tables.documents(spark, sf)
-    val ids = docs.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
-    val mid = ids(ids.length / 2)
-
-    val incRoot = tmp()
-    val li = CorpusIncrementalDag.Layout(incRoot)
-
-    // batch 1: everything up to mid (bootstrap against empty indexes)
-    val r1 = CorpusIncrementalDag.run(spark, sf, incRoot, upTo = mid)
-    assert(r1.forall(_.status == Succeeded), s"batch1: ${r1.map(r => r.id -> r.status)}")
-    assert(new WatermarkStore(li.marks, CorpusIncrementalDag.bootstrapMark)
-      .get(CorpusIncrementalDag.entity).trim.toLong == mid,
-      "watermark advanced to the batch max")
-
-    // batch 2: the rest
-    val r2 = CorpusIncrementalDag.run(spark, sf, incRoot)
-    assert(r2.forall(_.status == Succeeded), s"batch2: ${r2.map(r => r.id -> r.status)}")
-    assert(new WatermarkStore(li.marks, CorpusIncrementalDag.bootstrapMark)
-      .get(CorpusIncrementalDag.entity).trim.toLong == ids.last)
-
-    // the equivalence PRECONDITION, asserted so it can't silently rot:
-    // no batch-2 doc bridged two standing components (if this corpus
-    // ever does, the contract is the ledger, not bit-equality)
-    assert(spark.read.parquet(li.retractions).isEmpty,
-      "spec corpus must produce no retractions — bridge merges break bit-equality by design")
-
-    // full rebuild on the whole corpus
-    val fullRoot = tmp()
-    val lf = CorpusPipelineDag.Layout(fullRoot)
-    val rf = CorpusPipelineDag.run(spark, sf, fullRoot)
-    assert(rf.forall(_.status == Succeeded), s"full: ${rf.map(r => r.id -> r.status)}")
-
-    // layer-by-layer equality (incremental layers carry an extra
-    // `batch` partition column; compare the data columns)
-    val flagsCols = Seq("doc_id", "lang", "source", "n_words", "r0", "r1", "r2", "r3")
-    val fi = rows(li.flags, flagsCols); val ff = rows(lf.flags, flagsCols)
-    assert(fi == ff,
-      s"flags layer: inc-only=${(fi -- ff).toSeq.sortBy(_.head.toString).take(6)} " +
-        s"full-only=${(ff -- fi).toSeq.sortBy(_.head.toString).take(6)}")
-    val pairCols = Seq("doc1", "doc2", "jaccard_pct")
-    assert(rows(li.pairs, pairCols) == rows(lf.pairs, pairCols), "near-dup pair set")
-    val keepCols = Seq("doc_id", "lang", "source", "n_words")
-    assert(rows(li.keep, keepCols) == rows(lf.keep, keepCols), "keep layer")
-    val cleanCols = Seq("doc_id", "lang", "source", "n_paras", "n_kept", "text")
-    assert(rows(li.clean, cleanCols) == rows(lf.clean, cleanCols), "clean layer")
-    val selCols = Seq("doc_id", "lang", "source", "quality_score", "n_words", "text")
-    assert(rows(li.selected, selCols) == rows(lf.selected, selCols), "selected layer")
-    val mixCols = Seq("doc_id", "lang", "source", "n_words", "copy_id")
-    assert(rows(li.mixture, mixCols) == rows(lf.mixture, mixCols), "mixture layer")
-    val splitCols = mixCols :+ "split"
-    assert(rows(li.splits, splitCols) == rows(lf.splits, splitCols), "splits layer")
-    val packCols = Seq("doc_id", "copy_id", "source", "n_words", "pack_id", "pack_offset")
-    assert(rows(li.packs, packCols) == rows(lf.packs, packCols), "packs layer")
-    val exCols = Seq("doc_id", "copy_id", "lang", "source", "split", "n_words", "text")
-    assert(rows(li.export, exCols) == rows(lf.export, exCols), "export layer")
-    val ppCols = Seq("source", "pack_id", "n_docs", "n_tokens", "payload")
-    assert(rows(li.packPayloads, ppCols) == rows(lf.packPayloads, ppCols), "pack payload layer")
-
-    // RESTART: reset the watermark to mid (simulates a crash anywhere
-    // before advance_watermark) and rerun — batch 2 reprocesses into
-    // its own partitions and every layer converges bit-identically
-    new WatermarkStore(li.marks, CorpusIncrementalDag.bootstrapMark)
-      .update(CorpusIncrementalDag.entity, CorpusIncrementalDag.pad(mid))
-    val r2b = CorpusIncrementalDag.run(spark, sf, incRoot)
-    assert(r2b.forall(_.status == Succeeded), s"rerun: ${r2b.map(r => r.id -> r.status)}")
-    assert(rows(li.clean, cleanCols) == rows(lf.clean, cleanCols), "clean after rerun")
-    assert(rows(li.packs, packCols) == rows(lf.packs, packCols), "packs after rerun")
-    assert(rows(li.flags, flagsCols) == rows(lf.flags, flagsCols), "flags after rerun")
-
-    // EMPTY BATCH: nothing new — every stage succeeds as a no-op, the
-    // watermark stays, the release layers are unchanged
-    val r3 = CorpusIncrementalDag.run(spark, sf, incRoot)
-    assert(r3.forall(_.status == Succeeded), s"empty: ${r3.map(r => r.id -> r.status)}")
-    assert(r3.find(_.id == "watermark_batch").get.metric == 0L, "empty batch detected")
-    // an empty batch must SKIP the corpus-scale selection rebuild
-    // (metric 0 = stage body short-circuited), not rerun it
-    Seq("token_budget", "mix_materialize", "train_split", "seq_pack",
-      "export_release", "pack_payloads").foreach { id =>
-      assert(r3.find(_.id == id).get.metric == 0L, s"$id must no-op on an empty batch")
+  test("standing-read DDLs equal the dedup layers as written, batch column included") {
+    import spark.implicits._
+    // the bridge corpus (ReleasePolicySpec): batch 2's doc 3 near-dups
+    // both standing keepers, so every dedup layer, the retraction
+    // ledger included, holds rows after two batches
+    def slice(lo: Int, hi: Int): String =
+      (lo until hi).map(i => if (i % 2 == 0) "the" else s"tok${i / 2}").mkString(" ")
+    val corpusDir = tmp()
+    Seq((1L, "en", "s1", slice(0, 100)), (2L, "en", "s1", slice(50, 150)),
+      (3L, "en", "s1", slice(25, 125)))
+      .toDF("doc_id", "lang", "source", "text")
+      .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
+    val root = tmp()
+    val li = CorpusIncrementalDag.Layout(root)
+    Seq(2L, Long.MaxValue).foreach { upTo =>
+      val r = CorpusIncrementalDag.run(spark, corpusDir, root, upTo = upTo)
+      assert(r.forall(_.status == Succeeded), s"upTo=$upTo: ${r.map(x => x.id -> x.status)}")
     }
-    assert(new WatermarkStore(li.marks, CorpusIncrementalDag.bootstrapMark)
-      .get(CorpusIncrementalDag.entity).trim.toLong == ids.last, "watermark unchanged")
-    assert(rows(li.clean, cleanCols) == rows(lf.clean, cleanCols), "clean unchanged")
-    assert(rows(li.packs, packCols) == rows(lf.packs, packCols), "packs unchanged")
+
+    // DDL field types vs each written partition's file schema (a
+    // partition dir read alone carries no `batch` column); nullability
+    // is not compared — a file source reads every column nullable
+    def fields(st: StructType): Seq[(String, String)] =
+      st.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
+    Seq(
+      li.sigs -> CorpusIncrementalDag.sigDdl,
+      li.keep -> CorpusIncrementalDag.keepDdl,
+      li.retractions -> CorpusIncrementalDag.retractionDdl,
+      li.textHashes -> CorpusIncrementalDag.textHashDdl,
+      li.paraHashes -> CorpusIncrementalDag.paraHashDdl
+    ).foreach { case (path, ddl) =>
+      val declared = StructType.fromDDL(ddl)
+      assert(declared.lastOption.map(f => f.name -> f.dataType) == Some("batch" -> LongType),
+        s"$path: the DDL must end with the `batch BIGINT` partition column: $ddl")
+      val parts = Seq(2L, 3L).map(b => s"$path/batch=$b")
+      assert(parts.map(p => spark.read.parquet(p).count()).sum > 0L, s"$path holds rows")
+      parts.foreach { p =>
+        assert(fields(spark.read.parquet(p).schema) == fields(declared).dropRight(1),
+          s"$p: written ${spark.read.parquet(p).schema.toDDL} vs declared $ddl")
+      }
+    }
   }
 
   test("torn partition from a crashed wider-upTo attempt is healed before the narrower rerun") {

@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions._
 import graft.operators.{CorpusIncrementalDag, CorpusPipelineDag, CorpusSelectionDelta, WatermarkStore}
 import graft.operators.JobGraph.Succeeded
 
-/** Delta selection refresh (operators/CorpusSelectionDelta.scala): the
-  * batch-proportional release path. Headline contract — after N
-  * incremental delta cycles, the materialized views (selected /
-  * mixture / splits / export) equal a full [[CorpusPipelineDag]]
-  * rebuild on the union EXACTLY, and the pack/payload delta shards
-  * are content-equal (same packed copies, same token mass, in-range
-  * offsets; pack-id numbering is batch-sequential by design). Plus
-  * restart convergence and empty-batch no-op, like the rebuild mode.
+/** The incremental corpus release (operators/CorpusIncrementalDag.scala)
+  * and its delta selection refresh (operators/CorpusSelectionDelta.scala):
+  * the batch-proportional release path. Headline contract — after N
+  * incremental cycles, the dedup layers (flags / pairs / keep / clean)
+  * and the materialized views (selected / mixture / splits / export)
+  * equal a full [[CorpusPipelineDag]] rebuild on the union EXACTLY,
+  * and the pack/payload delta shards are content-equal (same packed
+  * copies, same token mass, in-range offsets; pack-id numbering is
+  * batch-sequential by design). Plus restart convergence and
+  * empty-batch no-op.
   */
 class CorpusSelectionDeltaSpec extends SparkSpec {
 
@@ -36,11 +38,20 @@ class CorpusSelectionDeltaSpec extends SparkSpec {
     val L = CorpusSelectionDelta.Layers(root)
     val li = CorpusIncrementalDag.Layout(root)
     Seq(Some(b1), Some(b2), None).zipWithIndex.foreach { case (upTo, i) =>
-      val r = CorpusIncrementalDag.runDelta(spark, sf, root,
+      val r = CorpusIncrementalDag.run(spark, sf, root,
         upTo = upTo.getOrElse(Long.MaxValue))
       assert(r.forall(_.status == Succeeded),
         s"cycle ${i + 1}: ${r.filterNot(_.status == Succeeded).map(x => x.id -> x.status)}")
     }
+    val watermark = new WatermarkStore(li.marks, CorpusIncrementalDag.bootstrapMark)
+    assert(watermark.get(CorpusIncrementalDag.entity).trim.toLong == ids.last,
+      "watermark advanced to the last batch max")
+
+    // the equivalence PRECONDITION, asserted so it can't silently rot:
+    // no later-batch doc bridged two standing components (if this
+    // corpus ever does, the contract is the ledger, not bit-equality)
+    assert(spark.read.parquet(li.retractions).isEmpty,
+      "spec corpus must produce no retractions — bridge merges break bit-equality by design")
 
     // (on this natural corpus the cut barely moves — adds-only; the
     // eviction/re-admit branches are driven by the engineered-corpus
@@ -49,6 +60,20 @@ class CorpusSelectionDeltaSpec extends SparkSpec {
     val lf = CorpusPipelineDag.Layout(fullRoot)
     val rf = CorpusPipelineDag.run(spark, sf, fullRoot)
     assert(rf.forall(_.status == Succeeded), s"full: ${rf.map(r => r.id -> r.status)}")
+
+    // EXACT dedup-layer equality (the incremental layers carry an
+    // extra `batch` partition column; compare the data columns)
+    def layer(path: String, cols: Seq[String]) = rows(spark.read.parquet(path), cols)
+    val flagsCols = Seq("doc_id", "lang", "source", "n_words", "r0", "r1", "r2", "r3")
+    val fi = layer(li.flags, flagsCols); val ff = layer(lf.flags, flagsCols)
+    assert(fi == ff, s"flags layer: ${diff(fi, ff)}")
+    val pairCols = Seq("doc1", "doc2", "jaccard_pct")
+    assert(layer(li.pairs, pairCols) == layer(lf.pairs, pairCols), "near-dup pair set")
+    val keepCols = Seq("doc_id", "lang", "source", "n_words")
+    assert(layer(li.keep, keepCols) == layer(lf.keep, keepCols), "keep layer")
+    val cleanCols = Seq("doc_id", "lang", "source", "n_paras", "n_kept", "text")
+    val cf = layer(lf.clean, cleanCols)
+    assert(layer(li.clean, cleanCols) == cf, "clean layer")
 
     // EXACT view equality
     val selCols = Seq("doc_id", "lang", "source", "quality_score", "n_words", "text")
@@ -122,10 +147,11 @@ class CorpusSelectionDeltaSpec extends SparkSpec {
     // RESTART: reset the watermark to b2 (crash before advance) and
     // rerun — the final cycle recomputes into its own partitions and
     // every view converges to the same full-rebuild equality
-    new WatermarkStore(li.marks, CorpusIncrementalDag.bootstrapMark)
-      .update(CorpusIncrementalDag.entity, CorpusIncrementalDag.pad(b2))
-    val rb = CorpusIncrementalDag.runDelta(spark, sf, root)
+    watermark.update(CorpusIncrementalDag.entity, CorpusIncrementalDag.pad(b2))
+    val rb = CorpusIncrementalDag.run(spark, sf, root)
     assert(rb.forall(_.status == Succeeded), s"rerun: ${rb.map(r => r.id -> r.status)}")
+    assert(layer(li.flags, flagsCols) == ff, "flags after rerun")
+    assert(layer(li.clean, cleanCols) == cf, "clean after rerun")
     assert(rows(CorpusSelectionDelta.selectedView(spark, L), selCols) == sf_,
       "selected view after rerun")
     assert(rows(CorpusSelectionDelta.mixtureView(spark, L), mixCols) == mf,
@@ -135,15 +161,22 @@ class CorpusSelectionDeltaSpec extends SparkSpec {
     assert(rows(CorpusSelectionDelta.exportView(spark, L), exCols) == ef,
       "export view after rerun")
 
-    // EMPTY batch: every delta stage no-ops, views unchanged
-    val re = CorpusIncrementalDag.runDelta(spark, sf, root)
+    // EMPTY batch: every stage no-ops, the watermark stays, layers and
+    // views unchanged
+    val re = CorpusIncrementalDag.run(spark, sf, root)
     assert(re.forall(_.status == Succeeded), s"empty: ${re.map(r => r.id -> r.status)}")
-    Seq("sel_index", "sel_delta", "sel_texts", "mix_delta", "pack_delta",
-      "export_delta", "payload_delta", "release_policy").foreach { id =>
+    assert(re.find(_.id == "watermark_batch").get.metric == 0L, "empty batch detected")
+    Seq("batch_flags", "paragraph_strip", "sel_index", "sel_delta", "sel_texts",
+      "mix_delta", "pack_delta", "export_delta", "payload_delta", "release_policy").foreach { id =>
       assert(re.find(_.id == id).get.metric == 0L, s"$id must no-op on an empty batch")
     }
+    assert(watermark.get(CorpusIncrementalDag.entity).trim.toLong == ids.last,
+      "watermark unchanged")
+    assert(layer(li.clean, cleanCols) == cf, "clean unchanged by the empty batch")
     assert(rows(CorpusSelectionDelta.selectedView(spark, L), selCols) == sf_,
       "selected view unchanged by the empty batch")
+    assert(rows(CorpusSelectionDelta.packsLive(spark, L), liveCols) == lfp,
+      "live packs unchanged by the empty batch")
 
     // no rebuild flag on this corpus (no retractions, dead tokens
     // under the default 10% bound)
@@ -173,7 +206,7 @@ class CorpusSelectionDeltaSpec extends SparkSpec {
     val root = tmp()
     val L = CorpusSelectionDelta.Layers(root)
     val li = CorpusIncrementalDag.Layout(root)
-    def cycle(upTo: Long) = CorpusIncrementalDag.runDelta(
+    def cycle(upTo: Long) = CorpusIncrementalDag.run(
       spark, corpusDir, root, upTo = upTo, snapshotEvery = 2)
     Seq(40L, 140L).foreach { upTo =>
       val r = cycle(upTo)
@@ -256,7 +289,7 @@ class CorpusSelectionDeltaSpec extends SparkSpec {
     val root = tmp()
     val L = CorpusSelectionDelta.Layers(root)
     Seq(40L, 140L, 320L, Long.MaxValue).zipWithIndex.foreach { case (upTo, i) =>
-      val r = CorpusIncrementalDag.runDelta(spark, corpusDir, root, upTo = upTo)
+      val r = CorpusIncrementalDag.run(spark, corpusDir, root, upTo = upTo)
       assert(r.forall(_.status == Succeeded),
         s"cycle ${i + 1}: ${r.filterNot(_.status == Succeeded).map(x => x.id -> x.status)}")
       if (i == 3) assert(r.find(_.id == "payload_delta").get.metric == 0L,
@@ -310,41 +343,14 @@ class CorpusSelectionDeltaSpec extends SparkSpec {
     assert(lv == lfp, s"live packs (churned corpus): ${diff(lv, lfp)}")
   }
 
-  test("snapshot cadence defaults ON; the explicit-off mode warns past the tail bound (VERDICT r16 item 5)") {
-    // unbounded ledgers must be the explicit choice, not the default
+  test("snapshot cadence defaults ON and a cadence below one is rejected") {
     assert(CorpusIncrementalDag.defaultSnapshotEvery > 0,
-      "delta-mode ledger snapshots must default ON")
-    // the warning fires exactly when snapshots are off AND the tail
-    // passed the bound — never in cadenced mode, never under it
-    import CorpusIncrementalDag.{tailWarnBound, tailWarning}
-    assert(tailWarning(tailWarnBound - 1, 0).isEmpty, "below the bound: quiet")
-    assert(tailWarning(tailWarnBound, 0).nonEmpty, "at the bound, snapshots off: warn")
-    assert(tailWarning(tailWarnBound * 4, 0).exists(_.contains("snapshots are OFF")),
-      "deep tail: warn names the cause")
-    assert(tailWarning(tailWarnBound * 4, CorpusIncrementalDag.defaultSnapshotEvery).isEmpty,
-      "cadenced mode never warns (the roll-up is the fix, not the message)")
-  }
-
-  test("legacy compaction floor (pre-generation snap marker) still throws on below-floor export reads") {
-    import spark.implicits._
-    // a root compacted by the PRE-generation code: export history
-    // rebased into a batch=mark base, floor recorded ONLY as a
-    // metadata snap dir (export_delta__snap/snap=mark) — no
-    // _COMPACTION_FLOOR file, no _SEL_CURRENT pointer. The upgraded
-    // reader must keep refusing below-floor reads (review r17).
-    val root = tmp()
-    val L = CorpusSelectionDelta.Layers(root)
-    val mark = 50L
-    Seq((1L, 0L, "en", "s1", "train", 3L, "a b c"))
-      .toDF("doc_id", "copy_id", "lang", "source", "split", "n_words", "text")
-      .write.parquet(s"${L.exportDelta}/batch=$mark")
-    Seq(mark).toDF("mark").coalesce(1).write
-      .parquet(s"${CorpusSelectionDelta.snapRoot(L.exportDelta)}/snap=$mark")
-    val ex = intercept[IllegalStateException] {
-      CorpusSelectionDelta.exportView(spark, L, upTo = mark - 10L)
+      "ledger snapshots must default ON")
+    // there is no snapshots-off mode: unbounded ledgers grow one
+    // partition per ingest day, forever
+    val ex = intercept[IllegalArgumentException] {
+      CorpusIncrementalDag.build(spark, sf, CorpusIncrementalDag.Layout(tmp()), snapshotEvery = 0)
     }
-    assert(ex.getMessage.contains("compaction floor"), ex.getMessage)
-    // at-or-above the floor still reads the base fine
-    assert(CorpusSelectionDelta.exportView(spark, L, upTo = mark).count() == 1L)
+    assert(ex.getMessage.contains("snapshotEvery"), ex.getMessage)
   }
 }

@@ -31,7 +31,7 @@ class OptionGuardSpec extends AnyFunSuite {
     // the Bench/Verify entry-point contract
     val contract = Set("SF_DIR", "CPUS", "BENCH_RUNS", "ONLY", "CAL_EVERY", "BENCH_OUT", "ROUND")
     // tools.RunIncremental's own run-mode knobs
-    val incrementalDriver = Set("INC_MODE", "INC_SNAPSHOT", "INC_DEAD_PERMILLE", "INC_CHECK")
+    val incrementalDriver = Set("INC_SNAPSHOT", "INC_DEAD_PERMILLE", "INC_CHECK")
     val names = readLiterals("\"SPARK_GRAFT_([A-Z0-9_]*)\"".r)
     assert(names == contract ++ incrementalDriver,
       s"unexpected: ${names -- contract -- incrementalDriver}; " +

@@ -19,7 +19,7 @@ class ProfileSpec extends SparkSpec {
     assert((a.executions.size, a.jobs, a.stages, a.tasks) == ((1, 2, 2, 5)), a)
     assert(a.shuffleWriteBytes > 0 && a.shuffleReadBytes == a.shuffleWriteBytes, a)
     assert(a.maxTaskMs >= a.p50TaskMs && a.taskMs >= 0, a)
-    assert(profile.build == Profile.Phase(profile.build.ms, Nil, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0))
+    assert(profile.build == Profile.Phase(profile.build.ms, Nil, 0, 0, 0, 0, 0, 0, 0, 0, 0))
   }
 
   test("a lazy frame builds with no execution; a builder that counts shows one") {

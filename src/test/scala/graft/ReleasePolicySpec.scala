@@ -10,8 +10,7 @@ import graft.operators.JobGraph.Succeeded
   *   1. a BRIDGE batch (a new doc near-dups two standing keepers that
   *      aren't near-dups of each other) produces a retraction ledger
   *      row AND raises the rebuild flag;
-  *   2. on the delta selection path, evicted train copies accumulate
-  *      dead tokens inside standing pack shards; past the bound the
+  *   2. evicted train copies accumulate dead tokens inside standing pack shards; past the bound the
   *      flag fires (exercised with bound 0 so any eviction trips it),
   *      and the export tombstones are visible to a release reader.
   */
@@ -74,9 +73,9 @@ class ReleasePolicySpec extends SparkSpec {
     val li = CorpusIncrementalDag.Layout(root)
     val L = CorpusSelectionDelta.Layers(root)
     val policy = CorpusIncrementalDag.ReleasePolicy(maxDeadTokenPermille = 0L)
-    val r1 = CorpusIncrementalDag.runDelta(spark, sf, root, upTo = mid, policy = policy)
+    val r1 = CorpusIncrementalDag.run(spark, sf, root, upTo = mid, policy = policy)
     assert(r1.forall(_.status == Succeeded), s"batch1: ${r1.map(r => r.id -> r.status)}")
-    val r2 = CorpusIncrementalDag.runDelta(spark, sf, root, policy = policy)
+    val r2 = CorpusIncrementalDag.run(spark, sf, root, policy = policy)
     assert(r2.forall(_.status == Succeeded), s"batch2: ${r2.map(r => r.id -> r.status)}")
 
     // batch 2 must evict standing train copies on this corpus
@@ -129,7 +128,7 @@ class ReleasePolicySpec extends SparkSpec {
     val L = CorpusSelectionDelta.Layers(root)
     val policy = CorpusIncrementalDag.ReleasePolicy(maxDeadTokenPermille = 0L)
     Seq(40L, 140L).foreach { upTo =>
-      val r = CorpusIncrementalDag.runDelta(spark, corpusDir, root, upTo = upTo, policy = policy)
+      val r = CorpusIncrementalDag.run(spark, corpusDir, root, upTo = upTo, policy = policy)
       assert(r.forall(_.status == Succeeded), s"upTo=$upTo: ${r.map(x => x.id -> x.status)}")
     }
     assert(spark.read.parquet(L.packTombs).count() > 0, "batch 2 must tombstone train copies")
@@ -227,7 +226,7 @@ class ReleasePolicySpec extends SparkSpec {
 
     // the NEXT delta batch resumes on the compacted base, and the
     // equivalence contract still holds on the union
-    val r3 = CorpusIncrementalDag.runDelta(spark, corpusDir, root, policy = policy)
+    val r3 = CorpusIncrementalDag.run(spark, corpusDir, root, policy = policy)
     assert(r3.forall(_.status == Succeeded), s"batch 3: ${r3.map(x => x.id -> x.status)}")
     val fullAll = tmp()
     val lfAll = CorpusPipelineDag.Layout(fullAll)

@@ -128,38 +128,6 @@ class CorpusStreamSpec extends SparkSpec {
     docs.unpersist()
   }
 
-  test("legacy pair layer (pre-verdict-ledger, no pass column) resumes: old pairs stay passing, none re-verified") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_cstream_legacy").toString
-    val layout = CorpusStream.Layout(root)
-    // accumulated state from an OLD-version stream: 2 near-dup docs +
-    // 1 distinct, their candidate, and a cycle-1 pair layer in the
-    // legacy schema (passing pairs only, no `pass` column)
-    Seq((1L, "en", "s1", "a b c d e"), (2L, "en", "s1", "a b c d e"),
-      (3L, "en", "s1", "x y z w v"))
-      .toDF("doc_id", "lang", "source", "text")
-      .write.parquet(s"${layout.admitted}/batch_v0")
-    Seq((2L, 1L, 0)).toDF("doc_id", "prior_doc_id", "band")
-      .write.parquet(s"${layout.candidates}/batch_v0")
-    Seq((1L, 2L, 100L)).toDF("doc1", "doc2", "jaccard_pct")
-      .write.parquet(s"${layout.pairs}/cycle=1")
-    Seq((1L, "en", "s1", "a b c d e"), (3L, "en", "s1", "x y z w v"))
-      .toDF("doc_id", "lang", "source", "text")
-      .write.parquet(s"${layout.keep}/cycle=1")
-
-    // the new version's cycle 2 must read the legacy layer: the old
-    // pair is already-verified (not re-paid) AND still a passing edge
-    // (null pass = the old passing-pairs contract), so doc 2 stays
-    // dropped instead of resurfacing as a keeper
-    val kept = CorpusStream.materializeKeep(spark, layout, 2L)
-    assert(kept == 0L, "no new keepers: 1 and 3 already kept, 2 stays dropped")
-    assert(spark.read.parquet(s"${layout.pairs}/cycle=2").isEmpty,
-      "the legacy pair must not be re-verified into cycle 2")
-    val keepIds = spark.read.parquet(s"${layout.keep}/cycle=*")
-      .select("doc_id").as[Long].collect().toSet
-    assert(keepIds == Set(1L, 3L), s"doc 2 must remain dropped, got $keepIds")
-  }
-
   test("export step skips a no-change cycle via the cell digest; recuts when the ledger moved or on same-cycle rerun") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_cstream_skip").toString
