@@ -1,21 +1,111 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
-import graft.operators.CorpusIncrementalDag
+import graft.operators.{CorpusIncrementalDag, CorpusPipelineDag, CorpusSelectionDelta, WatermarkStore}
 import graft.operators.JobGraph.Succeeded
 
 /** Incremental corpus release (operators/CorpusIncrementalDag.scala):
-  * the watermark-gated daily-batch path's dedup layers — the schema
-  * every standing read applies, torn-partition healing, and the Bloom
-  * gate and paragraph strip it builds on. Equivalence with the full
-  * [[CorpusPipelineDag]] rebuild, restart convergence and the
-  * empty-batch no-op are pinned in CorpusSelectionDeltaSpec.
+  * the watermark-gated daily-batch path's dedup layers — two-batch
+  * equivalence with the full [[CorpusPipelineDag]] rebuild and restart
+  * convergence, the schema every standing read applies, torn-partition
+  * healing, and the Bloom gate and paragraph strip it builds on. The
+  * three-batch case, the pack payload shards and the empty-batch no-op
+  * are pinned in CorpusSelectionDeltaSpec.
   */
 class CorpusIncrementalDagSpec extends SparkSpec {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_cinc").toString
+
+  private def rows(df: DataFrame, cols: Seq[String]): Set[Seq[Any]] =
+    df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+
+  test("two-batch incremental release == full rebuild on the union, ledger empty, restart converges") {
+    val docs = Tables.documents(spark, sf)
+    val ids = docs.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
+    val mid = ids(ids.length / 2)
+
+    val incRoot = tmp()
+    val li = CorpusIncrementalDag.Layout(incRoot)
+    val L = CorpusSelectionDelta.Layers(incRoot)
+    val watermark = new WatermarkStore(li.marks, CorpusIncrementalDag.bootstrapMark)
+
+    // batch 1: everything up to mid (bootstrap against empty indexes)
+    val r1 = CorpusIncrementalDag.run(spark, sf, incRoot, upTo = mid)
+    assert(r1.forall(_.status == Succeeded), s"batch1: ${r1.map(r => r.id -> r.status)}")
+    assert(watermark.get(CorpusIncrementalDag.entity).trim.toLong == mid,
+      "watermark advanced to the batch max")
+
+    // batch 2: the rest
+    val r2 = CorpusIncrementalDag.run(spark, sf, incRoot)
+    assert(r2.forall(_.status == Succeeded), s"batch2: ${r2.map(r => r.id -> r.status)}")
+    assert(watermark.get(CorpusIncrementalDag.entity).trim.toLong == ids.last)
+
+    // the equivalence PRECONDITION: no batch-2 doc bridged two standing
+    // components (if this corpus ever does, the contract is the
+    // retraction ledger, not bit-equality)
+    assert(spark.read.parquet(li.retractions).isEmpty,
+      "spec corpus must produce no retractions — bridge merges break bit-equality by design")
+
+    // full rebuild on the whole corpus
+    val fullRoot = tmp()
+    val lf = CorpusPipelineDag.Layout(fullRoot)
+    val rf = CorpusPipelineDag.run(spark, sf, fullRoot)
+    assert(rf.forall(_.status == Succeeded), s"full: ${rf.map(r => r.id -> r.status)}")
+
+    // dedup layers: exact equality on the data columns (the
+    // incremental layers carry an extra `batch` partition column)
+    def layer(path: String, cols: Seq[String]) = rows(spark.read.parquet(path), cols)
+    val flagsCols = Seq("doc_id", "lang", "source", "n_words", "r0", "r1", "r2", "r3")
+    val fi = layer(li.flags, flagsCols); val ff = layer(lf.flags, flagsCols)
+    assert(fi == ff,
+      s"flags layer: inc-only=${(fi -- ff).toSeq.sortBy(_.head.toString).take(6)} " +
+        s"full-only=${(ff -- fi).toSeq.sortBy(_.head.toString).take(6)}")
+    val pairCols = Seq("doc1", "doc2", "jaccard_pct")
+    assert(layer(li.pairs, pairCols) == layer(lf.pairs, pairCols), "near-dup pair set")
+    val keepCols = Seq("doc_id", "lang", "source", "n_words")
+    assert(layer(li.keep, keepCols) == layer(lf.keep, keepCols), "keep layer")
+    val cleanCols = Seq("doc_id", "lang", "source", "n_paras", "n_kept", "text")
+    val cf = layer(lf.clean, cleanCols)
+    assert(layer(li.clean, cleanCols) == cf, "clean layer")
+
+    // release views: exact equality; packs: content equality (pack ids
+    // are batch-sequential by design)
+    val selCols = Seq("doc_id", "lang", "source", "quality_score", "n_words", "text")
+    val sf_ = layer(lf.selected, selCols)
+    assert(rows(CorpusSelectionDelta.selectedView(spark, L), selCols) == sf_, "selected view")
+    val mixCols = Seq("doc_id", "lang", "source", "n_words", "copy_id")
+    assert(rows(CorpusSelectionDelta.mixtureView(spark, L), mixCols) ==
+      layer(lf.mixture, mixCols), "mixture view")
+    val splitCols = mixCols :+ "split"
+    assert(rows(CorpusSelectionDelta.splitsView(spark, L), splitCols) ==
+      layer(lf.splits, splitCols), "splits view")
+    val exCols = Seq("doc_id", "copy_id", "lang", "source", "split", "n_words", "text")
+    val ef = layer(lf.export, exCols)
+    assert(rows(CorpusSelectionDelta.exportView(spark, L), exCols) == ef, "export view")
+    val liveCols = Seq("doc_id", "copy_id", "source", "n_words")
+    val lfp = layer(lf.packs, liveCols)
+    assert(rows(CorpusSelectionDelta.packsLive(spark, L), liveCols) == lfp, "live packed copies")
+
+    // RESTART: reset the watermark to mid (simulates a crash anywhere
+    // before advance_watermark) and rerun — batch 2 reprocesses into
+    // its own partitions and every layer converges to the same release
+    watermark.update(CorpusIncrementalDag.entity, CorpusIncrementalDag.pad(mid))
+    val r2b = CorpusIncrementalDag.run(spark, sf, incRoot)
+    assert(r2b.forall(_.status == Succeeded), s"rerun: ${r2b.map(r => r.id -> r.status)}")
+    assert(watermark.get(CorpusIncrementalDag.entity).trim.toLong == ids.last,
+      "watermark re-advanced by the rerun")
+    assert(layer(li.flags, flagsCols) == ff, "flags after rerun")
+    assert(layer(li.clean, cleanCols) == cf, "clean after rerun")
+    assert(rows(CorpusSelectionDelta.selectedView(spark, L), selCols) == sf_,
+      "selected view after rerun")
+    assert(rows(CorpusSelectionDelta.exportView(spark, L), exCols) == ef,
+      "export view after rerun")
+    assert(rows(CorpusSelectionDelta.packsLive(spark, L), liveCols) == lfp,
+      "live packs after rerun")
+  }
 
   test("standing-read DDLs equal the dedup layers as written, batch column included") {
     import spark.implicits._
