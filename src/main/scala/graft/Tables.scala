@@ -1,14 +1,24 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftPlans, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver's TPC-H-ish parquet testdata.
+/** Loaders for the driver's TPC-H-ish parquet testdata, and [[read]],
+  * the one parquet reader of every batch table and layer read.
   *
-  * Every loader is a bare parquet scan: no caching, no collect —
-  * Catalyst prunes columns and pushes filters into the scan, which is
-  * the property that matters at 100 TB (a 2-column projection must
-  * read 2 columns).
+  * Rows are never cached and nothing is collect()ed — Catalyst prunes
+  * columns and pushes filters into the scan, which is the property
+  * that matters at 100 TB (a 2-column projection must read 2 columns).
+  * What [[read]] remembers is each path's SCHEMA: an inferred read runs
+  * a one-task Spark job over a footer while the frame is built (~100 ms
+  * against ~10 ms with a supplied schema). The memo key is the
+  * session's SQL confs (`nanosAsLong` decides the stored type of
+  * `events.ts`), the path, and the name, length and modification time
+  * of what one listing finds there, so a regenerated file or an
+  * overwritten layer is inferred again.
+  * [[graft.operators.LayerIO.write]] primes it with each written layer.
   *
   * The testdata ships one unsplittable row group per table, so a bare
   * fact scan runs in ONE task. Whether that scan gets a round-robin
@@ -22,7 +32,38 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  private type Key = (Map[String, String], String, Seq[(String, Long, Long)])
+  /** Least recently used first, bounded: every DAG run writes new paths. */
+  private val schemas = new java.util.LinkedHashMap[Key, StructType](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, StructType]): Boolean = size > 512
+  }
+
+  private def keyOf(s: SparkSession, path: String): Key = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(p)
+    val entries = if (!st.isDirectory) Array(st) else fs.listStatus(p) // without what Spark skips
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+    (s.conf.getAll, path, entries.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq.sorted)
+  }
+
+  /** The parquet read of a file or layer directory: inferred the first
+    * time, with the remembered schema after that. */
+  def read(s: SparkSession, path: String): DataFrame = {
+    val key = keyOf(s, path)
+    Option(schemas.synchronized(schemas.get(key))).fold {
+      val df = s.read.parquet(path)
+      schemas.synchronized(schemas.put(key, df.schema))
+      df
+    }(s.read.schema(_).parquet(path))
+  }
+
+  /** Remember a layer just written at `path` from the writing frame's
+    * schema, made nullable as the file reader makes it. */
+  private[graft] def remember(s: SparkSession, path: String, written: StructType): Unit =
+    schemas.synchronized(schemas.put(keyOf(s, path), GraftPlans.asNullable(written)))
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

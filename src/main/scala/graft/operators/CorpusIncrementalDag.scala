@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueriesText, Tables}
 import graft.text.{BloomDedup, DedupOps}
+import LayerIO.write
 
 /** INCREMENTAL corpus release — the daily-batch posture the sales side
   * has had since round 6 (watermark incremental + MedallionStream; the
@@ -137,7 +138,7 @@ object CorpusIncrementalDag {
   def rebuildRequested(s: SparkSession, layout: Layout): Boolean = {
     val p = new org.apache.hadoop.fs.Path(layout.rebuildFlag)
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.exists(p) && !s.read.parquet(layout.rebuildFlag).isEmpty
+    fs.exists(p) && !Tables.read(s, layout.rebuildFlag).isEmpty
   }
 
   /** EXECUTABLE compaction (VERDICT r15 item 1): the full-rebuild
@@ -201,8 +202,7 @@ object CorpusIncrementalDag {
     * honest fix for those is a full [[CorpusPipelineDag]] rebuild of
     * the corpus — this compaction clears the flag either way, which
     * is the operator's accept-first-arrival trade, documented. */
-  def runCompaction(s: SparkSession, root: String,
-                    auditReadBack: Boolean = false): Seq[JobGraph.JobReport] = {
+  def runCompaction(s: SparkSession, root: String): Seq[JobGraph.JobReport] = {
     val layout = Layout(root)
     val mark = releaseWatermark(layout)
     val genName = s"selgen=$mark"
@@ -215,10 +215,8 @@ object CorpusIncrementalDag {
     val committed = Lold.root == Lnew.root
     val skip = mark < 0L || committed
     val g = new JobGraph()
-    def write(df: DataFrame, path: String): Long =
-      CorpusPipelineDag.writeLayer(df, path, auditReadBack)
     def readClean(): DataFrame =
-      s.read.parquet(layout.clean)
+      Tables.read(s, layout.clean)
         .where(col("batch") <= mark && col("doc_id") <= mark)
         .select("doc_id", "lang", "source", "n_paras", "n_kept", "text")
 
@@ -227,7 +225,7 @@ object CorpusIncrementalDag {
     val terminals = CorpusPipelineDag.addSelectionChain(g, s, () => readClean(),
       layout.selected, layout.mixture, layout.splits, layout.packs,
       layout.export, layout.packPayloads,
-      firstDep = Seq("compact_guard"), write = write,
+      firstDep = Seq("compact_guard"),
       skipWhen = () => skip)
 
     g.add("compact_rebase", deps = terminals, retries = 1) {
@@ -237,15 +235,15 @@ object CorpusIncrementalDag {
             .parquet(s"${CorpusSelectionDelta.snapRoot(path)}/snap=$mark")
           ()
         }
-        val sel = s.read.parquet(layout.selected)
+        val sel = Tables.read(s, layout.selected)
         snapW(Lnew.verdicts, sel
           .select("doc_id", "lang", "source", "quality_score", "n_words")
           .withColumn("op", lit("add")).withColumn("batch", lit(mark)))
         snapW(Lnew.texts, sel.select("doc_id", "text").withColumn("batch", lit(mark)))
-        snapW(Lnew.mixDelta, s.read.parquet(layout.mixture)
+        snapW(Lnew.mixDelta, Tables.read(s, layout.mixture)
           .select("doc_id", "lang", "source", "n_words", "copy_id")
           .withColumn("op", lit("add")).withColumn("batch", lit(mark)))
-        val packs = s.read.parquet(layout.packs)
+        val packs = Tables.read(s, layout.packs)
         snapW(Lnew.packsDelta, packs.withColumn("batch", lit(mark)))
         snapW(Lnew.packHeads, packs.groupBy("source")
           .agg((max(col("pack_id")) + 1L).as("packs_end"))
@@ -429,7 +427,6 @@ object CorpusIncrementalDag {
       s: SparkSession, sfDir: String, layout: Layout,
       upTo: Long = Long.MaxValue,
       cleanSuite: Seq[DataQuality.Expectation] = CorpusPipelineDag.defaultCleanSuite,
-      auditReadBack: Boolean = false,
       policy: ReleasePolicy = ReleasePolicy(),
       snapshotEvery: Int = defaultSnapshotEvery
   ): JobGraph = {
@@ -442,8 +439,6 @@ object CorpusIncrementalDag {
     // cannot move under a running graph
     val deltaLayers = CorpusSelectionDelta.Layers.active(s, layout.root)
     def docs: DataFrame = Tables.documents(s, sfDir)
-    def write(df: DataFrame, path: String): Long =
-      CorpusPipelineDag.writeLayer(df, path, auditReadBack)
 
     /** (mark, batch_id, n_docs) of this run, set by `watermark_batch`
       * (every other stage depends on it); also written to the scratch
@@ -522,7 +517,7 @@ object CorpusIncrementalDag {
         // fresh hashes = hashes of the batch's r3 keepers (each new
         // hash has exactly one keeper); recomputed from the WRITTEN
         // flags layer + the immutable source corpus — batch-bounded
-        val keepers = s.read.parquet(s"${layout.flags}/batch=$bid")
+        val keepers = Tables.read(s, s"${layout.flags}/batch=$bid")
           .where(col("r3")).select("doc_id")
         write(
           batchDocs(mark).join(keepers, Seq("doc_id"), "left_semi")
@@ -534,7 +529,7 @@ object CorpusIncrementalDag {
     g.add("batch_sigs", deps = Seq("batch_flags"), retries = 1) {
       val (mark, bid, n) = meta()
       if (n == 0) 0L else {
-        val keepers = s.read.parquet(s"${layout.flags}/batch=$bid")
+        val keepers = Tables.read(s, s"${layout.flags}/batch=$bid")
           .where(col("r3")).select("doc_id")
         write(
           DedupOps.minhashSignaturesNative(
@@ -547,7 +542,7 @@ object CorpusIncrementalDag {
     g.add("neardup_pairs", deps = Seq("batch_sigs"), retries = 1) {
       val (mark, bid, n) = meta()
       if (n == 0) 0L else {
-        val batchSigs = s.read.parquet(s"${layout.sigs}/batch=$bid")
+        val batchSigs = Tables.read(s, s"${layout.sigs}/batch=$bid")
         // standing side filtered by id, never by partition name, so a
         // torn wider-run partition can't leak into the standing index
         val standingSigs = LayerIO.readOr(s, layout.sigs, sigDdl)
@@ -574,7 +569,7 @@ object CorpusIncrementalDag {
       val (_, bid, n) = meta()
       if (n == 0) 0L else {
         write(
-          DedupOps.resolveGroups(s.read.parquet(s"${layout.pairs}/batch=$bid")),
+          DedupOps.resolveGroups(Tables.read(s, s"${layout.pairs}/batch=$bid")),
           s"${layout.resolved}/batch=$bid")
       }
     }
@@ -582,11 +577,11 @@ object CorpusIncrementalDag {
     g.add("neardup_resolve", deps = Seq("neardup_resolved"), retries = 1) {
       val (mark, bid, n) = meta()
       if (n == 0) 0L else {
-        val drops = s.read.parquet(s"${layout.resolved}/batch=$bid")
+        val drops = Tables.read(s, s"${layout.resolved}/batch=$bid")
           .where(col("doc_id") =!= col("group_id") && col("doc_id") > mark)
           .select("doc_id")
         write(
-          s.read.parquet(s"${layout.flags}/batch=$bid").where(col("r3"))
+          Tables.read(s, s"${layout.flags}/batch=$bid").where(col("r3"))
             .select("doc_id", "lang", "source", "n_words")
             .join(drops, Seq("doc_id"), "left_anti"),
           s"${layout.keep}/batch=$bid")
@@ -603,7 +598,7 @@ object CorpusIncrementalDag {
         val standingKeep = LayerIO.readOr(s, layout.keep, keepDdl)
           .where(col("doc_id") <= mark).select("doc_id")
         write(
-          s.read.parquet(s"${layout.resolved}/batch=$bid")
+          Tables.read(s, s"${layout.resolved}/batch=$bid")
             .where(col("doc_id") =!= col("group_id") && col("doc_id") <= mark)
             .join(standingKeep, Seq("doc_id"), "left_semi")
             .select("doc_id", "group_id"),
@@ -614,7 +609,7 @@ object CorpusIncrementalDag {
     g.add("paragraph_strip", deps = Seq("neardup_resolve"), retries = 1) {
       val (mark, bid, n) = meta()
       if (n == 0) 0L else {
-        val keep = s.read.parquet(s"${layout.keep}/batch=$bid")
+        val keep = Tables.read(s, s"${layout.keep}/batch=$bid")
         val gated = batchDocs(mark).join(keep.select("doc_id"), Seq("doc_id"), "left_semi")
         val standingParas = LayerIO.readOr(s, layout.paraHashes, paraHashDdl)
           .where(col("batch") <= mark).select("para_hash")
@@ -637,7 +632,7 @@ object CorpusIncrementalDag {
       val (_, bid, n) = meta()
       if (n == 0) 0L
       else JobGraph.gate(DataQuality.run(
-        s.read.parquet(s"${layout.clean}/batch=$bid"), cleanSuite))
+        Tables.read(s, s"${layout.clean}/batch=$bid"), cleanSuite))
     }
 
     // batch-proportional refresh: admission delta from the cell ledger
@@ -647,14 +642,14 @@ object CorpusIncrementalDag {
       meta = () => meta(),
       readCleanBatch = () => {
         val (_, bid, _) = meta()
-        s.read.parquet(s"${layout.clean}/batch=$bid")
+        Tables.read(s, s"${layout.clean}/batch=$bid")
       },
       readCleanStanding = () => {
         val (mark, _, _) = meta()
-        s.read.parquet(layout.clean)
+        Tables.read(s, layout.clean)
           .where(col("batch") <= mark && col("doc_id") <= mark)
       },
-      firstDep = Seq("clean_quality_check"), write = write)
+      firstDep = Seq("clean_quality_check"))
 
     // the policy gate: consume the honesty ledgers (retractions, dead
     // pack tokens) and flag a full-rebuild compaction when a bound is

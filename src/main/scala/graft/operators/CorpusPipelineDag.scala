@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueriesText, Tables}
 import graft.text.DedupOps
+import LayerIO.write
 
 /** The LLM training-data pipeline composed as a restartable batch DAG
   * over [[JobGraph]] — the corpus-side twin of [[SalesPipelineDag]]
@@ -48,7 +49,9 @@ import graft.text.DedupOps
   * stages read only the WRITTEN layer — never the upstream's
   * in-memory frame — so each job is independently restartable, the
   * dependency edges are real I/O barriers, and a crash mid-write
-  * converges to the uninterrupted run on plain rerun.
+  * converges to the uninterrupted run on plain rerun. Layers land
+  * through [[LayerIO.write]] (rows counted on the writing job) and are
+  * read through [[Tables.read]] with the schema their writer left.
   *
   * Scale shape: the corpus-grain work is the flags projection, the
   * near-dup banding, the strip's hash-cell aggregate, the selection's
@@ -81,25 +84,6 @@ object CorpusPipelineDag {
   /** Known corpus metadata the pipeline tolerates but doesn't read. */
   private[operators] val toleratedColumns: Set[String] = Set("n_chars")
 
-  /** Write the layer, counting rows ON the writing job via
-    * `observe()` — one scan per stage. The r13 read-back (`count()`
-    * of the landed parquet) was a second corpus-scale scan per layer;
-    * at 100 TB that's ~9 extra full reads per run. A torn write still
-    * can't report success rows: a failed write throws before the
-    * observed value is read. `auditReadBack` keeps the old
-    * paranoid mode opt-in (count what LANDED, trusting nothing). */
-  private[operators] def writeLayer(df: DataFrame, path: String, auditReadBack: Boolean): Long =
-    if (auditReadBack) {
-      df.write.mode("overwrite").parquet(path)
-      df.sparkSession.read.parquet(path).count()
-    } else {
-      val obs = org.apache.spark.sql.Observation()
-      // observe sits ABOVE the whole plan (any Sort included) so a
-      // range-partitioner sampling pass can't double-fire it
-      df.observe(obs, count(lit(1)).as("rows")).write.mode("overwrite").parquet(path)
-      obs.get("rows").asInstanceOf[Long]
-    }
-
   /** The gate the pipeline runs on the stripped clean layer. */
   def defaultCleanSuite: Seq[DataQuality.Expectation] = Seq(
     DataQuality.NotNull("doc_id"),
@@ -128,12 +112,10 @@ object CorpusPipelineDag {
   def build(
       s: SparkSession, sfDir: String, layout: Layout,
       cleanSuite: Seq[DataQuality.Expectation] = defaultCleanSuite,
-      auditReadBack: Boolean = false,
       boilerGuardPermille: Int = 0
   ): JobGraph = {
     val g = new JobGraph()
     def docs: DataFrame = Tables.documents(s, sfDir)
-    def write(df: DataFrame, path: String): Long = writeLayer(df, path, auditReadBack)
 
     g.add("validate_corpus") {
       // drift check runs on the UNPROJECTED frame: a select() of the
@@ -166,7 +148,7 @@ object CorpusPipelineDag {
     }
 
     g.add("neardup_pairs", deps = Seq("funnel_flags"), retries = 1) {
-      val survivors = s.read.parquet(layout.flags).where(col("r3")).select("doc_id")
+      val survivors = Tables.read(s, layout.flags).where(col("r3")).select("doc_id")
       val gated = docs.join(survivors, Seq("doc_id"), "left_semi")
       write(
         DedupOps.nearDupPairs(gated, "doc_id", col("text"),
@@ -175,10 +157,10 @@ object CorpusPipelineDag {
     }
 
     g.add("neardup_resolve", deps = Seq("neardup_pairs"), retries = 1) {
-      val resolved = DedupOps.resolveGroups(s.read.parquet(layout.pairs))
+      val resolved = DedupOps.resolveGroups(Tables.read(s, layout.pairs))
       val drops = resolved.where(col("doc_id") =!= col("group_id")).select("doc_id")
       write(
-        s.read.parquet(layout.flags).where(col("r3"))
+        Tables.read(s, layout.flags).where(col("r3"))
           .select("doc_id", "lang", "source", "n_words")
           .join(drops, Seq("doc_id"), "left_anti"),
         layout.keep)
@@ -187,7 +169,7 @@ object CorpusPipelineDag {
     // sibling branch: the release's dup-cluster profile from the SAME
     // written pairs layer — must keep running when the clean gate fails
     g.add("dup_profile", deps = Seq("neardup_pairs"), retries = 1) {
-      val pairs = s.read.parquet(layout.pairs)
+      val pairs = Tables.read(s, layout.pairs)
       val deg = pairs.select(col("doc1").as("doc_id"))
         .union(pairs.select(col("doc2").as("doc_id")))
         .groupBy("doc_id").agg(count(lit(1)).as("degree"))
@@ -195,7 +177,7 @@ object CorpusPipelineDag {
     }
 
     g.add("paragraph_strip", deps = Seq("neardup_resolve"), retries = 1) {
-      val keep = s.read.parquet(layout.keep)
+      val keep = Tables.read(s, layout.keep)
       val gated = docs.join(keep.select("doc_id"), Seq("doc_id"), "left_semi")
       val stripped = DedupOps.paragraphStrip(gated, "doc_id", col("text"), paraTokens = 20)
         .where(col("n_kept") >= 1) // stripped-to-nothing docs drop out
@@ -207,16 +189,16 @@ object CorpusPipelineDag {
     }
 
     g.add("clean_quality_check", deps = Seq("paragraph_strip")) {
-      JobGraph.gate(DataQuality.run(s.read.parquet(layout.clean), cleanSuite))
+      JobGraph.gate(DataQuality.run(Tables.read(s, layout.clean), cleanSuite))
     }
 
-    val terminals = addSelectionChain(g, s, () => s.read.parquet(layout.clean),
+    val terminals = addSelectionChain(g, s, () => Tables.read(s, layout.clean),
       layout.selected, layout.mixture, layout.splits, layout.packs,
       layout.export, layout.packPayloads,
-      firstDep = Seq("clean_quality_check"), write = write)
+      firstDep = Seq("clean_quality_check"))
 
     g.add("pipeline_metrics", deps = terminals :+ "dup_profile") {
-      s.read.parquet(layout.packs).count()
+      Tables.read(s, layout.packs).count()
     }
     g
   }
@@ -235,7 +217,7 @@ object CorpusPipelineDag {
       g: JobGraph, s: SparkSession, readClean: () => DataFrame,
       selected: String, mixture: String, splits: String, packs: String,
       export: String, packPayloads: String,
-      firstDep: Seq[String], write: (DataFrame, String) => Long,
+      firstDep: Seq[String],
       skipWhen: () => Boolean = () => false): Seq[String] = {
     // `skipWhen`: the compaction passes "nothing to compact" (no
     // committed batch, or a rerun after the committed flip). Stages
@@ -261,19 +243,19 @@ object CorpusPipelineDag {
       // the registered query pays the determinism orderBy — here it
       // would be an avoidable corpus-scale range exchange + sort
       write(
-        QueriesText.mixMaterializeRaw(s.read.parquet(selected)),
+        QueriesText.mixMaterializeRaw(Tables.read(s, selected)),
         mixture)
     }
 
     stage("train_split", deps = Seq("mix_materialize")) {
       write(
-        s.read.parquet(mixture)
+        Tables.read(s, mixture)
           .withColumn("split", QueriesText.mdSplit(col("doc_id"))),
         splits)
     }
 
     stage("seq_pack", deps = Seq("train_split")) {
-      val train = s.read.parquet(splits).where(col("split") === "train")
+      val train = Tables.read(s, splits).where(col("split") === "train")
       val budget = 2048L
       write(
         ScanOps.exclusivePrefixSum(train, Seq("source"), Seq("doc_id", "copy_id"),
@@ -292,7 +274,7 @@ object CorpusPipelineDag {
     // sortWithinPartitions makes the file layout a pure function of
     // the data: a rerun emits the same files (spec-pinned).
     stage("export_release", deps = Seq("train_split")) {
-      val release = s.read.parquet(splits)
+      val release = Tables.read(s, splits)
         .join(readClean().select("doc_id", "text"), Seq("doc_id"))
         .select("doc_id", "copy_id", "lang", "source", "split", "n_words", "text")
         .repartitionByRange(col("split"), col("source"), col("doc_id"), col("copy_id"))
@@ -311,7 +293,7 @@ object CorpusPipelineDag {
     // shared derivation with #153 — offsets reconcile with seq_pack's
     // ledger by construction (same prefix scan)
     stage("pack_payloads", deps = Seq("train_split")) {
-      val train = s.read.parquet(splits).where(col("split") === "train")
+      val train = Tables.read(s, splits).where(col("split") === "train")
         .select("doc_id", "copy_id", "source")
       write(
         graft.QueriesScale.packPayloadsOn(

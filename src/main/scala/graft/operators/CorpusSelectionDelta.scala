@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.QueriesText
+import graft.{QueriesText, Tables}
 import graft.streaming.SelectionStream
 import graft.text.BloomDedup
+import LayerIO.write
 
 /** INCREMENTAL selection refresh — the one way [[CorpusIncrementalDag]]
   * refreshes selection per batch. The full chain (#145 token budget →
@@ -460,7 +461,7 @@ object CorpusSelectionDelta {
       meta: () => (Long, Long, Long),
       readCleanBatch: () => DataFrame,
       readCleanStanding: () => DataFrame,
-      firstDep: Seq[String], write: (DataFrame, String) => Long,
+      firstDep: Seq[String],
       packBudget: Long = 2048L): Seq[String] = {
 
     def stage(id: String, deps: Seq[String])(body: => Long): Unit = {
@@ -481,7 +482,7 @@ object CorpusSelectionDelta {
       val written = write(idx.sortWithinPartitions("quality_score"),
         s"${L.docIndex}/batch=$bid")
       write(
-        s.read.parquet(s"${L.docIndex}/batch=$bid")
+        Tables.read(s, s"${L.docIndex}/batch=$bid")
           .groupBy("quality_score")
           .agg(sum("n_words").as("token_mass"), count(lit(1)).as("n_docs")),
         s"${L.cells}/batch=$bid")
@@ -508,7 +509,7 @@ object CorpusSelectionDelta {
       val standing = readLedger(s, L.docIndex, idxDdl, mark)
         .where(col("quality_score").between(lo, hi))
         .select("doc_id", "lang", "source", "quality_score", "n_words")
-      val batchIdx = s.read.parquet(s"${L.docIndex}/batch=$bid")
+      val batchIdx = Tables.read(s, s"${L.docIndex}/batch=$bid")
         .select("doc_id", "lang", "source", "quality_score", "n_words")
       val frame = standing.union(batchIdx)
 
@@ -552,7 +553,7 @@ object CorpusSelectionDelta {
     // which short-circuits to nothing on the common rising-cut day.
     stage("sel_texts", Seq("sel_delta")) {
       val (mark, bid, _) = meta()
-      val adds = s.read.parquet(s"${L.verdicts}/batch=$bid")
+      val adds = Tables.read(s, s"${L.verdicts}/batch=$bid")
         .where(col("op") === "add").select("doc_id")
       val known = readLedger(s, L.texts, textDdl, mark).select("doc_id")
       val need = adds.join(known, Seq("doc_id"), "left_anti")
@@ -605,7 +606,7 @@ object CorpusSelectionDelta {
     // live pack rows instead of rewriting shards.
     stage("pack_delta", Seq("mix_delta")) {
       val (mark, bid, _) = meta()
-      val delta = s.read.parquet(s"${L.mixDelta}/batch=$bid")
+      val delta = Tables.read(s, s"${L.mixDelta}/batch=$bid")
         .withColumn("split", QueriesText.mdSplit(col("doc_id")))
       val trainAdds = delta.where(col("op") === "add" && col("split") === "train")
         .select("doc_id", "copy_id", "source", "n_words")
@@ -644,11 +645,11 @@ object CorpusSelectionDelta {
     // actually shifted.
     stage("export_delta", Seq("mix_delta", "sel_texts")) {
       val (mark, bid, _) = meta()
-      val adds = s.read.parquet(s"${L.mixDelta}/batch=$bid")
+      val adds = Tables.read(s, s"${L.mixDelta}/batch=$bid")
         .where(col("op") === "add")
         .withColumn("split", QueriesText.mdSplit(col("doc_id")))
         .select("doc_id", "copy_id", "lang", "source", "split", "n_words")
-      val tNew = s.read.parquet(s"${L.texts}/batch=$bid").select("doc_id", "text")
+      val tNew = Tables.read(s, s"${L.texts}/batch=$bid").select("doc_id", "text")
       val needOld = adds.select("doc_id").distinct()
         .join(tNew, Seq("doc_id"), "left_anti")
       val tOld = BloomDedup.gateBigSide(
@@ -665,7 +666,7 @@ object CorpusSelectionDelta {
         s"${L.exportDelta}/batch=$bid", partitionCols = Seq("split", "source"))
       val written = obs.get("rows").asInstanceOf[Long]
       write(
-        s.read.parquet(s"${L.mixDelta}/batch=$bid").where(col("op") === "drop")
+        Tables.read(s, s"${L.mixDelta}/batch=$bid").where(col("op") === "drop")
           .withColumn("split", QueriesText.mdSplit(col("doc_id")))
           .select("doc_id", "copy_id", "split", "source"),
         s"${L.exportTombs}/batch=$bid")

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Money
+import LayerIO.write
 
 /** The reference's BATCH pipeline DAG, composed over [[JobGraph]] —
   * the data-plane mirror of airflow/dags/sales_pipeline_dag.py
@@ -25,7 +26,11 @@ import graft.functions.Money
   * every stage WRITES its parquet layer and downstream stages READ the
   * written layer (never the upstream's in-memory frame), so each job is
   * independently restartable and the dependency edges are real I/O
-  * barriers — exactly what the Airflow DAG encodes. The dim branch
+  * barriers — exactly what the Airflow DAG encodes. A stage's metric
+  * is the row count [[LayerIO.write]] observes on the writing job (a
+  * failed write throws first), not a read-back of the landed layer,
+  * and each layer read uses the schema its writer left in
+  * [[Tables.read]]'s memo: no stage runs a schema-inference job. The dim branch
   * (SCD2) runs in parallel with the fact branch (bronze → silver);
   * gold waits on both (the dim-before-fact edge).
   *
@@ -58,13 +63,6 @@ object SalesPipelineDag {
       "o_orderdate", "o_orderpriority"),
     "customer" -> Set("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
 
-  private def write(df: DataFrame, path: String): Long = {
-    df.write.mode("overwrite").parquet(path)
-    // read-back count: the metric reports what LANDED, not what was
-    // planned (a torn write must not report success rows)
-    df.sparkSession.read.parquet(path).count()
-  }
-
   /** Build the job graph. `goldSuite` is the quality gate's
     * expectation set (overridable so operators can tighten it;
     * tests use it to drive the failure path). */
@@ -92,7 +90,7 @@ object SalesPipelineDag {
     g.add("silver_fact", deps = Seq("bronze_ingest"), retries = 1) {
       // read the WRITTEN bronze layer; clamp ship dates to the order
       // date floor (the reference's product_transform date fix)
-      val bronze = s.read.parquet(layout.bronzeValid)
+      val bronze = Tables.read(s, layout.bronzeValid)
       val o = Tables.orders(s, sfDir).select("o_orderkey", "o_custkey", "o_orderdate")
       val silver = bronze
         .join(o, bronze("l_orderkey") === o("o_orderkey"))
@@ -106,8 +104,8 @@ object SalesPipelineDag {
     }
 
     g.add("gold_enrich", deps = Seq("silver_fact", "scd_dim"), retries = 1) {
-      val fact = s.read.parquet(layout.silverFact)
-      val dim = Scd2.current(s.read.parquet(layout.scdDim))
+      val fact = Tables.read(s, layout.silverFact)
+      val dim = Scd2.current(Tables.read(s, layout.scdDim))
         .select("c_custkey", "c_name", "c_mktsegment")
       val gold = Gold.starJoin(
         fact,
@@ -129,7 +127,7 @@ object SalesPipelineDag {
     }
 
     g.add("customer_metrics", deps = Seq("gold_enrich"), retries = 1) {
-      val gold = s.read.parquet(layout.goldEnriched)
+      val gold = Tables.read(s, layout.goldEnriched)
       write(
         gold.groupBy("custkey", "customer_name", "segment")
           .agg(
@@ -140,7 +138,7 @@ object SalesPipelineDag {
     }
 
     g.add("monthly_mart", deps = Seq("gold_enrich"), retries = 1) {
-      val gold = s.read.parquet(layout.goldEnriched)
+      val gold = Tables.read(s, layout.goldEnriched)
       write(
         gold.groupBy(col("custkey"), date_trunc("month", col("o_orderdate")).as("sales_month"))
           .agg(Money.sumExact(col("revenue")).as("total_sales"),
@@ -149,13 +147,13 @@ object SalesPipelineDag {
     }
 
     g.add("gold_quality_check", deps = Seq("gold_enrich")) {
-      JobGraph.gate(DataQuality.run(s.read.parquet(layout.goldEnriched), goldSuite))
+      JobGraph.gate(DataQuality.run(Tables.read(s, layout.goldEnriched), goldSuite))
     }
 
     g.add("pipeline_metrics",
         deps = Seq("gold_quality_check", "customer_metrics", "monthly_mart")) {
       // the DAG's log_pipeline_metrics: total gold rows, from disk
-      s.read.parquet(layout.goldEnriched).count()
+      Tables.read(s, layout.goldEnriched).count()
     }
     g
   }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import graft.GraftSession
+import graft.{GraftSession, Tables}
 import graft.operators.{CorpusIncrementalDag, CorpusPipelineDag}
 
 /** Drive [[CorpusIncrementalDag]] cycles from the shell — the scale
@@ -63,9 +63,9 @@ object RunIncremental {
     // release watermark, never the in-flight MaxValue default
     val mark = CorpusIncrementalDag.releaseWatermark(li)
     val layers: Seq[(String, () => org.apache.spark.sql.DataFrame, String, Seq[String])] = Seq(
-      ("flags", () => spark.read.parquet(li.flags), lf.flags,
+      ("flags", () => Tables.read(spark, li.flags), lf.flags,
         Seq("doc_id", "lang", "source", "n_words", "r0", "r1", "r2", "r3")),
-      ("clean", () => spark.read.parquet(li.clean), lf.clean,
+      ("clean", () => Tables.read(spark, li.clean), lf.clean,
         Seq("doc_id", "lang", "source", "n_paras", "n_kept", "text")),
       ("selected(view)", () => graft.operators.CorpusSelectionDelta.selectedView(spark, dl, mark),
         lf.selected, Seq("doc_id", "lang", "source", "quality_score", "n_words", "text")),
@@ -78,13 +78,13 @@ object RunIncremental {
     var bad = 0
     layers.foreach { case (name, incRead, fullPath, cols) =>
       val inc = incRead().select(cols.map(col): _*)
-      val full = spark.read.parquet(fullPath).select(cols.map(col): _*)
+      val full = Tables.read(spark, fullPath).select(cols.map(col): _*)
       val missing = full.exceptAll(inc).count()
       val extra = inc.exceptAll(full).count()
       val verdict = if (missing == 0 && extra == 0) "OK" else { bad += 1; "MISMATCH" }
       println(s"[$tag] $name: $verdict (missing=$missing extra=$extra rows=${full.count()})")
     }
-    val retr = spark.read.parquet(li.retractions).count()
+    val retr = Tables.read(spark, li.retractions).count()
     println(s"[$tag] retraction ledger: $retr rows" +
       (if (retr > 0) " — first-arrival divergence, mismatches above are BY CONTRACT" else ""))
     bad

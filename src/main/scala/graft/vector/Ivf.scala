@@ -142,10 +142,10 @@ object Ivf {
   def append(s: SparkSession, path: String, vectors: DataFrame,
              idCol: String, vecCol: String): Long = {
     implicit val sp: SparkSession = s
-    val lists = s.read.parquet(s"$path/lists.parquet")
+    val lists = graft.Tables.read(s, s"$path/lists.parquet")
     require(lists.columns.contains(idCol) && lists.columns.contains(vecCol),
       s"Ivf.append: artifact schema ${lists.columns.mkString(",")} lacks $idCol/$vecCol")
-    val pairs = s.read.parquet(s"$path/centroids.parquet").collect()
+    val pairs = graft.Tables.read(s, s"$path/centroids.parquet").collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1) // NearestCentroid requires cid-ascending order
     require(pairs.nonEmpty, s"Ivf.append: empty centroid set at $path")
@@ -177,9 +177,9 @@ object Ivf {
     * aggregates corpus-wide; rebuild when it crosses the deployment's
     * threshold. One k-group scan of the lists — never the vectors. */
   def drift(s: SparkSession, path: String): DataFrame = {
-    val now = s.read.parquet(s"$path/lists.parquet")
+    val now = graft.Tables.read(s, s"$path/lists.parquet")
       .groupBy(col("cid")).agg(count(lit(1)).as("n_now"), avg(col("__c")).as("mean_cos_now"))
-    val base = s.read.parquet(s"$path/stats.parquet")
+    val base = graft.Tables.read(s, s"$path/stats.parquet")
     val per = now.join(base, Seq("cid"), "left")
       .select(col("cid"), col("n_build"), col("n_now"),
         col("mean_cos_build"), col("mean_cos_now"),
@@ -205,12 +205,12 @@ object Ivf {
     * names (id, vector) travel in the artifact's
     * schema, so load needs no schema arguments. */
   def load(s: SparkSession, path: String): Index = {
-    val centroids = s.read.parquet(s"$path/centroids.parquet")
+    val centroids = graft.Tables.read(s, s"$path/centroids.parquet")
     val pairs = centroids.collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1) // NearestCentroid requires cid-ascending order
     require(pairs.nonEmpty, s"Ivf.load: empty centroid set at $path")
-    val lists = s.read.parquet(s"$path/lists.parquet")
+    val lists = graft.Tables.read(s, s"$path/lists.parquet")
       .transform(graft.Caching.share)
     Index(pairs.map(_._1), pairs.map(_._2), centroids, lists)
   }
