@@ -19,11 +19,13 @@ import org.apache.spark.storage.StorageLevel
   * [[share]] wraps a frame's plan in a [[Share]] node; building the
   * frame runs nothing. When an action runs a plan that reads the share
   * (once or from several branches), the first branch to execute it
-  * materializes the child as plain serialized row blocks
-  * (MEMORY_AND_DISK) and every other branch of the same action reads
-  * those blocks. Row blocks, not the columnar cache: one serialization
-  * pass to build, and consumers deserialize rows directly — 0.36–0.84×
-  * the columnar cache's time on the grain queries at sf0.1
+  * materializes the child as row blocks — copied rows persisted at
+  * `StorageLevel.MEMORY_AND_DISK`, which keeps them in memory as
+  * deserialized objects and serializes only the blocks that spill to
+  * disk — and every other branch of the same action reads those
+  * blocks. Row blocks, not the columnar cache: no column encoding to
+  * build, and consumers read the rows as they are — 0.36–0.84× the
+  * columnar cache's time on the grain queries at sf0.1
   * (OPTIMIZATION_r17.md §2).
   *
   * Lifetime: per action. The blocks are keyed by the action's SQL

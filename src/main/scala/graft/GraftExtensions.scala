@@ -14,8 +14,8 @@ import graft.functions._
   * pure-SQL users (extensions are a static conf, honored when the
   * FIRST session of the application is created). It is the only
   * route: every graft session is built with the extension, without
-  * which no graft frame can be planned (the share planner lives
-  * there too), and the operators resolve these functions by name.
+  * which no graft frame can be planned (the share and shared-gram
+  * planners live there too), and the operators resolve these functions by name.
   */
 object GraftFunctions {
   type Builder = Seq[Expression] => Expression
@@ -61,9 +61,10 @@ object GraftFunctions {
 }
 
 /** Session extension: `spark.sql.extensions=graft.GraftExtensions`.
-  * Injects the function table, the planner strategy for
-  * [[Caching.share]]'s plan node, and two optimizer rules, neither
-  * with a switch of its own:
+  * Injects the function table, two planner strategies — one for
+  * [[Caching.share]]'s plan node, one for
+  * [[graft.text.SharedGramCount]]'s, the exact n-gram pair count —
+  * and two optimizer rules, neither with a switch of its own:
   *  - [[graft.plans.FactSpread]] decides, from the plan, whether an
   *    unsplittable file scan gets a round-robin spread;
   *  - [[graft.plans.ExpandFreeDistinct]] rewrites multi-distinct
@@ -80,5 +81,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(graft.plans.FactSpread(_))
     ext.injectOptimizerRule(_ => graft.plans.ExpandFreeDistinct)
     ext.injectPlannerStrategy(_ => Caching.ShareStrategy)
+    ext.injectPlannerStrategy(_ => graft.text.SharedGramCount.Strategy)
   }
 }

@@ -31,10 +31,10 @@ object GraftSession {
     *
     * Sized from the measured working set (`graft.KernelProbe`, sf0.1
     * on 4 cores): one pass compiles 100 distinct kernels for the
-    * `SalesPipelineDag` medallion run, 127 for the six near-dup queries
+    * `SalesPipelineDag` medallion run, 119 for the six near-dup queries
     * and 1,964 for the whole 154-query registry. At the default 100
     * entries the LRU evicts kernels before their next use, so every
-    * warm pass recompiles 24–25 (medallion) and 88 (near-dup) classes
+    * warm pass recompiles 24–25 (medallion) and 74 (near-dup) classes
     * — and each recompiled class restarts in the JVM interpreter.
     * 4096 holds the registry twice over. Emptying the cache frees
     * 33–37 KB per kernel (heap plus metaspace), so even a full

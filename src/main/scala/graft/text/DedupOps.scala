@@ -224,18 +224,14 @@ object DedupOps {
       docs: DataFrame, id: String, text: Column,
       n: Int, maxDf: Int, minJaccardPct: Int
   ): DataFrame = {
-    val withCounts = sharedGramCounts(docs, id, text, n, maxDf, Some(minJaccardPct))
+    val withCounts = sharedGramCounts(docs, id, text, n, maxDf,
+      SharedGramCount.Jaccard(minJaccardPct))
     val union = col("grams1") + col("grams2") - col("shared_grams")
     val pairs = withCounts
-      .withColumn("union_grams", union)
-      .where(col("shared_grams") * 100 >= col("union_grams") * minJaccardPct)
       .select(
         col("doc1"), col("doc2"), col("shared_grams"),
         col("grams1"), col("grams2"),
-        call_function("div",
-          col("shared_grams") * 200L + col("union_grams"),
-          col("union_grams") * 2L
-        ).as("jaccard_pct")
+        call_function("div", col("shared_grams") * 200L + union, union * 2L).as("jaccard_pct")
       )
     countedCandidates(pairs, "cand_ngram")
   }
@@ -252,10 +248,10 @@ object DedupOps {
       docs: DataFrame, id: String, text: Column,
       n: Int, maxDf: Int, minContainPct: Int
   ): DataFrame = {
-    val withCounts = sharedGramCounts(docs, id, text, n, maxDf, None)
+    val withCounts = sharedGramCounts(docs, id, text, n, maxDf,
+      SharedGramCount.Containment(minContainPct))
     val minc = least(col("grams1"), col("grams2"))
     val pairs = withCounts
-      .where(col("shared_grams") * 100 >= minc * minContainPct)
       .select(
         col("doc1"), col("doc2"), col("shared_grams"),
         col("grams1"), col("grams2"),
@@ -270,27 +266,45 @@ object DedupOps {
   /** Shared core of the exact pair generators: one tokenize pass into
     * per-doc gram sets (shared — read by the df pass and the
     * postings), df-gated postings that carry their doc's gated gram
-    * count (shared — both sides of the pair join), and shared-gram
-    * counts per candidate pair. `minJaccardPct` applies Jaccard's
-    * exact length bound inside the join: shared ≤ min(|A|, |B|), so
-    * J ≥ t needs 100·min(|A|, |B|) ≥ t·max(|A|, |B|); containment has
-    * no such bound and passes None. Returns the pair frame with
-    * grams1/grams2/shared_grams; callers apply their similarity
-    * filter.
+    * count (shared — both sides of the pair join), and the
+    * [[SharedGramCount]] plan node, which counts each pair's shared
+    * grams one `doc1` run at a time and keeps the pairs `gate` passes.
+    * The join keeps `doc1 < doc2` and, for Jaccard, its exact length
+    * bound: shared ≤ min(|A|, |B|), so J ≥ t needs
+    * 100·min(|A|, |B|) ≥ t·max(|A|, |B|); containment has no such
+    * bound. Returns (doc1, doc2, shared_grams, grams1, grams2) for the
+    * gated pairs.
     *
-    * Measured and not built: a df-ordered PPJoin prefix filter with
-    * array verification kept the same pairs and cut the join rows
-    * from 1.27M to 0.83M (J ≥ 20) and 0.33M (J ≥ 50) on the sf0.1
-    * corpus, but ran 6.1, 4.2 and 2.4 s at J ≥ 1, 20 and 50 on 4 cores,
-    * against about 1 s for the postings join. */
+    * The node reads the join's rows in the order the keyed document
+    * spread and the `n_grams` window leave them (clustered and sorted
+    * by doc), so it adds no exchange and no sort. It replaced
+    * `groupBy(doc1, doc2, grams1, grams2).count`, which at J ≥ 20 on
+    * the sf0.1 corpus hashed 1.23M join rows into 1.10M groups twice
+    * (a partial and a final aggregate in one stage) to keep 256 pairs.
+    *
+    * Measured and not built (sf0.1 corpus, 4 cores):
+    *  - a df-ordered PPJoin prefix filter with array verification kept
+    *    the same pairs and cut the join rows from 1.27M to 0.83M
+    *    (J ≥ 20) and 0.33M (J ≥ 50), but ran 6.1, 4.2 and 2.4 s at
+    *    J ≥ 1, 20 and 50, against about 1 s for the postings join;
+    *  - a `TypedImperativeAggregate` keyed by doc1 (an
+    *    ObjectHashAggregate, partial and final in one stage, with an
+    *    interpreted, boxed `update`): the pair stage took 377–417 ms,
+    *    against 416–500 ms for the pair hash aggregate;
+    *  - this node over a Scala `LongMap` cleared for each doc:
+    *    1308 → 1173 ms for the J ≥ 20 pipeline, where the
+    *    open-addressing map gave 1249 → 943 ms;
+    *  - ScanCount over inverted lists (`collect_list` by gram, then a
+    *    broadcast): 1.41–1.53 s against 1.31–1.38 s for the pair hash
+    *    aggregate, with one more stage. */
   private def sharedGramCounts(
       docs: DataFrame, id: String, text: Column, n: Int, maxDf: Int,
-      minJaccardPct: Option[Int]
+      gate: SharedGramCount.Gate
   ): DataFrame = {
     // both shares keep the doc-key partitioning the keyed document
     // spread gives them (a share reports its child's partitioning),
-    // so the count window and the pair aggregate (keyed by doc1) need
-    // no exchange: losing it measured 17 MB of pair-aggregate shuffle
+    // so the count window and the counting node (clustered by doc1)
+    // need no exchange: losing it measured 17 MB of pair shuffle
     // against 2 MB at sf0.1
     // gram sets carry 64-bit gram hashes, not strings: cheaper to
     // build, and the self-join shuffles and compares longs
@@ -315,15 +329,14 @@ object DedupOps {
     val a = kept.select(col(id).as("doc1"), col("gram"), col("n_grams").as("grams1"))
     val b = kept.select(col(id).as("doc2"), col("gram"), col("n_grams").as("grams2"))
     // both predicates reference both sides, so they plan as the join's
-    // condition and prune before the pair aggregate
+    // condition and prune before the count
     val ordered = col("doc1") < col("doc2")
-    val cond = minJaccardPct.fold(ordered) { t =>
-      ordered && least(col("grams1"), col("grams2")) * 100L >=
+    val cond = gate match {
+      case SharedGramCount.Jaccard(t) => ordered && least(col("grams1"), col("grams2")) * 100L >=
         greatest(col("grams1"), col("grams2")) * t.toLong
+      case SharedGramCount.Containment(_) => ordered
     }
-    a.join(b, "gram").where(cond)
-      .groupBy("doc1", "doc2", "grams1", "grams2")
-      .agg(count(lit(1)).as("shared_grams"))
+    SharedGramCount(a.join(b, "gram").where(cond), gate)
   }
 
   /** MinHash signatures straight from the document text via the

@@ -3,7 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Reaches two members Spark keeps package-private: `ofRows` builds a
-  * frame over a graft logical plan node (`graft.Caching.Share`), and
+  * frame over a graft logical plan node (`graft.Caching.Share`,
+  * `graft.text.SharedGramCount.Count`), and
   * `asNullable` is the nullability the parquet reader gives a file
   * schema (`graft.Tables.remember`). The shim lives in the
   * `org.apache.spark.sql` package only to reach them. */

@@ -395,4 +395,40 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"breakpoints must join broadcast\n$p")
   }
+
+  test("exact gram pairs: the counting node reads the pair join directly, no pair aggregate") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // every node of the final plan, through AQE's query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    // the nodes from the counter's input down to the first node that is
+    // not a projection or a codegen boundary
+    def path(p: SparkPlan): List[SparkPlan] = p match {
+      case _: WholeStageCodegenExec | _: InputAdapter | _: ProjectExec => p :: path(p.children.head)
+      case _ => p :: Nil
+    }
+    for (q <- Seq("q_ngram_jaccard", "q_gram_containment")) {
+      val df = Queries.all(q)(spark, sf)
+      df.collect()
+      val all = nodes(df.queryExecution.executedPlan)
+      val counters = all.collect { case c: text.SharedGramCount.CountExec => c }
+      assert(counters.nonEmpty, s"$q: no shared-gram counting node\n${df.queryExecution.executedPlan}")
+      for (c <- counters) {
+        val below = path(c.child)
+        assert(below.last.isInstanceOf[BroadcastHashJoinExec],
+          s"$q: the counter must read the pair broadcast join, with no sort or exchange " +
+            s"between them; found ${below.map(_.nodeName).mkString(" <- ")}\n$c")
+      }
+      val pairAggs = all.collect {
+        case h: HashAggregateExec if Set("doc1", "doc2").subsetOf(h.groupingExpressions.map(_.name).toSet) => h
+      }
+      assert(pairAggs.isEmpty, s"$q: a pair hash aggregate is left\n${pairAggs.mkString("\n")}")
+    }
+  }
 }
